@@ -40,7 +40,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import hashing as H
-from .index_cache import IndexCache
+from .index_cache import frame_artifact
 
 
 def doc_shingle_hashes(text_col: str, n: int, a: int = 131, b: int = 7) -> Column:
@@ -233,14 +233,6 @@ def _bloom_probe_udf(bloom_bc):
     return probe
 
 
-# Built bitset broadcasts per (session, caller key): a long-lived
-# session re-running decontamination daily must not accumulate
-# destroyed-only-at-exit broadcasts (production bitsets are hundreds of
-# MB). LRU eviction UNPERSISTS the broadcast (pending plans that
-# captured it re-fetch lazily); IndexCache.clear() destroys.
-_BLOOM_BC_CACHE = IndexCache()
-
-
 def bloom_contamination_report(
     docs: DataFrame,
     eval_pred: Column,
@@ -265,38 +257,37 @@ def bloom_contamination_report(
     column + expression probe alternative measured ~16× slower at the
     16× corpus because Spark map ``element_at`` scans entries linearly
     and lambda HOFs run interpreted. Pass a stable ``cache_key`` to
-    reuse (and bound, via LRU unpersist-on-evict) the built broadcast
-    across calls in one session. CONTRACT: ``cache_key`` must uniquely
-    determine ``eval_pred`` (a Column can't be hashed, so it can't be
-    folded into the key) — two calls sharing a key but selecting
-    different eval partitions would silently reuse the wrong bitset.
-    ``text_col`` and ``n`` are folded in automatically."""
+    reuse the built broadcast across calls in one session
+    (operators/index_cache keys it on the session and ``docs``' input
+    files, and folds in ``text_col`` and ``n``). CONTRACT:
+    ``cache_key`` must uniquely determine ``eval_pred`` (a Column can't
+    be hashed, so it can't be folded into the key) — two calls sharing
+    a key but selecting different eval partitions would silently reuse
+    the wrong bitset."""
     from ..functions.arrow_text import distinct_gram_hashes_udf
     from ..shipping import ensure_package_shipped
-    from .similarity import session_cache_key
+    from .util import broadcast_value
 
     ensure_package_shipped(docs.sparkSession)
     docs = docs.filter(F.col(text_col).isNotNull())
     gram_arr = distinct_gram_hashes_udf(n)(F.col(text_col))
-    bc = None
-    full_key = None
-    if cache_key is not None:
-        full_key = (session_cache_key(docs.sparkSession), cache_key, text_col, n)
-        bc = _BLOOM_BC_CACHE.get(full_key)
-    if bc is None:
+
+    def build():
         eval_grams = (
             docs.filter(eval_pred)
             .select(F.explode(gram_arr).alias("gram"))
             .distinct()
         )
-        from .util import broadcast_value
-
         bloom_np = np.zeros(BLOOM_N_WORDS, dtype=np.int64)
         for row in bloom_bitset_words(eval_grams).collect():  # bounded ≤ N_WORDS
             bloom_np[row["w"]] = row["bits"]
-        bc = broadcast_value(docs.sparkSession, bloom_np)
-        if full_key is not None:
-            _BLOOM_BC_CACHE.put(full_key, bc)
+        return broadcast_value(docs.sparkSession, bloom_np)
+
+    bc = (
+        build()
+        if cache_key is None
+        else frame_artifact(docs, "decontam.bloom", (cache_key, text_col, n), build)
+    )
     probe = _bloom_probe_udf(bc)
     train = docs.filter(~eval_pred).select(
         F.col(id_col),

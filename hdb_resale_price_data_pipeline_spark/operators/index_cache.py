@@ -1,18 +1,43 @@
-"""Bounded per-process cache for built ANN/LSH indexes.
+"""One session artifact cache for every built index, model or statistic.
 
-The similarity queries build an index once per (session, dataset,
-params) — a persisted DataFrame plus driver-side codebook — and probe it
-many times. An unbounded dict of persisted frames is a storage-memory
-leak in a long-lived session (each replaced dataset pins its executor
-blocks forever); this cache caps entries and **unpersists every
-DataFrame inside an evicted or replaced value**, so executor storage is
-bounded by ``max_entries`` live indexes.
+Queries build an artifact once — a persisted DataFrame, a driver-side
+codebook, a broadcast bitset, a trained model, a footer row count — and
+reuse it across calls in one session. This module owns the whole
+caching policy; a caller makes one call (:func:`artifact`,
+:func:`frame_artifact`, or the :func:`cached` decorator).
+
+- **Key**: ``(tag, session_cache_key(spark), params, fingerprints)``,
+  one :func:`fingerprint` per source. ``sources`` are the files or
+  directories the build actually reads, so a dataset rewritten in
+  place within one session rebuilds instead of serving results
+  computed from the old files. Spark's own CacheManager matches cached
+  data by plan, not by file contents, and would substitute the old
+  persisted data into the rebuild; so a source seen with a new
+  fingerprint first has Spark's cached data over it refreshed
+  (``spark.catalog.refreshByPath``).
+- **Bound**: one :class:`IndexCache` LRU of ``DEFAULT_MAX_ENTRIES`` per
+  tag. Artifacts that must not crowd each other out (the statistics of
+  each profiled table) get one tag each.
+- **Release**: eviction or replacement unpersists every DataFrame and
+  Broadcast inside the value, so executor storage stays bounded;
+  :func:`clear` empties the registered tags and destroys their
+  broadcasts. Every tag registers itself on first use, so ``clear()``
+  is complete by construction.
+- **Locking**: one lock guards the registry and each get/put. Builds
+  run outside it, so independent builds overlap and a build may look
+  up other artifacts. Two threads that miss on the same key both
+  build; the later put replaces (and releases) the earlier value.
 """
 
 from __future__ import annotations
 
+import functools
+import os
+import threading
+import weakref
 from collections import OrderedDict
-from typing import Any, Hashable
+from typing import Any, Callable, Hashable, Iterable
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 
@@ -76,3 +101,148 @@ class IndexCache:
                     part.destroy() if destroy else part.unpersist()
                 except Exception:
                     pass
+
+
+_LOCK = threading.Lock()
+_REGISTRY: dict[str, IndexCache] = {}
+_SEEN: dict[str, tuple] = {}  # source -> its last fingerprint
+_SESSION_UUIDS: "weakref.WeakKeyDictionary[object, str]" = weakref.WeakKeyDictionary()
+
+
+def session_cache_key(spark) -> str:
+    """Stable per-session key: applicationId (unique per started
+    SparkContext) — unlike ``id()``, never reused after GC. Under Spark
+    Connect the server-side app id comes from the conf; if even that is
+    absent, a uuid pinned to the session via a weak-keyed dict (an
+    ``id()`` fallback would alias a new session at a recycled address
+    to a dead one's cache entries)."""
+    try:
+        return str(spark.sparkContext.applicationId)
+    except Exception:
+        app_id = spark.conf.get("spark.app.id", None)
+        if app_id:
+            return str(app_id)
+        import uuid
+
+        if spark not in _SESSION_UUIDS:
+            _SESSION_UUIDS[spark] = f"session-{uuid.uuid4().hex}"
+        return _SESSION_UUIDS[spark]
+
+
+def _local_path(source: str) -> str:
+    return unquote(urlparse(source).path) if source.startswith("file:") else source
+
+
+def fingerprint(source: str) -> tuple:
+    """``(path, size, st_mtime_ns)`` of every file under ``source`` (a
+    file, or a directory walked recursively with symlinks followed;
+    ``file:`` URIs are stripped to local paths). One ``os.stat`` per
+    file, so a concurrent rewrite cannot mint a key matching neither
+    version. A store without ``os.stat`` (any OSError) falls back to
+    the bare path: non-local sources are immutable per session by
+    contract."""
+    path = _local_path(source)
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return ((path, st.st_size, st.st_mtime_ns),)
+        entries = []
+        for root, dirs, files in os.walk(path, followlinks=True):
+            dirs.sort()
+            for name in sorted(files):
+                f = os.path.join(root, name)
+                st = os.stat(f)
+                entries.append((f, st.st_size, st.st_mtime_ns))
+        return tuple(entries)
+    except OSError:
+        return (path,)
+
+
+def table_paths(sf_dir: str, tables: Iterable[str]) -> list[str]:
+    """The files ``sources.read_table`` reads for ``tables``."""
+    return [f"{sf_dir}/{name}.parquet" for name in tables]
+
+
+def cache(tag: str) -> IndexCache:
+    """The registered LRU holding ``tag``'s artifacts."""
+    with _LOCK:
+        return _REGISTRY.setdefault(tag, IndexCache())
+
+
+def artifact(
+    spark, tag: str, sources: Iterable[str], params: Hashable, build: Callable[[], Any]
+) -> Any:
+    """Get-or-build the artifact ``build()`` returns. ``spark`` is None
+    for session-independent artifacts (file metadata). A build that
+    returns None is not cached."""
+    prints = {source: fingerprint(source) for source in sources}
+    key = (
+        tag,
+        None if spark is None else session_cache_key(spark),
+        params,
+        tuple(prints.values()),
+    )
+    store = cache(tag)
+    with _LOCK:
+        if spark is not None:
+            for source, fp in prints.items():
+                if _SEEN.setdefault(source, fp) != fp:
+                    spark.catalog.refreshByPath(source)
+                    _SEEN[source] = fp
+        value = store.get(key)
+    if value is None:
+        value = build()
+        if value is not None:
+            with _LOCK:
+                store.put(key, value)
+    return value
+
+
+def frame_artifact(df: DataFrame, tag: str, params: Hashable, build: Callable[[], Any]) -> Any:
+    """:func:`artifact` keyed on the files ``df`` reads. A frame with
+    no input files (in-memory) is never cached: nothing in the key
+    would tell two of them apart."""
+    try:
+        files = sorted(df.inputFiles())
+    except Exception:
+        files = []
+    if not files:
+        return build()
+    return artifact(df.sparkSession, tag, files, params, build)
+
+
+def cached(tag: str, tables: tuple[str, ...] = (), params: Hashable = ()):
+    """:func:`artifact` as a decorator for builders taking
+    ``(spark, sf_dir[, table])``: the sources are ``tables`` (plus
+    ``table``) under ``sf_dir``, and a ``table`` argument also extends
+    the tag, so each table gets its own LRU."""
+
+    def decorate(build):
+        @functools.wraps(build)
+        def get_or_build(spark, sf_dir: str, *table: str):
+            return artifact(
+                spark,
+                ".".join((tag, *table)),
+                table_paths(sf_dir, tables + table),
+                params,
+                lambda: build(spark, sf_dir, *table),
+            )
+
+        return get_or_build
+
+    return decorate
+
+
+def registry() -> dict[str, IndexCache]:
+    """A snapshot of the registered tags and their LRUs."""
+    with _LOCK:
+        return dict(_REGISTRY)
+
+
+def clear(prefix: str = "") -> None:
+    """Release every artifact whose tag starts with ``prefix`` (all of
+    them by default), destroying cached broadcasts."""
+    with _LOCK:
+        for tag, store in _REGISTRY.items():
+            if tag.startswith(prefix):
+                store.clear()

@@ -22,6 +22,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .index_cache import frame_artifact
+
 
 def _to_double(col_sql: str) -> tuple[str, str]:
     spark = f"transform({col_sql}, x -> cast(x AS double))"
@@ -119,59 +121,18 @@ def pair_cosine_udf():
     return _pair_cosine
 
 
-_DIM_CACHE: dict[tuple[str, str], int] = {}
-
-
-_SESSION_UUIDS: "weakref.WeakKeyDictionary[object, str]" = None  # type: ignore[assignment]
-
-
-def session_cache_key(spark) -> str:
-    """Stable per-session cache key: applicationId (unique per started
-    SparkContext) — unlike ``id()``, never reused after GC. Under Spark
-    Connect the server-side app id comes from the conf; if even that is
-    absent, a uuid pinned to the session via a weak-keyed dict (an
-    ``id()`` fallback would alias a new session at a recycled address
-    to a dead one's cache entries)."""
-    global _SESSION_UUIDS
-    try:
-        return str(spark.sparkContext.applicationId)
-    except Exception:
-        app_id = spark.conf.get("spark.app.id", None)
-        if app_id:
-            return str(app_id)
-        import uuid
-        import weakref
-
-        if _SESSION_UUIDS is None:
-            _SESSION_UUIDS = weakref.WeakKeyDictionary()
-        if spark not in _SESSION_UUIDS:
-            _SESSION_UUIDS[spark] = f"session-{uuid.uuid4().hex}"
-        return _SESSION_UUIDS[spark]
-
-
 def embedding_dim(df, col_name: str = "embedding") -> int:
     """Read the (fixed) vector dimensionality from one row — a tiny
     planning-time job that unlocks the codegen dot-product path.
-    Memoized per (session, source files): repeated queries in one
-    session (the driver runs dozens) skip the extra job. Memoization is
-    SKIPPED for non-file-backed frames (``inputFiles()`` empty): two
-    in-memory frames with different dims must never share an entry."""
-    try:
-        files = df.inputFiles()
-        key = (
-            (session_cache_key(df.sparkSession), "|".join(sorted(files)) + col_name)
-            if files
-            else None
-        )
-    except Exception:
-        key = None
-    if key is not None and key in _DIM_CACHE:
-        return _DIM_CACHE[key]
-    row = df.selectExpr(f"size({col_name}) AS d").first()
-    dim = int(row.d)
-    if key is not None:
-        _DIM_CACHE[key] = dim
-    return dim
+    Cached per (session, source files) in operators/index_cache:
+    repeated queries in one session (a query suite runs dozens) skip the
+    extra job; in-memory frames are never cached."""
+    return frame_artifact(
+        df,
+        "similarity.embedding_dim",
+        col_name,
+        lambda: int(df.selectExpr(f"size({col_name}) AS d").first().d),
+    )
 
 
 def _plane(i: str, j: int) -> str:

@@ -22,7 +22,7 @@ from ..operators.dedup import (
     simhash_buckets,
     verify_jaccard_pairs,
 )
-from ..operators.index_cache import IndexCache
+from ..operators.index_cache import cached
 from ..operators.util import widen
 from .base import QuerySpec, t
 
@@ -105,19 +105,6 @@ SELECT doc_id, lang, source, n_chars FROM ranked WHERE row_num = 1
 
 # --- MinHash + LSH near-dup -------------------------------------------------
 
-# Session cache for the verified all-docs MinHash pair list: both
-# dedup_minhash_lsh AND the composed curation pipeline consume the same
-# banding of the same corpus (identical shingle/band/row params and a
-# verify threshold ≤ curation's), so the expensive part — the Arrow
-# MinHash pass + the (band_id, band_key) bucket shuffle + Jaccard verify
-# — is built once per (app, sf_dir) and the tiny persisted pair frame
-# (≈|near-dups|, corpus-independent) is shared. Same IndexCache
-# discipline as the ANN indexes in queries/similarity.py: LRU-bounded,
-# eviction unpersists. A cluster deployment would land this pair list
-# as a table; the cache is the session-scoped analog.
-_MINHASH_PAIR_CACHE = IndexCache()
-
-
 def _check_shared_banding(P) -> None:
     """The curation pipelines may reuse the session-cached minhash pair
     list ONLY while their banding params match this module's and their
@@ -142,28 +129,27 @@ def _check_shared_banding(P) -> None:
         )
 
 
+# The verified all-docs MinHash pair list, cached per session: both
+# dedup_minhash_lsh AND the composed curation pipeline consume the same
+# banding of the same corpus (identical shingle/band/row params and a
+# verify threshold ≤ curation's), so the expensive part — the Arrow
+# MinHash pass + the (band_id, band_key) bucket shuffle + Jaccard verify
+# — is built once and the tiny persisted pair frame (≈|near-dups|,
+# corpus-independent) is shared. A cluster deployment would land this
+# pair list as a table; the cache is the session-scoped analog.
+@cached(
+    "dedup.minhash_pairs",
+    ("documents",),
+    (SHINGLE_LEN, NUM_BANDS, ROWS_PER_BAND, MINHASH_VERIFY_THRESHOLD),
+)
 def verified_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import session_cache_key
-
-    key = (
-        session_cache_key(spark),
-        sf_dir,
-        SHINGLE_LEN,
-        NUM_BANDS,
-        ROWS_PER_BAND,
-        MINHASH_VERIFY_THRESHOLD,
-    )
-    hit = _MINHASH_PAIR_CACHE.get(key)
-    if hit is not None:
-        return hit
     docs = t(spark, sf_dir, "documents")
     pairs = minhash_band_pairs(
         docs, "doc_id", "text", SHINGLE_LEN, NUM_BANDS, ROWS_PER_BAND
     )
-    verified = verify_jaccard_pairs(
+    return verify_jaccard_pairs(
         pairs, docs, "doc_id", "text", MINHASH_VERIFY_THRESHOLD
     ).persist()
-    return _MINHASH_PAIR_CACHE.put(key, verified)
 
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:

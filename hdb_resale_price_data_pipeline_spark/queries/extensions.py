@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
 from ..functions import hashing as H
-from ..operators.index_cache import IndexCache
+from ..operators.index_cache import cached
 from ..operators.multimodal import (
     FEATURE_SEEDS,
     documents_as_assets,
@@ -416,26 +416,18 @@ QUERIES: dict[str, QuerySpec] = {
 # (same watermarks, same closed time range), plus the watermark-evicted
 # unmatched views the inner cannot express. So the OUTER streaming query
 # — the strictly-more-general plan — runs once per (session, dataset)
-# and persists, exactly the _knn_edges IndexCache discipline the graph
-# family uses: in production this is the materialized attribution table
-# both consumers read, not two re-runs of the same stream. The inner
-# operator (streaming/events.stream_view_purchase_join) remains
-# independently tested in tests/test_streaming.py.
-_ATTR_CACHE = IndexCache()
-
-
+# and persists, exactly like the graph family's _knn_edges: in
+# production this is the materialized attribution table both consumers
+# read, not two re-runs of the same stream. The inner operator
+# (streaming/events.stream_view_purchase_join) remains independently
+# tested in tests/test_streaming.py.
+@cached("extensions.attribution", ("events",))
 def _attribution_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import session_cache_key
     from ..streaming.events import stream_view_purchase_outer
 
-    key = (session_cache_key(spark), "attribution", sf_dir)
-    cached = _ATTR_CACHE.get(key)
-    if cached is not None:
-        return cached
-    rows = run_stream_to_df(
+    return run_stream_to_df(
         stream_view_purchase_outer(events_stream(spark, sf_dir)), spark
     ).persist()
-    return _ATTR_CACHE.put(key, rows)
 
 
 def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -517,7 +509,6 @@ def q_stream_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice) — exact-fingerprint and prefix-fingerprint broadcast
     stream-static joins, routed drop_exact/review_neardup/ingest.
     Map-only append stream → exact batch-twin oracle."""
-    from ..operators.similarity import session_cache_key
     from ..streaming.documents import documents_stream, stream_dedup_gate
 
     corpus = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 0)
@@ -525,7 +516,7 @@ def q_stream_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_dedup_gate(
             documents_stream(spark, sf_dir),
             corpus,
-            cache_key=(session_cache_key(spark), sf_dir, "mod3"),
+            cache_key="mod3",
         ),
         spark,
     )

@@ -35,11 +35,10 @@ SURVIVORS pay row-grain work:
   skew.
 
 The candidate loop is driver-side over |columns|² CANDIDATES (bounded,
-stats-only) — never over rows. Statistics are cached per (session,
-dataset fingerprint); each discoverer's RESULT frame is persisted per
-(session, dataset) in an IndexCache (joined to
-tools/plan_snapshot.clear_index_caches), so ``dq_profile_report``
-steady-state costs three projections and a union.
+stats-only) — never over rows. Each table's statistics and each
+discoverer's persisted RESULT frame are session artifacts
+(operators/index_cache, keyed on the files they read), so
+``dq_profile_report`` steady-state costs three projections and a union.
 
 The reference (cyusong/HDB-Resale-Price-Data-Pipeline) ships no
 profiler — its Spark surface is four cleaning scripts
@@ -50,13 +49,11 @@ UCC pruning, and SPIDER/Binder range/NDV IND pruning.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
-from ..operators.index_cache import IndexCache
+from ..operators import index_cache
 from .base import QuerySpec, t
 
 # --- the declared catalog -------------------------------------------------------
@@ -158,59 +155,17 @@ def _ind_cols(table: str) -> tuple[tuple[str, str], ...]:
 
 # --- statistics layer (ANALYZE semantics, fingerprint-keyed) ---------------------
 
-# Per-(session, dataset-fingerprint) cache of collected profiling
-# STATISTICS (plain tuples, never DataFrames): computed once, consulted
-# by every discoverer/report run. Bounded FIFO; values are a few
-# hundred bytes.
-_PROFILE_STATS_CACHE: dict = {}
-_PROFILE_STATS_MAX = 64
-
-# Per-(session, dataset-fingerprint) cache of each discoverer's RESULT
-# frame (persisted, a few hundred rows): the report and repeat
-# invocations read the materialized artifact instead of re-running the
-# survivor scans. Joined to tools/plan_snapshot.clear_index_caches —
-# a clearCache() without it leaves retained-but-unpersisted frames
-# whose plans no longer match their snapshots.
-_PROFILE_RESULT_CACHE = IndexCache(max_entries=8)
+# Profiling artifacts live under the "profiling." tags of
+# operators/index_cache: per-table statistics (plain tuples, one tag per
+# table so a cold build's nine tables never evict each other) and each
+# discoverer's persisted RESULT frame, which the report and repeat
+# invocations read instead of re-running the survivor scans.
 
 
 def clear_profile_caches() -> None:
     """Drop cached statistics AND result frames (unpersisting the
-    latter). Part of the canonical tools/plan_snapshot.
-    clear_index_caches list."""
-    _PROFILE_STATS_CACHE.clear()
-    _PROFILE_RESULT_CACHE.clear()
-
-
-def _dataset_fingerprint(sf_dir: str) -> int:
-    """Cheap content fingerprint of the cataloged tables: (name, size,
-    mtime) of every file under each table path. Folding this into the
-    cache keys means a dataset directory regenerated in-place within
-    one long-lived session re-profiles instead of classifying from
-    stale statistics (the DuckDB oracle always re-reads the files, so
-    a stale Spark-side cache would read as a cross-engine mismatch).
-    Non-local stores (no os.stat) fall back to 0 — there the documented
-    contract is that sf_dir contents are immutable per session."""
-    entries: list[tuple] = []
-    for table in _CATALOG:
-        path = os.path.join(sf_dir, f"{table}.parquet")
-        try:
-            if os.path.isdir(path):
-                for name in sorted(os.listdir(path)):
-                    st = os.stat(os.path.join(path, name))
-                    entries.append((table, name, st.st_size, st.st_mtime_ns))
-            else:
-                st = os.stat(path)
-                entries.append((table, st.st_size, st.st_mtime_ns))
-        except OSError:
-            return 0
-    return hash(tuple(entries))
-
-
-def _session_key(spark: SparkSession):
-    from ..operators.similarity import session_cache_key
-
-    return session_cache_key(spark)
+    latter)."""
+    index_cache.clear("profiling.")
 
 
 class _TableStats:
@@ -235,10 +190,8 @@ def _ind_value_col(column: str, klass: str):
     return col(column).cast("bigint") if klass == "int" else col(column)
 
 
+@index_cache.cached("profiling.stats")
 def _table_stats(spark: SparkSession, sf_dir: str, table: str) -> _TableStats:
-    key = (_session_key(spark), sf_dir, table, _dataset_fingerprint(sf_dir))
-    if key in _PROFILE_STATS_CACHE:
-        return _PROFILE_STATS_CACHE[key]
     # Distinct aggregates dominate the ANALYZE scan (each adds a slice
     # to Spark's Expand), so every column pays exactly ONE: ind-class
     # columns (int/str/date) pay the RAW countDistinct — their sentinel
@@ -274,7 +227,7 @@ def _table_stats(spark: SparkSession, sf_dir: str, table: str) -> _TableStats:
             ndv[c] = row[f"rndv_{c}"] + (1 if row[f"nn_{c}"] < rowcnt else 0)
         else:
             ndv[c] = row[f"ndv_{c}"]
-    stats = _TableStats(
+    return _TableStats(
         rowcnt,
         ndv,
         {
@@ -282,41 +235,34 @@ def _table_stats(spark: SparkSession, sf_dir: str, table: str) -> _TableStats:
             for c, _ in _ind_cols(table)
         },
     )
-    while len(_PROFILE_STATS_CACHE) >= _PROFILE_STATS_MAX:
-        _PROFILE_STATS_CACHE.pop(next(iter(_PROFILE_STATS_CACHE)))
-    _PROFILE_STATS_CACHE[key] = stats
-    return stats
 
 
 def _warm_table_stats(spark: SparkSession, sf_dir: str, tables) -> None:
-    """Collect missing tables' ANALYZE rows CONCURRENTLY (guide §2.6:
-    overlap independent jobs). Each stats row is one small bounded
-    job; the candidate loops otherwise trigger them serially on first
-    touch, leaving most of the box idle through nine job tails. A few
-    jobs in flight back-fill the tail without fighting for cores; the
-    cache dict is only ever written under the GIL and ``missing`` is
-    deduplicated, so no two threads compute the same table."""
-    fp = _dataset_fingerprint(sf_dir)
-    skey = _session_key(spark)
-    missing = [
-        tb
-        for tb in dict.fromkeys(tables)
-        if (skey, sf_dir, tb, fp) not in _PROFILE_STATS_CACHE
-    ]
-    if len(missing) < 2:
-        return
+    """Collect tables' ANALYZE rows CONCURRENTLY (guide §2.6: overlap
+    independent jobs). Each stats row is one small bounded job; the
+    candidate loops otherwise trigger them serially on first touch,
+    leaving most of the box idle through nine job tails. A few jobs in
+    flight back-fill the tail without fighting for cores; the tables
+    are deduplicated, so no two threads compute the same table, and
+    already-cached tables are plain hits."""
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=3) as pool:
-        list(pool.map(lambda tb: _table_stats(spark, sf_dir, tb), missing))
+        list(
+            pool.map(
+                lambda tb: _table_stats(spark, sf_dir, tb), dict.fromkeys(tables)
+            )
+        )
 
 
 def _cached_result(spark: SparkSession, sf_dir: str, tag: str, build):
-    key = (_session_key(spark), sf_dir, tag, _dataset_fingerprint(sf_dir))
-    cached = _PROFILE_RESULT_CACHE.get(key)
-    if cached is not None:
-        return cached
-    return _PROFILE_RESULT_CACHE.put(key, build().persist())
+    return index_cache.artifact(
+        spark,
+        f"profiling.{tag}",
+        index_cache.table_paths(sf_dir, _CATALOG),
+        (),
+        lambda: build().persist(),
+    )
 
 
 def _coalesced_sql(column: str) -> str:
@@ -383,8 +329,7 @@ def q_dq_fd_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
     (it computes g3 for every pair and masks with the identical CASE —
     semantics, not mechanism). Exact-integer statuses and numerators;
     the one division lands on the ppm grid after the decision.
-    Result frames persist per (session, dataset) — see
-    ``_PROFILE_RESULT_CACHE``."""
+    Result frames persist per session — see ``_cached_result``."""
     return _cached_result(
         spark, sf_dir, "fd", lambda: _build_fd_discover(spark, sf_dir)
     )
@@ -1118,7 +1063,7 @@ def q_dq_od_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side to Σ NDV(a), and ONE running-max/min window per candidate
     (partitioned by candidate id) counts out-of-order groups. Row-grain
     work never multiplies by candidate count. Result frames persist per
-    (session, dataset) — see ``_PROFILE_RESULT_CACHE``."""
+    session — see ``_cached_result``."""
     return _cached_result(
         spark, sf_dir, "od", lambda: _build_od_discover(spark, sf_dir)
     )

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col
 
 from ..operators import similarity as S
-from ..operators.index_cache import IndexCache
+from ..operators.index_cache import cached
 from ..operators.util import widen
 from .base import QuerySpec, t
 
@@ -90,20 +90,14 @@ WHERE {cos} >= {NEAR_DUP_COSINE}
 """
 
 
-# LSH index cache: (applicationId, sf_dir, planes) → (bucketed frame,
-# dim). Like the IVF index below, an LSH index is BUILT ONCE (bucket id
-# for every vector, persisted) and probed many times; steady-state
-# queries only filter the persisted frame. Building also pays the one-
-# time Catalyst cost of the ~planes×dim-term bucket expression — per
-# probe that cost would dominate the (tiny) bucket scan.
-_LSH_INDEX_CACHE = IndexCache()
-
-
+# LSH index → (bucketed frame, dim). Like the IVF index below, an LSH
+# index is BUILT ONCE (bucket id for every vector, persisted) and probed
+# many times; steady-state queries only filter the persisted frame.
+# Building also pays the one-time Catalyst cost of the ~planes×dim-term
+# bucket expression — per probe that cost would dominate the (tiny)
+# bucket scan.
+@cached("similarity.lsh", ("embeddings",), N_PLANES)
 def _lsh_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
-    key = (S.session_cache_key(spark), sf_dir, N_PLANES)
-    hit = _LSH_INDEX_CACHE.get(key)
-    if hit is not None:
-        return hit
     emb = t(spark, sf_dir, "embeddings")
     dim = S.embedding_dim(emb)
     bucketed = (
@@ -111,7 +105,7 @@ def _lsh_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
         .withColumn("bucket", S.hyperplane_bucket_expr("embedding", N_PLANES, dim))
         .persist()
     )
-    return _LSH_INDEX_CACHE.put(key, (bucketed, dim))
+    return bucketed, dim
 
 
 def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -218,21 +212,15 @@ GROUP BY label, pos
 IVF_K = 8
 IVF_NPROBE = 2
 
-# IVF index cache: (applicationId, sf_dir, K) → (codebook, persisted
-# assignments). An IVF index is BUILT ONCE (codebook + inverted-list
-# assignment of every vector) and probed many times — that build/probe
-# split is the entire point of the structure. The persisted assignment
-# frame is the inverted list; steady-state queries touch only it.
-_IVF_INDEX_CACHE = IndexCache()
-
-
+# IVF index → (codebook, persisted assignments). An IVF index is BUILT
+# ONCE (codebook + inverted-list assignment of every vector) and probed
+# many times — that build/probe split is the entire point of the
+# structure. The persisted assignment frame is the inverted list;
+# steady-state queries touch only it.
+@cached("similarity.ivf", ("embeddings",), IVF_K)
 def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[list, DataFrame]:
     from ..operators import ivf as I
 
-    key = (S.session_cache_key(spark), sf_dir, IVF_K)
-    hit = _IVF_INDEX_CACHE.get(key)
-    if hit is not None:
-        return hit
     emb = t(spark, sf_dir, "embeddings")
     codebook = sorted(
         (int(r.vec_id), [float(x) for x in r.embedding])
@@ -241,7 +229,7 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[list, DataFrame]:
         .collect()
     )
     assigned = I.assign_to_codebook(widen(emb), "embedding", codebook).persist()
-    return _IVF_INDEX_CACHE.put(key, (codebook, assigned))
+    return codebook, assigned
 
 
 def _probe_ids(codebook: list, q_vec: list[float], nprobe: int) -> list[int]:
@@ -335,7 +323,7 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     then cluster histogram. The iterative fit carries a FULL driver
     oracle (``_kmeans_oracle``) — the fixed iteration count unrolls as
     CTE layers; invariants additionally tested in tests/test_kmeans.py.
-    The fit + assignment ride the shared ``_IVF_KM_CACHE`` index (same
+    The fit + assignment ride the shared ``_ivf_kmeans_index`` (same
     k, iterations, and assignment discipline as ``emb_ivf_kmeans_topk``
     / ``emb_semdedup`` / ``emb_ivfpq_topk``), so a warm session pays
     one cached-frame aggregation, and the expensive train happens once
@@ -509,27 +497,21 @@ FROM scaled
 """
 
 
-# Trained-codebook IVF index cache, same build/probe split as
-# _IVF_INDEX_CACHE but with k-means centroids: balanced inverted lists
-# (a sampled codebook inherits the data's density skew — hot lists make
-# probe cost and recall uneven; Lloyd iterations even them out).
-_IVF_KM_CACHE = IndexCache()
-
-
+# Trained-codebook IVF index, same build/probe split as _ivf_index but
+# with k-means centroids: balanced inverted lists (a sampled codebook
+# inherits the data's density skew — hot lists make probe cost and
+# recall uneven; Lloyd iterations even them out).
+@cached("similarity.ivf_kmeans", ("embeddings",), IVF_K)
 def _ivf_kmeans_index(spark: SparkSession, sf_dir: str) -> tuple[list, DataFrame]:
     from ..operators import ivf as I
     from ..operators.kmeans import kmeans_fit
 
-    key = (S.session_cache_key(spark), sf_dir, IVF_K)
-    hit = _IVF_KM_CACHE.get(key)
-    if hit is not None:
-        return hit
     emb = t(spark, sf_dir, "embeddings")
     codebook = kmeans_fit(
         emb, "embedding", "vec_id", k=IVF_K, max_iter=KMEANS_ITERS
     )
     assigned = I.assign_to_codebook(widen(emb), "embedding", codebook).persist()
-    return _IVF_KM_CACHE.put(key, (codebook, assigned))
+    return codebook, assigned
 
 
 def q_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -718,25 +700,19 @@ PQ_ITERS = 2
 # static oracle describes).
 PQ_EMB_DIM = 64
 
-# PQ index cache: same (applicationId, sf_dir) build/probe split as the
-# IVF caches. The build trains M per-subspace codebooks and encodes the
-# corpus once; queries touch only the persisted encoded frame.
-_PQ_INDEX_CACHE = IndexCache()
-
-
+# PQ index: same build/probe split as the IVF indexes. The build trains
+# M per-subspace codebooks and encodes the corpus once; queries touch
+# only the persisted encoded frame.
+@cached("similarity.pq", ("embeddings",), (PQ_M, PQ_KSUB))
 def _pq_index(spark: SparkSession, sf_dir: str) -> tuple[list, DataFrame]:
     from ..operators import pq as P
 
-    key = (S.session_cache_key(spark), sf_dir, PQ_M, PQ_KSUB)
-    hit = _PQ_INDEX_CACHE.get(key)
-    if hit is not None:
-        return hit
     emb = t(spark, sf_dir, "embeddings")
     codebooks = P.pq_train(
         emb, "embedding", "vec_id", m=PQ_M, ksub=PQ_KSUB, max_iter=PQ_ITERS
     )
     encoded = P.pq_encode(widen(emb), "embedding", codebooks).persist()
-    return _PQ_INDEX_CACHE.put(key, (codebooks, encoded))
+    return codebooks, encoded
 
 
 def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -845,7 +821,6 @@ LIMIT {TOP_K}
 # is a partition-prunable predicate on the list id and the scan reads
 # codes only — the raw vectors are touched for the final
 # refine_factor×k re-rank alone.
-_IVFPQ_CACHE = IndexCache()
 
 
 def _ann_store_path(sf_dir: str) -> str | None:
@@ -876,6 +851,7 @@ def _ann_store_path(sf_dir: str) -> str | None:
     return os.path.join(store, tag)
 
 
+@cached("similarity.ivfpq", ("embeddings",), (IVF_K, PQ_M, PQ_KSUB))
 def _ivfpq_index(spark: SparkSession, sf_dir: str):
     """Build — or, r5, COLD-LOAD — the IVF-PQ index. With
     ``SPARK_GRAFT_ANN_STORE`` set, a fresh session first tries
@@ -890,20 +866,16 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str):
     from ..operators import pq as P
     from ..operators.index_store import load_ann_index, save_ann_index
 
-    key = (S.session_cache_key(spark), sf_dir, IVF_K, PQ_M, PQ_KSUB)
-    hit = _IVFPQ_CACHE.get(key)
-    if hit is not None:
-        return hit
     store_path = _ann_store_path(sf_dir)
     if store_path and os.path.exists(f"{store_path}/manifest.json"):
         coarse, pq_cbs, encoded = load_ann_index(spark, store_path)
-        return _IVFPQ_CACHE.put(key, (coarse, pq_cbs, encoded.persist()))
+        return coarse, pq_cbs, encoded.persist()
     coarse, assigned = _ivf_kmeans_index(spark, sf_dir)
     pq_cbs, _ = _pq_index(spark, sf_dir)
     encoded = P.pq_encode(assigned, "embedding", pq_cbs).persist()
     if store_path:
         save_ann_index(store_path, coarse, pq_cbs, encoded)
-    return _IVFPQ_CACHE.put(key, (coarse, pq_cbs, encoded))
+    return coarse, pq_cbs, encoded
 
 
 def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -989,23 +961,17 @@ LIMIT {TOP_K}
 # DATA property: on this near-uniform synthetic corpus the raw-vector
 # variant measures higher recall (0.9 vs 0.7 — see
 # tests/test_similarity_recall.py), which is exactly why both ship.
-_IVFADC_CACHE = IndexCache()
-
-
+@cached("similarity.ivfadc", ("embeddings",), (IVF_K, PQ_M, PQ_KSUB))
 def _ivfadc_index(spark: SparkSession, sf_dir: str):
     from ..operators import pq as P
 
-    key = (S.session_cache_key(spark), sf_dir, IVF_K, PQ_M, PQ_KSUB, "residual")
-    hit = _IVFADC_CACHE.get(key)
-    if hit is not None:
-        return hit
     coarse, assigned = _ivf_kmeans_index(spark, sf_dir)
     res = P.with_residual(assigned, "embedding", coarse)
     pq_cbs = P.pq_train(
         res, "residual", "vec_id", m=PQ_M, ksub=PQ_KSUB, max_iter=PQ_ITERS
     )
     encoded = P.pq_encode(res, "residual", pq_cbs).drop("residual").persist()
-    return _IVFADC_CACHE.put(key, (coarse, pq_cbs, encoded))
+    return coarse, pq_cbs, encoded
 
 
 def q_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1149,7 +1115,7 @@ def q_emb_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters, keep the lowest-id representative of each near-dup star.
 
     Composition of two cached indexes: the trained k-means assignment
-    (``_IVF_KM_CACHE`` — the SemDeDup cluster step) co-blocked with the
+    (``_ivf_kmeans_index`` — the SemDeDup cluster step) co-blocked with the
     hyperplane LSH bucket, so the quadratic pair term is bounded by
     |cluster ∩ bucket| (expected n/(K·2^planes)) — at 100 TB the
     (ivf_cid, bucket) composite is the one shuffle key and no
@@ -1244,17 +1210,12 @@ GROUP BY a.ivf_cid
 IVF_INC_MOD = 10
 IVF_INC_REM = 7  # vec_id % 10 == 7 → today's "new arrivals"
 
-_IVF_CORPUS_CACHE = IndexCache()
 
-
+@cached("similarity.ivf_corpus", ("embeddings",), IVF_K)
 def _ivf_corpus_index(spark: SparkSession, sf_dir: str) -> tuple[list, DataFrame]:
     from ..operators import ivf as I
     from ..operators.kmeans import kmeans_fit
 
-    key = (S.session_cache_key(spark), sf_dir, IVF_K, "corpus")
-    hit = _IVF_CORPUS_CACHE.get(key)
-    if hit is not None:
-        return hit
     corpus = t(spark, sf_dir, "embeddings").filter(
         col("vec_id") % IVF_INC_MOD != IVF_INC_REM
     )
@@ -1262,7 +1223,7 @@ def _ivf_corpus_index(spark: SparkSession, sf_dir: str) -> tuple[list, DataFrame
         corpus, "embedding", "vec_id", k=IVF_K, max_iter=KMEANS_ITERS
     )
     assigned = I.assign_to_codebook(widen(corpus), "embedding", codebook).persist()
-    return _IVF_CORPUS_CACHE.put(key, (codebook, assigned))
+    return codebook, assigned
 
 
 def q_emb_ivf_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1610,7 +1571,7 @@ def q_emb_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduce the corpus's density skew, while a per-cluster quota
     yields coverage of every region the index knows about.
 
-    Scale: rides the shared ``_IVF_KM_CACHE`` trained index (built once
+    Scale: rides the shared ``_ivf_kmeans_index`` trained index (built once
     per session for the whole emb_* family); the quota filter is one
     ``row_number`` window partitioned by ``ivf_cid`` — a single shuffle
     on the cluster id. A pathologically hot cluster makes one fat
@@ -1921,19 +1882,12 @@ LOCAL_QUERIES["emb_knn_graph"] = QuerySpec(q_emb_knn_graph, _knn_graph_oracle())
 
 # The k-NN edge list is an ARTIFACT consumed by the whole graph family
 # (PageRank, mutual-kNN + triangles, BFS, label propagation): build it
-# once per (session, dataset) and persist, exactly like the ANN index
-# caches — in a production pipeline this is the materialized graph
-# table every downstream job reads, not a per-query rebuild.
-_KNN_EDGE_CACHE = IndexCache()
-
-
+# once per session and persist, exactly like the ANN indexes — in a
+# production pipeline this is the materialized graph table every
+# downstream job reads, not a per-query rebuild.
+@cached("similarity.knn_edges", ("embeddings",))
 def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (S.session_cache_key(spark), "knn_edges", sf_dir)
-    cached = _KNN_EDGE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    edges = q_emb_knn_graph(spark, sf_dir).persist()
-    return _KNN_EDGE_CACHE.put(key, edges)
+    return q_emb_knn_graph(spark, sf_dir).persist()
 
 
 SQ_SHORTLIST = 40  # coarse-score candidates re-ranked exactly (4·TOP_K)

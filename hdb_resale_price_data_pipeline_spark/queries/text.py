@@ -11,6 +11,7 @@ from ..operators import chunking as C
 from ..operators import decontam as D
 from ..operators import sampling as S
 from ..operators import text as T
+from ..operators.index_cache import cached
 from ..operators.util import widen
 from .base import QuerySpec, t
 
@@ -324,7 +325,7 @@ def q_text_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         eval_pred=col("doc_id") % 10 == 0,
         n=DECONTAM_N,
-        cache_key=(sf_dir, "mod10"),
+        cache_key="mod10",
     )
 
 
@@ -1168,14 +1169,9 @@ GROUP BY doc_id
 
 
 BPE_MERGES = 6
-# Same bounded-LRU discipline as the ANN indexes (values are plain
-# merge lists — nothing to unpersist, but dead sessions/datasets must
-# still fall out instead of accumulating forever).
-from ..operators.index_cache import IndexCache as _IndexCache  # noqa: E402
-
-_BPE_MERGE_CACHE = _IndexCache()
 
 
+@cached("text.bpe", ("documents",), BPE_MERGES)
 def _bpe_model(spark: SparkSession, sf_dir: str):
     """ONE trained BPE model per (session, corpus): (merges, final
     piece frequencies), shared by the learn/apply query AND the
@@ -1184,16 +1180,9 @@ def _bpe_model(spark: SparkSession, sf_dir: str):
     of training's own final symbol table for free
     (``bpe_train_with_freqs``)."""
     from ..operators.bpe import bpe_train_with_freqs
-    from ..operators.similarity import session_cache_key
 
-    key = (session_cache_key(spark), sf_dir, BPE_MERGES)
-    model = _BPE_MERGE_CACHE.get(key)
-    if model is None:
-        docs_train = t(spark, sf_dir, "documents")
-        model = _BPE_MERGE_CACHE.put(
-            key, bpe_train_with_freqs(docs_train, "text", n_merges=BPE_MERGES)
-        )
-    return model
+    docs_train = t(spark, sf_dir, "documents")
+    return bpe_train_with_freqs(docs_train, "text", n_merges=BPE_MERGES)
 
 
 def q_text_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1275,21 +1264,15 @@ FROM documents
 """
 
 
+@cached("text.wordpiece", ("documents",), BPE_MERGES)
 def _wordpiece_model(spark: SparkSession, sf_dir: str):
     """ONE trained WordPiece model per (session, corpus) — same cache
     discipline as ``_bpe_model`` (distinct key: selection rule differs,
     mechanics shared)."""
     from ..operators.bpe import wordpiece_train_with_freqs
-    from ..operators.similarity import session_cache_key
 
-    key = (session_cache_key(spark), sf_dir, "wordpiece", BPE_MERGES)
-    model = _BPE_MERGE_CACHE.get(key)
-    if model is None:
-        docs_train = t(spark, sf_dir, "documents")
-        model = _BPE_MERGE_CACHE.put(
-            key, wordpiece_train_with_freqs(docs_train, "text", n_merges=BPE_MERGES)
-        )
-    return model
+    docs_train = t(spark, sf_dir, "documents")
+    return wordpiece_train_with_freqs(docs_train, "text", n_merges=BPE_MERGES)
 
 
 def q_text_wordpiece_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1543,26 +1526,19 @@ FROM documents d LEFT JOIN agg a USING (doc_id)
 """
 
 
-_LR_W_CACHE = _IndexCache()  # trained LR weights per (session, corpus)
-
-
+@cached("text.lr", ("documents",))
 def _lr_model(spark: SparkSession, sf_dir: str) -> list[float]:
     """ONE trained LR model per (session, corpus): full-batch GD on the
     deterministic doc_id-parity slice, target = English — shared by the
     corpus-scoring query, the composed selection stage, and (r5) the
     streaming classifier gate, so training never runs twice."""
     from ..operators import classifier as CL
-    from ..operators.similarity import session_cache_key
 
-    key = (session_cache_key(spark), sf_dir, "lr_en")
-    w = _LR_W_CACHE.get(key)
-    if w is None:
-        docs = widen(t(spark, sf_dir, "documents"))
-        train_fx = CL.featurize(
-            docs.filter(col("doc_id") % 2 == 0), "text", col("lang") == "en"
-        )
-        w = _LR_W_CACHE.put(key, CL.lr_train(train_fx))
-    return w
+    docs = widen(t(spark, sf_dir, "documents"))
+    train_fx = CL.featurize(
+        docs.filter(col("doc_id") % 2 == 0), "text", col("lang") == "en"
+    )
+    return CL.lr_train(train_fx)
 
 
 def q_text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1729,36 +1705,32 @@ LOCAL_QUERIES: dict[str, QuerySpec] = {
 # --- unigram-LM tokenizer (third of the tokenizer trio) ---------------------
 
 
+@cached("text.unigram", ("documents",))
 def _unigram_model(spark: SparkSession, sf_dir: str):
     """ONE trained unigram model per (session, corpus) — the
     ``_bpe_model`` cache discipline. Holds (qlp, words) where words is
     the persisted vocab-sized frequency frame training built."""
-    from ..operators.similarity import session_cache_key
     from ..operators.unigram import MAX_WORD_LEN, unigram_train
 
-    key = (session_cache_key(spark), sf_dir, "unigram")
-    model = _BPE_MERGE_CACHE.get(key)
-    if model is None:
-        docs_train = t(spark, sf_dir, "documents")
-        model = unigram_train(docs_train, "text")
-        # oracle-compat guard for EVERY consumer (learn + encode): the
-        # SQL unroll is static in MAX_WORD_LEN (one DP layer per
-        # position); the Python decoder is length-agnostic. One tiny
-        # agg over the vocab-sized frame, paid once per (session,
-        # corpus) with the training itself. On failure, release the
-        # persisted words frame training built — the model never enters
-        # the cache, so nothing else would ever unpersist it.
-        try:
-            max_len = model[1].agg(F.max(F.length("word"))).first()[0] or 0
-            if max_len > MAX_WORD_LEN:
-                raise ValueError(
-                    f"corpus has a {max_len}-char word; raise "
-                    f"unigram.MAX_WORD_LEN (adds one oracle CTE layer per char)"
-                )
-        except BaseException:
-            model[1].unpersist()
-            raise
-        model = _BPE_MERGE_CACHE.put(key, model)
+    docs_train = t(spark, sf_dir, "documents")
+    model = unigram_train(docs_train, "text")
+    # oracle-compat guard for EVERY consumer (learn + encode): the SQL
+    # unroll is static in MAX_WORD_LEN (one DP layer per position); the
+    # Python decoder is length-agnostic. One tiny agg over the
+    # vocab-sized frame, paid once per (session, corpus) with the
+    # training itself. On failure, release the persisted words frame
+    # training built — the model never enters the cache, so nothing
+    # else would ever unpersist it.
+    try:
+        max_len = model[1].agg(F.max(F.length("word"))).first()[0] or 0
+        if max_len > MAX_WORD_LEN:
+            raise ValueError(
+                f"corpus has a {max_len}-char word; raise "
+                f"unigram.MAX_WORD_LEN (adds one oracle CTE layer per char)"
+            )
+    except BaseException:
+        model[1].unpersist()
+        raise
     return model
 
 

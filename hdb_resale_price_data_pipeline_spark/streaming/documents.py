@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
 from ..operators import text as T
+from ..operators.index_cache import frame_artifact
 
 
 STREAM_SLICES = 4  # staged landing files → micro-batches
@@ -114,16 +115,6 @@ def _fp_bloom_probe_udf(bloom_bc):
     return probe
 
 
-# Built gate state per (caller key): two persisted fingerprint-index
-# frames + two 128 KiB bitset broadcasts. Without the cache, every gate
-# construction (bench repeats, scaling sweeps, a long-lived session
-# restarting its ingest stream) would leave another persisted pair
-# behind for the session lifetime; IndexCache eviction unpersists.
-from ..operators.index_cache import IndexCache  # noqa: E402
-
-_GATE_STATE_CACHE = IndexCache()
-
-
 def stream_dedup_gate(
     docs: DataFrame, corpus: DataFrame, cache_key: object = None
 ) -> DataFrame:
@@ -155,12 +146,14 @@ def stream_dedup_gate(
     Map-only plus two selective joins, no watermark, no state store —
     append emits every row, so the batch-twin oracle is exact.
 
-    ``cache_key``: stable caller key (e.g. (session, corpus id)) to
-    reuse the built static state — the two persisted fingerprint-index
-    frames and the two bitset broadcasts — across gate constructions
-    in one session; without it every construction pins a fresh pair of
-    persisted frames until session exit. The key must uniquely
-    determine ``corpus`` (same contract as the decontam bitset cache).
+    ``cache_key``: stable caller key to reuse the built static state —
+    the two persisted fingerprint-index frames and the two bitset
+    broadcasts — across gate constructions in one session; without it
+    every construction pins a fresh pair of persisted frames until
+    session exit. operators/index_cache keys the state on the session
+    and ``corpus``' input files, so the caller key only names what the
+    files cannot show — the filter selecting ``corpus`` from them (same
+    contract as the decontam bitset cache).
     """
     from ..functions import hashing as H
     from ..operators.incremental import prefix_fingerprint
@@ -174,8 +167,8 @@ def stream_dedup_gate(
     # widen() measured 10.8s → 2.4s.
     exact_fp = F.expr(H.string_hash("lower(text)")[0])
     prefix_fp = prefix_fingerprint("text", GATE_PREFIX_K)
-    state = _GATE_STATE_CACHE.get(cache_key) if cache_key is not None else None
-    if state is None:
+
+    def build():
         # Persisted so micro-batches share one distinct-reduction
         # instead of re-aggregating the corpus per trigger (production:
         # a materialized fp-bucketed index table with its own
@@ -193,14 +186,18 @@ def stream_dedup_gate(
             .distinct()
             .persist()
         )
-        state = (
+        return (
             corpus_exact,
             corpus_prefix,
             _fp_bloom_broadcast(corpus_exact, "c_fp"),
             _fp_bloom_broadcast(corpus_prefix, "c_pfp"),
         )
-        if cache_key is not None:
-            _GATE_STATE_CACHE.put(cache_key, state)
+
+    state = (
+        build()
+        if cache_key is None
+        else frame_artifact(corpus, "streaming.dedup_gate", cache_key, build)
+    )
     corpus_exact, corpus_prefix, exact_bc, prefix_bc = state
     exact_bloom = _fp_bloom_probe_udf(exact_bc)
     prefix_bloom = _fp_bloom_probe_udf(prefix_bc)

@@ -35,6 +35,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..operators.index_cache import artifact
+
 WATERMARK = "2 hours"
 
 
@@ -301,15 +303,12 @@ STREAM_STATE_ROWS_PER_PARTITION = int(
     os.environ.get("SPARK_GRAFT_STREAM_STATE_ROWS", "65536")
 )
 
-# path -> (file-stat key, rows, complete). ``rows`` is a lower bound
-# when ``complete`` is False (the short-circuit below fired).
-_SOURCE_ROWS_CACHE: dict[str, tuple[tuple, int, bool]] = {}
-
 
 def _dir_parquet_rows(path: str, stop_at: int | None = None) -> int | None:
     """Total footer row count over a landing directory's parquet files
-    (symlinks followed), cached on the files' (mtime, size) so a
-    re-staged directory never reuses stale counts.
+    (symlinks followed), cached in operators/index_cache on the
+    directory's fingerprint and ``stop_at``, so a re-staged directory
+    never reuses stale counts.
 
     Short-circuits once ``stop_at`` rows are proven: the caller only
     uses the count to check whether the partition ceiling binds, so at
@@ -319,39 +318,26 @@ def _dir_parquet_rows(path: str, stop_at: int | None = None) -> int | None:
     file deleted between glob and stat, a corrupt or partially-written
     footer in a landing dir receiving concurrent appends) returns None
     -> the caller skips scaling instead of failing the query."""
-    import glob
 
-    import pyarrow.parquet as pq
+    def count() -> int | None:
+        import glob
 
-    try:
+        import pyarrow.parquet as pq
+
         files = sorted(
             glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
         )
         if not files:
             return None
-        # One os.stat per file: two stats could straddle a concurrent
-        # rewrite and mint a key matching neither version.
-        stats = [os.stat(f) for f in files]
-        key = tuple(
-            (f, st.st_mtime_ns, st.st_size) for f, st in zip(files, stats)
-        )
-        hit = _SOURCE_ROWS_CACHE.get(path)
-        if hit is not None and hit[0] == key:
-            rows, complete = hit[1], hit[2]
-            # A truncated count is reusable only if it already proves
-            # this call's threshold; otherwise re-read (a higher
-            # configured partition count needs a higher bound).
-            if complete or (stop_at is not None and rows >= stop_at):
-                return rows
         rows = 0
-        complete = True
-        for i, f in enumerate(files):
+        for f in files:
             rows += pq.read_metadata(f).num_rows
             if stop_at is not None and rows >= stop_at:
-                complete = i == len(files) - 1
                 break
-        _SOURCE_ROWS_CACHE[path] = (key, rows, complete)
         return rows
+
+    try:
+        return artifact(None, "streaming.footer_rows", [path], stop_at, count)
     except Exception:  # metadata racing a live landing dir — skip scaling
         return None
 

@@ -52,10 +52,11 @@ def test_similarity_caches_build_and_evict_across_datasets(spark):
     """Two sf_dirs through the real LSH index path with capacity 1: the
     first dataset's persisted bucket frame must be unpersisted when the
     second replaces it."""
+    from hdb_resale_price_data_pipeline_spark.operators import index_cache
     from hdb_resale_price_data_pipeline_spark.queries import similarity as sim
 
-    cache = sim._LSH_INDEX_CACHE
-    saved_max, saved_data = cache.max_entries, dict(cache._data)
+    cache = index_cache.cache("similarity.lsh")
+    saved_max = cache.max_entries
     cache.clear()
     cache.max_entries = 1
     try:
@@ -86,3 +87,173 @@ def test_broadcast_eviction_unpersists_not_destroys(spark):
         destroyed = True
     assert destroyed, "clear() must destroy broadcasts"
     bc_a.destroy()
+
+
+def test_rewritten_sources_rebuild_cached_artifacts(spark, tmp_path):
+    """A dataset rewritten in place within one session must never be
+    served artifacts built from its old files: each cached family that
+    read a rewritten table rebuilds and matches its DuckDB oracle over
+    the new files (the old key carried no file fingerprint, and Spark's
+    plan-matching CacheManager would hand the rebuild the old persisted
+    data)."""
+    import shutil
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from conftest import SMOKE_SF_DIR
+    from test_correctness import _rows
+
+    from hdb_resale_price_data_pipeline_spark.queries import local_queries
+
+    sf_dir = str(tmp_path / "sf")
+    shutil.copytree(SMOKE_SF_DIR, sf_dir)
+    registry = local_queries()
+    names = (
+        "dedup_minhash_lsh",
+        "stream_attribution_outer",
+        "emb_ivf_topk",
+        "text_bpe_learn",
+    )
+    for name in names:
+        registry[name].fn(spark, sf_dir).collect()
+
+    for table in ("documents", "events", "embeddings"):
+        path = f"{sf_dir}/{table}.parquet"
+        rows = pq.read_table(path)
+        pq.write_table(rows.slice(0, rows.num_rows // 2), path)
+
+    con = duckdb.connect()
+    for path in sorted((tmp_path / "sf").glob("*.parquet")):
+        con.execute(f"CREATE VIEW {path.stem} AS SELECT * FROM '{path}'")
+    for name in names:
+        got = registry[name].fn(spark, sf_dir).toPandas()
+        want = con.execute(registry[name].oracle).fetchdf()
+        cols = sorted(got.columns)
+        assert sorted(want.columns) == cols, name
+        assert _rows(got, cols) == _rows(want, cols), name
+    con.close()
+
+
+def test_clear_releases_every_family(spark, tmp_path):
+    """``index_cache.clear()`` is complete by construction: after one
+    artifact of every family is built — the query indexes and models,
+    profiling statistics and results, the decontam bitset, the dedup
+    gate state, ``embedding_dim`` and footer row counts — one call
+    leaves the registry empty and destroys every cached broadcast."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+    from pyspark import Broadcast
+
+    from conftest import SMOKE_SF_DIR
+
+    from hdb_resale_price_data_pipeline_spark.operators import index_cache
+    from hdb_resale_price_data_pipeline_spark.queries import local_queries
+    from hdb_resale_price_data_pipeline_spark.streaming.events import (
+        _dir_parquet_rows,
+    )
+
+    registry = local_queries()
+    for name in (
+        "emb_ann_lsh_buckets",
+        "emb_ivf_topk",
+        "emb_kmeans_clusters",
+        "emb_pq_topk",
+        "emb_ivfpq_topk",
+        "emb_ivfadc_topk",
+        "emb_ivf_increment",
+        "emb_pagerank",
+        "emb_cosine_topk",
+        "dedup_minhash_lsh",
+        "stream_attribution_outer",
+        "text_bpe_learn",
+        "text_wordpiece_learn",
+        "text_unigram_learn",
+        "text_quality_classifier",
+        "text_bloom_decontaminate",
+        "stream_dedup_gate",
+        "dq_profile_report",
+    ):
+        registry[name].fn(spark, SMOKE_SF_DIR).collect()
+    pq.write_table(pa.table({"x": [1, 2]}), tmp_path / "part-0.parquet")
+    assert _dir_parquet_rows(str(tmp_path)) == 2
+
+    held = {tag for tag, c in index_cache.registry().items() if len(c)}
+    families = {
+        "similarity.lsh",
+        "similarity.ivf",
+        "similarity.ivf_kmeans",
+        "similarity.pq",
+        "similarity.ivfpq",
+        "similarity.ivfadc",
+        "similarity.ivf_corpus",
+        "similarity.knn_edges",
+        "similarity.embedding_dim",
+        "dedup.minhash_pairs",
+        "extensions.attribution",
+        "text.bpe",
+        "text.wordpiece",
+        "text.unigram",
+        "text.lr",
+        "decontam.bloom",
+        "streaming.dedup_gate",
+        "streaming.footer_rows",
+        "profiling.fd",
+        "profiling.ind",
+        "profiling.ucc",
+        "profiling.od",
+        "profiling.stats.orders",
+    }
+    assert families <= held, families - held
+    broadcasts = [
+        part
+        for c in index_cache.registry().values()
+        for value in c._data.values()
+        for part in (value if isinstance(value, (tuple, list)) else (value,))
+        if isinstance(part, Broadcast)
+    ]
+    assert len(broadcasts) >= 3  # the decontam bitset + two gate bitsets
+
+    index_cache.clear()
+    assert all(len(c) == 0 for c in index_cache.registry().values())
+    for bc in broadcasts:
+        with pytest.raises(Exception):
+            bc.value  # noqa: B018 — probing destroyed-ness
+
+
+def test_registry_is_thread_safe(tmp_path):
+    """Concurrent lookups (profiling warms three tables' statistics at
+    once) share one LRU per tag and keep each tag's bound: 32 threads
+    on 4 tags with 8 distinct params each leave exactly 4 entries per
+    tag."""
+    import sys
+    import threading
+
+    from hdb_resale_price_data_pipeline_spark.operators import index_cache
+
+    source = tmp_path / "part-0.parquet"
+    source.write_bytes(b"x")
+    stores, results = [], {}
+
+    def worker(i: int) -> None:
+        tag = f"stress.{i % 4}"
+        stores.append(index_cache.cache(tag))
+        results[i] = index_cache.artifact(None, tag, [str(source)], i, lambda: i)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(32)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(old)
+    assert results == {i: i for i in range(32)}
+    assert len({id(s) for s in stores}) == 4
+    assert all(len(index_cache.cache(f"stress.{k}")) == 4 for k in range(4))
+    index_cache.clear("stress.")
+    assert all(len(index_cache.cache(f"stress.{k}")) == 0 for k in range(4))

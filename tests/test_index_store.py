@@ -42,8 +42,7 @@ def _serve(spark, coarse, pq_cbs, encoded, q_vec, probe_ids, k=5):
 
 
 def test_cold_load_serves_identically_to_trained_session(spark):
-    from tools.plan_snapshot import clear_index_caches
-
+    from hdb_resale_price_data_pipeline_spark.operators import index_cache
     from hdb_resale_price_data_pipeline_spark.queries.similarity import _probe_ids
 
     shutil.rmtree(STORE, ignore_errors=True)
@@ -58,9 +57,9 @@ def test_cold_load_serves_identically_to_trained_session(spark):
     save_ann_index(STORE, coarse, pq_cbs, encoded)
 
     # emulate a cold start: drop every in-session index and cached block
-    clear_index_caches()  # ALL index caches: clearCache() below strips
-    # persistence from frames other caches still hold (plan-snapshot
-    # determinism — see tools/plan_snapshot.clear_index_caches)
+    index_cache.clear()  # ALL artifacts: clearCache() below strips
+    # persistence from frames the cache still holds (plan-snapshot
+    # determinism — see tools/plan_snapshot.warm_index_caches)
     spark.catalog.clearCache()
 
     l_coarse, l_pq, l_encoded = load_ann_index(spark, STORE)
@@ -116,10 +115,10 @@ def test_env_store_roundtrip_via_query_path(spark, monkeypatch, tmp_path):
 
     baseline = [tuple(r) for r in sim.q_ivfpq_topk(spark, SMOKE_SF_DIR).collect()]
 
-    from tools.plan_snapshot import clear_index_caches
+    from hdb_resale_price_data_pipeline_spark.operators import index_cache
 
     monkeypatch.setenv("SPARK_GRAFT_ANN_STORE", str(tmp_path))
-    clear_index_caches()
+    index_cache.clear()
     spark.catalog.clearCache()
     trained = [tuple(r) for r in sim.q_ivfpq_topk(spark, SMOKE_SF_DIR).collect()]
     assert trained == baseline
@@ -128,7 +127,7 @@ def test_env_store_roundtrip_via_query_path(spark, monkeypatch, tmp_path):
 
     store_dir = sim._ann_store_path(SMOKE_SF_DIR)
     assert store_dir and os.path.exists(f"{store_dir}/manifest.json")
-    clear_index_caches()
+    index_cache.clear()
     spark.catalog.clearCache()
     cold = [tuple(r) for r in sim.q_ivfpq_topk(spark, SMOKE_SF_DIR).collect()]
     assert cold == baseline

@@ -3,6 +3,7 @@ batch twins where windows are finalized (watermark semantics)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import TEST_SF_DIR, SMOKE_SF_DIR
@@ -793,13 +794,14 @@ def test_dir_parquet_rows_short_circuit_and_fault_fallback(tmp_path, monkeypatch
     """r10 (verdict item 6 + ADVICE): the footer-count helper stops
     reading footers once ``stop_at`` rows are proven (at 100 TB /
     O(1e5) files the ceiling binds long before the sum finishes), its
-    truncated counts are cached as lower bounds (reused only when they
-    still prove the caller's threshold), and ANY metadata failure
+    truncated counts are cached as lower bounds per threshold (a higher
+    threshold re-reads), and ANY metadata failure
     falls back to None (no scaling) instead of raising into a running
     streaming query."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from hdb_resale_price_data_pipeline_spark.operators import index_cache
     from hdb_resale_price_data_pipeline_spark.streaming import events as ev
 
     d = tmp_path / "landing"
@@ -818,7 +820,7 @@ def test_dir_parquet_rows_short_circuit_and_fault_fallback(tmp_path, monkeypatch
         return real(f, *a, **k)
 
     monkeypatch.setattr(pq, "read_metadata", counting)
-    ev._SOURCE_ROWS_CACHE.clear()
+    index_cache.clear("streaming.footer_rows")
 
     # full read: exact total, every footer touched, cached complete
     assert ev._dir_parquet_rows(str(d)) == n_files * rows_per
@@ -828,11 +830,11 @@ def test_dir_parquet_rows_short_circuit_and_fault_fallback(tmp_path, monkeypatch
     assert reads == []
 
     # short-circuit: 25 rows proven after 3 footers; partial is a bound
-    ev._SOURCE_ROWS_CACHE.clear()
+    index_cache.clear("streaming.footer_rows")
     got = ev._dir_parquet_rows(str(d), stop_at=25)
     assert got == 3 * rows_per and len(reads) == 3
     reads.clear()
-    # truncated cache entry reused when it still proves the threshold…
+    # truncated cache entry reused for the same threshold…
     assert ev._dir_parquet_rows(str(d), stop_at=25) == 30 and reads == []
     # …and re-read when a higher threshold needs a higher bound
     assert ev._dir_parquet_rows(str(d), stop_at=1000) == n_files * rows_per
@@ -845,6 +847,6 @@ def test_dir_parquet_rows_short_circuit_and_fault_fallback(tmp_path, monkeypatch
         raise OSError("corrupt footer")
 
     monkeypatch.setattr(pq, "read_metadata", boom)
-    ev._SOURCE_ROWS_CACHE.clear()
+    index_cache.clear("streaming.footer_rows")
     assert ev._dir_parquet_rows(str(d)) is None
     assert ev._dir_parquet_rows("/nonexistent/dir") is None

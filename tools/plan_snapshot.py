@@ -113,40 +113,6 @@ def plan_signature(df) -> dict[str, int]:
     }
 
 
-def clear_index_caches() -> None:
-    """Drop every session IndexCache (canonical list — scale_probe and
-    the snapshot gate both use it). Needed whenever a test/probe calls
-    ``spark.catalog.clearCache()``: that strips persistence from frames
-    OTHER caches still hold, and a retained-but-unpersisted index frame
-    prints a cache-less plan that no longer matches its snapshot."""
-    from hdb_resale_price_data_pipeline_spark.queries import dedup as QD
-    from hdb_resale_price_data_pipeline_spark.queries import extensions as QE
-    from hdb_resale_price_data_pipeline_spark.queries import profiling as QP
-    from hdb_resale_price_data_pipeline_spark.queries import text as QT
-    from hdb_resale_price_data_pipeline_spark.queries import similarity as QS
-    from hdb_resale_price_data_pipeline_spark.streaming import documents as SD
-
-    # The profiling module owns two caches (stats tuples + persisted
-    # result frames); its own clear covers both.
-    QP.clear_profile_caches()
-    for cache in (
-        QD._MINHASH_PAIR_CACHE,
-        QE._ATTR_CACHE,
-        QS._LSH_INDEX_CACHE,
-        QS._IVF_INDEX_CACHE,
-        QS._IVF_KM_CACHE,
-        QS._PQ_INDEX_CACHE,
-        QS._IVFPQ_CACHE,
-        QS._IVFADC_CACHE,
-        QS._IVF_CORPUS_CACHE,
-        QS._KNN_EDGE_CACHE,
-        QT._BPE_MERGE_CACHE,
-        QT._LR_W_CACHE,
-        SD._GATE_STATE_CACHE,
-    ):
-        cache.clear()
-
-
 def warm_index_caches(spark, sf_dir: str) -> None:
     """Materialize the session caches FROM A KNOWN-COLD STATE: a
     persisted frame prints a different (shorter) plan once
@@ -160,9 +126,10 @@ def warm_index_caches(spark, sf_dir: str) -> None:
     a no-op, so generator and checker always agree. Covers the ANN
     index caches (emb_*) and the shared MinHash pair cache
     (dedup_minhash_lsh — consumed by the curation queries too)."""
+    from hdb_resale_price_data_pipeline_spark.operators import index_cache
     from hdb_resale_price_data_pipeline_spark.queries import local_queries
 
-    clear_index_caches()
+    index_cache.clear()
     registry = local_queries()
     registry["dedup_minhash_lsh"].fn(spark, sf_dir).count()
     for name, spec in sorted(registry.items()):

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 from pyspark.sql.window import Window
 
+from hdb_resale_price_data_pipeline_spark.operators import index_cache
 from hdb_resale_price_data_pipeline_spark.session import get_spark_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -443,16 +444,6 @@ def _noop(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
-def _clear_index_caches() -> None:
-    """Drop every session IndexCache so a timed run prices the BUILD,
-    not a cache probe — the build is the scale-sensitive part, and a
-    warm-cache timing would report an artificially flat exponent.
-    (Canonical cache list lives in tools/plan_snapshot.py.)"""
-    from tools.plan_snapshot import clear_index_caches
-
-    clear_index_caches()
-
-
 def probe_scaling(spark) -> None:
     """Wall-vs-rows scaling for the scale-sensitive dedup/ANN/curation
     queries: run each at 1×/4×/16× the sf0.1 corpus COLD (index caches
@@ -507,7 +498,7 @@ def probe_scaling(spark) -> None:
         for c in SCALING_COPIES:
             runs = []
             for _ in range(2):
-                _clear_index_caches()
+                index_cache.clear()
                 spark.catalog.clearCache()
                 t0 = time.perf_counter()
                 _noop(fn(spark, dirs[c]))
@@ -721,7 +712,7 @@ def probe_tpch(spark) -> None:
                 # discoverers persist their result frames) — a cold run
                 # must price the BUILD, and clearCache() alone would
                 # leave retained-but-unpersisted frames.
-                _clear_index_caches()
+                index_cache.clear()
                 spark.catalog.clearCache()
                 t0 = time.perf_counter()
                 _noop(fn(spark, d))
@@ -959,7 +950,7 @@ def probe_er(spark, grow_vocab: bool = False) -> None:
         for c in SCALING_COPIES:
             runs = []
             for _ in range(2):
-                _clear_index_caches()
+                index_cache.clear()
                 spark.catalog.clearCache()
                 t0 = time.perf_counter()
                 _noop(fn(spark, dirs[c]))
@@ -1025,7 +1016,7 @@ def probe_fastss(spark) -> None:
         t0 = time.perf_counter()
         n_cand = fastss_candidate_pairs(dn).count()
         t_cand = time.perf_counter() - t0
-        _clear_index_caches()
+        index_cache.clear()
         spark.catalog.clearCache()
         t0 = time.perf_counter()
         _noop(fn(spark, dirs[c]))
