@@ -22,11 +22,13 @@ prune — candidates are classified ``key_holds`` / ``const_holds`` /
 ``pruned_pigeonhole`` / ``super_key`` from statistics alone — and only
 SURVIVORS pay row-grain work:
 
-- FD survivors of a table share ONE scan via ``stack()`` (a tall
-  (candidate, det, dep) frame → one distinct → two aggregates) instead
-  of one scan per candidate — same shuffle bytes, 1/k the scans;
-- UCC survivors likewise stack into one scan + one grouped
-  count-distinct per table;
+- FD, UCC and correlation survivors share ONE pair-cell pass: each
+  table with a survivor is scanned once, ``stack()`` pivots every
+  surviving column pair into a tall (pair, x, y) frame that collapses
+  to contingency cells, and one job reduces each pair to the counters
+  all three discoverers read (cell count, per-direction determinant
+  and violating-determinant counts, the correlation fold); the
+  verdicts are then assembled on the driver;
 - IND survivors across ALL candidates share ONE value-grain anti-join:
   distinct child values tagged with their candidate ids, anti-joined
   against tagged distinct parent values on (candidate, value) — ~140
@@ -38,7 +40,7 @@ The candidate loop is driver-side over |columns|² CANDIDATES (bounded,
 stats-only) — never over rows. Each table's statistics and each
 discoverer's persisted RESULT frame are session artifacts
 (operators/index_cache, keyed on the files they read), so
-``dq_profile_report`` steady-state costs three projections and a union.
+``dq_profile_report`` steady-state costs four projections and a union.
 
 The reference (cyusong/HDB-Resale-Price-Data-Pipeline) ships no
 profiler — its Spark surface is four cleaning scripts
@@ -48,6 +50,11 @@ UCC pruning, and SPIDER/Binder range/NDV IND pruning.
 """
 
 from __future__ import annotations
+
+import functools
+import math
+from collections import Counter
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -293,6 +300,136 @@ def _stats_ctes() -> str:
     return "WITH " + ",\n".join(parts)
 
 
+# --- shared pair-cell pass (FD / UCC / correlation survivors) --------------------
+#
+# FD, UCC and correlation all decide their surviving candidates from the
+# same contingency cells: the distinct (x, y) value pairs of two columns
+# of one table, with their row count o. One pass computes those cells
+# for the union of the three discoverers' survivors and reduces each
+# pair to a handful of counters; the discoverers then assemble their
+# verdicts from the counters on the driver.
+
+
+class _PairCells(NamedTuple):
+    """Counters of one ordered column pair (first, second)."""
+
+    n_cells: int  # distinct (first, second) value pairs
+    n_groups: int  # distinct first values
+    n_violating: int  # first values seen with more than one second value
+    s: float  # Σ o²/(row margin · column margin); correlation pairs only
+
+
+def _pair_survivors(spark: SparkSession, sf_dir: str) -> list[tuple]:
+    """(table, x, y, is_corr) for every unordered catalog pair, in
+    catalog order, that either FD direction, the UCC candidate or the
+    correlation candidate leaves to the row-grain test."""
+    _warm_table_stats(spark, sf_dir, _CATALOG)
+    out = []
+    for table, x, y in _ucc_candidates():
+        s = _table_stats(spark, sf_dir, table)
+        is_corr = _corr_pruned(s, x, y) is None
+        if (
+            is_corr
+            or _ucc_pruned(s, x, y) is None
+            or _fd_pruned(s, x, y) is None
+            or _fd_pruned(s, y, x) is None
+        ):
+            out.append((table, x, y, is_corr))
+    return out
+
+
+def _pair_cells_frame(spark: SparkSession, sf_dir: str, survivors: list) -> DataFrame:
+    """One row per surviving pair (its index in ``survivors``) with the
+    counters of both directions. Each table with a survivor is scanned
+    once: ``stack()`` pivots its pairs into a tall (pair, x, y) frame of
+    NULL-sentinel strings, which collapses map-side to (x, y) cells.
+    Each cell is then keyed by x (d = 0) and by y (d = 1), and a grouped
+    count per key yields both directions' group and violating-group
+    counts by hash aggregation alone (two windows over the cells
+    measured 8-10 s slower at sf0.1 on local[4]). A correlation pair's
+    cells are also keyed whole (d = 2) and come back as a list, at most
+    ``_CORR_NDV_CAP``² cells, for the driver-side fold."""
+    stacked: dict[str, list[str]] = {}
+    for i, (table, x, y, _) in enumerate(survivors):
+        stacked.setdefault(table, []).append(
+            f"{i}, {_coalesced_spark_sql(x)}, {_coalesced_spark_sql(y)}"
+        )
+    tall = functools.reduce(
+        DataFrame.unionByName,
+        [
+            t(spark, sf_dir, table).selectExpr(
+                f"stack({len(args)}, {', '.join(args)}) AS (pair, x, y)"
+            )
+            for table, args in stacked.items()
+        ],
+    )
+    cells = tall.groupBy("pair", "x", "y").agg(F.count(F.lit(1)).alias("o"))
+    keyed = cells.selectExpr(
+        "pair",
+        "o",
+        "stack(3, 0, x, CAST(NULL AS STRING), 1, y, CAST(NULL AS STRING), "
+        "2, x, y) AS (d, k, k2)",
+    ).where(
+        (col("d") < 2)
+        | col("pair").isin([i for i, (*_, corr) in enumerate(survivors) if corr])
+    )
+    keys = keyed.groupBy("pair", "d", "k", "k2").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("o").alias("o")
+    )
+    d, multi = col("d"), col("n") > 1
+    return keys.groupBy("pair").agg(
+        F.sum(F.when(d == 0, col("n"))).alias("n_cells"),
+        F.count(F.when(d == 0, 1)).alias("x_groups"),
+        F.count(F.when((d == 0) & multi, 1)).alias("x_violating"),
+        F.count(F.when(d == 1, 1)).alias("y_groups"),
+        F.count(F.when((d == 1) & multi, 1)).alias("y_violating"),
+        F.collect_list(F.when(d == 2, F.struct("k", "k2", "o"))).alias("cells"),
+    )
+
+
+def _contingency_s(cells: list[tuple[str, str, int]]) -> float:
+    """Σ o²/(row margin · column margin) over a contingency table's
+    observed (x, y, o) cells, folded sequentially in sorted (x, y)
+    order from 0.0: the oracle's order and IEEE double operations, so
+    the sum is bit-identical."""
+    rows, cols = Counter(), Counter()
+    for x, y, o in cells:
+        rows[x] += o
+        cols[y] += o
+    s = 0.0
+    for x, y, o in sorted(cells):
+        s += float(o * o) / (rows[x] * cols[y])
+    return s
+
+
+def _build_pair_pass(spark: SparkSession, sf_dir: str) -> dict[tuple, _PairCells]:
+    """(table, first, second) -> counters, for both directions of every
+    surviving pair. Bounded collect: one row per surviving pair."""
+    survivors = _pair_survivors(spark, sf_dir)
+    if not survivors:
+        return {}
+    out = {}
+    for r in _pair_cells_frame(spark, sf_dir, survivors).collect():
+        table, x, y, _ = survivors[r["pair"]]
+        n, s = r["n_cells"], _contingency_s(r["cells"])
+        out[(table, x, y)] = _PairCells(n, r["x_groups"], r["x_violating"], s)
+        out[(table, y, x)] = _PairCells(n, r["y_groups"], r["y_violating"], s)
+    return out
+
+
+def _pair_pass(spark: SparkSession, sf_dir: str) -> dict[tuple, _PairCells]:
+    return index_cache.artifact(
+        spark, "profiling.pairs", index_cache.table_paths(sf_dir, _CATALOG), (),
+        lambda: _build_pair_pass(spark, sf_dir),
+    )
+
+
+def _ppm(ratio: float) -> int:
+    """A ratio on the ppm grid, rounded half up (the oracles'
+    ``floor(x * 1000000 + 0.5)`` in the same double arithmetic)."""
+    return math.floor(ratio * 1_000_000 + 0.5)
+
+
 # --- functional-dependency discovery ---------------------------------------------
 
 def _fd_candidates() -> list[tuple[str, str, str]]:
@@ -308,7 +445,7 @@ def _fd_candidates() -> list[tuple[str, str, str]]:
 
 def q_dq_fd_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Functional-dependency DISCOVERY over the declared catalog: every
-    ordered column pair of every cataloged table (118 candidates over 9
+    ordered column pair of every cataloged table (134 candidates over 9
     tables). Phase 1 is one ANALYZE-style wide aggregate per table —
     rowcount plus exact NULL-sentinel NDV per column, cached per
     (session, dataset fingerprint). Phase 2 classifies each candidate
@@ -320,89 +457,53 @@ def q_dq_fd_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
       image can't exceed its domain (``pruned_impossible``, ppm = -1:
       violation rate deliberately NOT measured — that's the prune);
 
-    and only surviving candidates pay the g3 test. Survivors of one
-    table share ONE scan: ``stack()`` pivots the needed column pairs
-    into a tall (fd, det, dep) frame → one distinct → determinant-group
-    aggregate — identical shuffle bytes to per-candidate branches but
-    1/k the scans, which is what matters when the table is 100 TB.
-    The DuckDB oracle states the same classification declaratively
-    (it computes g3 for every pair and masks with the identical CASE —
-    semantics, not mechanism). Exact-integer statuses and numerators;
-    the one division lands on the ppm grid after the decision.
-    Result frames persist per session — see ``_cached_result``."""
+    and only surviving candidates pay the g3 test, read from the shared
+    pair-cell pass (``_pair_cells_frame``: one scan per table for FD,
+    UCC and correlation together): determinant groups and violating
+    determinants of A→B are the distinct A values of the (A, B) cells
+    and those seen with more than one B. The DuckDB oracle states the
+    same classification declaratively (it computes g3 for every pair
+    and masks with the identical CASE — semantics, not mechanism).
+    Exact-integer statuses and numerators; the one division lands on
+    the ppm grid after the decision. Result frames persist per session
+    — see ``_cached_result``."""
     return _cached_result(
         spark, sf_dir, "fd", lambda: _build_fd_discover(spark, sf_dir)
     )
 
 
+def _fd_pruned(stats: _TableStats, det: str, dep: str) -> tuple[str, int] | None:
+    """(status, violation_ppm) decided from statistics, or None when
+    det -> dep needs the g3 test."""
+    if stats.ndv[det] == stats.rowcnt:
+        return "key_holds", 0
+    if stats.ndv[dep] == 1:
+        return "const_holds", 0
+    if stats.ndv[det] < stats.ndv[dep]:
+        return "pruned_impossible", -1
+    return None
+
+
 def _build_fd_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _warm_table_stats(spark, sf_dir, _CATALOG)
-    schema = (
-        "fd string, ndv_det bigint, ndv_dep bigint, "
-        "status string, violation_ppm bigint"
-    )
-    pruned_rows: list[tuple] = []
-    tested: dict[str, list[tuple[str, str, str]]] = {}
-    ndv_of: dict[str, tuple[int, int]] = {}
+    cells = _pair_pass(spark, sf_dir)
+    rows = []
     for table, det, dep in _fd_candidates():
         stats = _table_stats(spark, sf_dir, table)
-        fd = f"{table}.{det}->{dep}"
-        ndv_d, ndv_p = stats.ndv[det], stats.ndv[dep]
-        if ndv_d == stats.rowcnt:
-            pruned_rows.append((fd, ndv_d, ndv_p, "key_holds", 0))
-        elif ndv_p == 1:
-            pruned_rows.append((fd, ndv_d, ndv_p, "const_holds", 0))
-        elif ndv_d < ndv_p:
-            pruned_rows.append((fd, ndv_d, ndv_p, "pruned_impossible", -1))
-        else:
-            tested.setdefault(table, []).append((fd, det, dep))
-            ndv_of[fd] = (ndv_d, ndv_p)
-
-    result = spark.createDataFrame(pruned_rows, schema=schema)
-    if not ndv_of:
-        return result
-    det_map = F.create_map(
-        *[x for fd, (d, _) in ndv_of.items() for x in (F.lit(fd), F.lit(d))]
-    )
-    dep_map = F.create_map(
-        *[x for fd, (_, p) in ndv_of.items() for x in (F.lit(fd), F.lit(p))]
-    )
-    for table, cands in tested.items():
-        stack_args = ", ".join(
-            f"'{fd}', {_coalesced_spark_sql(det)}, {_coalesced_spark_sql(dep)}"
-            for fd, det, dep in cands
-        )
-        tall = t(spark, sf_dir, table).selectExpr(
-            f"stack({len(cands)}, {stack_args}) AS (fd, a, b)"
-        )
-        grouped = (
-            tall.distinct()
-            .groupBy("fd", "a")
-            .agg(F.count(F.lit(1)).alias("nb"))
-        )
-        per_fd = grouped.groupBy("fd").agg(
-            F.sum((col("nb") > 1).cast("bigint")).alias("n_violating"),
-            F.count(F.lit(1)).alias("n_groups"),
-        )
-        result = result.unionByName(
-            per_fd.select(
-                "fd",
-                det_map[col("fd")].cast("bigint").alias("ndv_det"),
-                dep_map[col("fd")].cast("bigint").alias("ndv_dep"),
-                F.when(col("n_violating") == 0, F.lit("holds"))
-                .otherwise(F.lit("violated"))
-                .alias("status"),
-                F.floor(
-                    col("n_violating").cast("double")
-                    / col("n_groups")
-                    * 1_000_000
-                    + F.lit(0.5)
-                )
-                .cast("bigint")
-                .alias("violation_ppm"),
+        verdict = _fd_pruned(stats, det, dep)
+        if verdict is None:
+            c = cells[(table, det, dep)]
+            verdict = (
+                "holds" if c.n_violating == 0 else "violated",
+                _ppm(c.n_violating / c.n_groups),
             )
-        )
-    return result
+        rows.append((f"{table}.{det}->{dep}", stats.ndv[det], stats.ndv[dep], *verdict))
+    return spark.createDataFrame(
+        rows,
+        schema=(
+            "fd string, ndv_det bigint, ndv_dep bigint, "
+            "status string, violation_ppm bigint"
+        ),
+    )
 
 
 def _fd_discover_oracle() -> str:
@@ -462,7 +563,7 @@ def q_dq_ind_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inclusion-dependency (foreign-key) DISCOVERY over generated
     candidates: every ordered cross-table pair of catalog columns
     WITHIN a type class (integral / string / timestamp — Binder's
-    candidate partition; 432 candidates over 24 joinable columns) —
+    candidate partition; 432 candidates over 34 joinable columns) —
     the property that makes a join lossless and an FK constraint safe
     to declare. Statistics prune first, the SPIDER/Binder discipline,
     funded by the same per-table ANALYZE rows the FD/UCC discoverers
@@ -674,7 +775,7 @@ def q_dq_ucc_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
     declared catalog — the third leg of the profiling triad
     (``dq_fd_discover`` finds determinants, ``dq_ind_discover`` finds
     foreign keys, this finds KEYS): which column PAIRS uniquely
-    identify a row, for every cataloged table (59 candidates). The
+    identify a row, for every cataloged table (67 candidates). The
     classic answer on this schema is lineitem's (l_orderkey,
     l_linenumber) — no single lineitem column is a key, the pair is.
 
@@ -685,9 +786,9 @@ def q_dq_ucc_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the exact test, so the prune is sound for NULL-bearing
     columns). A single column that is itself a key makes every pair
     containing it trivially unique (``super_key``, also free). Only
-    surviving pairs pay the exact two-column distinct — survivors of
-    one table share ONE ``stack()`` scan and one grouped
-    count-distinct. Verdicts: ``holds`` / ``violated`` (exact
+    surviving pairs pay the exact two-column distinct — the cell count
+    of the shared pair-cell pass (``_pair_cells_frame``). Verdicts:
+    ``holds`` / ``violated`` (exact
     duplicate-row count) on integer arithmetic end to end. Result
     frames persist per (session, dataset)."""
     return _cached_result(
@@ -695,67 +796,35 @@ def q_dq_ucc_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ucc_pruned(stats: _TableStats, a: str, b: str) -> tuple[str, int] | None:
+    """(status, n_duplicate) decided from statistics, or None when the
+    pair needs the exact distinct count."""
+    if stats.ndv[a] == stats.rowcnt or stats.ndv[b] == stats.rowcnt:
+        return "super_key", 0
+    if stats.ndv[a] * stats.ndv[b] < stats.rowcnt:
+        return "pruned_pigeonhole", -1
+    return None
+
+
 def _build_ucc_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _warm_table_stats(spark, sf_dir, _CATALOG)
-    schema = (
-        "ucc string, ndv_a bigint, ndv_b bigint, status string, "
-        "n_duplicate bigint"
-    )
-    pruned_rows: list[tuple] = []
-    tested: dict[str, list[tuple[str, str, str]]] = {}
-    meta: dict[str, tuple[int, int, int]] = {}
+    cells = _pair_pass(spark, sf_dir)
+    rows = []
     for table, a, b in _ucc_candidates():
         stats = _table_stats(spark, sf_dir, table)
-        ucc = f"{table}.({a},{b})"
-        if stats.ndv[a] == stats.rowcnt or stats.ndv[b] == stats.rowcnt:
-            pruned_rows.append((ucc, stats.ndv[a], stats.ndv[b], "super_key", 0))
-        elif stats.ndv[a] * stats.ndv[b] < stats.rowcnt:
-            pruned_rows.append(
-                (ucc, stats.ndv[a], stats.ndv[b], "pruned_pigeonhole", -1)
-            )
-        else:
-            tested.setdefault(table, []).append((ucc, a, b))
-            meta[ucc] = (stats.ndv[a], stats.ndv[b], stats.rowcnt)
-
-    result = spark.createDataFrame(pruned_rows, schema=schema)
-    if not meta:
-        return result
-    a_map = F.create_map(
-        *[x for u, (a, _, _) in meta.items() for x in (F.lit(u), F.lit(a))]
+        verdict = _ucc_pruned(stats, a, b)
+        if verdict is None:
+            # cells are distinct sentinel-coalesced (a, b) pairs, so
+            # their count is the oracle's SELECT DISTINCT count
+            nd = cells[(table, a, b)].n_cells
+            verdict = ("holds" if nd == stats.rowcnt else "violated", stats.rowcnt - nd)
+        rows.append((f"{table}.({a},{b})", stats.ndv[a], stats.ndv[b], *verdict))
+    return spark.createDataFrame(
+        rows,
+        schema=(
+            "ucc string, ndv_a bigint, ndv_b bigint, status string, "
+            "n_duplicate bigint"
+        ),
     )
-    b_map = F.create_map(
-        *[x for u, (_, b, _) in meta.items() for x in (F.lit(u), F.lit(b))]
-    )
-    n_map = F.create_map(
-        *[x for u, (_, _, n) in meta.items() for x in (F.lit(u), F.lit(n))]
-    )
-    for table, cands in tested.items():
-        stack_args = ", ".join(
-            f"'{ucc}', {_coalesced_spark_sql(a)}, {_coalesced_spark_sql(b)}"
-            for ucc, a, b in cands
-        )
-        tall = t(spark, sf_dir, table).selectExpr(
-            f"stack({len(cands)}, {stack_args}) AS (ucc, a, b)"
-        )
-        # a/b are sentinel-coalesced (never NULL), so countDistinct's
-        # null-row skip can't diverge from the oracle's SELECT DISTINCT.
-        per_ucc = tall.groupBy("ucc").agg(
-            F.countDistinct("a", "b").alias("nd")
-        )
-        result = result.unionByName(
-            per_ucc.select(
-                "ucc",
-                a_map[col("ucc")].cast("bigint").alias("ndv_a"),
-                b_map[col("ucc")].cast("bigint").alias("ndv_b"),
-                F.when(col("nd") == n_map[col("ucc")], F.lit("holds"))
-                .otherwise(F.lit("violated"))
-                .alias("status"),
-                (n_map[col("ucc")] - col("nd")).cast("bigint").alias(
-                    "n_duplicate"
-                ),
-            )
-        )
-    return result
 
 
 def _ucc_discover_oracle() -> str:
@@ -880,7 +949,7 @@ def q_dq_fd_transfer(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``generalizes``        — holds on train AND holdout: a contract;
     - ``spurious_on_train``  — holds on train, violated on holdout:
       the sample minted it (near-unique determinants rarely collide on
-      1/16 of the rows) — the case this check exists to catch;
+      1/256 of the rows) — the case this check exists to catch;
     - ``violated_on_train``  — never discovered in the first place
       (holdout ppm still reported: the drift baseline).
 
@@ -1373,10 +1442,6 @@ _CORR_DETERMINED_PPM = 950_000
 _CORR_CORRELATED_PPM = 300_000
 
 
-def _corr_candidates() -> list[tuple[str, str, str]]:
-    return _ucc_candidates()  # all unordered cataloged column pairs
-
-
 def q_dq_corr_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CORRELATION discovery over the declared catalog (CORDS, Ilyas
     et al.): which column pairs violate the optimizer's independence
@@ -1401,110 +1466,58 @@ def q_dq_corr_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
     (array_sort + aggregate / list ORDER BY + list_reduce), making the
     double bit-identical before the one sqrt and the ppm floor.
 
-    Scale: survivors of one table share ONE ``stack()`` scan; cells
-    collapse map-side to <= CAP² rows per pair; margins are two
-    windows at cell grain; the fold's collect_list is bounded by CAP²
-    = 4096 structs per pair. Row-grain work never multiplies by
-    candidate count. Result frames persist per (session, dataset)."""
+    Scale: survivors are measured by the shared pair-cell pass
+    (``_pair_cells_frame``, one scan per table for FD, UCC and
+    correlation together); cells collapse map-side to <= CAP² rows per
+    pair; margins are two windows at cell grain; the fold's
+    collect_list is bounded by CAP² = 4096 structs per pair. Row-grain
+    work never multiplies by candidate count. Result frames persist
+    per (session, dataset)."""
     return _cached_result(
         spark, sf_dir, "corr", lambda: _build_corr_discover(spark, sf_dir)
     )
 
 
+def _corr_pruned(stats: _TableStats, a: str, b: str) -> tuple[str, int, int] | None:
+    """(status, n_cells, cramers_v_ppm) decided from statistics, or None
+    when the pair's contingency is measured."""
+    if stats.ndv[a] <= 1 or stats.ndv[b] <= 1:
+        return "const", -1, 0
+    if stats.ndv[a] > _CORR_NDV_CAP or stats.ndv[b] > _CORR_NDV_CAP:
+        return "skipped_highcard", -1, -1
+    return None
+
+
 def _build_corr_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _warm_table_stats(spark, sf_dir, _CATALOG)
-    from pyspark.sql.window import Window
-
-    schema = (
-        "corr string, ndv_a bigint, ndv_b bigint, status string, "
-        "n_cells bigint, cramers_v_ppm bigint"
-    )
-    pruned_rows: list[tuple] = []
-    tested: dict[str, list[tuple[str, str, str]]] = {}
-    meta_rows: list[tuple[str, int, int]] = []
-    for table, a, b in _corr_candidates():
+    cells = _pair_pass(spark, sf_dir)
+    rows = []
+    for table, a, b in _ucc_candidates():  # all unordered cataloged pairs
         stats = _table_stats(spark, sf_dir, table)
-        corr = f"{table}.({a},{b})"
         ndv_a, ndv_b = stats.ndv[a], stats.ndv[b]
-        if ndv_a <= 1 or ndv_b <= 1:
-            pruned_rows.append((corr, ndv_a, ndv_b, "const", -1, 0))
-        elif ndv_a > _CORR_NDV_CAP or ndv_b > _CORR_NDV_CAP:
-            pruned_rows.append(
-                (corr, ndv_a, ndv_b, "skipped_highcard", -1, -1)
-            )
-        else:
-            tested.setdefault(table, []).append((corr, a, b))
-            meta_rows.append((corr, ndv_a, ndv_b))
-
-    result = spark.createDataFrame(pruned_rows, schema=schema)
-    if not meta_rows:
-        return result
-
-    agg_all: DataFrame | None = None
-    for table, cands in tested.items():
-        stack_args = ", ".join(
-            f"'{corr}', {_coalesced_spark_sql(a)}, {_coalesced_spark_sql(b)}"
-            for corr, a, b in cands
-        )
-        tall = t(spark, sf_dir, table).selectExpr(
-            f"stack({len(cands)}, {stack_args}) AS (corr, a, b)"
-        )
-        cells = tall.groupBy("corr", "a", "b").agg(
-            F.count(F.lit(1)).cast("bigint").alias("o")
-        )
-        wa = Window.partitionBy("corr", "a")
-        wb = Window.partitionBy("corr", "b")
-        terms = cells.select(
-            "corr",
-            "a",
-            "b",
-            (
-                (col("o") * col("o")).cast("double")
-                / (F.sum("o").over(wa) * F.sum("o").over(wb))
-            ).alias("term"),
-        )
-        # Bounded collect: <= CAP² = 4096 cells per pair; the sorted
-        # sequential fold makes the double sum engine-identical.
-        per = terms.groupBy("corr").agg(
-            F.aggregate(
-                F.array_sort(
-                    F.collect_list(F.struct("a", "b", "term"))
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x["term"],
-            ).alias("S"),
-            F.count(F.lit(1)).alias("n_cells"),
-        )
-        agg_all = per if agg_all is None else agg_all.unionByName(per)
-
-    meta = spark.createDataFrame(
-        meta_rows, schema="corr string, ndv_a bigint, ndv_b bigint"
+        verdict = _corr_pruned(stats, a, b)
+        if verdict is None:
+            c = cells[(table, a, b)]
+            v_ppm = _ppm(math.sqrt(max(c.s - 1.0, 0.0) / (min(ndv_a, ndv_b) - 1)))
+            if v_ppm >= _CORR_DETERMINED_PPM:
+                status = "determined"
+            elif v_ppm >= _CORR_CORRELATED_PPM:
+                status = "correlated"
+            else:
+                status = "independent"
+            verdict = (status, c.n_cells, v_ppm)
+        rows.append((f"{table}.({a},{b})", ndv_a, ndv_b, *verdict))
+    return spark.createDataFrame(
+        rows,
+        schema=(
+            "corr string, ndv_a bigint, ndv_b bigint, status string, "
+            "n_cells bigint, cramers_v_ppm bigint"
+        ),
     )
-    v_ppm = F.floor(
-        F.sqrt(
-            F.greatest(F.coalesce(col("S"), F.lit(0.0)) - 1.0, F.lit(0.0))
-            / (F.least("ndv_a", "ndv_b") - 1).cast("double")
-        )
-        * 1_000_000
-        + F.lit(0.5)
-    ).cast("bigint")
-    tested_df = meta.join(F.broadcast(agg_all), "corr", "left").select(
-        "corr",
-        "ndv_a",
-        "ndv_b",
-        F.when(v_ppm >= _CORR_DETERMINED_PPM, F.lit("determined"))
-        .when(v_ppm >= _CORR_CORRELATED_PPM, F.lit("correlated"))
-        .otherwise(F.lit("independent"))
-        .alias("status"),
-        F.coalesce(col("n_cells"), F.lit(0)).cast("bigint").alias("n_cells"),
-        v_ppm.alias("cramers_v_ppm"),
-    )
-    return result.unionByName(tested_df)
 
 
 def _corr_discover_oracle() -> str:
     branches = []
-    for table, a, b in _corr_candidates():
+    for table, a, b in _ucc_candidates():
         corr = f"{table}.({a},{b})"
         vppm = (
             "CAST(floor(sqrt(greatest(g.S - 1, 0) / "

@@ -58,26 +58,50 @@ def test_ind_survivors_share_one_antijoin(spark):
     )
 
 
+@pytest.mark.core
 def test_fd_survivors_share_one_scan_per_table(spark):
-    """FD survivors of a table are stacked into one tall frame — the
-    build plan scans each survivor table once, never once per
-    candidate."""
+    """FD, UCC and correlation survivors share one pair-cell pass: its
+    plan scans each table with any survivor once, never once per
+    candidate or per discoverer. The table set is a superset of the FD
+    survivor tables, so the FD scans stay fused."""
     P.clear_profile_caches()
-    tables_with_survivors = set()
-    for table, det, dep in P._fd_candidates():
+    fd_tables, tables = set(), set()
+    for table, x, y in P._ucc_candidates():
         s = P._table_stats(spark, SMOKE_SF_DIR, table)
-        if (
-            s.ndv[det] != s.rowcnt
-            and s.ndv[dep] != 1
-            and s.ndv[det] >= s.ndv[dep]
-        ):
-            tables_with_survivors.add(table)
-    assert tables_with_survivors  # the gate below must not be vacuous
-    plan = _plan(P._build_fd_discover(spark, SMOKE_SF_DIR))
-    assert plan.count("Scan parquet") == len(tables_with_survivors), (
-        f"expected one scan per survivor table "
-        f"({sorted(tables_with_survivors)})"
+        nx, ny, n = s.ndv[x], s.ndv[y], s.rowcnt
+        fd = any(
+            d != n and p != 1 and d >= p for d, p in ((nx, ny), (ny, nx))
+        )
+        ucc = nx != n and ny != n and nx * ny >= n
+        corr = 1 < nx <= P._CORR_NDV_CAP and 1 < ny <= P._CORR_NDV_CAP
+        if fd:
+            fd_tables.add(table)
+        if fd or ucc or corr:
+            tables.add(table)
+    assert fd_tables  # the gate below must not be vacuous
+    survivors = P._pair_survivors(spark, SMOKE_SF_DIR)
+    assert {table for table, *_ in survivors} == tables
+    plan = _plan(P._pair_cells_frame(spark, SMOKE_SF_DIR, survivors))
+    assert plan.count("Scan parquet") == len(tables), (
+        f"expected one scan per survivor table ({sorted(tables)})"
     )
+
+
+def test_pair_pass_built_once_for_fd_ucc_corr(spark, monkeypatch):
+    """FD, UCC and correlation discovery read one pair-cell pass: a
+    cold build of all three runs its builder exactly once."""
+    calls = []
+    build = P._build_pair_pass
+
+    def counting(spark, sf_dir):
+        calls.append(sf_dir)
+        return build(spark, sf_dir)
+
+    monkeypatch.setattr(P, "_build_pair_pass", counting)
+    P.clear_profile_caches()
+    for q in (P.q_dq_fd_discover, P.q_dq_ucc_discover, P.q_dq_corr_discover):
+        q(spark, SMOKE_SF_DIR).collect()
+    assert calls == [SMOKE_SF_DIR]
 
 
 def test_candidates_are_generated_from_catalog():
@@ -128,10 +152,13 @@ def test_stats_cache_fingerprint_invalidates(spark, tmp_path):
     P.clear_profile_caches()
     before = P._table_stats(spark, sf_dir, "part")
     assert P._table_stats(spark, sf_dir, "part") is before  # cached
+    pairs = P._pair_pass(spark, sf_dir)
+    assert P._pair_pass(spark, sf_dir) is pairs  # cached
     path = f"{sf_dir}/part.parquet"
     st = os.stat(path)
     os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
     assert P._table_stats(spark, sf_dir, "part") is not before
+    assert P._pair_pass(spark, sf_dir) is not pairs
 
 
 # --- ADVICE NULL-soundness fixes (exercised on NULL-bearing tmp tables) -----------
