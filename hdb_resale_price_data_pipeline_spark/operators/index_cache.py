@@ -27,12 +27,19 @@ caching policy; a caller makes one call (:func:`artifact`,
   run outside it, so independent builds overlap and a build may look
   up other artifacts. Two threads that miss on the same key both
   build; the later put replaces (and releases) the earlier value.
+
+Artifacts that live on disk instead (stream landing directories,
+stream state and checkpoint roots) get the same source key as a
+directory name from :func:`stage_dir`.
 """
 
 from __future__ import annotations
 
 import functools
+import hashlib
 import os
+import shutil
+import tempfile
 import threading
 import weakref
 from collections import OrderedDict
@@ -156,6 +163,40 @@ def fingerprint(source: str) -> tuple:
         return tuple(entries)
     except OSError:
         return (path,)
+
+
+def stage_dir(
+    kind: str,
+    sources: Iterable[str],
+    params: Hashable,
+    build: Callable[[str], None] | None = None,
+) -> str:
+    """The directory ``hdb_{kind}_{digest}`` under the system temp
+    directory, the digest hashing ``kind``, ``params`` and the
+    :func:`fingerprint` of each source, so a rewritten source or a
+    changed parameter never reuses a stale directory.
+
+    With ``build``, a missing directory is built by ``build(tmp)`` into
+    a sibling temp directory and published with one ``os.rename``: a
+    build that fails or is killed never leaves a half-built directory
+    at the returned path. Two processes or threads that race both
+    build; the loser of the rename deletes its copy."""
+    key = repr((kind, params, [fingerprint(os.path.abspath(s)) for s in sources]))
+    name = f"hdb_{kind}_{hashlib.md5(key.encode()).hexdigest()[:16]}"
+    path = os.path.join(tempfile.gettempdir(), name)
+    if build is None or os.path.isdir(path):
+        return path
+    tmp = tempfile.mkdtemp(prefix=f"{name}.", dir=tempfile.gettempdir())
+    try:
+        build(tmp)
+        try:
+            os.rename(tmp, path)
+        except OSError:
+            if not os.path.isdir(path):
+                raise  # not a lost race
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)  # gone once published
+    return path
 
 
 def table_paths(sf_dir: str, tables: Iterable[str]) -> list[str]:

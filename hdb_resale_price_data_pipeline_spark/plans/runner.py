@@ -1,9 +1,10 @@
 """Thin batch runner: files in → conformed parquet out.
 
 Replaces the reference's Airflow DAG + GCS + Dataproc plumbing
-(dags/pipeline.py:42-288) with plain functions. The warehouse write is
-day-partitioned parquet (K2) — the Spark-native equivalent of the
-reference's day-partitioned BigQuery load (dags/pipeline.py:231-234).
+(dags/pipeline.py:42-288) with one function, ``run_all``. Its warehouse
+write is day-partitioned parquet (K2, ``load_day_partitioned``) — the
+Spark-native equivalent of the reference's day-partitioned BigQuery load
+(dags/pipeline.py:231-234).
 """
 
 from __future__ import annotations
@@ -21,55 +22,6 @@ from .merge import merge_dedup_pipeline
 from .observe import with_load_metrics
 from .propnex import propnex_pipeline
 from .srx import srx_pipeline
-
-
-def write_warehouse(df: DataFrame, path: str, partition_col: str | None = None) -> None:
-    """Overwrite parquet sink (K1/K2). ``partition_col`` enables
-    partition pruning for downstream date-range scans."""
-    writer = df.write.mode("overwrite")
-    if partition_col:
-        writer = writer.partitionBy(partition_col)
-    writer.parquet(path)
-
-
-def run_historical(spark: SparkSession, csv_dir: str, out_path: str) -> DataFrame:
-    raw = read_historical_csv_dir(spark, csv_dir)
-    result = historical_pipeline(
-        raw,
-        seeds.town_district(spark),
-        seeds.district_code(spark),
-        seeds.district_region(spark),
-    )
-    write_warehouse(result, out_path, partition_col="date_of_sale")
-    return result
-
-
-def run_scraped(
-    spark: SparkSession,
-    propnex_json: str,
-    srx_json: str,
-    out_path: str,
-    as_of: datetime.date | None = None,
-) -> DataFrame:
-    as_of = as_of or datetime.date.today()
-    district_code = seeds.district_code(spark)
-    district_region = seeds.district_region(spark)
-    p = propnex_pipeline(
-        read_listing_json(spark, propnex_json, RAW_PROPNEX_SCHEMA),
-        district_code,
-        district_region,
-        as_of.year,
-    )
-    s = srx_pipeline(
-        read_listing_json(spark, srx_json, RAW_SRX_SCHEMA),
-        district_code,
-        district_region,
-        seeds.agency(spark),
-        as_of.year,
-    )
-    merged = merge_dedup_pipeline(p, s, as_of)
-    write_warehouse(merged, out_path, partition_col="transformed_date")
-    return merged
 
 
 def run_all(

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
 from ..operators.components import connected_components
+from ..operators.index_cache import stage_dir, table_paths
 from ..operators.linkage import (
     SIM_GRID,
     blocked_candidates,
@@ -64,12 +65,12 @@ _CUST_BLOCK_START = 10  # 1-indexed: "Customer#" is 9 chars
 _CUST_BLOCK_LEN = 7
 
 
-def _gate_cache_suffix() -> str:
-    """EVERY parameter of the streaming ER gates, folded into their
-    /tmp cache keys — defined ONCE so the two supposedly bit-identical
-    gates can never diverge on which parameters invalidate a cached
-    checkpoint (the r6 ADVICE stale-reuse finding)."""
-    return f":lev{SNM_MAX_LEV}:b{_CUST_BLOCK_START}.{_CUST_BLOCK_LEN}:dirmod3"
+# EVERY parameter of the streaming ER gates, folded into their stage
+# keys — defined ONCE so the two supposedly bit-identical gates can
+# never diverge on which parameters invalidate a landed checkpoint and
+# verdicts (the r6 ADVICE stale-reuse finding); "dirmod3" names the
+# directory-slice predicate.
+_GATE_PARAMS = (SNM_MAX_LEV, _CUST_BLOCK_START, _CUST_BLOCK_LEN, "dirmod3")
 
 
 def _part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -928,29 +929,24 @@ def q_stream_er_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     best-match window, routed known_exact / merge / new_entity, landed
     exactly-once in batch_id-keyed overwrites. Deterministic per-record
     verdicts → exact batch-twin oracle."""
-    import hashlib
     import os
 
-    from ..streaming.linkage import customers_stream, stream_er_gate
+    from ..streaming import table_stream
+    from ..streaming.linkage import stream_er_gate
 
     directory = t(spark, sf_dir, "customer").filter(col("c_custkey") % 3 == 0)
-    src = os.path.abspath(f"{sf_dir}/customer.parquet")
-    st = os.stat(src)
-    # cache key folds EVERY gate parameter (max_lev, block expr bounds,
-    # directory-slice predicate) alongside the source identity — a
-    # parameter change can never reuse a stale checkpoint + landed
-    # verdicts (r6 ADVICE finding).
-    key = f"{src}:{st.st_mtime_ns}:{st.st_size}:ergate" + _gate_cache_suffix()
-    root = f"/tmp/hdb_er_gate_{hashlib.md5(key.encode()).hexdigest()[:10]}"
-    query = stream_er_gate(
-        customers_stream(spark, sf_dir),
-        directory,
-        lambda c: F.substring(c, _CUST_BLOCK_START, _CUST_BLOCK_LEN),
-        out_dir=os.path.join(root, "out"),
-        checkpoint_dir=os.path.join(root, "ckpt"),
-        max_lev=SNM_MAX_LEV,
-    )
-    query.awaitTermination()
+
+    def build(root: str) -> None:
+        stream_er_gate(
+            table_stream(spark, sf_dir, "customer"),
+            directory,
+            lambda c: F.substring(c, _CUST_BLOCK_START, _CUST_BLOCK_LEN),
+            out_dir=os.path.join(root, "out"),
+            checkpoint_dir=os.path.join(root, "ckpt"),
+            max_lev=SNM_MAX_LEV,
+        ).awaitTermination()
+
+    root = stage_dir("er_gate", table_paths(sf_dir, ["customer"]), _GATE_PARAMS, build)
     return (
         spark.read.parquet(os.path.join(root, "out"))
         .select("id", "best_match_id", "best_lev", "route")
@@ -1000,38 +996,32 @@ def q_stream_er_gate_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasting the BATCH. Same oracle as stream_er_gate — the layouts
     are bit-identical by construction (also asserted pairwise in
     tests/test_linkage.py)."""
-    import hashlib
     import os
 
-    from ..streaming.linkage import (
-        customers_stream,
-        stream_er_gate_served,
-        write_er_directory,
-    )
+    from ..streaming import table_stream
+    from ..streaming.linkage import stream_er_gate_served, write_er_directory
 
     block = lambda c: F.substring(c, _CUST_BLOCK_START, _CUST_BLOCK_LEN)  # noqa: E731
-    src = os.path.abspath(f"{sf_dir}/customer.parquet")
-    st = os.stat(src)
-    key = (
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:ergate_served" + _gate_cache_suffix()
-    )
-    root = f"/tmp/hdb_er_gate_srv_{hashlib.md5(key.encode()).hexdigest()[:10]}"
-    dir_path = os.path.join(root, "directory")
-    if not os.path.exists(os.path.join(dir_path, "_SUCCESS")):
+
+    def build(root: str) -> None:
+        dir_path = os.path.join(root, "directory")
         write_er_directory(
             t(spark, sf_dir, "customer").filter(col("c_custkey") % 3 == 0),
             dir_path,
             block,
         )
-    query = stream_er_gate_served(
-        customers_stream(spark, sf_dir),
-        dir_path,
-        block,
-        out_dir=os.path.join(root, "out"),
-        checkpoint_dir=os.path.join(root, "ckpt"),
-        max_lev=SNM_MAX_LEV,
+        stream_er_gate_served(
+            table_stream(spark, sf_dir, "customer"),
+            dir_path,
+            block,
+            out_dir=os.path.join(root, "out"),
+            checkpoint_dir=os.path.join(root, "ckpt"),
+            max_lev=SNM_MAX_LEV,
+        ).awaitTermination()
+
+    root = stage_dir(
+        "er_gate_served", table_paths(sf_dir, ["customer"]), _GATE_PARAMS, build
     )
-    query.awaitTermination()
     return spark.read.parquet(os.path.join(root, "out")).select(
         "id", "best_match_id", "best_lev", "route"
     )

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
 from ..functions import hashing as H
-from ..operators.index_cache import cached
+from ..operators.index_cache import cached, stage_dir, table_paths
 from ..operators.multimodal import (
     FEATURE_SEEDS,
     documents_as_assets,
@@ -49,16 +49,27 @@ from ..streaming import (
     stream_hourly_tumbling,
     stream_session_windows,
     stream_user_dedup,
+    table_stream,
 )
 from .base import QuerySpec, t
 
 
+def _run_events_stream(
+    spark: SparkSession, sf_dir: str, op, mode: str = "append"
+) -> DataFrame:
+    """``op`` over the events stream, run to completion with the state
+    partitions sized from the events table."""
+    return run_stream_to_df(
+        op(events_stream(spark, sf_dir)), spark, mode, table_paths(sf_dir, ["events"])
+    )
+
+
 def q_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return run_stream_to_df(stream_hourly_tumbling(events_stream(spark, sf_dir)), spark)
+    return _run_events_stream(spark, sf_dir, stream_hourly_tumbling)
 
 
 def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return run_stream_to_df(stream_session_windows(events_stream(spark, sf_dir)), spark)
+    return _run_events_stream(spark, sf_dir, stream_session_windows)
 
 
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -76,7 +87,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     never shuffled."""
     from pyspark.sql import functions as F
 
-    s = run_stream_to_df(stream_user_dedup(events_stream(spark, sf_dir)), spark)
+    s = _run_events_stream(spark, sf_dir, stream_user_dedup)
     ev = t(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
     triple = ["event_id", "user_id", "event_type"]
     matched = (
@@ -339,9 +350,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     is at or below the end-of-stream watermark."""
     from ..streaming.events import stream_sliding_counts
 
-    return run_stream_to_df(
-        stream_sliding_counts(events_stream(spark, sf_dir)), spark
-    )
+    return _run_events_stream(spark, sf_dir, stream_sliding_counts)
 
 
 # Each event belongs to exactly 4 slide-aligned windows (k = 0..3
@@ -425,9 +434,7 @@ QUERIES: dict[str, QuerySpec] = {
 def _attribution_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.events import stream_view_purchase_outer
 
-    return run_stream_to_df(
-        stream_view_purchase_outer(events_stream(spark, sf_dir)), spark
-    ).persist()
+    return _run_events_stream(spark, sf_dir, stream_view_purchase_outer).persist()
 
 
 def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -464,9 +471,9 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is exact."""
     from ..streaming.events import stream_static_enrich
 
-    return run_stream_to_df(
-        stream_static_enrich(events_stream(spark, sf_dir), t(spark, sf_dir, "nation")),
-        spark,
+    nation = t(spark, sf_dir, "nation")
+    return _run_events_stream(
+        spark, sf_dir, lambda events: stream_static_enrich(events, nation)
     )
 
 
@@ -482,10 +489,12 @@ def q_stream_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     are scored + routed keep/review/drop at the ingest boundary —
     map-only append stream, so every row emits and the batch-twin
     oracle is exact."""
-    from ..streaming.documents import documents_stream, stream_quality_gate
+    from ..streaming.documents import stream_quality_gate
 
     return run_stream_to_df(
-        stream_quality_gate(documents_stream(spark, sf_dir)), spark
+        stream_quality_gate(table_stream(spark, sf_dir, "documents")),
+        spark,
+        sources=table_paths(sf_dir, ["documents"]),
     )
 
 
@@ -509,16 +518,17 @@ def q_stream_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice) — exact-fingerprint and prefix-fingerprint broadcast
     stream-static joins, routed drop_exact/review_neardup/ingest.
     Map-only append stream → exact batch-twin oracle."""
-    from ..streaming.documents import documents_stream, stream_dedup_gate
+    from ..streaming.documents import stream_dedup_gate
 
     corpus = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 0)
     return run_stream_to_df(
         stream_dedup_gate(
-            documents_stream(spark, sf_dir),
+            table_stream(spark, sf_dir, "documents"),
             corpus,
             cache_key="mod3",
         ),
         spark,
+        sources=table_paths(sf_dir, ["documents"]),
     )
 
 
@@ -553,13 +563,16 @@ def q_stream_emb_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     happens once, before the stream starts) and emit (vec_id, ivf_cid,
     grid-quantized affinity). Map-only append stream → exact batch-twin
     oracle (coarse-assignment CTE over the shared Lloyd unroll)."""
-    from ..streaming.embeddings import embeddings_stream, stream_ivf_ingest
+    from ..streaming.embeddings import stream_ivf_ingest
     from .similarity import OUTLIER_GRID, _ivf_kmeans_index
 
     codebook, _ = _ivf_kmeans_index(spark, sf_dir)
     return run_stream_to_df(
-        stream_ivf_ingest(embeddings_stream(spark, sf_dir), codebook, OUTLIER_GRID),
+        stream_ivf_ingest(
+            table_stream(spark, sf_dir, "embeddings"), codebook, OUTLIER_GRID
+        ),
         spark,
+        sources=table_paths(sf_dir, ["embeddings"]),
     )
 
 
@@ -597,15 +610,16 @@ def q_stream_lr_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (queries/text._lr_model) — and routed keep/review/drop on the
     quantized probability. Map-only append stream → the GD-unroll
     batch oracle applies exactly."""
-    from ..streaming.documents import documents_stream, stream_classifier_gate
+    from ..streaming.documents import stream_classifier_gate
     from .text import _lr_model
 
     w = _lr_model(spark, sf_dir)
     return run_stream_to_df(
         stream_classifier_gate(
-            documents_stream(spark, sf_dir), w, LR_GATE_KEEP_Q, LR_GATE_REVIEW_Q
+            table_stream(spark, sf_dir, "documents"), w, LR_GATE_KEEP_Q, LR_GATE_REVIEW_Q
         ),
         spark,
+        sources=table_paths(sf_dir, ["documents"]),
     )
 
 
@@ -650,12 +664,10 @@ def q_stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     COUNT DISTINCT's unbounded state), folded to the estimate in
     batch. availableNow emits the final register state, so the result
     equals the batch twin exactly and carries its full value oracle."""
-    from ..streaming import events_stream, run_stream_to_df, stream_hll_registers
+    from ..streaming import stream_hll_registers
     from .events import hll_fold
 
-    regs = run_stream_to_df(
-        stream_hll_registers(events_stream(spark, sf_dir)), spark, mode="complete"
-    )
+    regs = _run_events_stream(spark, sf_dir, stream_hll_registers, mode="complete")
     return hll_fold(regs, t(spark, sf_dir, "events"))
 
 
@@ -673,13 +685,10 @@ def q_stream_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     (queries/events.ewma_fold, the exact same code path). availableNow
     emits the final state, so the result equals the batch twin exactly
     and carries its full value oracle."""
-    from ..streaming import events_stream, run_stream_to_df
     from ..streaming.events import stream_daily_counts
     from .events import ewma_fold
 
-    daily = run_stream_to_df(
-        stream_daily_counts(events_stream(spark, sf_dir)), spark, mode="complete"
-    )
+    daily = _run_events_stream(spark, sf_dir, stream_daily_counts, mode="complete")
     return ewma_fold(daily)
 
 
@@ -703,16 +712,13 @@ def q_stream_cms_heavy_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     increments are bit-identical to batch count-then-sum (commutative
     +), so the query carries a full DuckDB value oracle."""
     from ..functions import hashing as H
-    from ..streaming import events_stream, run_stream_to_df
     from ..streaming.events import (
         CMS_USER_D,
         CMS_USER_W,
         stream_cms_user_cells,
     )
 
-    cells = run_stream_to_df(
-        stream_cms_user_cells(events_stream(spark, sf_dir)), spark, mode="complete"
-    )
+    cells = _run_events_stream(spark, sf_dir, stream_cms_user_cells, mode="complete")
     ev = t(spark, sf_dir, "events")
     counts = ev.groupBy(col("user_id").cast("string").alias("uid")).agg(
         F.count(F.lit(1)).alias("n")
@@ -841,7 +847,6 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     (which also makes checkpoint replay idempotent). The final state is
     a pure function of the log, so the DuckDB oracle is the batch
     last-change-per-key query over the same synthesized log."""
-    import hashlib
     import os
 
     from ..streaming.cdc import (
@@ -853,19 +858,19 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_cdc_apply,
     )
 
-    src = os.path.abspath(f"{sf_dir}/orders.parquet")
-    st = os.stat(src)
-    key = (
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:cdcapply"
-        f":{CDC_SLICES}:{CDC_BUCKETS}:fmt{CDC_STATE_FORMAT}"
+    def build(root: str) -> None:
+        stream_cdc_apply(
+            changelog_stream(spark, sf_dir),
+            state_dir=os.path.join(root, "state"),
+            checkpoint_dir=os.path.join(root, "ckpt"),
+        ).awaitTermination()
+
+    root = stage_dir(
+        "cdc_apply",
+        table_paths(sf_dir, ["orders"]),
+        (CDC_SLICES, CDC_BUCKETS, CDC_STATE_FORMAT),
+        build,
     )
-    root = f"/tmp/hdb_cdc_apply_{hashlib.md5(key.encode()).hexdigest()[:10]}"
-    query = stream_cdc_apply(
-        changelog_stream(spark, sf_dir),
-        state_dir=os.path.join(root, "state"),
-        checkpoint_dir=os.path.join(root, "ckpt"),
-    )
-    query.awaitTermination()
     return read_cdc_state(spark, os.path.join(root, "state")).select(
         "o_orderkey", "price_cents", "last_seq"
     )

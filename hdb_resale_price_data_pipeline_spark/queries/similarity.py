@@ -827,8 +827,8 @@ def _ann_store_path(sf_dir: str) -> str | None:
     """Disk location for the persisted IVF-PQ index, if the operator
     has a store configured (``SPARK_GRAFT_ANN_STORE``). The directory
     key carries the SOURCE DATA IDENTITY (absolute path + mtime + size
-    of the embeddings file — the staging discipline of
-    ``streaming/embeddings._stage_emb_dir``) alongside the index
+    of the embeddings file — the source key of
+    ``operators/index_cache.stage_dir``) alongside the index
     params: two different corpora sharing a basename, or the same path
     after regeneration, must map to DIFFERENT store dirs — a stale hit
     here would silently serve neighbors from the wrong corpus, not

@@ -10,12 +10,13 @@ operator that crosses the Python boundary.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import weakref
 import zipfile
 
 from pyspark.sql import SparkSession
+
+from .operators.index_cache import stage_dir
 
 # Weak registry, NOT id()-keyed: a CPython id is reused after GC, so an
 # id-set would mark a brand-new session at a recycled address as
@@ -27,8 +28,9 @@ _SHIPPED_SESSIONS: "weakref.WeakSet[object]" = weakref.WeakSet()
 def _package_zip() -> str:
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     pkg_name = os.path.basename(pkg_dir)
-    stamp = hashlib.md5(pkg_dir.encode()).hexdigest()[:10]
-    zip_path = f"/tmp/{pkg_name}_{stamp}.zip"
+    zip_dir = stage_dir("pkg", (), pkg_dir)  # one per checkout
+    os.makedirs(zip_dir, exist_ok=True)
+    zip_path = os.path.join(zip_dir, f"{pkg_name}.zip")
     # rebuild when any source file is newer than the zip
     sources = [
         os.path.join(root, f)

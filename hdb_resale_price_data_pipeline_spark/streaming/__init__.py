@@ -16,6 +16,7 @@ from .events import (
     stream_session_windows,
     stream_sliding_counts,
     stream_user_dedup,
+    table_stream,
 )
 
 __all__ = [
@@ -26,4 +27,5 @@ __all__ = [
     "stream_session_windows",
     "stream_sliding_counts",
     "stream_user_dedup",
+    "table_stream",
 ]

@@ -39,16 +39,17 @@ Design for 100 TB:
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
+from ..operators.index_cache import stage_dir, table_paths
+
 CDC_BUCKETS = 8
 CDC_SLICES = 3  # one staged landing file per change wave → 3 micro-batches
-# State-table format version — folded into every /tmp cache key (the r6
+# State-table format version — folded into every state-root key (the r6
 # ADVICE cache-key discipline): bumping it orphans state written by an
 # older layout instead of mis-reading it with the new pinned schema
 # (v2 added the `deleted` tombstone column; v1 state read under the v2
@@ -106,21 +107,19 @@ def stage_changelog_dir(spark: SparkSession, sf_dir: str) -> str:
     ordered micro-batches in the common case; the APPLY is
     order-independent by seq-LWW + tombstones, so an mtime tie on a
     coarse-granularity filesystem cannot corrupt the final state — the
-    ordering here only makes the multi-batch demo legible).
-    (mtime, size)-keyed like every staging helper, with the
-    wave/bucket parameters folded into the key."""
-    src = os.path.abspath(f"{sf_dir}/orders.parquet")
-    st = os.stat(src)
-    key = f"{src}:{st.st_mtime_ns}:{st.st_size}:cdc:{CDC_SLICES}:{CDC_BUCKETS}"
-    stage = f"/tmp/hdb_cdc_stream_{hashlib.md5(key.encode()).hexdigest()[:10]}"
-    if not os.path.exists(os.path.join(stage, "_done")):
+    ordering here only makes the multi-batch demo legible). Keyed on
+    the orders file with the wave/bucket parameters."""
+
+    def build(stage: str) -> None:
         log = synth_changelog(spark, sf_dir)
         for seq in range(1, CDC_SLICES + 1):
             log.filter(col("seq") == seq).coalesce(1).write.mode(
                 "append"
             ).parquet(stage)
-        open(os.path.join(stage, "_done"), "w").close()
-    return stage
+
+    return stage_dir(
+        "cdc_stream", table_paths(sf_dir, ["orders"]), (CDC_SLICES, CDC_BUCKETS), build
+    )
 
 
 def changelog_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -11,60 +11,23 @@ partition-parallel scan + codegen projection, and the same
 ``load_day_partitioned`` sink used by the batch pipelines gives
 exactly-once day-partitioned landing (streaming/sink.py).
 
-Same engineering discipline as the events stream (streaming/events.py):
-the landing dir is staged keyed by the source's (mtime, size) so
-regenerated testdata can never reuse stale staging, and the declared
-schema is taken from the parquet footer, never assumed.
+The documents arrive through ``streaming/events.table_stream``: the
+landing dir is staged by ``operators/index_cache.stage_dir``, keyed on
+the source file's fingerprint so regenerated testdata can never reuse
+stale staging, and the declared schema is taken from the parquet
+footer, never assumed.
 """
 
 from __future__ import annotations
 
-import hashlib
-import os
-
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
 from ..operators import text as T
 from ..operators.index_cache import frame_artifact
-
-
-STREAM_SLICES = 4  # staged landing files → micro-batches
-
-
-def _stage_docs_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the single-file documents table as STREAM_SLICES landing
-    files so the stream genuinely runs MULTIPLE micro-batches (one file
-    per trigger) — a symlinked single file would collapse ingest into
-    one batch and prove nothing about incremental arrival."""
-    src = os.path.abspath(f"{sf_dir}/documents.parquet")
-    st = os.stat(src)
-    key = f"{src}:{st.st_mtime_ns}:{st.st_size}:{STREAM_SLICES}"
-    stage = f"/tmp/hdb_docs_stream_{hashlib.md5(key.encode()).hexdigest()[:10]}"
-    if not os.path.exists(os.path.join(stage, "_SUCCESS")):
-        (
-            spark.read.parquet(src)
-            .repartition(STREAM_SLICES)
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-    return stage
-
-
-def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream of the documents table, schema pinned from
-    the parquet footer (one footer-sized batch read — no inference, no
-    assumption); one landing file per trigger."""
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    return (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(_stage_docs_dir(spark, sf_dir))
-    )
 
 
 GATE_PREFIX_K = 2  # short prefix → real boilerplate-collision band

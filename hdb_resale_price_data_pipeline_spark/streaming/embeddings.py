@@ -9,7 +9,8 @@ Arrow pass the batch build uses, so stream and batch can never
 disagree on a vector's list). Map-only: the trained codebook rides the
 UDF closure (K×dim doubles), no state store, no watermark — append
 emits every row and the batch-twin oracle (coarse-assignment CTE over
-the Lloyd unroll) is exact.
+the Lloyd unroll) is exact. The vectors arrive through
+``streaming/events.table_stream(spark, sf_dir, "embeddings")``.
 
 At 100 TB the sink side of this stream is the ivf_cid-partitioned
 layout of ``operators/index_store`` (``foreachBatch`` →
@@ -24,45 +25,9 @@ hazard.
 
 from __future__ import annotations
 
-import hashlib
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
-
-STREAM_SLICES = 4  # staged landing files → micro-batches
-
-
-def _stage_emb_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the embeddings table as STREAM_SLICES landing files so the
-    stream runs multiple micro-batches (same staging discipline as
-    streaming/documents._stage_docs_dir: keyed by source (mtime, size)
-    so regenerated testdata can never reuse stale staging)."""
-    src = os.path.abspath(f"{sf_dir}/embeddings.parquet")
-    st = os.stat(src)
-    key = f"{src}:{st.st_mtime_ns}:{st.st_size}:{STREAM_SLICES}"
-    stage = f"/tmp/hdb_emb_stream_{hashlib.md5(key.encode()).hexdigest()[:10]}"
-    if not os.path.exists(os.path.join(stage, "_SUCCESS")):
-        (
-            spark.read.parquet(src)
-            .repartition(STREAM_SLICES)
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-    return stage
-
-
-def embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream of the embeddings table, schema pinned from
-    the parquet footer; one landing file per trigger."""
-    schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-    return (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(_stage_emb_dir(spark, sf_dir))
-    )
 
 
 def stream_append_to_ann_index(

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 import uuid
+from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,7 +36,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..operators.index_cache import artifact
+from ..operators.index_cache import artifact, stage_dir
 
 WATERMARK = "2 hours"
 
@@ -75,27 +76,6 @@ def events_raw_schema(ts_type: DataType) -> StructType:
 EVENTS_RAW_SCHEMA = events_raw_schema(TimestampNTZType())
 
 
-def _stage_stream_dir(sf_dir: str) -> str:
-    """The file stream source requires a *directory* (its basePath); the
-    testdata ships one parquet file per table. Stage a per-sf landing
-    directory containing a symlink — the exact layout a real ingest
-    (files appended to a landing dir) would have. The stage key includes
-    the source file's (mtime, size) so a regenerated testdata file never
-    reuses a stale staging dir."""
-    import hashlib
-    import os
-
-    src = os.path.abspath(f"{sf_dir}/events.parquet")
-    st = os.stat(src)
-    key = f"{src}:{st.st_mtime_ns}:{st.st_size}"
-    stage = f"/tmp/hdb_stream_src_{hashlib.md5(key.encode()).hexdigest()[:10]}"
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    return stage
-
-
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream of the events table, ``ts`` normalized to
     TIMESTAMP regardless of the producer's physical flavor."""
@@ -112,24 +92,53 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.conf.set(k, v)
         except Exception:
             pass
-    import os
-
-    flavor = _events_ts_flavor(os.path.abspath(f"{sf_dir}/events.parquet"))
+    src = os.path.abspath(f"{sf_dir}/events.parquet")
+    flavor = _events_ts_flavor(src)
     ts_type: DataType = {
         "nanos": LongType(),
         "ntz": TimestampNTZType(),
         "ltz": TimestampType(),
     }[flavor]
+    # The file stream source requires a *directory* (its basePath): stage
+    # a landing directory holding a symlink to the table — the exact
+    # layout a real ingest (files appended to a landing dir) would have.
+    stage = stage_dir(
+        "events_stream", [src], (),
+        lambda d: os.symlink(src, os.path.join(d, "events.parquet")),
+    )
     raw = (
         spark.readStream.schema(events_raw_schema(ts_type))
         .format("parquet")
-        .load(_stage_stream_dir(sf_dir))
+        .load(stage)
     )
     if flavor == "nanos":
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     if flavor == "ntz":
         return raw.withColumn("ts", col("ts").cast("timestamp"))
     return raw
+
+
+STREAM_SLICES = 4  # staged landing files → micro-batches
+
+
+def table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """File-source stream of ``table``, staged as STREAM_SLICES landing
+    files so the stream genuinely runs MULTIPLE micro-batches (one file
+    per trigger) — a single landing file would collapse ingest into one
+    batch and prove nothing about incremental arrival. The schema is
+    pinned from the parquet footer, never assumed."""
+    src = os.path.abspath(f"{sf_dir}/{table}.parquet")
+    batch = spark.read.parquet(src)
+    stage = stage_dir(
+        f"{table}_stream", [src], STREAM_SLICES,
+        lambda d: batch.repartition(STREAM_SLICES).write.mode("overwrite").parquet(d),
+    )
+    return (
+        spark.readStream.schema(batch.schema)
+        .format("parquet")
+        .option("maxFilesPerTrigger", 1)
+        .load(stage)
+    )
 
 
 def stream_hourly_tumbling(events: DataFrame) -> DataFrame:
@@ -305,10 +314,10 @@ STREAM_STATE_ROWS_PER_PARTITION = int(
 
 
 def _dir_parquet_rows(path: str, stop_at: int | None = None) -> int | None:
-    """Total footer row count over a landing directory's parquet files
-    (symlinks followed), cached in operators/index_cache on the
-    directory's fingerprint and ``stop_at``, so a re-staged directory
-    never reuses stale counts.
+    """Total footer row count of a parquet file, or over a landing
+    directory's parquet files (symlinks followed), cached in
+    operators/index_cache on the path's fingerprint and ``stop_at``, so
+    a rewritten source never reuses stale counts.
 
     Short-circuits once ``stop_at`` rows are proven: the caller only
     uses the count to check whether the partition ceiling binds, so at
@@ -324,8 +333,10 @@ def _dir_parquet_rows(path: str, stop_at: int | None = None) -> int | None:
 
         import pyarrow.parquet as pq
 
-        files = sorted(
-            glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+        files = (
+            [path]
+            if os.path.isfile(path)
+            else sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
         )
         if not files:
             return None
@@ -342,39 +353,6 @@ def _dir_parquet_rows(path: str, stop_at: int | None = None) -> int | None:
         return None
 
 
-def _analyzed_plan_string(streaming_df: DataFrame) -> str | None:
-    try:
-        return streaming_df._jdf.queryExecution().analyzed().toString()
-    except Exception:  # Spark Connect: no _jdf on the client
-        return None
-
-
-def _stream_source_rows(plan: str, stop_at: int | None = None) -> int | None:
-    """Sum of input rows across the stream's distinct file sources,
-    read from the analyzed plan's ``FileSource[...]`` markers. Returns
-    None (→ no scaling) when a source is not a parquet directory.
-    ``stop_at`` propagates the footer-read short-circuit: once the sum
-    proves the threshold, later sources need not be read at all."""
-    import re
-
-    paths = sorted(set(re.findall(r"FileSource\[([^\]]+)\]", plan)))
-    if not paths:
-        return None
-    total = 0
-    for p in paths:
-        if p.startswith("file:"):  # URI-scheme FileSource → local path
-            p = p.removeprefix("file:")
-        if stop_at is not None and total >= stop_at:
-            return total
-        rows = _dir_parquet_rows(
-            p, None if stop_at is None else stop_at - total
-        )
-        if rows is None:
-            return None
-        total += rows
-    return total
-
-
 def derived_stream_partitions(n_rows: int, configured: int) -> int:
     """ceil(rows / target-rows-per-store), clamped to [1, configured]."""
     derived = max(1, -(-n_rows // STREAM_STATE_ROWS_PER_PARTITION))
@@ -382,7 +360,10 @@ def derived_stream_partitions(n_rows: int, configured: int) -> int:
 
 
 def run_stream_to_df(
-    streaming_df: DataFrame, spark: SparkSession, mode: str = "append"
+    streaming_df: DataFrame,
+    spark: SparkSession,
+    mode: str = "append",
+    sources: Iterable[str] = (),
 ) -> DataFrame:
     """Execute a finite streaming query to completion (availableNow
     trigger → memory sink) and return the result as a batch DataFrame.
@@ -392,18 +373,18 @@ def run_stream_to_df(
     aggregates (e.g. sketch registers), where the last microbatch's
     full state is the result.
 
-    The state-store partition count is derived from the source size
-    (see ``derived_stream_partitions``) for the duration of the query
-    and restored afterwards — the streaming twin of AQE coalescing,
-    which streaming plans cannot use."""
+    The state-store partition count is derived from the row count of
+    ``sources`` — the parquet files or landing directories the stream
+    reads (see ``derived_stream_partitions``) — for the duration of the
+    query and restored afterwards: the streaming twin of AQE
+    coalescing, which streaming plans cannot use. Without ``sources``
+    the configured count is kept. Python-stateful plans
+    (applyInPandasWithState) pass none: their cost is per-GROUP Python
+    work, which the partition count parallelizes — measured 4.4s at the
+    configured 32 partitions vs 8.6s at the state-derived 4 (sf0.1).
+    State-store overhead is the minor term there; compute wins."""
     name = f"stream_out_{uuid.uuid4().hex[:12]}"
     prior: str | None = None
-    plan = _analyzed_plan_string(streaming_df)
-    # Python-stateful plans (applyInPandasWithState) are exempt: their
-    # cost is per-GROUP Python work, which the partition count
-    # parallelizes — measured 4.4s at the configured 32 partitions vs
-    # 8.6s at the state-derived 4 (sf0.1). State-store overhead is the
-    # minor term there; compute wins.
     try:
         configured = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:
@@ -412,17 +393,12 @@ def run_stream_to_df(
     # assumes no concurrent query planning shares this SparkSession
     # (true for the bench, the driver, and the tests, which are all
     # sequential). ``prior`` is read from the live conf value above.
-    n_rows = (
-        _stream_source_rows(
-            plan, stop_at=configured * STREAM_STATE_ROWS_PER_PARTITION
-        )
-        if plan is not None
-        and configured > 0
-        and "FlatMapGroupsInPandasWithState" not in plan
-        else None
-    )
-    if n_rows is not None and configured > 0:
-        target = derived_stream_partitions(n_rows, configured)
+    rows = [
+        _dir_parquet_rows(s, stop_at=configured * STREAM_STATE_ROWS_PER_PARTITION)
+        for s in (sources if configured > 0 else ())
+    ]
+    if rows and None not in rows:
+        target = derived_stream_partitions(sum(rows), configured)
         if target < configured:
             prior = str(configured)
             spark.conf.set("spark.sql.shuffle.partitions", str(target))

@@ -8,7 +8,8 @@ Why ``foreachBatch``: the gate needs a per-record BEST match
 functions are illegal on an unbounded stream. Inside ``foreachBatch``
 each micro-batch is a plain batch DataFrame, so the match is the same
 blocked broadcast join + WindowGroupLimit the batch ER family uses —
-per-batch batch semantics, streaming delivery.
+per-batch batch semantics, streaming delivery. The records arrive
+through ``streaming/events.table_stream(spark, sf_dir, "customer")``.
 
 Exactly-once: each batch's verdicts land in a ``batch_id``-keyed
 subdirectory written with ``mode("overwrite")`` — a checkpoint replay
@@ -32,7 +33,6 @@ drift apart):
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 
@@ -40,8 +40,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 from pyspark.sql.types import StructType
-
-STREAM_SLICES = 4
 
 # Sentinel block key for records whose block expression yields NULL or
 # the empty string (names shorter than the block offset). Hive
@@ -57,35 +55,6 @@ EMPTY_BLOCK_KEY = "__EMPTY_BK__"
 def _safe_block(block_expr, cmp: F.Column) -> F.Column:
     return F.coalesce(
         F.nullif(block_expr(cmp), F.lit("")), F.lit(EMPTY_BLOCK_KEY)
-    )
-
-
-def _stage_customers_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the customer roster as STREAM_SLICES landing files (same
-    (mtime, size)-keyed staging discipline as documents_stream)."""
-    src = os.path.abspath(f"{sf_dir}/customer.parquet")
-    st = os.stat(src)
-    key = f"{src}:{st.st_mtime_ns}:{st.st_size}:{STREAM_SLICES}"
-    stage = f"/tmp/hdb_cust_stream_{hashlib.md5(key.encode()).hexdigest()[:10]}"
-    if not os.path.exists(os.path.join(stage, "_SUCCESS")):
-        (
-            spark.read.parquet(src)
-            .repartition(STREAM_SLICES)
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-    return stage
-
-
-def customers_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream of the customer roster, schema pinned from
-    the parquet footer; one landing file per trigger."""
-    schema = spark.read.parquet(f"{sf_dir}/customer.parquet").schema
-    return (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(_stage_customers_dir(spark, sf_dir))
     )
 
 

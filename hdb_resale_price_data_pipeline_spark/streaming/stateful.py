@@ -19,6 +19,7 @@ from typing import Any, Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import TimestampType
 
 SESSION_GAP_US = 30 * 60 * 1_000_000
 
@@ -178,24 +179,17 @@ def split_events_stream(
     """A multi-batch streaming source: the events table split into
     ``n_splits`` time-ordered files, fed one file per microbatch — so
     state genuinely crosses batch boundaries."""
-    import hashlib
-    import os
-
-    from ..sources.readers import read_table
-
     import glob
+    import os
     import shutil
 
-    src = os.path.abspath(f"{sf_dir}/events.parquet")
-    st = os.stat(src)
-    stage = "/tmp/hdb_stateful_src_" + hashlib.md5(
-        f"{src}:{n_splits}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:10]
-    marker = os.path.join(stage, "_STAGED")
-    if not os.path.exists(marker):
+    from ..operators.index_cache import stage_dir, table_paths
+    from ..sources.readers import read_table
+    from .events import events_raw_schema
+
+    def build(stage: str) -> None:
         batch = read_table(spark, sf_dir, "events")
         cut = int(batch.selectExpr("percentile(unix_micros(ts), 0.5) AS m").first().m)
-        os.makedirs(stage, exist_ok=True)
         for i, pred in enumerate(
             [f"unix_micros(ts) <= {cut}", f"unix_micros(ts) > {cut}"]
         ):
@@ -208,34 +202,13 @@ def split_events_stream(
             # the file source orders same-config batches by mtime
             # (oldest first) — pin them so batch0 always streams first
             os.utime(dest, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
-        open(marker, "w").close()
 
+    stage = stage_dir(
+        "stateful_stream", table_paths(sf_dir, ["events"]), n_splits, build
+    )
     return (
-        spark.readStream.schema(_staged_schema())
+        spark.readStream.schema(events_raw_schema(TimestampType()))
         .format("parquet")
         .option("maxFilesPerTrigger", "1")
         .load(stage)
-    )
-
-
-def _staged_schema():
-    """Schema of the re-written staged files (ts already µs timestamp)."""
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    return StructType(
-        [
-            StructField("event_id", LongType(), True),
-            StructField("ts", TimestampType(), True),
-            StructField("user_id", LongType(), True),
-            StructField("event_type", StringType(), True),
-            StructField("value", DoubleType(), True),
-            StructField("props", StringType(), True),
-        ]
     )

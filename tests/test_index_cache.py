@@ -4,6 +4,8 @@ long-lived session)."""
 
 from __future__ import annotations
 
+import pytest
+
 from hdb_resale_price_data_pipeline_spark.operators.index_cache import IndexCache
 
 
@@ -257,3 +259,71 @@ def test_registry_is_thread_safe(tmp_path):
     assert all(len(index_cache.cache(f"stress.{k}")) == 4 for k in range(4))
     index_cache.clear("stress.")
     assert all(len(index_cache.cache(f"stress.{k}")) == 0 for k in range(4))
+
+
+@pytest.mark.core
+def test_stage_dir_keys_publishes_whole_and_survives_races(tmp_path, monkeypatch):
+    """stage_dir names a directory by (kind, params, source fingerprint)
+    and publishes a build with one rename: a failed build leaves
+    nothing at the final path, and racing builds all see one
+    complete directory."""
+    import os
+    import sys
+    import tempfile
+    import threading
+
+    from hdb_resale_price_data_pipeline_spark.operators.index_cache import stage_dir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "stages"))
+    os.makedirs(tempfile.tempdir)
+    source = tmp_path / "t.parquet"
+    source.write_bytes(b"x")
+    src = str(source)
+
+    def write(*names):
+        def build(d):
+            for name in names:
+                with open(os.path.join(d, name), "w") as f:
+                    f.write(name)
+
+        return build
+
+    path = stage_dir("t", [src], 1)
+    assert path == stage_dir("t", [src], 1)
+    assert os.path.dirname(path) == tempfile.tempdir
+    assert stage_dir("t", [src], 2) != path
+    os.utime(src, ns=(0, os.stat(src).st_mtime_ns + 1))
+    assert stage_dir("t", [src], 1) != path
+    path = stage_dir("t", [src], 1)
+
+    def failing(d):
+        write("a")(d)
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError):
+        stage_dir("t", [src], 1, failing)
+    assert not os.path.exists(path)
+    assert stage_dir("t", [src], 1, write("b")) == path
+    assert sorted(os.listdir(path)) == ["b"]
+    assert os.listdir(tempfile.tempdir) == [os.path.basename(path)]
+
+    names = [f"f{i}" for i in range(20)]
+    results = {}
+
+    def worker(i: int) -> None:
+        results[i] = stage_dir("race", [src], (), write(*names))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(old)
+    assert len(results) == 8 and len(set(results.values())) == 1
+    assert sorted(os.listdir(results[0])) == sorted(names)
+    assert len(os.listdir(tempfile.tempdir)) == 2  # no losing copy left behind

@@ -265,8 +265,8 @@ def test_stream_ingest_lifecycle_exactly_once_and_compacted_serving(spark):
     )
     from hdb_resale_price_data_pipeline_spark.operators.pq import pq_encode
     from hdb_resale_price_data_pipeline_spark.queries.similarity import _probe_ids
+    from hdb_resale_price_data_pipeline_spark.streaming import table_stream
     from hdb_resale_price_data_pipeline_spark.streaming.embeddings import (
-        embeddings_stream,
         stream_append_to_ann_index,
     )
 
@@ -277,7 +277,7 @@ def test_stream_ingest_lifecycle_exactly_once_and_compacted_serving(spark):
     n0 = spark.read.parquet(f"{index_data_dir(store)}/inverted_lists").count()
 
     # stream the corpus back in with shifted ids — multiple micro-batches
-    vecs = embeddings_stream(spark, SMOKE_SF_DIR).withColumn(
+    vecs = table_stream(spark, SMOKE_SF_DIR, "embeddings").withColumn(
         "vec_id", F.col("vec_id") + 1_000_000
     )
     q = stream_append_to_ann_index(

@@ -168,8 +168,8 @@ def test_served_gate_is_bit_identical_to_broadcast_gate(spark, tmp_path):
         _CUST_BLOCK_START,
         SNM_MAX_LEV,
     )
+    from hdb_resale_price_data_pipeline_spark.streaming import table_stream
     from hdb_resale_price_data_pipeline_spark.streaming.linkage import (
-        customers_stream,
         stream_er_gate,
         stream_er_gate_served,
         write_er_directory,
@@ -187,7 +187,7 @@ def test_served_gate_is_bit_identical_to_broadcast_gate(spark, tmp_path):
 
     def run(gate_fn, directory_arg, sub):
         q = gate_fn(
-            customers_stream(spark, TEST_SF_DIR),
+            table_stream(spark, TEST_SF_DIR, "customer"),
             directory_arg,
             block,
             out_dir=str(tmp_path / sub / "out"),

@@ -166,21 +166,22 @@ def test_watermark_finalized_windows_emit_exactly_once(spark, tmp_path):
     import shutil
 
     from pyspark.sql import Row
+    from pyspark.sql.types import TimestampType
 
     from hdb_resale_price_data_pipeline_spark.streaming import (
         run_stream_to_df,
         stream_hourly_tumbling,
     )
-    from hdb_resale_price_data_pipeline_spark.streaming.stateful import _staged_schema
+    from hdb_resale_price_data_pipeline_spark.streaming.events import events_raw_schema
 
     stage = str(tmp_path / "late_src")
     os.makedirs(stage)
 
     def write_batch(i, rows):
         tmp = str(tmp_path / f"_w{i}")
-        spark.createDataFrame(rows, _staged_schema()).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
+        spark.createDataFrame(rows, events_raw_schema(TimestampType())).coalesce(
+            1
+        ).write.mode("overwrite").parquet(tmp)
         dest = os.path.join(stage, f"b{i}.parquet")
         shutil.move(glob.glob(f"{tmp}/part-*.parquet")[0], dest)
         os.utime(dest, (1_700_000_000 + i * 100,) * 2)
@@ -209,7 +210,7 @@ def test_watermark_finalized_windows_emit_exactly_once(spark, tmp_path):
     write_batch(2, [ev(4, 15), ev(5, 700)])
 
     raw = (
-        spark.readStream.schema(_staged_schema())
+        spark.readStream.schema(events_raw_schema(TimestampType()))
         .format("parquet")
         .option("maxFilesPerTrigger", "1")
         .load(stage)
@@ -234,10 +235,11 @@ def test_event_time_timeout_closes_quiet_users_session(spark, tmp_path):
     import shutil
 
     from pyspark.sql import Row
+    from pyspark.sql.types import TimestampType
 
     from hdb_resale_price_data_pipeline_spark.streaming import run_stream_to_df
+    from hdb_resale_price_data_pipeline_spark.streaming.events import events_raw_schema
     from hdb_resale_price_data_pipeline_spark.streaming.stateful import (
-        _staged_schema,
         stateful_sessions_event_time,
     )
 
@@ -271,15 +273,15 @@ def test_event_time_timeout_closes_quiet_users_session(spark, tmp_path):
     ]
     for i, rows in enumerate(batches):
         tmp = str(tmp_path / f"_t{i}")
-        spark.createDataFrame(rows, _staged_schema()).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
+        spark.createDataFrame(rows, events_raw_schema(TimestampType())).coalesce(
+            1
+        ).write.mode("overwrite").parquet(tmp)
         dest = os.path.join(stage, f"b{i}.parquet")
         shutil.move(glob.glob(f"{tmp}/part-*.parquet")[0], dest)
         os.utime(dest, (1_700_000_000 + i * 100,) * 2)
 
     stream = (
-        spark.readStream.schema(_staged_schema())
+        spark.readStream.schema(events_raw_schema(TimestampType()))
         .format("parquet")
         .option("maxFilesPerTrigger", "1")
         .load(stage)
@@ -418,13 +420,15 @@ def test_doc_quality_gate_streams_in_micro_batches(spark):
     from hdb_resale_price_data_pipeline_spark.operators import text as T
     from hdb_resale_price_data_pipeline_spark.sources import read_table
     from hdb_resale_price_data_pipeline_spark.streaming.documents import (
-        STREAM_SLICES,
-        documents_stream,
         stream_quality_gate,
+    )
+    from hdb_resale_price_data_pipeline_spark.streaming.events import (
+        STREAM_SLICES,
+        table_stream,
     )
     from pyspark.sql import functions as F
 
-    gated = stream_quality_gate(documents_stream(spark, TEST_SF_DIR))
+    gated = stream_quality_gate(table_stream(spark, TEST_SF_DIR, "documents"))
     name = f"doc_gate_{uuid.uuid4().hex[:8]}"
     q = (
         gated.writeStream.format("memory")
@@ -469,16 +473,18 @@ def test_stream_dedup_gate_flags_corpus_collisions(spark):
 
     from hdb_resale_price_data_pipeline_spark.sources import read_table
     from hdb_resale_price_data_pipeline_spark.streaming.documents import (
-        STREAM_SLICES,
-        documents_stream,
         stream_dedup_gate,
+    )
+    from hdb_resale_price_data_pipeline_spark.streaming.events import (
+        STREAM_SLICES,
+        table_stream,
     )
     from pyspark.sql import functions as F
 
     corpus = read_table(spark, TEST_SF_DIR, "documents").filter(
         F.col("doc_id") % 3 == 0
     )
-    gated = stream_dedup_gate(documents_stream(spark, TEST_SF_DIR), corpus)
+    gated = stream_dedup_gate(table_stream(spark, TEST_SF_DIR, "documents"), corpus)
     name = f"dedup_gate_{uuid.uuid4().hex[:8]}"
     q = (
         gated.writeStream.format("memory")
@@ -525,24 +531,25 @@ def test_dedup_within_watermark_bounds_state_and_reemits(spark, tmp_path):
     import shutil
 
     from pyspark.sql import Row
+    from pyspark.sql.types import TimestampType
 
     from hdb_resale_price_data_pipeline_spark.streaming import (
         run_stream_to_df,
         stream_user_dedup,
     )
     from hdb_resale_price_data_pipeline_spark.streaming.events import (
+        events_raw_schema,
         stream_user_dedup_bounded,
     )
-    from hdb_resale_price_data_pipeline_spark.streaming.stateful import _staged_schema
 
     stage = str(tmp_path / "dwm_src")
     os.makedirs(stage)
 
     def write_batch(i, rows):
         tmp = str(tmp_path / f"_w{i}")
-        spark.createDataFrame(rows, _staged_schema()).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
+        spark.createDataFrame(rows, events_raw_schema(TimestampType())).coalesce(
+            1
+        ).write.mode("overwrite").parquet(tmp)
         dest = os.path.join(stage, f"b{i}.parquet")
         shutil.move(glob.glob(f"{tmp}/part-*.parquet")[0], dest)
         os.utime(dest, (1_700_000_000 + i * 100,) * 2)
@@ -569,7 +576,7 @@ def test_dedup_within_watermark_bounds_state_and_reemits(spark, tmp_path):
 
     def staged_stream():
         return (
-            spark.readStream.schema(_staged_schema())
+            spark.readStream.schema(events_raw_schema(TimestampType()))
             .format("parquet")
             .option("maxFilesPerTrigger", "1")
             .load(stage)
@@ -604,16 +611,18 @@ def test_stream_emb_ingest_matches_batch_assignment(spark):
         _ivf_kmeans_index,
     )
     from hdb_resale_price_data_pipeline_spark.streaming.embeddings import (
-        STREAM_SLICES,
-        embeddings_stream,
         stream_ivf_ingest,
+    )
+    from hdb_resale_price_data_pipeline_spark.streaming.events import (
+        STREAM_SLICES,
+        table_stream,
     )
 
     codebook, assigned = _ivf_kmeans_index(spark, TEST_SF_DIR)
     want = {r.vec_id: r.ivf_cid for r in assigned.select("vec_id", "ivf_cid").collect()}
 
     stream = stream_ivf_ingest(
-        embeddings_stream(spark, TEST_SF_DIR), codebook, OUTLIER_GRID
+        table_stream(spark, TEST_SF_DIR, "embeddings"), codebook, OUTLIER_GRID
     )
     name = f"emb_ingest_{uuid.uuid4().hex[:8]}"
     q = (
@@ -673,9 +682,9 @@ def test_stream_dedup_gate_survives_null_text_corpus_docs(spark):
 
     from hdb_resale_price_data_pipeline_spark.sources import read_table
     from hdb_resale_price_data_pipeline_spark.streaming.documents import (
-        documents_stream,
         stream_dedup_gate,
     )
+    from hdb_resale_price_data_pipeline_spark.streaming.events import table_stream
 
     corpus = (
         read_table(spark, SMOKE_SF_DIR, "documents")
@@ -687,7 +696,7 @@ def test_stream_dedup_gate_survives_null_text_corpus_docs(spark):
             ).select("doc_id", "text", "lang", "source", "n_chars")
         )
     )
-    gated = stream_dedup_gate(documents_stream(spark, SMOKE_SF_DIR), corpus)
+    gated = stream_dedup_gate(table_stream(spark, SMOKE_SF_DIR, "documents"), corpus)
     rows = (
         gated.writeStream.format("memory")
         .queryName("null_corpus_gate")
@@ -741,52 +750,52 @@ def test_stream_inner_attribution_matches_batch_and_outer_pair_half(spark):
 
 
 @pytest.mark.core
-def test_derived_stream_partitions_math_and_conf_restore(spark):
+def test_derived_stream_partitions_math_and_conf_restore(spark, monkeypatch):
     """r9 optimization: the state-store partition count is derived from
-    the source's footer row count (ceil(rows / target), clamped to the
-    configured spark.sql.shuffle.partitions) for the duration of a
-    run_stream_to_df call and restored afterwards. Pins the clamp
-    arithmetic and the restore, plus the two opt-outs (no FileSource in
-    the plan / Python-stateful plans keep the configured count)."""
-    from hdb_resale_price_data_pipeline_spark.streaming.events import (
-        STREAM_STATE_ROWS_PER_PARTITION,
-        _analyzed_plan_string,
-        _stream_source_rows,
-        derived_stream_partitions,
+    the footer row count of the sources a caller passes (ceil(rows /
+    target), clamped to the configured spark.sql.shuffle.partitions)
+    for the duration of a run_stream_to_df call and restored
+    afterwards. Pins the clamp arithmetic and the restore, that a
+    registered events query sizes from the events table, and that the
+    Python-stateful query (which passes no sources) keeps the
+    configured count."""
+    from hdb_resale_price_data_pipeline_spark.queries.extensions import (
+        q_stream_sessions,
+        q_stream_stateful_sessions,
     )
+    from hdb_resale_price_data_pipeline_spark.streaming import events as ev
 
     # clamp arithmetic
-    t = STREAM_STATE_ROWS_PER_PARTITION
-    assert derived_stream_partitions(1, 32) == 1
-    assert derived_stream_partitions(t, 32) == 1
-    assert derived_stream_partitions(t + 1, 32) == 2
-    assert derived_stream_partitions(100 * t, 32) == 32  # ceiling binds
-    assert derived_stream_partitions(100 * t, 8) == 8
+    t = ev.STREAM_STATE_ROWS_PER_PARTITION
+    assert ev.derived_stream_partitions(1, 32) == 1
+    assert ev.derived_stream_partitions(t, 32) == 1
+    assert ev.derived_stream_partitions(t + 1, 32) == 2
+    assert ev.derived_stream_partitions(100 * t, 32) == 32  # ceiling binds
+    assert ev.derived_stream_partitions(100 * t, 8) == 8
 
     # source rows come from the parquet footer, not a scan
-    sdf = stream_hourly_tumbling(events_stream(spark, TEST_SF_DIR))
-    plan = _analyzed_plan_string(sdf)
-    assert plan is not None and "FileSource[" in plan
-    n = _stream_source_rows(plan)
-    from hdb_resale_price_data_pipeline_spark.sources import read_table
-
+    n = ev._dir_parquet_rows(f"{TEST_SF_DIR}/events.parquet")
     assert n == read_table(spark, TEST_SF_DIR, "events").count()
 
-    # conf is restored after the query (whatever value it lowered to)
+    calls = []
+    real = ev.derived_stream_partitions
+
+    def recording(n_rows, configured):
+        calls.append((n_rows, configured))
+        return real(n_rows, configured)
+
+    monkeypatch.setattr(ev, "derived_stream_partitions", recording)
+
+    # sized from the events table; conf restored after the query
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    out = run_stream_to_df(sdf, spark)
-    assert out.count() > 0
+    assert q_stream_sessions(spark, TEST_SF_DIR).count() > 0
+    assert calls == [(n, int(before))]
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
-    # Python-stateful plans are exempt from downscaling
-    from hdb_resale_price_data_pipeline_spark.streaming.stateful import (
-        split_events_stream,
-        stateful_sessions,
-    )
-
-    st = stateful_sessions(split_events_stream(spark, TEST_SF_DIR))
-    st_plan = _analyzed_plan_string(st)
-    assert st_plan is not None and "FlatMapGroupsInPandasWithState" in st_plan
+    # the Python-stateful query is exempt from downscaling
+    calls.clear()
+    assert q_stream_stateful_sessions(spark, TEST_SF_DIR).count() > 0
+    assert calls == []
 
 
 @pytest.mark.core
