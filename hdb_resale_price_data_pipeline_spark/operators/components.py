@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
+from .util import local_frame
+
 
 # Edge-count bound for the driver-side path. Near-dup pair lists are
 # corpus-relative tiny but not absolutely tiny at 100 TB — the bound
@@ -67,8 +69,8 @@ def connected_components(
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
         labels = [(node, find(node)) for node in parent]
-        return edges.sparkSession.createDataFrame(
-            labels, "node bigint, component bigint"
+        return local_frame(
+            edges.sparkSession, labels, "node bigint, component bigint"
         )
     return _connected_components_iterative(edges, src, dst, max_iter)
 

@@ -49,6 +49,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import col
 
+from .util import local_frame
+
 INDEX_FORMAT_VERSION = 1
 
 # How long a superseded version survives after it stops being the
@@ -99,7 +101,8 @@ def save_ann_index(
     prev_n = int(prev_match.group(1)) if prev_match else 0
     vdir = f"v{prev_n + 1}"
     root = f"{path}/{vdir}"
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(int(cid), [float(v) for v in cent]) for cid, cent in coarse],
         "cid int, cent array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{root}/coarse_codebook")
@@ -109,8 +112,8 @@ def save_ann_index(
             for i, cb in enumerate(pq_codebooks)
             for j, cent in enumerate(cb)
         ]
-        spark.createDataFrame(
-            rows, "m int, code int, cent array<double>"
+        local_frame(
+            spark, rows, "m int, code int, cent array<double>"
         ).coalesce(1).write.mode("overwrite").parquet(f"{root}/pq_codebooks")
     encoded.write.mode("overwrite").partitionBy("ivf_cid").parquet(
         f"{root}/inverted_lists"

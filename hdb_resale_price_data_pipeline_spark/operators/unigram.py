@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col
 
 from .bpe import word_frequencies
+from .util import local_frame
 
 LOG_GRID = 10_000  # scoring.py's BIGINT quantization grid for ln terms
 MAX_PIECE = 4  # max piece length considered (seed + Viterbi window)
@@ -286,9 +287,7 @@ def unigram_encode_ids(
 
     spark = docs.sparkSession
     perword = _viterbi_pass(words, qlp).select("word", "pieces")
-    ids = spark.createDataFrame(
-        unigram_vocab_ids(qlp), "piece string, pid int"
-    )
+    ids = local_frame(spark, unigram_vocab_ids(qlp), "piece string, pid int")
     toks = F.expr(H.tokens(text_col)[0])
     docw = docs.select("doc_id", F.posexplode(toks).alias("wi", "word"))
     dp = docw.join(broadcast(perword), "word").select(

@@ -61,6 +61,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
 from ..operators import index_cache
+from ..operators.util import local_frame
 from .base import QuerySpec, t
 
 # --- the declared catalog -------------------------------------------------------
@@ -497,7 +498,8 @@ def _build_fd_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _ppm(c.n_violating / c.n_groups),
             )
         rows.append((f"{table}.{det}->{dep}", stats.ndv[det], stats.ndv[dep], *verdict))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         schema=(
             "fd string, ndv_det bigint, ndv_dep bigint, "
@@ -624,7 +626,7 @@ def _build_ind_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             survivors.append((klass, ind, ct, cc, pt, pc, cndv, pndv, cov))
 
-    result = spark.createDataFrame(pruned_rows, schema=schema)
+    result = local_frame(spark, pruned_rows, schema=schema)
     if not survivors:
         return result
 
@@ -695,7 +697,8 @@ def _build_ind_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
     for v in viols[1:]:
         viol = viol.unionByName(v)
     viol = viol.groupBy("ind").agg(F.count(F.lit(1)).alias("nv"))
-    meta = spark.createDataFrame(
+    meta = local_frame(
+        spark,
         [
             (ind, cndv, pndv, cov)
             for _, ind, _, _, _, _, cndv, pndv, cov in survivors
@@ -818,7 +821,8 @@ def _build_ucc_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
             nd = cells[(table, a, b)].n_cells
             verdict = ("holds" if nd == stats.rowcnt else "violated", stats.rowcnt - nd)
         rows.append((f"{table}.({a},{b})", stats.ndv[a], stats.ndv[b], *verdict))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         schema=(
             "ucc string, ndv_a bigint, ndv_b bigint, status string, "
@@ -1189,7 +1193,7 @@ def _build_od_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             meta_rows.append((od, ndv_a, ndv_b))
 
-    result = spark.createDataFrame(pruned_rows, schema=schema)
+    result = local_frame(spark, pruned_rows, schema=schema)
     if not meta_rows:
         return result
 
@@ -1312,8 +1316,8 @@ def _build_od_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         agg_all = per_od if agg_all is None else agg_all.unionByName(per_od)
 
-    meta = spark.createDataFrame(
-        meta_rows, schema="od string, ndv_a bigint, ndv_b bigint"
+    meta = local_frame(
+        spark, meta_rows, schema="od string, ndv_a bigint, ndv_b bigint"
     )
     # Left join so a candidate whose rows are ALL null-filtered still
     # emits its row (vacuously holds_both, zero groups) — mirroring the
@@ -1506,7 +1510,8 @@ def _build_corr_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
                 status = "independent"
             verdict = (status, c.n_cells, v_ppm)
         rows.append((f"{table}.({a},{b})", ndv_a, ndv_b, *verdict))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         schema=(
             "corr string, ndv_a bigint, ndv_b bigint, status string, "

@@ -8,7 +8,7 @@ from pyspark.sql.functions import broadcast, col
 
 from ..operators import similarity as S
 from ..operators.index_cache import cached
-from ..operators.util import widen
+from ..operators.util import local_frame, widen
 from .base import QuerySpec, t
 
 QUERY_VEC_ID = 0
@@ -1718,8 +1718,8 @@ def q_emb_mmr_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
         _, idx, score = best
         chosen.append(idx)
         selected.append((cands[idx][0], cands[idx][1], rank, score))
-    return spark.createDataFrame(
-        selected, "vec_id bigint, label int, mmr_rank int, mmr_score bigint"
+    return local_frame(
+        spark, selected, "vec_id bigint, label int, mmr_rank int, mmr_score bigint"
     )
 
 
@@ -3030,7 +3030,7 @@ def q_emb_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for step, vid, d in sel
     ]
-    return spark.createDataFrame(rows, "step int, vec_id bigint, sel_d_q double")
+    return local_frame(spark, rows, "step int, vec_id bigint, sel_d_q double")
 
 
 def _kcenter_oracle() -> str:

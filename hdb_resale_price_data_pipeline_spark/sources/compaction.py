@@ -72,6 +72,13 @@ def _dir_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     return n, total
 
 
+def _advisory_bytes(target_file_bytes: int, inflation: float) -> int:
+    """AQE advisory partition size for an on-disk file target: the
+    target scaled by ``inflation`` and never more, however small the
+    target, or a table that should split lands in too few files."""
+    return max(1, int(target_file_bytes * inflation))
+
+
 def compact_parquet(
     spark: SparkSession,
     in_path: str,
@@ -85,7 +92,7 @@ def compact_parquet(
     in_files, in_bytes = _dir_stats(spark, in_path)
     df = spark.read.parquet(in_path)
 
-    advisory = max(1 << 16, int(target_file_bytes * inflation))
+    advisory = _advisory_bytes(target_file_bytes, inflation)
     prev = {
         "spark.sql.adaptive.enabled": spark.conf.get(
             "spark.sql.adaptive.enabled", "true"
@@ -193,7 +200,7 @@ def compact_partitions_inplace(
     staging = None
     if oversized:
         staging = f"{root.rstrip('/')}__compact_{uuid.uuid4().hex[:8]}"
-        advisory = max(1 << 16, int(target_file_bytes * inflation))
+        advisory = _advisory_bytes(target_file_bytes, inflation)
         prev = {
             "spark.sql.sources.partitionOverwriteMode": spark.conf.get(
                 "spark.sql.sources.partitionOverwriteMode", "static"

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
 from ..operators.index_cache import stage_dir, table_paths
+from ..operators.util import local_frame
 
 CDC_BUCKETS = 8
 CDC_SLICES = 3  # one staged landing file per change wave → 3 micro-batches
@@ -143,7 +144,7 @@ def read_cdc_state(
     if not os.path.isdir(state_dir) or not any(
         e.startswith("bucket=") for e in os.listdir(state_dir)
     ):
-        out = spark.createDataFrame([], _STATE_SCHEMA)
+        out = local_frame(spark, [], _STATE_SCHEMA)
     else:
         out = spark.read.schema(_STATE_SCHEMA).parquet(state_dir)
     return (

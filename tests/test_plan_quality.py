@@ -139,6 +139,76 @@ def test_scraped_pipelines_are_shuffle_free(spark):
     assert _shuffles(_plan(merged)) == 1
 
 
+def _nodes(node):
+    """Every node of a JVM physical plan, pre-order."""
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _nodes(kids.apply(i))
+
+
+def _broadcast_leaves(df) -> list[str]:
+    """Node names of the leaves under each BroadcastExchange."""
+    root = df._jdf.queryExecution().executedPlan()
+    if root.nodeName() == "AdaptiveSparkPlan":
+        root = root.executedPlan()
+    return [
+        leaf.nodeName()
+        for node in _nodes(root)
+        if node.nodeName() == "BroadcastExchange"
+        for leaf in _nodes(node)
+        if leaf.children().isEmpty()
+    ]
+
+
+@pytest.mark.core
+def test_seed_dimensions_broadcast_as_local_relations(spark, tmp_path):
+    """Every seed dimension a reference pipeline broadcasts is a
+    LocalTableScan, and no plan scans driver data through Python workers
+    (``Scan ExistingRDD``, the plan of a Python-list createDataFrame,
+    which runs a Python-worker job per broadcast). The raw inputs are
+    read from files the way ``plans.runner.run_all`` reads them."""
+    import datetime
+
+    import fixtures
+    from hdb_resale_price_data_pipeline_spark import seeds
+    from hdb_resale_price_data_pipeline_spark.plans import (
+        historical_pipeline,
+        merge_dedup_pipeline,
+        propnex_pipeline,
+        srx_pipeline,
+    )
+    from hdb_resale_price_data_pipeline_spark.schemas import (
+        RAW_PROPNEX_SCHEMA,
+        RAW_SRX_SCHEMA,
+    )
+    from hdb_resale_price_data_pipeline_spark.sources.readers import (
+        read_historical_csv_dir,
+        read_listing_json,
+    )
+
+    propnex_json, srx_json = fixtures.write_listing_jsons(str(tmp_path))
+    h = historical_pipeline(
+        read_historical_csv_dir(spark, fixtures.write_historical_csvs(str(tmp_path))),
+        seeds.town_district(spark),
+        seeds.district_code(spark),
+        seeds.district_region(spark),
+    )
+    p = propnex_pipeline(
+        read_listing_json(spark, propnex_json, RAW_PROPNEX_SCHEMA),
+        seeds.district_code(spark), seeds.district_region(spark), 2024,
+    )
+    s = srx_pipeline(
+        read_listing_json(spark, srx_json, RAW_SRX_SCHEMA),
+        seeds.district_code(spark), seeds.district_region(spark),
+        seeds.agency(spark), 2024,
+    )
+    merged = merge_dedup_pipeline(p, s, datetime.date(2024, 11, 1))
+    for name, df, n_dims in (("historical", h, 3), ("propnex", p, 2), ("srx", s, 3), ("merge", merged, 5)):
+        assert _broadcast_leaves(df) == ["LocalTableScan"] * n_dims, name
+        assert "Scan ExistingRDD" not in _plan(df), name
+
+
 def test_topk_avoids_global_sort(spark):
     """LIMIT after ORDER BY must plan as TakeOrderedAndProject, not a
     full global sort."""
