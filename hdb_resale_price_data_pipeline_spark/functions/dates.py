@@ -10,8 +10,6 @@ through every derivation; callers that genuinely want "now" pass
 
 from __future__ import annotations
 
-import datetime
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -30,7 +28,3 @@ def remaining_lease(top: Column, as_of_year: Column | int) -> Column:
     year = F.lit(as_of_year) if isinstance(as_of_year, int) else as_of_year
     return LEASE_YEARS - (year - top).cast("int")
 
-
-def resolve_as_of(as_of: datetime.date | None) -> datetime.date:
-    """Default the injected as-of date to today at the *edge* only."""
-    return as_of if as_of is not None else datetime.date.today()

@@ -190,23 +190,6 @@ def token_hashes(token_pair: tuple[str, str], a: int = 131, b: int = 7) -> tuple
     )
 
 
-def simhash_from_hashes(hashes_ref: str, bits: int = 16) -> tuple[str, str]:
-    """SimHash from a pre-materialized token-hash array column."""
-    spark = (
-        f"aggregate(sequence(0, {bits - 1}), CAST(0 AS BIGINT), (acc, j) -> acc + "
-        f"IF(aggregate({hashes_ref}, CAST(0 AS BIGINT), "
-        f"(s, h) -> s + CASE WHEN (h >> j) & 1 = 1 THEN 1 ELSE -1 END) > 0, "
-        f"shiftleft(CAST(1 AS BIGINT), j), CAST(0 AS BIGINT)))"
-    )
-    duck = (
-        f"list_reduce(list_prepend(CAST(0 AS BIGINT), range(0, {bits})), (acc, j) -> acc + "
-        f"CASE WHEN list_reduce(list_prepend(CAST(0 AS BIGINT), {hashes_ref}), "
-        f"(s, h) -> s + CASE WHEN (h >> j) & 1 = 1 THEN 1 ELSE -1 END) > 0 "
-        f"THEN (CAST(1 AS BIGINT) << j) ELSE CAST(0 AS BIGINT) END)"
-    )
-    return spark, duck
-
-
 def minhash(shingle_pair: tuple[str, str], a: int, b: int) -> tuple[str, str]:
     """Min over hashed shingles for one seed — one MinHash signature slot."""
     hs, hd = shingle_hashes(shingle_pair, a, b)

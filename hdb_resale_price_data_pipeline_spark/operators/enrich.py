@@ -3,10 +3,12 @@
 Every reference join is a broadcast left equi-join of a fact against a
 tiny dimension via one shared helper (historical_data_transformation.py:
 56-57). Ours keeps the explicit ``broadcast`` hint — at 100 TB the fact
-side must never shuffle for a <10 KB dim — and adds the optional
-key-normalization and pre-join dim reduction the reference does inline
-(lower-cased join keys, ``.select(...).distinct()`` at
-historical_data_transformation.py:59-63,103).
+side must never shuffle for a <10 KB dim. Callers shape the dim before
+the join: a lower-cased key is a projection of the seed frame, and the
+reference's one pre-join grain reduction (J2's
+``.select('district', 'zone').distinct()``,
+historical_data_transformation.py:103) is done on the driver instead
+(``seeds.district_zone``), so no join plans an aggregate or a shuffle.
 """
 
 from __future__ import annotations
@@ -17,26 +19,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def enrich(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str | Sequence[str] | Column,
-    how: str = "left",
-    hint_broadcast: bool = True,
-    dim_project: Sequence[str] | None = None,
-    dim_distinct: bool = False,
-) -> DataFrame:
-    """Left-join ``fact`` against a small ``dim``.
-
-    ``dim_project`` + ``dim_distinct`` reproduce the reference's pre-join
-    grain reduction (J2): project the dim to the join grain and
-    de-duplicate *before* joining, so a finer-grained dim cannot fan out
-    fact rows.
-    """
-    if dim_project is not None:
-        dim = dim.select(*dim_project)
-    if dim_distinct:
-        dim = dim.distinct()
-    if hint_broadcast:
-        dim = F.broadcast(dim)
-    return fact.join(dim, on=on, how=how)
+def enrich(fact: DataFrame, dim: DataFrame, on: str | Sequence[str] | Column) -> DataFrame:
+    """Broadcast left join of ``fact`` against a small ``dim``."""
+    return fact.join(F.broadcast(dim), on=on, how="left")

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -148,20 +148,6 @@ def affinity_to_assigned(
         return pd.Series(sq_np[cix] - 2.0 * acc)
 
     return df.withColumn("aff", _aff(F.col(emb_col), F.col(cid_col)))
-
-
-def pairwise_affinity_expr(cent: str, e: str, dim: int) -> Column:
-    """|c|² − 2⟨c, e⟩ between two array columns (cent, query), codegen
-    chain with the same op order as ``duck_ivf_dist``."""
-    sq_terms = [
-        f"cast(element_at({cent}, {i}) AS double) * cast(element_at({cent}, {i}) AS double)"
-        for i in range(1, dim + 1)
-    ]
-    dot_terms = [
-        f"cast(element_at({cent}, {i}) AS double) * cast(element_at({e}, {i}) AS double)"
-        for i in range(1, dim + 1)
-    ]
-    return F.expr(f"(({' + '.join(sq_terms)}) - 2.0 * ({' + '.join(dot_terms)}))")
 
 
 def duck_ivf_dist(cent: str, e: str) -> str:

@@ -2,10 +2,10 @@
 
 Images/audio/video are opaque ``binary`` columns with typed metadata.
 The Spark-side plumbing here — schema, Arrow batch shape, ``mapInPandas``
-fan-out, partition sizing — is real and tested; the codec calls are
-stubbed behind ``try-import`` (PIL/librosa are not in this container)
-with a clearly-marked deterministic fallback, so swapping in the real
-decoder changes one function, not the plan.
+fan-out, partition sizing — is real and tested; the features are
+deterministic payload fingerprints rather than codec output (no image
+or audio decoder is a dependency), so a real decoder would replace the
+batch function in ``extract_features``, not the plan.
 
 At 100 TB: binary payloads dominate partition size, so operators keep
 ``spark.sql.files.maxPartitionBytes`` in mind, never collect, and fan
@@ -55,21 +55,6 @@ def _poly_features(payload: bytes) -> list[float]:
             acc = (acc * a + byte) % MERSENNE_31
         feats.append(round(acc / MERSENNE_31, 9))
     return feats
-
-
-def _decode_media(payload: bytes, media_type: str) -> dict:
-    """Decode stub. Real codecs are not installed in this container —
-    the plumbing (batch iteration, schema, fan-out) is the tested part.
-    """
-    if media_type.startswith("image/"):
-        try:
-            import PIL.Image  # noqa: F401  (not installed here)
-        except ImportError as exc:
-            raise NotImplementedError(
-                "image decode requires PIL; install pillow on the cluster image"
-            ) from exc
-    # deterministic fake for text payloads: byte stats
-    return {"n_bytes": len(payload), "first_byte": payload[0] if payload else None}
 
 
 def extract_features(assets: DataFrame) -> DataFrame:

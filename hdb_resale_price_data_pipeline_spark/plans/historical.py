@@ -2,13 +2,17 @@
 
 Reference: jobs/spark/historical_data_transformation.py:82-126. Raw
 data.gov.sg resale CSVs (10 conformed string columns) → cleaned,
-dim-enriched, typed 17-column table.
+dim-enriched table projected onto ``schemas.HISTORICAL_SCHEMA``
+(17 columns; names, order and types come from there alone).
 
 Deviations (documented, SURVEY.md §4):
 - errors re-raise instead of ``sys.exit(1)`` swallowing them;
+- J2 joins the 28-row ``seeds.district_zone`` instead of de-duplicating
+  the 81-row ``district_code`` per run (same rows, computed on the
+  driver), so no aggregate or shuffle is planned for it;
 - the whole transform is one ``select`` composition — Catalyst collapses
-  it to a single projection over the scan, so the job stays a
-  shuffle-free map pipeline with three broadcast joins (§3.3).
+  it to a single projection over the scan, so the job is a shuffle-free
+  map pipeline with three broadcast joins (§3.3).
 """
 
 from __future__ import annotations
@@ -19,7 +23,7 @@ from pyspark.sql.functions import col
 
 from ..functions.dates import LEASE_YEARS, month_string_to_date
 from ..operators.enrich import enrich
-from ..schemas import HISTORICAL_COLUMNS
+from ..schemas import HISTORICAL_SCHEMA, project
 
 SQM_TO_SQFT = 3.28084 * 3.28084
 
@@ -31,9 +35,9 @@ def conform_historical(df: DataFrame) -> DataFrame:
         df.withColumn("general_location", F.initcap(col("town")))
         .withColumn("street_name", F.initcap(col("street_name")))
         .withColumn("property_type", F.initcap(col("flat_type")))
-        .withColumnRenamed("flat_model", "model")
-        .withColumnRenamed("resale_price", "price")
-        .withColumnRenamed("lease_commence_date", "top")
+        .withColumn("model", col("flat_model"))
+        .withColumn("price", col("resale_price"))
+        .withColumn("top", col("lease_commence_date"))
         # '4 Room' → '4 Rooms'; 'Multi Generation' → 'Multi-generation'
         .withColumn("property_type", F.regexp_replace(col("property_type"), "Room", "Rooms"))
         .withColumn("property_type", F.regexp_replace(col("property_type"), "Multi G", "Multi-g"))
@@ -53,13 +57,13 @@ def conform_historical(df: DataFrame) -> DataFrame:
 def enrich_districts(
     df: DataFrame,
     town_district: DataFrame,
-    district_code: DataFrame,
+    district_zone: DataFrame,
     district_region: DataFrame,
 ) -> DataFrame:
     """Three broadcast left joins (J1-J3,
     historical_data_transformation.py:59-63,102-104): town→district on a
-    case-normalized key, district→zone on the *de-duplicated* sector
-    table (81 rows → district grain; joining raw would fan out ×~3),
+    case-normalized key, district→zone on the district-grain zone table
+    (joining the 81-row sector table would fan out ×~3),
     district→region."""
     df = df.withColumn("general_location", F.lower("general_location"))
     df = enrich(
@@ -72,7 +76,7 @@ def enrich_districts(
         # initcap lower-cases the letter after '/' — restore 'Kallang/Whampoa'
         .withColumn("general_location", F.regexp_replace("general_location", r"/w", "/W"))
     )
-    df = enrich(df, district_code, on="district", dim_project=["district", "zone"], dim_distinct=True)
+    df = enrich(df, district_zone, on="district")
     df = enrich(df, district_region, on="district")
     return df
 
@@ -80,13 +84,10 @@ def enrich_districts(
 def historical_pipeline(
     raw: DataFrame,
     town_district: DataFrame,
-    district_code: DataFrame,
+    district_zone: DataFrame,
     district_region: DataFrame,
 ) -> DataFrame:
-    """Full pipeline: conform → enrich → type → canonical 17 columns."""
+    """Full pipeline: conform → enrich → ``HISTORICAL_SCHEMA``."""
     df = conform_historical(raw)
-    df = enrich_districts(df, town_district, district_code, district_region)
-    df = df.drop("town", "flat_type")
-    for c in ("district", "floor_area_sqm", "top", "price"):
-        df = df.withColumn(c, col(c).cast("int"))
-    return df.select(HISTORICAL_COLUMNS)
+    df = enrich_districts(df, town_district, district_zone, district_region)
+    return project(df, HISTORICAL_SCHEMA)

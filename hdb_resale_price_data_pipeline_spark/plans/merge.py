@@ -3,7 +3,8 @@
 Reference: jobs/spark/merge_dedup.py:46-72. Union the two conformed
 listing tables, drop rows missing any of the identity trio
 (agent_id/location/price), keep the least-null row per
-(location, price), stamp the transformation date, canonical order.
+(location, price), stamp the transformation date, project onto
+``schemas.LISTING_SCHEMA``.
 
 This is the only job with a shuffle (the dedup window's partitionBy) —
 exactly as in the reference. Deviations: deterministic tiebreaker
@@ -19,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
 from ..operators.dedup import least_nulls_survivor
-from ..schemas import LISTING_COLUMNS
+from ..schemas import LISTING_SCHEMA, project
 
 
 def merge_dedup_pipeline(
@@ -37,4 +38,4 @@ def merge_dedup_pipeline(
         df, partition_cols=["location", "price"], tiebreakers=["url"]
     )
     df = df.withColumn("transformed_date", F.lit(as_of))
-    return df.select(LISTING_COLUMNS)
+    return project(df, LISTING_SCHEMA)

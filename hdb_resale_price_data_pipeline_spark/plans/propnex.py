@@ -1,8 +1,8 @@
 """Propnex-listings pipeline (SURVEY.md §3.2).
 
 Reference: jobs/spark/propnex_transformation.py:104-157. Raw scraped
-listing JSON (25 string fields, FIXTURES.md §1) → conformed 27-column
-listing layout.
+listing JSON (25 string fields, FIXTURES.md §1) → conformed listing
+projected onto ``schemas.SCRAPED_LISTING_SCHEMA`` (27 columns).
 
 Deviation: the driver-clock ``datetime.today().year`` baked into
 remaining_lease (propnex_transformation.py:72) is replaced by an
@@ -27,23 +27,10 @@ from ..functions.cleaning import (
 )
 from ..functions.dates import LEASE_YEARS
 from ..operators.enrich import enrich
+from ..schemas import SCRAPED_LISTING_SCHEMA, project
 
 PROPNEX_AGENCY = "PROPNEX REALTY PTE. LTD."
 PROPNEX_AGENCY_ID = "L3008022J"
-
-_DROP_COLS = [
-    "floor_area_sqft",
-    "listing_type",
-    "property_group",
-    "street_town_district",
-    "tenure",
-    "furnishing",
-    "facilities",
-    "agent_email",
-    "postal_sector",
-    "description",
-    "district_new",
-]
 
 
 def conform_propnex(df: DataFrame, as_of_year: int) -> DataFrame:
@@ -123,24 +110,14 @@ def propnex_pipeline(
     df = conform_propnex(df, as_of_year)
     # postal-sector join overwrites the scraped district (J4-J5,
     # propnex_transformation.py:128-132)
-    df = enrich(
-        df,
-        district_code.select(
-            col("district").alias("district_new"), "postal_sector", "zone"
-        ),
-        on="postal_sector",
-    )
-    df = df.withColumn("district", col("district_new"))
+    df = enrich(df.drop("district"), district_code, on="postal_sector")
     df = enrich(df, district_region, on="district")
     # propnex never scrapes these; conformed layout still carries them
     df = df.withColumn("property_type", F.lit(None).cast("string")).withColumn(
         "model", F.lit(None).cast("string")
     )
-    df = df.withColumnRenamed("num_bedroom", "bedrooms").withColumnRenamed(
-        "num_bathroom", "bathrooms"
+    df = df.withColumn("bedrooms", col("num_bedroom")).withColumn(
+        "bathrooms", col("num_bathroom")
     )
-    df = df.drop(*_DROP_COLS)
     df = normalize_missing_strings(df)
-    for c in ("bathrooms", "bedrooms", "top", "total_floor_area", "floor_area_sqm"):
-        df = df.withColumn(c, col(c).cast("int"))
-    return df
+    return project(df, SCRAPED_LISTING_SCHEMA)

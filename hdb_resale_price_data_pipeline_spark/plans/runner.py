@@ -10,6 +10,7 @@ Spark-native equivalent of the reference's day-partitioned BigQuery load
 from __future__ import annotations
 
 import datetime
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -31,7 +32,6 @@ def run_all(
     srx_json: str,
     warehouse_dir: str,
     as_of: datetime.date | None = None,
-    concurrent: bool = True,
     metrics_out: dict | None = None,
 ) -> dict[str, DataFrame]:
     """One full DAG run, reproducing the reference's task graph
@@ -44,14 +44,13 @@ def run_all(
     ``as_of`` and re-runs are idempotent.
 
     Spark note: the two branches are independent *jobs* submitted from
-    driver threads (``concurrent=True``), matching the DAG's task
-    parallelism: Spark's scheduler interleaves their stages, so neither
-    branch's idle phases (file listing, commit protocol) serialize
-    against the other's compute (measured on 4 cores with the daily-ETL
-    benchmark's inputs, 2,000 historical rows and 1,000 listings a day:
-    median 3.0 s sequential -> 2.1 s concurrent). ``concurrent=False``
-    keeps the linear order for debugging; either way a branch failure
-    surfaces independently.
+    two driver threads, matching the DAG's task parallelism: Spark's
+    scheduler interleaves their stages, so neither branch's idle phases
+    (file listing, commit protocol) serialize against the other's
+    compute (measured on 4 cores with the daily-ETL benchmark's inputs,
+    2,000 historical rows and 1,000 listings a day: median 3.0 s one
+    branch after the other -> 2.1 s both at once). A branch failure
+    surfaces from its own future.
 
     Pass ``metrics_out={}`` to collect per-branch load counters
     (plans/observe.py: rows_loaded, loaded date range, key-null
@@ -66,7 +65,7 @@ def run_all(
         historical = historical_pipeline(
             read_historical_csv_dir(spark, csv_dir),
             seeds.town_district(spark),
-            district_code,
+            seeds.district_zone(spark),
             district_region,
         )
         to_load, obs = (
@@ -115,11 +114,7 @@ def run_all(
             metrics_out["scraped"] = obs.get
         return merged
 
-    if concurrent:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_hist = pool.submit(branch_historical)
-            f_scraped = pool.submit(branch_scraped)
-            return {"historical": f_hist.result(), "scraped": f_scraped.result()}
-    return {"historical": branch_historical(), "scraped": branch_scraped()}
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_hist = pool.submit(branch_historical)
+        f_scraped = pool.submit(branch_scraped)
+        return {"historical": f_hist.result(), "scraped": f_scraped.result()}

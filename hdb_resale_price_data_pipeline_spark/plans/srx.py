@@ -1,16 +1,15 @@
 """SRX-listings pipeline (SURVEY.md §3.2).
 
 Reference: jobs/spark/srx_transformation.py:116-167. Raw scraped listing
-JSON (31 string fields, FIXTURES.md §2) → conformed 27-column listing
-layout.
+JSON (31 string fields, FIXTURES.md §2) → conformed listing projected
+onto ``schemas.SCRAPED_LISTING_SCHEMA`` (27 columns).
 
 Deviations:
 - injected ``as_of_year`` replaces the driver clock
   (srx_transformation.py:86);
-- the bedrooms UDF (srx_transformation.py:68-83) runs as a native
-  Column expression by default (identical semantics incl. the
-  stringify-then-cast NULL path); ``use_pandas_udf=True`` switches to
-  the Arrow-vectorized variant to exercise the UDF surface.
+- the bedrooms UDF (srx_transformation.py:68-83) runs as the native
+  Column expression ``clean_bedrooms_expr`` (identical semantics incl.
+  the stringify-then-cast NULL path), inside whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -19,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
-from ..functions.bedrooms import clean_bedrooms_expr, clean_bedrooms_pandas_udf
+from ..functions.bedrooms import clean_bedrooms_expr
 from ..functions.cleaning import (
     facilities_count,
     furnishing_category,
@@ -35,31 +34,10 @@ from ..functions.cleaning import (
 from ..functions.dates import LEASE_YEARS
 from ..operators.enrich import enrich
 from ..plans.historical import SQM_TO_SQFT
-
-_DROP_COLS = [
-    "asking",
-    "date_listed",
-    "developer",
-    "tenancy_status",
-    "tenure",
-    "psf",
-    "floor_level",
-    "floor_size_psf",
-    "address",
-    "size",
-    "num_bedroom",
-    "num_bathroom",
-    "facilities",
-    "schools",
-    "shopping_mall/markets",
-    "train_stations",
-    "postal_sector",
-    "description",
-]
+from ..schemas import SCRAPED_LISTING_SCHEMA, project
 
 
-def conform_srx(df: DataFrame, as_of_year: int, use_pandas_udf: bool = False) -> DataFrame:
-    bedrooms_clean = clean_bedrooms_pandas_udf if use_pandas_udf else clean_bedrooms_expr
+def conform_srx(df: DataFrame, as_of_year: int) -> DataFrame:
     df = (
         # 'CEA: R123456A / L3008022J' carries both licence numbers
         df.withColumn("agency_id", F.regexp_extract(col("agent_id"), r"(L\d{7}[A-Z])", 1))
@@ -79,11 +57,10 @@ def conform_srx(df: DataFrame, as_of_year: int, use_pandas_udf: bool = False) ->
         .withColumn("property_type", F.trim(F.split(col("property_type"), "HDB").getItem(1)))
         .withColumn("floor", F.lower(col("floor_level")))
         .withColumn("floor", F.when(col("floor") == "mid", "middle").otherwise(col("floor")))
-        .withColumnRenamed("built_year", "top")
-        .withColumnRenamed("property_name", "street_name")
-        .withColumn("street_name", F.initcap(col("street_name")))
-        .withColumnRenamed("hdb_town", "general_location")
-        .withColumn("bedrooms", bedrooms_clean(col("bedrooms")).cast("int"))
+        .withColumn("top", col("built_year"))
+        .withColumn("street_name", F.initcap(col("property_name")))
+        .withColumn("general_location", col("hdb_town"))
+        .withColumn("bedrooms", clean_bedrooms_expr(col("bedrooms")).cast("int"))
         .withColumn(
             "remaining_lease", LEASE_YEARS - (F.lit(as_of_year) - col("top")).cast("int")
         )
@@ -108,16 +85,12 @@ def srx_pipeline(
     district_region: DataFrame,
     agency: DataFrame,
     as_of_year: int,
-    use_pandas_udf: bool = False,
 ) -> DataFrame:
     df = normalize_missing_strings(raw)
-    df = conform_srx(df, as_of_year, use_pandas_udf)
+    df = conform_srx(df, as_of_year)
     # J6-J8 (srx_transformation.py:146-148)
     df = enrich(df, district_code, on="postal_sector")
     df = enrich(df, district_region, on="district")
     df = enrich(df, agency, on="agency_id")
-    df = df.drop(*_DROP_COLS)
     df = normalize_missing_strings(df)
-    for c in ("bathrooms", "top"):
-        df = df.withColumn(c, col(c).cast("int"))
-    return df
+    return project(df, SCRAPED_LISTING_SCHEMA)

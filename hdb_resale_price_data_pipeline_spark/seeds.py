@@ -1,9 +1,15 @@
-"""In-repo seed data for the four dimension tables.
+"""In-repo seed data for the five dimension tables.
 
-The reference ships these as Spark-written parquet under
+The reference ships four of these as Spark-written parquet under
 ``/root/reference/data/`` (SURVEY.md §1.4); values transcribed in
 FIXTURES.md §4. They are tiny (28/81/28/7 rows here) — always broadcast
-in joins (historical_data_transformation.py:56-57).
+in joins (historical_data_transformation.py:56-57). The fifth,
+``district_zone`` (28 rows), is ``district_code`` at district grain:
+the reference derives it per run with
+``.select('district', 'zone').distinct()`` before its J2 join
+(historical_data_transformation.py:103), a Spark aggregate with a
+shuffle over a table whose answer the driver already holds, so here it
+is built from ``_DISTRICT_SECTORS`` directly.
 
 Each frame is an Arrow local relation (``operators.util.local_frame``),
 so a broadcast of it reads rows the driver already holds. Built from
@@ -27,6 +33,7 @@ from .schemas import (
     AGENCY_SCHEMA,
     DISTRICT_CODE_SCHEMA,
     DISTRICT_REGION_SCHEMA,
+    DISTRICT_ZONE_SCHEMA,
     TOWN_DISTRICT_SCHEMA,
 )
 
@@ -133,6 +140,10 @@ DISTRICT_CODE_ROWS: list[tuple[int, str, str]] = [
     for sector in sectors
 ]
 
+DISTRICT_ZONE_ROWS: list[tuple[int, str]] = [
+    (district, zone) for district, _, zone in _DISTRICT_SECTORS
+]
+
 # CEA licence → agency (FIXTURES.md §4.4 gives representative rows; the
 # full reference table has 57 — these cover the ids the fixtures emit).
 AGENCY_ROWS: list[tuple[str, str]] = [
@@ -158,13 +169,10 @@ def district_code(spark: SparkSession) -> DataFrame:
     return local_frame(spark, DISTRICT_CODE_ROWS, DISTRICT_CODE_SCHEMA)
 
 
+def district_zone(spark: SparkSession) -> DataFrame:
+    return local_frame(spark, DISTRICT_ZONE_ROWS, DISTRICT_ZONE_SCHEMA)
+
+
 def agency(spark: SparkSession) -> DataFrame:
     return local_frame(spark, AGENCY_ROWS, AGENCY_SCHEMA)
 
-
-def write_seed_parquet(spark: SparkSession, out_dir: str) -> None:
-    """Materialize all four dims as parquet (mirrors reference data/)."""
-    town_district(spark).write.mode("overwrite").parquet(f"{out_dir}/town_district_table")
-    district_region(spark).write.mode("overwrite").parquet(f"{out_dir}/district_region_table")
-    district_code(spark).write.mode("overwrite").parquet(f"{out_dir}/district_code_table")
-    agency(spark).write.mode("overwrite").parquet(f"{out_dir}/agency_id")

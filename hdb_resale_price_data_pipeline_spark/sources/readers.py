@@ -25,7 +25,7 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
-from ..schemas import RAW_HISTORICAL_COLUMNS, RAW_HISTORICAL_SCHEMA
+from ..schemas import RAW_HISTORICAL_COLUMNS
 
 # Tables the driver generates under /root/testdata/sf*/ (TESTDATA.md).
 TESTDATA_TABLES = [
@@ -320,12 +320,6 @@ def read_historical_csv_dir(spark: SparkSession, path: str) -> DataFrame:
     schema = StructType([StructField(c, StringType(), True) for c in cols])
     df = spark.read.csv(path, header=True, schema=schema)
     return df.select(*RAW_HISTORICAL_COLUMNS)
-
-
-def read_historical_csv_dir_strict(spark: SparkSession, path: str) -> DataFrame:
-    """Schema-pinned variant: all-string declared schema, no inference."""
-    df = spark.read.csv(path, header=True, schema=RAW_HISTORICAL_SCHEMA)
-    return df
 
 
 def read_historical_csv_files(spark: SparkSession, paths: list[str]) -> DataFrame:

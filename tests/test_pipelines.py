@@ -17,9 +17,12 @@ from hdb_resale_price_data_pipeline_spark.plans import (
 )
 from hdb_resale_price_data_pipeline_spark.schemas import (
     HISTORICAL_COLUMNS,
+    HISTORICAL_SCHEMA,
     LISTING_COLUMNS,
+    LISTING_SCHEMA,
     RAW_PROPNEX_SCHEMA,
     RAW_SRX_SCHEMA,
+    SCRAPED_LISTING_SCHEMA,
 )
 from hdb_resale_price_data_pipeline_spark.sources.readers import read_historical_csv_dir
 
@@ -148,7 +151,7 @@ def test_historical_pipeline(spark, tmp_path):
     out = historical_pipeline(
         raw,
         seeds.town_district(spark),
-        seeds.district_code(spark),
+        seeds.district_zone(spark),
         seeds.district_region(spark),
     )
     assert out.columns == HISTORICAL_COLUMNS
@@ -176,6 +179,7 @@ def test_historical_pipeline(spark, tmp_path):
     assert v2.year == 2020 and v2.price == 650000  # second vintage parsed
 
 
+@pytest.mark.core
 def test_run_all_dag_end_to_end(spark, tmp_path):
     """run_all reproduces the reference DAG (dags/pipeline.py:282-288):
     propnex ∥ srx → merge_dedup → scraped table; historical independent.
@@ -209,6 +213,30 @@ def test_run_all_dag_end_to_end(spark, tmp_path):
     run_all(spark, csv_dir, propnex_json, srx_json, wh, as_of=AS_OF)
     assert spark.read.parquet(f"{wh}/historical_data").count() == 5
     assert spark.read.parquet(f"{wh}/scraped_data").count() == 4
+
+
+def _name_types(schema):
+    return [(f.name, f.dataType) for f in schema.fields]
+
+
+@pytest.mark.core
+def test_outputs_match_declared_schemas(spark, tmp_path, propnex_out, srx_out):
+    """Each pipeline emits exactly its declared schema's (name, type)
+    sequence — order included, nullability not compared."""
+    historical = historical_pipeline(
+        read_historical_csv_dir(spark, fixtures.write_historical_csvs(str(tmp_path))),
+        seeds.town_district(spark),
+        seeds.district_zone(spark),
+        seeds.district_region(spark),
+    )
+    merged = merge_dedup_pipeline(propnex_out, srx_out, AS_OF)
+    for name, df, schema in (
+        ("historical", historical, HISTORICAL_SCHEMA),
+        ("propnex", propnex_out, SCRAPED_LISTING_SCHEMA),
+        ("srx", srx_out, SCRAPED_LISTING_SCHEMA),
+        ("merged", merged, LISTING_SCHEMA),
+    ):
+        assert _name_types(df.schema) == _name_types(schema), name
 
 
 def test_run_all_load_metrics(spark, tmp_path):

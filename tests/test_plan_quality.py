@@ -102,14 +102,18 @@ def test_sessionize_reuses_user_partitioning(spark):
     assert _shuffles(plan) == 1
 
 
-def test_scraped_pipelines_are_shuffle_free(spark):
+@pytest.mark.core
+def test_scraped_pipelines_are_shuffle_free(spark, tmp_path):
     """The transformation jobs are map-only pipelines with broadcast
-    joins (SURVEY.md §3.3) — zero fact-side shuffles."""
+    joins (SURVEY.md §3.3) — zero fact-side shuffles. Historical J2
+    joins the driver-built district grain, so it plans no dedupe
+    shuffle either."""
     import datetime
 
     import fixtures
     from hdb_resale_price_data_pipeline_spark import seeds
     from hdb_resale_price_data_pipeline_spark.plans import (
+        historical_pipeline,
         merge_dedup_pipeline,
         propnex_pipeline,
         srx_pipeline,
@@ -118,6 +122,7 @@ def test_scraped_pipelines_are_shuffle_free(spark):
         RAW_PROPNEX_SCHEMA,
         RAW_SRX_SCHEMA,
     )
+    from hdb_resale_price_data_pipeline_spark.sources.readers import read_historical_csv_dir
 
     raw_p = spark.createDataFrame(
         [tuple(r[f.name] for f in RAW_PROPNEX_SCHEMA.fields) for r in fixtures.PROPNEX_ROWS],
@@ -127,11 +132,18 @@ def test_scraped_pipelines_are_shuffle_free(spark):
         [tuple(r[f.name] for f in RAW_SRX_SCHEMA.fields) for r in fixtures.SRX_ROWS],
         RAW_SRX_SCHEMA,
     )
+    h = historical_pipeline(
+        read_historical_csv_dir(spark, fixtures.write_historical_csvs(str(tmp_path))),
+        seeds.town_district(spark),
+        seeds.district_zone(spark),
+        seeds.district_region(spark),
+    )
     p = propnex_pipeline(raw_p, seeds.district_code(spark), seeds.district_region(spark), 2024)
     s = srx_pipeline(
         raw_s, seeds.district_code(spark), seeds.district_region(spark),
         seeds.agency(spark), 2024,
     )
+    assert _shuffles(_plan(h)) == 0
     assert _shuffles(_plan(p)) == 0
     assert _shuffles(_plan(s)) == 0
     # merge+dedup: exactly the one window shuffle the reference has
@@ -191,7 +203,7 @@ def test_seed_dimensions_broadcast_as_local_relations(spark, tmp_path):
     h = historical_pipeline(
         read_historical_csv_dir(spark, fixtures.write_historical_csvs(str(tmp_path))),
         seeds.town_district(spark),
-        seeds.district_code(spark),
+        seeds.district_zone(spark),
         seeds.district_region(spark),
     )
     p = propnex_pipeline(
