@@ -2,8 +2,10 @@
 N1-N2).
 
 Each function takes and returns ``Column`` so callers compose them inside
-a single ``select`` — Catalyst's CollapseProject folds the whole cleanup
-chain into one projection, keeping the pipeline a shuffle-free map stage.
+one column mapping: each daily plan's conform step is a single
+``DataFrame.withColumns``, one Project that Catalyst's CollapseProject
+folds with the plan's final projection, keeping the pipeline a
+shuffle-free map stage.
 
 Semantics mirror the reference exactly; citations point at the defining
 lines in /root/reference.
@@ -28,12 +30,10 @@ EMOJI_PATTERN = (
 MISSING_STRING_TOKENS = ["None", ""]
 
 
-def normalize_missing_strings(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Map literal 'None'/'' strings to real NULLs (F6;
-    propnex_transformation.py:113,138)."""
-    if cols is None:
-        return df.na.replace(MISSING_STRING_TOKENS, None)
-    return df.na.replace(MISSING_STRING_TOKENS, None, subset=cols)
+def normalize_missing_strings(df: DataFrame) -> DataFrame:
+    """Map literal 'None'/'' strings in every string column to real NULLs
+    (F6; propnex_transformation.py:113,138)."""
+    return df.na.replace(MISSING_STRING_TOKENS, None)
 
 
 def strip_emoji_and_newlines(c: Column) -> Column:

@@ -24,7 +24,9 @@ def month_string_to_date(month: Column) -> Column:
 
 def remaining_lease(top: Column, as_of_year: Column | int) -> Column:
     """99 − (year − top) (M2; historical_data_transformation.py:53-54,
-    propnex_transformation.py:72)."""
+    propnex_transformation.py:72): the one lease rule of the daily plans,
+    with the sale year for historical rows and the injected
+    ``as_of_year`` for propnex and srx listings."""
     year = F.lit(as_of_year) if isinstance(as_of_year, int) else as_of_year
     return LEASE_YEARS - (year - top).cast("int")
 

@@ -10,9 +10,11 @@ Deviations (documented, SURVEY.md §4):
 - J2 joins the 28-row ``seeds.district_zone`` instead of de-duplicating
   the 81-row ``district_code`` per run (same rows, computed on the
   driver), so no aggregate or shuffle is planned for it;
-- the whole transform is one ``select`` composition — Catalyst collapses
-  it to a single projection over the scan, so the job is a shuffle-free
-  map pipeline with three broadcast joins (§3.3).
+- the conform step is one column mapping (a single Project over the
+  scan); it emits the lower-cased J1 key, and one step after J1 sets
+  the display value. Catalyst collapses all three with the final
+  projection, so the job is a shuffle-free map pipeline with three
+  broadcast joins (§3.3).
 """
 
 from __future__ import annotations
@@ -21,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
-from ..functions.dates import LEASE_YEARS, month_string_to_date
+from ..functions.dates import month_string_to_date, remaining_lease
 from ..operators.enrich import enrich
 from ..schemas import HISTORICAL_SCHEMA, project
 
@@ -30,28 +32,31 @@ SQM_TO_SQFT = 3.28084 * 3.28084
 
 def conform_historical(df: DataFrame) -> DataFrame:
     """Casing, renames, unit conversion, date derivations
-    (historical_data_transformation.py:29-54)."""
-    df = (
-        df.withColumn("general_location", F.initcap(col("town")))
-        .withColumn("street_name", F.initcap(col("street_name")))
-        .withColumn("property_type", F.initcap(col("flat_type")))
-        .withColumn("model", col("flat_model"))
-        .withColumn("price", col("resale_price"))
-        .withColumn("top", col("lease_commence_date"))
-        # '4 Room' → '4 Rooms'; 'Multi Generation' → 'Multi-generation'
-        .withColumn("property_type", F.regexp_replace(col("property_type"), "Room", "Rooms"))
-        .withColumn("property_type", F.regexp_replace(col("property_type"), "Multi G", "Multi-g"))
-        .withColumn(
-            "total_floor_area", F.round(col("floor_area_sqm") * SQM_TO_SQFT).cast("int")
-        )
-        .withColumn("date_of_sale", month_string_to_date(col("month")))
-        .withColumn("year", F.year("date_of_sale"))
-        .withColumn("month", F.month("date_of_sale"))
-        .withColumn(
-            "remaining_lease", LEASE_YEARS - (col("year") - col("top")).cast("int")
-        )
+    (historical_data_transformation.py:29-54) as one column mapping.
+    ``general_location`` is the lower-cased J1 join key."""
+    date_of_sale = month_string_to_date(col("month"))
+    year = F.year(date_of_sale)
+    # '4 Room' → '4 Rooms'; 'Multi Generation' → 'Multi-generation'
+    property_type = F.regexp_replace(
+        F.regexp_replace(F.initcap(col("flat_type")), "Room", "Rooms"), "Multi G", "Multi-g"
     )
-    return df
+    return df.withColumns(
+        {
+            # the lower-cased display value (initcap first keeps the key
+            # exactly that for any input)
+            "general_location": F.lower(F.initcap(col("town"))),
+            "street_name": F.initcap(col("street_name")),
+            "property_type": property_type,
+            "model": col("flat_model"),
+            "price": col("resale_price"),
+            "top": col("lease_commence_date"),
+            "total_floor_area": F.round(col("floor_area_sqm") * SQM_TO_SQFT).cast("int"),
+            "date_of_sale": date_of_sale,
+            "year": year,
+            "month": F.month(date_of_sale),
+            "remaining_lease": remaining_lease(col("lease_commence_date"), year),
+        }
+    )
 
 
 def enrich_districts(
@@ -61,20 +66,19 @@ def enrich_districts(
     district_region: DataFrame,
 ) -> DataFrame:
     """Three broadcast left joins (J1-J3,
-    historical_data_transformation.py:59-63,102-104): town→district on a
-    case-normalized key, district→zone on the district-grain zone table
-    (joining the 81-row sector table would fan out ×~3),
-    district→region."""
-    df = df.withColumn("general_location", F.lower("general_location"))
+    historical_data_transformation.py:59-63,102-104): town→district on
+    the lower-cased key ``conform_historical`` emits, district→zone on
+    the district-grain zone table (joining the 81-row sector table would
+    fan out ×~3), district→region."""
     df = enrich(
         df,
         town_district.withColumn("general_location", F.lower("general_location")),
         on="general_location",
     )
-    df = (
-        df.withColumn("general_location", F.initcap("general_location"))
-        # initcap lower-cases the letter after '/' — restore 'Kallang/Whampoa'
-        .withColumn("general_location", F.regexp_replace("general_location", r"/w", "/W"))
+    # initcap lower-cases the letter after '/' — restore 'Kallang/Whampoa'
+    df = df.withColumn(
+        "general_location",
+        F.regexp_replace(F.initcap("general_location"), r"/w", "/W"),
     )
     df = enrich(df, district_zone, on="district")
     df = enrich(df, district_region, on="district")

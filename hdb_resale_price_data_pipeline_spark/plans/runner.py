@@ -61,6 +61,19 @@ def run_all(
     district_code = seeds.district_code(spark)
     district_region = seeds.district_region(spark)
 
+    def load(
+        key: str, df: DataFrame, table: str, date_col: str, key_cols: list[str]
+    ) -> DataFrame:
+        to_load, obs = (
+            with_load_metrics(df, key_cols, date_col)
+            if metrics_out is not None
+            else (df, None)
+        )
+        load_day_partitioned(to_load, f"{warehouse_dir}/{table}", date_col)
+        if obs is not None:
+            metrics_out[key] = obs.get
+        return df
+
     def branch_historical() -> DataFrame:
         historical = historical_pipeline(
             read_historical_csv_dir(spark, csv_dir),
@@ -68,19 +81,10 @@ def run_all(
             seeds.district_zone(spark),
             district_region,
         )
-        to_load, obs = (
-            with_load_metrics(
-                historical, ["general_location", "price"], "date_of_sale"
-            )
-            if metrics_out is not None
-            else (historical, None)
+        return load(
+            "historical", historical, "historical_data", "date_of_sale",
+            ["general_location", "price"],
         )
-        load_day_partitioned(
-            to_load, f"{warehouse_dir}/historical_data", "date_of_sale"
-        )
-        if obs is not None:
-            metrics_out["historical"] = obs.get
-        return historical
 
     def branch_scraped() -> DataFrame:
         p = propnex_pipeline(
@@ -100,19 +104,10 @@ def run_all(
         # the merge filter guarantees NOT NULL on the dedup keys
         # (merge.py) — a non-zero null counter here means upstream
         # cleaning regressed
-        to_load, obs = (
-            with_load_metrics(
-                merged, ["agent_id", "location", "price"], "transformed_date"
-            )
-            if metrics_out is not None
-            else (merged, None)
+        return load(
+            "scraped", merged, "scraped_data", "transformed_date",
+            ["agent_id", "location", "price"],
         )
-        load_day_partitioned(
-            to_load, f"{warehouse_dir}/scraped_data", "transformed_date"
-        )
-        if obs is not None:
-            metrics_out["scraped"] = obs.get
-        return merged
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_hist = pool.submit(branch_historical)

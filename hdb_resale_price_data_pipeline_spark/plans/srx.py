@@ -4,6 +4,10 @@ Reference: jobs/spark/srx_transformation.py:116-167. Raw scraped listing
 JSON (31 string fields, FIXTURES.md §2) → conformed listing projected
 onto ``schemas.SCRAPED_LISTING_SCHEMA`` (27 columns).
 
+The conform step is one column mapping (a single Project over the raw
+frame); the three broadcast joins (J6-J8) and the final projection
+follow it.
+
 Deviations:
 - injected ``as_of_year`` replaces the driver clock
   (srx_transformation.py:86);
@@ -31,52 +35,52 @@ from ..functions.cleaning import (
     strip_non_ascii,
     title_case_location,
 )
-from ..functions.dates import LEASE_YEARS
+from ..functions.dates import remaining_lease
 from ..operators.enrich import enrich
 from ..plans.historical import SQM_TO_SQFT
 from ..schemas import SCRAPED_LISTING_SCHEMA, project
 
 
 def conform_srx(df: DataFrame, as_of_year: int) -> DataFrame:
-    df = (
-        # 'CEA: R123456A / L3008022J' carries both licence numbers
-        df.withColumn("agency_id", F.regexp_extract(col("agent_id"), r"(L\d{7}[A-Z])", 1))
-        .withColumn("agent_id", F.regexp_extract(col("agent_id"), r"(R\d{6}[A-Z])", 1))
-        .withColumn("agent_phone_num", F.split(col("agent_phone_num"), ":").getItem(1).cast("int"))
-        .withColumn("agent_name", strip_non_ascii(col("agent_name")))
-        .withColumn("post_code", F.regexp_extract(col("address"), r"\((\d+)\)", 1))
-        .withColumn("location", F.split(col("address"), " \\(").getItem(0))
-        .withColumn("location", title_case_location(col("location")))
-        .withColumn("description", strip_emoji_and_newlines(col("description")))
-        .withColumn("facilities_num", facilities_count(col("facilities")))
-        .withColumn("furnish", furnishing_category(col("furnish"), "not furnished"))
-        .withColumn("price", money_to_int(col("price")))
-        .withColumn("price_psf", psf_to_int(col("psf")))
-        .withColumn("floor_area_sqm", F.trim(F.split(col("size"), "sqm").getItem(0)).cast("int"))
-        .withColumn("total_floor_area", F.round(col("floor_area_sqm") * SQM_TO_SQFT).cast("int"))
-        .withColumn("property_type", F.trim(F.split(col("property_type"), "HDB").getItem(1)))
-        .withColumn("floor", F.lower(col("floor_level")))
-        .withColumn("floor", F.when(col("floor") == "mid", "middle").otherwise(col("floor")))
-        .withColumn("top", col("built_year"))
-        .withColumn("street_name", F.initcap(col("property_name")))
-        .withColumn("general_location", col("hdb_town"))
-        .withColumn("bedrooms", clean_bedrooms_expr(col("bedrooms")).cast("int"))
-        .withColumn(
-            "remaining_lease", LEASE_YEARS - (F.lit(as_of_year) - col("top")).cast("int")
-        )
-        .withColumn("postal_sector", postal_sector(col("post_code")))
-        .withColumn(
-            "additional_information",
-            pack_additional_info(
+    """Per-column cleanups as one column mapping. Columns derived from a
+    cleaned column compose its expression."""
+    post_code = F.regexp_extract(col("address"), r"\((\d+)\)", 1)
+    description = strip_emoji_and_newlines(col("description"))
+    floor_area_sqm = F.trim(F.split(col("size"), "sqm").getItem(0)).cast("int")
+    floor = F.lower(col("floor_level"))
+    return df.withColumns(
+        {
+            # 'CEA: R123456A / L3008022J' carries both licence numbers
+            "agency_id": F.regexp_extract(col("agent_id"), r"(L\d{7}[A-Z])", 1),
+            "agent_id": F.regexp_extract(col("agent_id"), r"(R\d{6}[A-Z])", 1),
+            "agent_phone_num": F.split(col("agent_phone_num"), ":").getItem(1).cast("int"),
+            "agent_name": strip_non_ascii(col("agent_name")),
+            "post_code": post_code,
+            "location": title_case_location(F.split(col("address"), " \\(").getItem(0)),
+            "description": description,
+            "facilities_num": facilities_count(col("facilities")),
+            "furnish": furnishing_category(col("furnish"), "not furnished"),
+            "price": money_to_int(col("price")),
+            "price_psf": psf_to_int(col("psf")),
+            "floor_area_sqm": floor_area_sqm,
+            "total_floor_area": F.round(floor_area_sqm * SQM_TO_SQFT).cast("int"),
+            "property_type": F.trim(F.split(col("property_type"), "HDB").getItem(1)),
+            "floor": F.when(floor == "mid", "middle").otherwise(floor),
+            "top": col("built_year"),
+            "street_name": F.initcap(col("property_name")),
+            "general_location": col("hdb_town"),
+            "bedrooms": clean_bedrooms_expr(col("bedrooms")).cast("int"),
+            "remaining_lease": remaining_lease(col("built_year"), as_of_year),
+            "postal_sector": postal_sector(post_code),
+            "additional_information": pack_additional_info(
                 facilities=col("facilities"),
                 schools=col("schools"),
                 **{"shopping_malls/markets": col("shopping_mall/markets")},
                 train_stations=col("train_stations"),
-                description=col("description"),
+                description=description,
             ),
-        )
+        }
     )
-    return df
 
 
 def srx_pipeline(

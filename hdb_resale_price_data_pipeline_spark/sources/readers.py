@@ -307,14 +307,18 @@ def _peek_csv_header_pure(spark: SparkSession, path: str) -> list[str]:
 def read_historical_csv_dir(spark: SparkSession, path: str) -> DataFrame:
     """All historical-transaction CSVs under ``path`` in one scan (S1+S2).
 
-    Column projection conforms mixed vintages to the canonical 10 columns
-    (the reference does this per-file then folds with unionByName;
-    Catalyst prunes to the same scan from a single read). The header is
-    peeked driver-side (one line) and pinned as an all-string schema —
-    same semantics as ``header=True`` schema inference, which applies
-    the FIRST file's header to every file in the directory anyway
-    (per-file reordered vintages need ``read_historical_csv_files``),
-    without the extra listing + Spark job inference costs.
+    Columns are mapped BY POSITION: the first file's header names the
+    columns of every file, and the canonical 10 are then selected by
+    those names. So a vintage conforms only when its columns up to the
+    last canonical one sit where the first file has them; extra columns
+    must come after them (a vintage with ``remaining_lease`` before
+    ``resale_price`` would load shifted values, with no error). Vintages
+    whose columns are reordered or renamed need
+    ``read_historical_csv_files``, which reads each file by name. The
+    header is peeked driver-side (one line) and pinned as an all-string
+    schema — the same semantics as ``header=True`` schema inference,
+    which also applies the first file's header to every file — without
+    the extra listing and inference job.
     """
     cols = _peek_csv_header(spark, path)
     schema = StructType([StructField(c, StringType(), True) for c in cols])

@@ -62,6 +62,7 @@ def _row(df, **filters):
     return out[0]
 
 
+@pytest.mark.core
 def test_propnex_conform(propnex_out):
     assert sorted(propnex_out.columns) == sorted(c for c in LISTING_COLUMNS if c != "transformed_date")
     r = _row(propnex_out, url="https://www.propnex.com/listing/1")
@@ -82,6 +83,7 @@ def test_propnex_conform(propnex_out):
     assert "🏠" not in info["description"] and "\n" not in info["description"]
 
 
+@pytest.mark.core
 def test_propnex_numeric_location_falls_back_to_street(propnex_out):
     r = _row(propnex_out, url="https://www.propnex.com/listing/2")
     assert r.location == "Holland Road"  # 'Block 45' → numeric-only → street
@@ -91,6 +93,7 @@ def test_propnex_numeric_location_falls_back_to_street(propnex_out):
     # wait: sector '27' → district 10 per seeds; post_code 278123 → sector 27
 
 
+@pytest.mark.core
 def test_srx_conform(srx_out):
     assert sorted(srx_out.columns) == sorted(c for c in LISTING_COLUMNS if c != "transformed_date")
     r = _row(srx_out, url="https://www.srx.com.sg/listings/10")
@@ -113,17 +116,20 @@ def test_srx_conform(srx_out):
     assert info["schools"] == "Tampines Primary"
 
 
+@pytest.mark.core
 def test_srx_bedrooms_edge_cases(srx_out):
     assert _row(srx_out, url="https://www.srx.com.sg/listings/11").bedrooms == 1  # Studio
     assert _row(srx_out, url="https://www.srx.com.sg/listings/12").bedrooms is None  # junk
     assert _row(srx_out, url="https://www.srx.com.sg/listings/11").furnish == "unfurnished"
 
 
+@pytest.mark.core
 def test_srx_missing_licence_is_null(srx_out):
     r = _row(srx_out, url="https://www.srx.com.sg/listings/11")
     assert r.agency_id is None and r.agency is None  # regex miss → '' → NULL
 
 
+@pytest.mark.core
 def test_merge_dedup(spark, propnex_out, srx_out):
     merged = merge_dedup_pipeline(propnex_out, srx_out, AS_OF)
     assert merged.columns == LISTING_COLUMNS  # exact canonical order
@@ -145,6 +151,7 @@ def test_merge_dedup_idempotent(spark, propnex_out, srx_out):
     assert sorted(map(tuple, again.collect())) == sorted(map(tuple, merged.collect()))
 
 
+@pytest.mark.core
 def test_historical_pipeline(spark, tmp_path):
     csv_dir = fixtures.write_historical_csvs(str(tmp_path))
     raw = read_historical_csv_dir(spark, csv_dir)

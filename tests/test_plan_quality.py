@@ -152,7 +152,7 @@ def test_scraped_pipelines_are_shuffle_free(spark, tmp_path):
 
 
 def _nodes(node):
-    """Every node of a JVM physical plan, pre-order."""
+    """Every node of a JVM plan tree (logical or physical), pre-order."""
     yield node
     kids = node.children()
     for i in range(kids.size()):
@@ -219,6 +219,45 @@ def test_seed_dimensions_broadcast_as_local_relations(spark, tmp_path):
     for name, df, n_dims in (("historical", h, 3), ("propnex", p, 2), ("srx", s, 3), ("merge", merged, 5)):
         assert _broadcast_leaves(df) == ["LocalTableScan"] * n_dims, name
         assert "Scan ExistingRDD" not in _plan(df), name
+
+
+def _projects(df) -> int:
+    """Project nodes in the analyzed logical plan of ``df``."""
+    plan = df._jdf.queryExecution().analyzed()
+    return sum(node.nodeName() == "Project" for node in _nodes(plan))
+
+
+@pytest.mark.core
+def test_conform_steps_are_one_projection(spark, tmp_path):
+    """Each daily conform step is one column mapping: it adds exactly one
+    Project to its input's analyzed plan, whatever number of columns it
+    cleans (a ``withColumn`` chain adds one Project per column, each
+    re-analyzing the growing plan)."""
+    import fixtures
+    from hdb_resale_price_data_pipeline_spark.plans.historical import conform_historical
+    from hdb_resale_price_data_pipeline_spark.plans.propnex import conform_propnex
+    from hdb_resale_price_data_pipeline_spark.plans.srx import conform_srx
+    from hdb_resale_price_data_pipeline_spark.schemas import (
+        RAW_PROPNEX_SCHEMA,
+        RAW_SRX_SCHEMA,
+    )
+    from hdb_resale_price_data_pipeline_spark.sources.readers import read_historical_csv_dir
+
+    raw_h = read_historical_csv_dir(spark, fixtures.write_historical_csvs(str(tmp_path)))
+    raw_p = spark.createDataFrame(
+        [tuple(r[f.name] for f in RAW_PROPNEX_SCHEMA.fields) for r in fixtures.PROPNEX_ROWS],
+        RAW_PROPNEX_SCHEMA,
+    )
+    raw_s = spark.createDataFrame(
+        [tuple(r[f.name] for f in RAW_SRX_SCHEMA.fields) for r in fixtures.SRX_ROWS],
+        RAW_SRX_SCHEMA,
+    )
+    for name, raw, out in (
+        ("historical", raw_h, conform_historical(raw_h)),
+        ("propnex", raw_p, conform_propnex(raw_p, 2024)),
+        ("srx", raw_s, conform_srx(raw_s, 2024)),
+    ):
+        assert _projects(out) - _projects(raw) == 1, name
 
 
 def test_topk_avoids_global_sort(spark):
