@@ -1,46 +1,41 @@
-"""Catalog-driven schema profiling: FD / IND / UCC / OD discovery.
+"""Catalog-driven schema profiling: FD / IND / UCC / OD / correlation
+discovery.
 
-Round-9 rewrite of the round-8 profiling triad (which was pinned to a
-hand-listed table, column tuple, and IND candidate list in
-queries/relational.py): the discoverers now walk a declared PROFILING
-CATALOG — nine testdata tables with their profiled columns and type
-classes — and GENERATE every candidate:
+The discoverers walk a declared PROFILING CATALOG — nine testdata tables
+with their profiled columns and type classes — and GENERATE every
+candidate: FD = all ordered column pairs within each table, UCC = all
+unordered pairs within each table, IND = all ordered cross-table pairs
+of joinable columns generated PER TYPE CLASS (integral / string /
+timestamp, Binder's partition; floating measures never generate IND
+candidates), OD = all ordered pairs of orderable columns within each
+table.
 
-- FD candidates  = all ordered column pairs within each cataloged table;
-- UCC candidates = all unordered column pairs within each cataloged
-  table;
-- IND candidates = all ordered cross-table pairs of joinable-class
-  columns, generated PER TYPE CLASS (integral / string / timestamp —
-  Binder partitions IND candidates by type the same way; floating
-  measures never generate IND candidates).
-
-The economics are unchanged and are the point at 100 TB: ONE
-ANALYZE-style wide aggregate per table (rowcount, NULL-sentinel NDV per
-column, min/max/non-null-NDV for the integral class) funds every stats
-prune — candidates are classified ``key_holds`` / ``const_holds`` /
-``pruned_impossible`` / ``pruned_range`` / ``pruned_ndv`` /
-``pruned_pigeonhole`` / ``super_key`` from statistics alone — and only
-SURVIVORS pay row-grain work:
+The economics are the point at 100 TB: ONE ANALYZE-style wide
+aggregate per table (rowcount, NULL-sentinel NDV per column,
+min/max/non-null-NDV for the joinable classes) funds every stats prune
+— ``key_holds`` / ``const_holds`` / ``pruned_impossible`` /
+``pruned_range`` / ``pruned_ndv`` / ``pruned_pigeonhole`` /
+``super_key`` / ``trivial_holds`` are decided from statistics alone —
+and only SURVIVORS pay row-grain work. Every discoverer decides its
+verdicts the same way: Spark computes bounded per-candidate counters,
+and the driver collects them and builds every verdict row in one loop
+over the candidates. The counters come from three passes:
 
 - FD, UCC and correlation survivors share ONE pair-cell pass: each
-  table with a survivor is scanned once, ``stack()`` pivots every
-  surviving column pair into a tall (pair, x, y) frame that collapses
-  to contingency cells, and one job reduces each pair to the counters
-  all three discoverers read (cell count, per-direction determinant
-  and violating-determinant counts, the correlation fold); the
-  verdicts are then assembled on the driver;
-- IND survivors across ALL candidates share ONE value-grain anti-join:
-  distinct child values tagged with their candidate ids, anti-joined
-  against tagged distinct parent values on (candidate, value) — ~140
-  surviving candidates at sf0.1 cost one shuffle, not 140 independent
-  joins, and the (candidate, value) key is unique so the join cannot
-  skew.
+  table with a survivor is scanned once and every surviving column
+  pair collapses to contingency cells (``_pair_cells_frame``);
+- IND survivors share ONE value pass: each table holding a surviving
+  child or parent column is scanned once, and one grouping by (parent
+  column, value) counts each candidate's unmatched child values
+  (``_ind_violations_frame``);
+- OD survivors share ONE typed group pass, one scan and one window per
+  table (``_od_counts_frame``; native order semantics rule out the
+  string-sentinel stack).
 
-The candidate loop is driver-side over |columns|² CANDIDATES (bounded,
-stats-only) — never over rows. Each table's statistics and each
-discoverer's persisted RESULT frame are session artifacts
-(operators/index_cache, keyed on the files they read), so
-``dq_profile_report`` steady-state costs four projections and a union.
+Each table's statistics and each discoverer's persisted RESULT frame
+are session artifacts (operators/index_cache, keyed on the files they
+read), so ``dq_profile_report`` steady-state costs four projections
+and a union.
 
 The reference (cyusong/HDB-Resale-Price-Data-Pipeline) ships no
 profiler — its Spark surface is four cleaning scripts
@@ -192,12 +187,6 @@ class _TableStats:
         self.ind_stats = ind_stats
 
 
-def _ind_value_col(column: str, klass: str):
-    """The joinable value expression per type class: integral columns
-    meet at bigint grain; strings/timestamps meet raw."""
-    return col(column).cast("bigint") if klass == "int" else col(column)
-
-
 @index_cache.cached("profiling.stats")
 def _table_stats(spark: SparkSession, sf_dir: str, table: str) -> _TableStats:
     # Distinct aggregates dominate the ANALYZE scan (each adds a slice
@@ -223,7 +212,7 @@ def _table_stats(spark: SparkSession, sf_dir: str, table: str) -> _TableStats:
                 ).alias(f"ndv_{c}")
             )
     for c, k in _ind_cols(table):
-        v = _ind_value_col(c, k)
+        v = F.expr(_od_value_spark(c, k))  # the value passes' grain
         exprs += [F.min(v).alias(f"mn_{c}"), F.max(v).alias(f"mx_{c}")]
     # Bounded collect: ONE row of ≤ 4·|cols|+1 values — the same
     # statistics a CBO keeps per table.
@@ -581,141 +570,123 @@ def q_dq_ind_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a dense-key schema half the integral candidates die on stats
     alone, and the string class shows the prune at its best — 144
     generated string candidates, ~2 survivors (name-style columns have
-    disjoint lexicographic ranges). SURVIVORS share ONE value-grain
-    anti-join per type class, keyed (parent-column, value): each
-    distinct child column's values are computed once and tagged with
-    its surviving (candidate, parent-column) pairs, while each parent
-    column's distinct values enter ONCE, tagged only with their own
-    column id — parent work is Σ parent-NDV no matter how many
-    candidates reference a parent (a per-candidate parent tag measured
-    3× slower at sf1), the join key is parent-unique (no skew), and
-    the fact-table collapse to distinct values happens map-side before
-    the shuffle. ~140 survivors cost one join per class, never one
-    per candidate. Verdicts ``holds`` /
-    ``violated`` (exact violating-value count); coverage_ppm = child
-    NDV / parent NDV (the density readout separating a total FK from a
-    coincidental dense-key containment), with a -1 sentinel when the
-    parent has no non-null values (the oracle's CASE states the same).
-    Result frames persist per (session, dataset)."""
+    disjoint lexicographic ranges). SURVIVORS are counted by one value
+    pass (``_ind_violations_frame``) that scans each table holding a
+    surviving column once, and the verdicts are assembled on the
+    driver: ``holds`` / ``violated`` (exact violating-value count);
+    coverage_ppm = child NDV / parent NDV (the density readout
+    separating a total FK from a coincidental dense-key containment),
+    with a -1 sentinel when the parent has no non-null values. Result frames persist per
+    (session, dataset)."""
     return _cached_result(
         spark, sf_dir, "ind", lambda: _build_ind_discover(spark, sf_dir)
     )
 
 
-def _build_ind_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _ind_pruned(
+    spark: SparkSession, sf_dir: str, ct: str, cc: str, pt: str, pc: str
+) -> str | None:
+    """The status decided from statistics, or None when the candidate
+    ct.cc <= pt.pc needs the value pass."""
+    cmn, cmx, cndv = _table_stats(spark, sf_dir, ct).ind_stats[cc]
+    pmn, pmx, pndv = _table_stats(spark, sf_dir, pt).ind_stats[pc]
+    if cmn is not None and pmn is not None and (cmn < pmn or cmx > pmx):
+        return "pruned_range"
+    if cndv > pndv:
+        return "pruned_ndv"
+    return None
+
+
+def _ind_survivors(spark: SparkSession, sf_dir: str) -> list[tuple]:
+    """The candidates, in candidate order, that statistics leave to the
+    value pass."""
     _warm_table_stats(spark, sf_dir, _CATALOG)
-    schema = (
-        "ind string, ndv_child bigint, ndv_parent bigint, "
-        "coverage_ppm bigint, status string, n_violating bigint"
+    return [
+        c for c in _ind_candidates() if _ind_pruned(spark, sf_dir, *c[1:]) is None
+    ]
+
+
+def _ind_violations_frame(
+    spark: SparkSession, sf_dir: str, survivors: list
+) -> DataFrame:
+    """(ind, count): the number of distinct non-NULL child values
+    missing from the parent, for each survivor with at least one.
+
+    Each table holding a surviving child or parent column is scanned
+    once: ``stack()`` puts every such column into its class-typed slot
+    (native equality, as in the OD pass) and the rows collapse to
+    distinct (column, value) before they are tagged, so the tag
+    fan-out and the grouping shuffle scale with each column's NDV, not
+    its row count. A broadcast tag table then maps each child column
+    to its (parent column, ind) pairs and each parent column to itself
+    with a NULL ind, so one grouping by (parent column, value) finds
+    the child values that met no parent row. A parent column's distinct values enter once however many
+    candidates reference it (tagging parents per candidate fanned
+    o_orderkey's 1.5M values ×17 at sf1 and measured 171 s), and a
+    group holds at most one row per referencing child column, so the
+    grouping cannot skew."""
+    kinds: dict[tuple[str, str], str] = {}
+    tags: list[tuple] = []
+    for klass, ct, cc, pt, pc in survivors:
+        kinds[(ct, cc)] = kinds[(pt, pc)] = klass
+        tags.append((f"{ct}.{cc}", f"{pt}.{pc}", f"{ct}.{cc} <= {pt}.{pc}"))
+    tags += dict.fromkeys(
+        (f"{pt}.{pc}", f"{pt}.{pc}", None) for *_, pt, pc in survivors
     )
-    pruned_rows: list[tuple] = []
-    survivors: list[tuple[str, str, str, str, str, str, int, int, int]] = []
-    for klass, ct, cc, pt, pc in _ind_candidates():
-        cmn, cmx, cndv = _table_stats(spark, sf_dir, ct).ind_stats[cc]
-        pmn, pmx, pndv = _table_stats(spark, sf_dir, pt).ind_stats[pc]
-        ind = f"{ct}.{cc} <= {pt}.{pc}"
-        cov = -1 if pndv == 0 else int(cndv / pndv * 1_000_000 + 0.5)
-        if (
-            cmn is not None
-            and pmn is not None
-            and (cmn < pmn or cmx > pmx)
-        ):
-            pruned_rows.append((ind, cndv, pndv, cov, "pruned_range", -1))
-        elif cndv > pndv:
-            pruned_rows.append((ind, cndv, pndv, cov, "pruned_ndv", -1))
-        else:
-            survivors.append((klass, ind, ct, cc, pt, pc, cndv, pndv, cov))
-
-    result = local_frame(spark, pruned_rows, schema=schema)
-    if not survivors:
-        return result
-
-    def distinct_vals(table: str, column: str, klass: str) -> DataFrame:
-        return (
-            t(spark, sf_dir, table)
-            .select(_ind_value_col(column, klass).alias("v"))
-            .filter(col("v").isNotNull())
-            .distinct()
+    stacked: dict[str, list[str]] = {}
+    for (table, c), klass in kinds.items():
+        stacked.setdefault(table, []).append(
+            f"'{table}.{c}', {_class_slots(c, klass)}"
         )
-
-    # One value-grain anti-join PER TYPE CLASS, keyed (parent-column,
-    # value). CHILD side: each distinct child column's values computed
-    # once, exploded over (candidate id, parent-column id) literal
-    # structs — the fan-out is bounded by how many parents a child
-    # references, and children that survive against MANY parents are
-    # the small-domain ones. PARENT side: each parent column's distinct
-    # values ONCE, tagged with its own column id — never duplicated per
-    # candidate. (The first cut tagged parents per candidate: at sf1
-    # that fanned o_orderkey's 1.5M distinct values ×17 candidates into
-    # the shuffle and the probe read 171s; this shape keeps parent work
-    # at Σ parent-NDV.) The join key (pcol, v) is unique on the parent
-    # side and ≤ children-per-parent on the child side — no skew.
-    viols = []
-    for klass in _IND_CLASSES:
-        child_tags: dict[tuple[str, str], list] = {}
-        parent_cols: dict[tuple[str, str], str] = {}
-        for k, ind, ct, cc, pt, pc, *_ in survivors:
-            if k != klass:
-                continue
-            pcol = f"{pt}.{pc}"
-            child_tags.setdefault((ct, cc), []).append((ind, pcol))
-            parent_cols[(pt, pc)] = pcol
-        if not child_tags:
-            continue
-        child_frames = []
-        for (ct, cc), tags in child_tags.items():
-            child_frames.append(
-                distinct_vals(ct, cc, klass).select(
-                    F.explode(
-                        F.array(
-                            *[
-                                F.struct(
-                                    F.lit(ind).alias("ind"),
-                                    F.lit(pcol).alias("pcol"),
-                                )
-                                for ind, pcol in tags
-                            ]
-                        )
-                    ).alias("tag"),
-                    "v",
-                ).select(col("tag.ind").alias("ind"), col("tag.pcol").alias("pcol"), "v")
-            )
-        children = child_frames[0]
-        for f in child_frames[1:]:
-            children = children.unionByName(f)
-        parent_frames = [
-            distinct_vals(pt, pc, klass).select(F.lit(pcol).alias("pcol"), "v")
-            for (pt, pc), pcol in parent_cols.items()
-        ]
-        parents = parent_frames[0]
-        for f in parent_frames[1:]:
-            parents = parents.unionByName(f)
-        viols.append(
-            children.join(parents, ["pcol", "v"], "left_anti").select("ind")
-        )
-    viol = viols[0]
-    for v in viols[1:]:
-        viol = viol.unionByName(v)
-    viol = viol.groupBy("ind").agg(F.count(F.lit(1)).alias("nv"))
-    meta = local_frame(
-        spark,
+    values = functools.reduce(
+        DataFrame.unionByName,
         [
-            (ind, cndv, pndv, cov)
-            for _, ind, _, _, _, _, cndv, pndv, cov in survivors
+            t(spark, sf_dir, table).selectExpr(
+                f"stack({len(args)}, {', '.join(args)}) AS (col, v_int, v_str, v_ts)"
+            )
+            for table, args in stacked.items()
         ],
-        schema="ind string, ndv_child bigint, ndv_parent bigint, coverage_ppm bigint",
+    ).where("v_int IS NOT NULL OR v_str IS NOT NULL OR v_ts IS NOT NULL")
+    tag_frame = local_frame(spark, tags, schema="col string, pcol string, ind string")
+    unmatched = (
+        values.distinct()
+        .join(F.broadcast(tag_frame), "col")
+        .groupBy("pcol", "v_int", "v_str", "v_ts")
+        .agg(
+            F.count(F.when(col("ind").isNull(), 1)).alias("n_parent"),
+            F.collect_list("ind").alias("inds"),
+        )
+        .where(col("n_parent") == 0)
     )
-    tested = meta.join(F.broadcast(viol), "ind", "left").select(
-        "ind",
-        "ndv_child",
-        "ndv_parent",
-        "coverage_ppm",
-        F.when(F.coalesce(col("nv"), F.lit(0)) == 0, F.lit("holds"))
-        .otherwise(F.lit("violated"))
-        .alias("status"),
-        F.coalesce(col("nv"), F.lit(0)).cast("bigint").alias("n_violating"),
+    return unmatched.select(F.explode("inds").alias("ind")).groupBy("ind").count()
+
+
+def _build_ind_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
+    survivors = _ind_survivors(spark, sf_dir)
+    nv = {}
+    if survivors:  # bounded collect: at most one row per survivor
+        nv = dict(_ind_violations_frame(spark, sf_dir, survivors).collect())
+    rows = []
+    for _, ct, cc, pt, pc in _ind_candidates():
+        cndv = _table_stats(spark, sf_dir, ct).ind_stats[cc][2]
+        pndv = _table_stats(spark, sf_dir, pt).ind_stats[pc][2]
+        ind = f"{ct}.{cc} <= {pt}.{pc}"
+        status = _ind_pruned(spark, sf_dir, ct, cc, pt, pc)
+        if status is None:
+            n = nv.get(ind, 0)
+            verdict = ("holds" if n == 0 else "violated", n)
+        else:
+            verdict = (status, -1)
+        cov = -1 if pndv == 0 else _ppm(cndv / pndv)
+        rows.append((ind, cndv, pndv, cov, *verdict))
+    return local_frame(
+        spark,
+        rows,
+        schema=(
+            "ind string, ndv_child bigint, ndv_parent bigint, "
+            "coverage_ppm bigint, status string, n_violating bigint"
+        ),
     )
-    return result.unionByName(tested)
 
 
 def _ind_discover_oracle() -> str:
@@ -871,31 +842,24 @@ def q_dq_profile_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session, dataset), so a report following the discoverers — or a
     repeat report — costs four projections and a union, no recomputed
     survivor scans."""
-    fd = q_dq_fd_discover(spark, sf_dir).select(
-        F.lit("fd").alias("section"),
-        col("fd").alias("item"),
-        "status",
-        col("violation_ppm").alias("metric"),
+    sections = (
+        ("fd", q_dq_fd_discover, "violation_ppm"),
+        ("ind", q_dq_ind_discover, "n_violating"),
+        ("ucc", q_dq_ucc_discover, "n_duplicate"),
+        ("od", q_dq_od_discover, "disorder_ppm"),
     )
-    ind = q_dq_ind_discover(spark, sf_dir).select(
-        F.lit("ind").alias("section"),
-        col("ind").alias("item"),
-        "status",
-        col("n_violating").alias("metric"),
+    return functools.reduce(
+        DataFrame.unionByName,
+        [
+            q(spark, sf_dir).select(
+                F.lit(name).alias("section"),
+                col(name).alias("item"),
+                "status",
+                col(metric).alias("metric"),
+            )
+            for name, q, metric in sections
+        ],
     )
-    ucc = q_dq_ucc_discover(spark, sf_dir).select(
-        F.lit("ucc").alias("section"),
-        col("ucc").alias("item"),
-        "status",
-        col("n_duplicate").alias("metric"),
-    )
-    od = q_dq_od_discover(spark, sf_dir).select(
-        F.lit("od").alias("section"),
-        col("od").alias("item"),
-        "status",
-        col("disorder_ppm").alias("metric"),
-    )
-    return fd.unionByName(ind).unionByName(ucc).unionByName(od)
 
 
 def _profile_report_oracle() -> str:
@@ -1091,7 +1055,8 @@ def _od_candidates() -> list[tuple[str, str, str, str, str]]:
 def _od_value_spark(column: str, klass: str) -> str:
     """Spark-dialect typed value expression: integral columns meet at
     bigint grain, timestamps at timestamp grain, strings raw — the
-    casts unify types WITHIN a stack branch without disturbing order."""
+    casts unify types WITHIN a stack branch without disturbing order.
+    ``column`` "NULL" gives the class's typed NULL."""
     if klass == "int":
         return f"CAST({column} AS BIGINT)"
     if klass == "date":
@@ -1128,136 +1093,109 @@ def q_dq_od_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
     Economics at 100 TB: the shared ANALYZE stats classify
     ``trivial_holds`` (NDV(a) <= 1 — no ordered pairs exist) and
     ``const_holds`` (NDV(b) <= 1) for free; every surviving candidate
-    is decided at a-GROUP grain — ``stack()`` pivots each (table,
-    type-class pair) branch's candidates into one column-pruned scan
-    (native order semantics forbid the FD discoverer's string-sentinel
-    stack, so the scan count is |class-pair branches|, each reading
-    only its candidates' columns), a grouped min/max collapses rows
-    map-side to Σ NDV(a), and ONE running-max/min window per candidate
-    (partitioned by candidate id) counts out-of-order groups. Row-grain
-    work never multiplies by candidate count. Result frames persist per
-    session — see ``_cached_result``."""
+    is counted at a-GROUP grain by ``_od_counts_frame`` (one
+    column-pruned scan and one window per table; native order
+    semantics forbid the FD pass's string-sentinel stack, so the pass
+    is its own), and the verdicts are assembled on the driver.
+    Row-grain work never multiplies by candidate count. Result frames
+    persist per session — see ``_cached_result``."""
     return _cached_result(
         spark, sf_dir, "od", lambda: _build_od_discover(spark, sf_dir)
     )
 
 
-def _null_as(klass: str) -> str:
-    """Typed NULL literal for an unused stack slot of the given class."""
-    if klass == "int":
-        return "CAST(NULL AS BIGINT)"
-    if klass == "date":
-        return "CAST(NULL AS TIMESTAMP)"
-    return "CAST(NULL AS STRING)"
+def _class_slots(column: str, klass: str) -> str:
+    """One stack slot per orderable class: the column's typed value in
+    its own class's slot, typed NULLs in the others (one untyped slot
+    across classes would lose native order and equality)."""
+    return ", ".join(
+        _od_value_spark(column if k == klass else "NULL", k) for k in _OD_CLASSES
+    )
 
 
-def _build_od_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _od_pruned(stats: _TableStats, a: str, b: str) -> str | None:
+    """The status decided from the non-null NDVs (the ind_stats grain:
+    OD is defined over rows where both columns are present, so
+    NULL-sentinel NDVs would overcount domains here), or None when
+    a ~> b needs the group pass."""
+    if stats.ind_stats[a][2] <= 1:
+        return "trivial_holds"
+    if stats.ind_stats[b][2] <= 1:
+        return "const_holds"
+    return None
+
+
+def _od_survivors(spark: SparkSession, sf_dir: str) -> list[tuple]:
+    """The candidates, in candidate order, that statistics leave to the
+    group pass."""
     _warm_table_stats(spark, sf_dir, _CATALOG)
+    return [
+        (table, a, ka, b, kb)
+        for table, a, ka, b, kb in _od_candidates()
+        if _od_pruned(_table_stats(spark, sf_dir, table), a, b) is None
+    ]
+
+
+def _od_counts_frame(spark: SparkSession, sf_dir: str, survivors: list) -> DataFrame:
+    """(od, av, dv, n_groups) per surviving candidate: its ascending-
+    and descending-violating a-groups and its a-groups where both
+    columns are present. Candidates sharing a determinant share its
+    grouping key and window ordering, so they fuse: one stacked copy
+    per determinant carries every dependent in its own typed column,
+    one grouped min/max pass, and ONE window per table (running max/min
+    expressions over one WindowSpec evaluate in a single Window
+    operator with a single sort). Measured at sf0.1 against one stack
+    branch per (table, class pair) with one row copy per candidate:
+    scan branches 37 -> 9, stacked row copies 104×N -> 34×N, and
+    window-sorted rows Σ_cand NDV(a) -> Σ_det NDV(a)."""
     from pyspark.sql.window import Window
 
-    schema = (
-        "od string, ndv_a bigint, ndv_b bigint, status string, "
-        "asc_viol_groups bigint, desc_viol_groups bigint, "
-        "n_groups bigint, disorder_ppm bigint"
-    )
-    pruned_rows: list[tuple] = []
-    # table -> {(det, det_class) -> [(od, dep, dep_class), ...]}:
-    # r10 fusion grain (guide §2.4 — shared exchange/sort). The r9
-    # shape branched per (table, class_a, class_b) and stacked one row
-    # COPY per candidate, so a determinant with d dependents paid d
-    # stacked copies, d grouped collapses, and d window sorts of its
-    # NDV(a) groups. All d candidates of one determinant share the
-    # grouping key AND the window partitioning/order, so they fuse:
-    # one stacked copy per determinant carrying every dependent as its
-    # own typed column, one grouped min/max pass, ONE window (multiple
-    # running-max/min expressions over the same WindowSpec evaluate in
-    # a single Window operator with a single sort). Measured at sf0.1:
-    # 37 scan branches -> 9 (one per table), stacked row copies
-    # 104×N -> 34×N, window-sorted rows Σ_cand NDV(a) -> Σ_det NDV(a).
-    dets: dict[str, dict[tuple[str, str], list[tuple[str, str, str]]]] = {}
-    meta_rows: list[tuple[str, int, int]] = []
-    for table, a, ka, b, kb in _od_candidates():
-        stats = _table_stats(spark, sf_dir, table)
-        # Non-null NDVs (the ind_stats grain): OD is defined over rows
-        # where both columns are present, so NULL-sentinel NDVs would
-        # overcount domains here.
-        ndv_a, ndv_b = stats.ind_stats[a][2], stats.ind_stats[b][2]
-        od = f"{table}.{a}~>{b}"
-        if ndv_a <= 1:
-            pruned_rows.append((od, ndv_a, ndv_b, "trivial_holds", 0, 0, -1, 0))
-        elif ndv_b <= 1:
-            pruned_rows.append((od, ndv_a, ndv_b, "const_holds", 0, 0, -1, 0))
-        else:
-            dets.setdefault(table, {}).setdefault((a, ka), []).append(
-                (od, b, kb)
-            )
-            meta_rows.append((od, ndv_a, ndv_b))
-
-    result = local_frame(spark, pruned_rows, schema=schema)
-    if not meta_rows:
-        return result
-
-    agg_all: DataFrame | None = None
+    dets: dict[str, dict[tuple[str, str], set[tuple[str, str]]]] = {}
+    for table, a, ka, b, kb in survivors:
+        dets.setdefault(table, {}).setdefault((a, ka), set()).add((b, kb))
+    per_table = []
     for table, table_dets in sorted(dets.items()):
         # Dependent slots: columns surviving as a dependent of ANY
-        # surviving determinant of this table. Pruned candidates still
-        # pay no row-grain work — their slot is a typed NULL in that
-        # determinant's stack branch, and min/max ignore NULLs.
-        dep_slots = sorted(
-            {(b, kb) for cands in table_dets.values() for _, b, kb in cands}
-        )
-        dep_ix = {b: i for i, (b, _) in enumerate(dep_slots)}
-        branch_rows = []
-        for (a, ka), cands in sorted(table_dets.items()):
-            deps_of_a = {b for _, b, _ in cands}
-            # Determinant value in its class-typed slot (native order
-            # semantics forbid one untyped slot across classes; the
-            # other two slots ride as typed NULLs and sort as ties).
-            vals = [f"'{a}'"]
-            for klass in ("int", "str", "date"):
-                vals.append(
-                    _od_value_spark(a, ka) if ka == klass else _null_as(klass)
-                )
-            for b, kb in dep_slots:
-                vals.append(
-                    _od_value_spark(b, kb) if b in deps_of_a else _null_as(kb)
-                )
-            branch_rows.append(", ".join(vals))
-        dep_names = [f"d{i}" for i in range(len(dep_slots))]
-        stack_expr = (
-            f"stack({len(branch_rows)}, {', '.join(branch_rows)}) "
-            f"AS (det, a_int, a_str, a_dt, {', '.join(dep_names)})"
-        )
+        # surviving determinant of this table; in a determinant's
+        # branch, a slot that is not one of its dependents is a typed
+        # NULL, and min/max ignore NULLs.
+        dep_slots = sorted(set().union(*table_dets.values()))
+        n = len(dep_slots)
+        branch_rows = [
+            ", ".join(
+                [f"'{a}'", _class_slots(a, ka)]
+                + [
+                    _od_value_spark(b if (b, kb) in deps else "NULL", kb)
+                    for b, kb in dep_slots
+                ]
+            )
+            for (a, ka), deps in sorted(table_dets.items())
+        ]
+        dep_names = ", ".join(f"d{i}" for i in range(n))
         # NOT widened: light per-row work per stacked copy — a
         # per-branch round-robin repartition costs more than it
-        # parallelizes (measured 62s -> 156s at sf1 on the r9 shape;
-        # contrast dedup_span_dups, where ONE scan feeds heavy per-row
-        # amplification and widen fixed a single-task anomaly).
+        # parallelizes (measured 62s -> 156s at sf1 with one stack
+        # branch per class pair; contrast dedup_span_dups, where ONE
+        # scan feeds heavy per-row amplification and widen fixed a
+        # single-task anomaly).
         tall = (
             t(spark, sf_dir, table)
-            .selectExpr(stack_expr)
-            .filter(
-                col("a_int").isNotNull()
-                | col("a_str").isNotNull()
-                | col("a_dt").isNotNull()
+            .selectExpr(
+                f"stack({len(branch_rows)}, {', '.join(branch_rows)}) "
+                f"AS (det, a_int, a_str, a_dt, {dep_names})"
             )
+            .where("a_int IS NOT NULL OR a_str IS NOT NULL OR a_dt IS NOT NULL")
         )
         # Map-side combine collapses rows to (determinant, a-value)
         # grain BEFORE the shuffle; the window then runs over <= NDV(a)
         # rows per determinant. A group's dependent min/max is NULL
         # when no row of the group has that dependent non-NULL — the
         # group then contributes nothing to that candidate (running
-        # max/min skip NULLs; the flags below don't count it), exactly
-        # matching the r9 per-candidate "a nn AND b nn" row filter.
+        # max/min skip NULLs; the counts below skip it), exactly the
+        # oracle's "a nn AND b nn" row filter.
         grouped = tall.groupBy("det", "a_int", "a_str", "a_dt").agg(
-            *[
-                agg
-                for i in range(len(dep_slots))
-                for agg in (
-                    F.min(f"d{i}").alias(f"mn{i}"),
-                    F.max(f"d{i}").alias(f"mx{i}"),
-                )
-            ]
+            *[F.min(f"d{i}").alias(f"mn{i}") for i in range(n)],
+            *[F.max(f"d{i}").alias(f"mx{i}") for i in range(n)],
         )
         w = (
             Window.partitionBy("det")
@@ -1265,99 +1203,70 @@ def _build_od_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
             .rowsBetween(Window.unboundedPreceding, -1)
         )
         flagged = grouped.select(
-            "det",
-            *[
-                e
-                for i in range(len(dep_slots))
-                for e in (
-                    col(f"mn{i}"),
-                    col(f"mx{i}"),
-                    F.max(f"mx{i}").over(w).alias(f"cmx{i}"),
-                    F.min(f"mn{i}").over(w).alias(f"cmn{i}"),
-                )
-            ],
+            "*",
+            *[F.max(f"mx{i}").over(w).alias(f"cmx{i}") for i in range(n)],
+            *[F.min(f"mn{i}").over(w).alias(f"cmn{i}") for i in range(n)],
         )
         per_det = flagged.groupBy("det").agg(
             *[
                 agg
-                for i in range(len(dep_slots))
+                for i in range(n)
                 for agg in (
-                    F.sum(F.when(col(f"cmx{i}") > col(f"mn{i}"), 1).otherwise(0))
-                    .cast("bigint")
-                    .alias(f"av{i}"),
-                    F.sum(F.when(col(f"cmn{i}") < col(f"mx{i}"), 1).otherwise(0))
-                    .cast("bigint")
-                    .alias(f"dv{i}"),
-                    F.sum(F.when(col(f"mn{i}").isNotNull(), 1).otherwise(0))
-                    .cast("bigint")
-                    .alias(f"n{i}"),
+                    F.count(F.when(col(f"cmx{i}") > col(f"mn{i}"), 1)).alias(f"av{i}"),
+                    F.count(F.when(col(f"cmn{i}") < col(f"mx{i}"), 1)).alias(f"dv{i}"),
+                    F.count(f"mn{i}").alias(f"n{i}"),
                 )
             ]
         )
-        # Unpivot the per-determinant flag columns back to candidate
-        # grain (tiny: one row per determinant). Slots that are not a
-        # surviving candidate of their determinant unpivot to all-zero
-        # rows whose od never appears in meta — the left join drops
-        # them.
+        # Unpivot to candidate grain (one row per determinant and
+        # slot); a slot that is not a dependent of its determinant
+        # names no candidate.
         unpivot = ", ".join(
-            f"'{b}', av{dep_ix[b]}, dv{dep_ix[b]}, n{dep_ix[b]}"
-            for b, _ in dep_slots
+            f"'{b}', av{i}, dv{i}, n{i}" for i, (b, _) in enumerate(dep_slots)
         )
-        per_od = per_det.selectExpr(
-            "det",
-            f"stack({len(dep_slots)}, {unpivot}) AS (dep, av, dv, n_groups)",
-        ).select(
-            F.concat(
-                F.lit(f"{table}."), col("det"), F.lit("~>"), col("dep")
-            ).alias("od"),
-            "av",
-            "dv",
-            "n_groups",
-        )
-        agg_all = per_od if agg_all is None else agg_all.unionByName(per_od)
-
-    meta = local_frame(
-        spark, meta_rows, schema="od string, ndv_a bigint, ndv_b bigint"
-    )
-    # Left join so a candidate whose rows are ALL null-filtered still
-    # emits its row (vacuously holds_both, zero groups) — mirroring the
-    # oracle, which always emits one row per candidate.
-    tested = meta.join(F.broadcast(agg_all), "od", "left").select(
-        "od",
-        "ndv_a",
-        "ndv_b",
-        F.when(
-            (F.coalesce(col("av"), F.lit(0)) == 0)
-            & (F.coalesce(col("dv"), F.lit(0)) == 0),
-            F.lit("holds_both"),
-        )
-        .when(F.coalesce(col("av"), F.lit(0)) == 0, F.lit("holds_asc"))
-        .when(F.coalesce(col("dv"), F.lit(0)) == 0, F.lit("holds_desc"))
-        .otherwise(F.lit("violated"))
-        .alias("status"),
-        F.coalesce(col("av"), F.lit(0)).cast("bigint").alias(
-            "asc_viol_groups"
-        ),
-        F.coalesce(col("dv"), F.lit(0)).cast("bigint").alias(
-            "desc_viol_groups"
-        ),
-        F.coalesce(col("n_groups"), F.lit(0)).cast("bigint").alias("n_groups"),
-        F.when(F.coalesce(col("n_groups"), F.lit(0)) == 0, F.lit(0))
-        .otherwise(
-            F.floor(
-                F.least(
-                    F.coalesce(col("av"), F.lit(0)),
-                    F.coalesce(col("dv"), F.lit(0)),
-                ).cast("double")
-                / col("n_groups")
-                * 1_000_000
-                + F.lit(0.5)
+        per_table.append(
+            per_det.selectExpr(
+                "det", f"stack({n}, {unpivot}) AS (dep, av, dv, n_groups)"
+            ).selectExpr(
+                f"concat('{table}.', det, '~>', dep) AS od", "av", "dv", "n_groups"
             )
         )
-        .cast("bigint")
-        .alias("disorder_ppm"),
+    return functools.reduce(DataFrame.unionByName, per_table)
+
+
+def _build_od_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
+    survivors = _od_survivors(spark, sf_dir)
+    counts = {}
+    if survivors:  # bounded collect: one row per determinant and slot
+        for r in _od_counts_frame(spark, sf_dir, survivors).collect():
+            counts[r["od"]] = r[1:]
+    rows = []
+    for table, a, _, b, _ in _od_candidates():
+        stats = _table_stats(spark, sf_dir, table)
+        ndv_a, ndv_b = stats.ind_stats[a][2], stats.ind_stats[b][2]
+        od = f"{table}.{a}~>{b}"
+        status = _od_pruned(stats, a, b)
+        if status is not None:
+            rows.append((od, ndv_a, ndv_b, status, 0, 0, -1, 0))
+            continue
+        # A candidate whose rows are all NULL-filtered has no a-group:
+        # it holds vacuously with zero groups, as in the oracle.
+        av, dv, n = counts.get(od, (0, 0, 0))
+        if av == 0:
+            status = "holds_both" if dv == 0 else "holds_asc"
+        else:
+            status = "holds_desc" if dv == 0 else "violated"
+        ppm = _ppm(min(av, dv) / n) if n else 0
+        rows.append((od, ndv_a, ndv_b, status, av, dv, n, ppm))
+    return local_frame(
+        spark,
+        rows,
+        schema=(
+            "od string, ndv_a bigint, ndv_b bigint, status string, "
+            "asc_viol_groups bigint, desc_viol_groups bigint, "
+            "n_groups bigint, disorder_ppm bigint"
+        ),
     )
-    return result.unionByName(tested)
 
 
 def _od_discover_oracle() -> str:
@@ -1420,12 +1329,10 @@ LOCAL_QUERIES["dq_od_discover"] = QuerySpec(
     q_dq_od_discover, _od_discover_oracle()
 )
 
-# r9 rotation (r8 verdict item 2): dq_profile_report PROMOTED to the
-# driver-graded window — the profiling family's discovery math (NDV
-# grid, range/NDV IND pruning, pigeonhole) reaches the hard signal
-# through the composed artifact; join_size_profile (relational.py)
-# stays graded for the CBO estimation side. Registered LAST: the
-# report's oracle composes every discoverer's oracle, OD included.
+# dq_profile_report is the family's driver-graded query: the discovery
+# math (NDV grid, range/NDV IND pruning, pigeonhole) is graded through
+# the composed artifact. Registered LAST: the report's oracle composes
+# every discoverer's oracle, OD included.
 QUERIES: dict[str, QuerySpec] = {
     "dq_profile_report": QuerySpec(q_dq_profile_report, _profile_report_oracle()),
 }

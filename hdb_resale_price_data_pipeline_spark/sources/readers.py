@@ -3,17 +3,17 @@
 Reference equivalents (SURVEY.md §2.1):
 
 - S1/S2: per-file CSV read + manual unionByName fold
-  (historical_data_transformation.py:13-27). Spark-first: one directory
-  read with an explicit schema — Spark parallelizes file listing and
-  reading natively; the manual fold exists in the reference only because
-  CSV vintages carry extra columns, which an explicit column projection
-  handles.
+  (historical_data_transformation.py:13-27), because CSV vintages carry
+  different columns. Spark-first: one scan per distinct header, each
+  with that header pinned as an explicit schema, folded by name.
 - S3: multiline-JSON listing scan (propnex_transformation.py:110) — ours
   pins an explicit StructType instead of inferring.
 - S4: parquet scans (merge_dedup.py:52-53).
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -232,117 +232,92 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def _peek_csv_header(spark: SparkSession, path: str) -> list[str]:
-    """Column names from the first line of the first CSV under ``path``,
-    read driver-side via the Hadoop FS (one line, any scheme).
+# Bound on one header peek: a header line that does not end within it
+# fails loudly (a vintage's header line is ~130 bytes).
+_HEADER_PEEK_BYTES = 4096
 
-    ``spark.read.csv(header=True)`` without a schema runs a whole Spark
-    job just to read that same line — and lists the directory a second
-    time for it, which on an object store with 100k files is the actual
-    cost (measured locally: ~0.18s plan time vs ~0.02s schema-pinned,
-    before any data is read).
 
-    Under Spark Connect there is no py4j gateway on the client
-    (``spark._jvm`` doesn't exist), so this falls back to a pure-API
-    one-row text read — one small Spark job, same result (Spark's file
-    index lists paths sorted, so ``limit(1)`` lands on the first line of
-    the lexicographically-first file, which is what the FS walk picks)."""
+def _csv_headers(spark: SparkSession, path: str) -> dict[tuple[str, ...], list[str]]:
+    """Each distinct header of the CSVs under ``path`` -> its files, in
+    sorted file order. Every file's first line is read driver-side.
+
+    On a classic session each peek is one bounded Hadoop-FS read (any
+    scheme): py4j passes ``byte[]`` BY VALUE, so the stream is bounded
+    JVM-side and its bytes cross once, a few KiB per file, where
+    ``spark.read.csv(header=True)`` without a schema runs a Spark job
+    and lists the directory again (measured ~0.18 s of planning
+    against ~0.02 s schema-pinned). Under Spark Connect there is no
+    py4j gateway on the client (``spark._jvm`` doesn't exist), so the
+    files are listed by the scan's own file index (``inputFiles``, no
+    data read) and each first line is a one-row text read. An empty
+    file, or a header that does not end within the bound, fails
+    loudly."""
     import csv
-    import io
 
+    lines: dict[str, str] = {}
     if getattr(spark, "_jvm", None) is None:
-        return _peek_csv_header_pure(spark, path)
-
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    it = fs.listFiles(jpath, False)
-    first = None
-    while it.hasNext():
-        f = it.next()
-        name = f.getPath().getName()
-        if name.endswith(".csv") and not name.startswith((".", "_")):
-            if first is None or name < first.getName():
-                first = f.getPath()
-    if first is None:
+        files = spark.read.option("pathGlobFilter", "*.csv").text(path).inputFiles()
+        for f in sorted(files):
+            rows = spark.read.text(f).limit(1).collect()
+            lines[f] = rows[0][0] if rows else ""
+    else:
+        jvm = spark._jvm
+        jpath = jvm.org.apache.hadoop.fs.Path(path)
+        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        bounded = jvm.org.apache.commons.io.input.BoundedInputStream
+        to_bytes = jvm.org.apache.commons.io.IOUtils.toByteArray
+        it = fs.listFiles(jpath, False)
+        paths = []
+        while it.hasNext():
+            p = it.next().getPath()
+            if p.getName().endswith(".csv") and not p.getName().startswith((".", "_")):
+                paths.append(p)
+        for p in sorted(paths, key=lambda p: p.toString()):
+            stream = fs.open(p)
+            try:
+                head = bytes(to_bytes(bounded(stream, _HEADER_PEEK_BYTES)))
+            finally:
+                stream.close()
+            if b"\n" not in head and len(head) == _HEADER_PEEK_BYTES:
+                raise ValueError(
+                    f"CSV header longer than {_HEADER_PEEK_BYTES} bytes: {p}"
+                )
+            lines[p.toString()] = head.split(b"\n", 1)[0].decode("utf-8")
+    if not lines:
         raise FileNotFoundError(f"no CSV files under {path}")
-    stream = fs.open(first)
-    try:
-        # One buffered JVM-side read of the first ≤1 MiB (py4j passes
-        # byte[] BY VALUE, so a read(arr) fill is invisible to Python
-        # and a byte-per-call loop costs one JVM round-trip per char —
-        # instead bound the stream JVM-side and ship the bytes once).
-        gw = spark.sparkContext._gateway
-        bounded = gw.jvm.org.apache.commons.io.input.BoundedInputStream(
-            stream, 1 << 20
-        )
-        head = bytes(gw.jvm.org.apache.commons.io.IOUtils.toByteArray(bounded))
-    finally:
-        stream.close()
-    line = head.split(b"\n", 1)[0].decode("utf-8").rstrip("\r")
-    return next(csv.reader(io.StringIO(line)))
-
-
-def _peek_csv_header_pure(spark: SparkSession, path: str) -> list[str]:
-    """Gateway-free header peek (Spark Connect compatible): list the
-    CSVs via the scan's own file index (``inputFiles`` — no data read),
-    then ``limit(1)`` over the LEXICOGRAPHICALLY FIRST file explicitly.
-    A bare ``text(path).limit(1)`` would silently skip an empty first
-    file and take the next file's header — diverging from the JVM path,
-    which opens the first file and fails loudly on it."""
-    import csv
-    import io
-
-    files = sorted(
-        spark.read.option("pathGlobFilter", "*.csv").text(path).inputFiles()
-    )
-    if not files:
-        raise FileNotFoundError(f"no CSV files under {path}")
-    rows = spark.read.text(files[0]).limit(1).collect()
-    if not rows:
-        raise ValueError(f"first CSV under {path} is empty: {files[0]}")
-    return next(csv.reader(io.StringIO(rows[0][0].rstrip("\r"))))
+    headers: dict[tuple[str, ...], list[str]] = {}
+    for f, line in lines.items():
+        if not line:
+            raise ValueError(f"empty CSV or header line: {f}")
+        header = tuple(next(csv.reader([line.rstrip("\r")])))
+        headers.setdefault(header, []).append(f)
+    return headers
 
 
 def read_historical_csv_dir(spark: SparkSession, path: str) -> DataFrame:
-    """All historical-transaction CSVs under ``path`` in one scan (S1+S2).
+    """All historical-transaction CSVs under ``path``, each file's
+    columns read BY NAME (S1+S2).
 
-    Columns are mapped BY POSITION: the first file's header names the
-    columns of every file, and the canonical 10 are then selected by
-    those names. So a vintage conforms only when its columns up to the
-    last canonical one sit where the first file has them; extra columns
-    must come after them (a vintage with ``remaining_lease`` before
-    ``resale_price`` would load shifted values, with no error). Vintages
-    whose columns are reordered or renamed need
-    ``read_historical_csv_files``, which reads each file by name. The
-    header is peeked driver-side (one line) and pinned as an all-string
-    schema — the same semantics as ``header=True`` schema inference,
-    which also applies the first file's header to every file — without
-    the extra listing and inference job.
+    Files are grouped by their header line (``_csv_headers``), and each
+    group is one scan with that header pinned as an all-string schema.
+    ``enforceSchema=False`` makes Spark check every file's own header
+    against it, so a file cannot load shifted values under another
+    file's column names. The canonical 10 columns are selected by name
+    from each group (extra columns drop; a missing one fails) and the
+    groups combine with ``unionByName``: the reference's per-file fold
+    (historical_data_transformation.py:13-27) at one scan per distinct
+    header, without a schema-inference job per file.
     """
-    cols = _peek_csv_header(spark, path)
-    schema = StructType([StructField(c, StringType(), True) for c in cols])
-    df = spark.read.csv(path, header=True, schema=schema)
-    return df.select(*RAW_HISTORICAL_COLUMNS)
-
-
-def read_historical_csv_files(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """Per-file read + name-based projection + unionByName fold — the
-    reference's vintage-conform strategy (historical_data_transformation.py:
-    13-27), for vintages whose columns are REORDERED or renamed (a single
-    positional directory read would misparse those).
-
-    Still fully parallel: each ``read.csv`` is a distributed scan and the
-    union is a plan-level concat (no shuffle); only the file *listing* is
-    driver-side, same as the reference's bucket listing.
-    """
-    out: DataFrame | None = None
-    for p in paths:
-        part = spark.read.csv(p, header=True).select(*RAW_HISTORICAL_COLUMNS)
-        out = part if out is None else out.unionByName(part)
-    if out is None:
-        raise ValueError("no CSV files given")
-    return out
+    parts = [
+        spark.read.csv(
+            files,
+            header=True,
+            enforceSchema=False,
+            schema=StructType([StructField(c, StringType(), True) for c in header]),
+        ).select(*RAW_HISTORICAL_COLUMNS)
+        for header, files in _csv_headers(spark, path).items()
+    ]
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 def read_listing_json(spark: SparkSession, path: str, schema: StructType) -> DataFrame:

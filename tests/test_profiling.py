@@ -25,17 +25,15 @@ def _plan(df) -> str:
 # snapshot gate no longer sees.
 
 
-def test_ind_survivors_share_one_antijoin(spark):
-    """All surviving IND candidates are decided by ONE logical
-    value-grain anti-join (tagged child values vs tagged parent
-    values) — never one join per survivor. Physically Catalyst may
-    distribute that join across the child-union's branches when the
-    parent side broadcasts (each branch then anti-joins map-side
-    against the SAME reused broadcast — zero shuffles), so the gate is
-    per-child-column, with the per-survivor fan-out as the failure
-    mode."""
+@pytest.mark.core
+def test_ind_survivors_share_one_scan_per_table(spark):
+    """All surviving IND candidates are decided by one value pass that
+    scans each table holding a surviving child or parent column once,
+    and joins nothing per candidate: no anti-join, whose pushdown below
+    a union of child columns copies the whole parent union into every
+    child branch."""
     P.clear_profile_caches()
-    survivors, child_cols = [], set()
+    survivors, tables = [], set()
     for _, ct, cc, pt, pc in P._ind_candidates():
         cmn, cmx, cndv = P._table_stats(spark, SMOKE_SF_DIR, ct).ind_stats[cc]
         pmn, pmx, pndv = P._table_stats(spark, SMOKE_SF_DIR, pt).ind_stats[pc]
@@ -48,14 +46,16 @@ def test_ind_survivors_share_one_antijoin(spark):
             and cndv <= pndv
         ):
             survivors.append((ct, cc, pt, pc))
-            child_cols.add((ct, cc))
-    assert len(survivors) > len(child_cols)  # gate must not be vacuous
-    plan = _plan(P._build_ind_discover(spark, SMOKE_SF_DIR))
-    n_anti = plan.count("LeftAnti")
-    assert 1 <= n_anti <= len(child_cols), (
-        f"{n_anti} anti-joins for {len(survivors)} survivors over "
-        f"{len(child_cols)} child columns"
+            tables |= {ct, pt}
+    assert len(survivors) > len(tables)  # gate must not be vacuous
+    found = P._ind_survivors(spark, SMOKE_SF_DIR)
+    assert [tuple(c[1:]) for c in found] == survivors
+    plan = _plan(P._ind_violations_frame(spark, SMOKE_SF_DIR, found))
+    assert plan.count("Scan parquet") == len(tables), (
+        f"{plan.count('Scan parquet')} scans for {len(survivors)} survivors "
+        f"over {len(tables)} tables"
     )
+    assert "LeftAnti" not in plan
 
 
 @pytest.mark.core
@@ -220,6 +220,7 @@ def test_ucc_pigeonhole_sound_for_nulls(spark, null_catalog):
     assert got == want
 
 
+@pytest.mark.core
 def test_ind_null_parent_guard(spark, null_catalog):
     """r8 ADVICE (low): an all-NULL parent used to raise TypeError in
     the range prune (None comparison) and ZeroDivisionError in the
@@ -324,7 +325,9 @@ def test_od_determinant_fusion_one_scan_and_window_per_table(spark):
             dets.add((table, a))
             survivors += 1
     assert survivors > len(dets) > len(tables)  # gates must not be vacuous
-    plan = _plan(P._build_od_discover(spark, SMOKE_SF_DIR))
+    plan = _plan(
+        P._od_counts_frame(spark, SMOKE_SF_DIR, P._od_survivors(spark, SMOKE_SF_DIR))
+    )
     assert plan.count("Scan parquet") == len(tables), (
         f"{plan.count('Scan parquet')} scans for {survivors} survivors "
         f"over {len(tables)} tables"
@@ -375,6 +378,7 @@ def od_catalog(spark, tmp_path, monkeypatch):
     P.clear_profile_caches()
 
 
+@pytest.mark.core
 def test_od_statuses_and_cross_engine(spark, od_catalog):
     """Every status is reachable and cross-engine exact: non-strict
     asc/desc verdicts honor determinant ties, NULL rows are excluded

@@ -6,6 +6,8 @@ from __future__ import annotations
 import os
 import re
 
+import pytest
+
 from conftest import TEST_SF_DIR
 from hdb_resale_price_data_pipeline_spark.sources import read_table
 from hdb_resale_price_data_pipeline_spark.sources.api import (
@@ -13,7 +15,7 @@ from hdb_resale_price_data_pipeline_spark.sources.api import (
     list_dataset_ids,
 )
 from hdb_resale_price_data_pipeline_spark.sources.readers import (
-    read_historical_csv_files,
+    read_historical_csv_dir,
 )
 from hdb_resale_price_data_pipeline_spark.sources.warehouse import (
     bucketed_join,
@@ -27,19 +29,25 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_csv_fold_handles_reordered_vintage(spark, tmp_path):
-    """A vintage with REORDERED columns must still conform by name."""
-    a = tmp_path / "a.csv"
-    a.write_text(
+def _write_reordered_vintages(d) -> str:
+    """Two CSV vintages in directory ``d``, the second with REORDERED
+    columns and an extra one."""
+    d.mkdir(exist_ok=True)
+    (d / "a.csv").write_text(
         "month,town,flat_type,block,street_name,storey_range,floor_area_sqm,flat_model,lease_commence_date,resale_price\n"
         "2017-03,BEDOK,4 ROOM,123,BEDOK NORTH ROAD,07 TO 09,93,New Generation,1985,550000\n"
     )
-    b = tmp_path / "b.csv"
-    b.write_text(  # resale_price first, extra column at the end
+    (d / "b.csv").write_text(  # resale_price first, extra column at the end
         "resale_price,month,town,flat_type,block,street_name,storey_range,floor_area_sqm,flat_model,lease_commence_date,remaining_lease\n"
         "650000,2020-06,ANG MO KIO,5 ROOM,302,ANG MO KIO AVE 3,01 TO 03,110,Improved,1992,71 years\n"
     )
-    df = read_historical_csv_files(spark, [str(a), str(b)])
+    return str(d)
+
+
+@pytest.mark.core
+def test_csv_fold_handles_reordered_vintage(spark, tmp_path):
+    """A vintage with REORDERED columns must still conform by name."""
+    df = read_historical_csv_dir(spark, _write_reordered_vintages(tmp_path))
     rows = {r.town: r for r in df.collect()}
     assert rows["BEDOK"].resale_price == "550000"
     assert rows["ANG MO KIO"].resale_price == "650000"  # by name, not position
@@ -340,30 +348,38 @@ class TestSparkConnectFallbacks:
         import fixtures
 
         from hdb_resale_price_data_pipeline_spark.sources.readers import (
-            _peek_csv_header,
+            _csv_headers,
         )
 
-        csv_dir = fixtures.write_historical_csvs(str(tmp_path))
-        jvm_cols = _peek_csv_header(spark, csv_dir)
-        no_gw_cols = _peek_csv_header(
-            self._NoGatewaySession(spark, []), csv_dir
-        )
-        assert no_gw_cols == jvm_cols and len(jvm_cols) > 0
+        def by_name(headers):
+            return [
+                (h, [os.path.basename(f) for f in files])
+                for h, files in headers.items()
+            ]
+
+        for csv_dir in (
+            fixtures.write_historical_csvs(str(tmp_path)),
+            _write_reordered_vintages(tmp_path / "reordered"),
+        ):
+            jvm_cols = by_name(_csv_headers(spark, csv_dir))
+            no_gw_cols = by_name(
+                _csv_headers(self._NoGatewaySession(spark, []), csv_dir)
+            )
+            assert no_gw_cols == jvm_cols and len(jvm_cols) > 0
 
     def test_csv_pipeline_without_gateway(self, spark, tmp_path):
         import fixtures
 
-        from hdb_resale_price_data_pipeline_spark.sources.readers import (
-            read_historical_csv_dir,
-        )
-
-        csv_dir = fixtures.write_historical_csvs(str(tmp_path))
-        expected = read_historical_csv_dir(spark, csv_dir)
-        got = read_historical_csv_dir(self._NoGatewaySession(spark, []), csv_dir)
-        assert got.columns == expected.columns
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, expected.collect())
-        )
+        for csv_dir in (
+            fixtures.write_historical_csvs(str(tmp_path)),
+            _write_reordered_vintages(tmp_path / "reordered"),
+        ):
+            expected = read_historical_csv_dir(spark, csv_dir)
+            got = read_historical_csv_dir(self._NoGatewaySession(spark, []), csv_dir)
+            assert got.columns == expected.columns
+            assert sorted(map(tuple, got.collect())) == sorted(
+                map(tuple, expected.collect())
+            )
 
     def test_shipping_uses_artifact_api_without_gateway(self, spark):
         from hdb_resale_price_data_pipeline_spark import shipping
