@@ -3,13 +3,13 @@
 from .readers import (
     read_historical_csv_dir,
     read_listing_json,
+    read_raw_table,
     read_table,
-    TESTDATA_TABLES,
 )
 
 __all__ = [
     "read_historical_csv_dir",
     "read_listing_json",
+    "read_raw_table",
     "read_table",
-    "TESTDATA_TABLES",
 ]

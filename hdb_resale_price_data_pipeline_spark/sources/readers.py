@@ -8,14 +8,16 @@ Reference equivalents (SURVEY.md §2.1):
   with that header pinned as an explicit schema, folded by name.
 - S3: multiline-JSON listing scan (propnex_transformation.py:110) — ours
   pins an explicit StructType instead of inferring.
-- S4: parquet scans (merge_dedup.py:52-53).
+- S4: parquet scans (merge_dedup.py:52-53). Ours infers each table's
+  schema once per (session, file fingerprint) and pins it on every
+  later scan, so a warm read runs no Spark job.
 """
 
 from __future__ import annotations
 
 import functools
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
@@ -25,22 +27,8 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from ..operators.index_cache import artifact, table_paths
 from ..schemas import RAW_HISTORICAL_COLUMNS
-
-# Tables the driver generates under /root/testdata/sf*/ (TESTDATA.md).
-TESTDATA_TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
 
 class SchemaContractError(TypeError):
     """A testdata table's logical schema violates the engine contract
@@ -139,21 +127,21 @@ def normalize_timestamps(df: DataFrame, name: str | None = None) -> DataFrame:
       engines see identical values.
     - TIMESTAMP passes through.
     """
+    columns = _normalized_columns(df.schema, name)
+    return df.withColumns(columns) if columns else df
+
+
+def _normalized_columns(schema: StructType, name: str | None) -> dict[str, Column]:
+    """The columns :func:`normalize_timestamps` replaces in a frame
+    with ``schema``, by name (one Project, columns keep their order)."""
     contract = TABLE_CONTRACTS.get(name or "", {})
-    exprs = []
-    changed = False
-    for f in df.schema.fields:
+    columns = {}
+    for f in schema.fields:
         if isinstance(f.dataType, TimestampNTZType):
-            exprs.append(F.col(f.name).cast("timestamp").alias(f.name))
-            changed = True
+            columns[f.name] = F.col(f.name).cast("timestamp")
         elif isinstance(f.dataType, LongType) and contract.get(f.name) == "timestamp":
-            exprs.append(
-                F.timestamp_micros(F.expr(f"`{f.name}` div 1000")).alias(f.name)
-            )
-            changed = True
-        else:
-            exprs.append(F.col(f.name))
-    return df.select(*exprs) if changed else df
+            columns[f.name] = F.timestamp_micros(F.expr(f"`{f.name}` div 1000"))
+    return columns
 
 
 def validate_contract(df: DataFrame, name: str) -> None:
@@ -185,6 +173,70 @@ def validate_contract(df: DataFrame, name: str) -> None:
 _TZ_OVERRIDE_WARNED = False
 
 
+def _pin_read_confs(spark: SparkSession) -> None:
+    """Pin the two session confs the normalization depends on (see
+    :func:`read_table`)."""
+    global _TZ_OVERRIDE_WARNED
+    for conf_key, conf_val in [
+        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+        ("spark.sql.session.timeZone", "UTC"),
+    ]:
+        try:
+            current = spark.conf.get(conf_key, None)
+            if current == conf_val:
+                continue
+            if (
+                conf_key == "spark.sql.session.timeZone"
+                and current not in (None, "Etc/UTC")
+                and not _TZ_OVERRIDE_WARNED
+            ):
+                import warnings
+
+                _TZ_OVERRIDE_WARNED = True
+                warnings.warn(
+                    f"read_table: overriding session timezone {current!r} -> "
+                    f"'UTC' (required for value-preserving TIMESTAMP_NTZ "
+                    f"normalization; warned once per process)",
+                    stacklevel=4,
+                )
+            spark.conf.set(conf_key, conf_val)
+        except Exception:
+            pass  # immutable in this session; the read fails loudly if needed
+
+
+def _pinned_scan(
+    spark: SparkSession, sf_dir: str, name: str
+) -> tuple[DataFrame, StructType]:
+    """The schema-pinned parquet scan of ``name`` and its raw schema.
+    See :func:`read_table`."""
+    _pin_read_confs(spark)
+    sources = table_paths(sf_dir, [name])
+    path = sources[0]
+
+    def infer() -> StructType:
+        raw = spark.read.parquet(path)
+        # raises, so a contract violation is never cached
+        validate_contract(normalize_timestamps(raw, name), name)
+        return raw.schema
+
+    schema = artifact(
+        spark,
+        f"sources.schema.{name}",
+        sources,
+        # changes what inference returns for µs timestamps
+        (spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", None),),
+        infer,
+    )
+    return spark.read.schema(schema).parquet(path), schema
+
+
+def read_raw_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """:func:`read_table` without the timestamp normalization: the
+    producer's physical types, for consumers that need the files' own
+    types (``streaming.events.table_stream`` stages them as they are)."""
+    return _pinned_scan(spark, sf_dir, name)[0]
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan of one driver-generated table (S4), with timestamp
     normalization + schema-contract validation at the boundary.
@@ -198,38 +250,29 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Overriding a non-UTC timezone warns ONCE PER PROCESS — conf.get
     cannot distinguish a deliberately-set value from the JVM's machine
     default, so a per-call warning would be pure noise on every
-    non-UTC developer box."""
-    for conf_key, conf_val in [
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-    ]:
-        try:
-            current = spark.conf.get(conf_key, None)
-            if current == conf_val:
-                continue
-            global _TZ_OVERRIDE_WARNED
-            if (
-                conf_key == "spark.sql.session.timeZone"
-                and current not in (None, "Etc/UTC")
-                and not _TZ_OVERRIDE_WARNED
-            ):
-                import warnings
+    non-UTC developer box.
 
-                _TZ_OVERRIDE_WARNED = True
-                warnings.warn(
-                    f"read_table: overriding session timezone {current!r} -> "
-                    f"'UTC' (required for value-preserving TIMESTAMP_NTZ "
-                    f"normalization; warned once per process)",
-                    stacklevel=2,
-                )
-            spark.conf.set(conf_key, conf_val)
-        except Exception:
-            pass  # immutable in this session; the read fails loudly if needed
-    df = normalize_timestamps(
-        spark.read.parquet(f"{sf_dir}/{name}.parquet"), name
-    )
-    validate_contract(df, name)
-    return df
+    SCHEMA PINNING: a scan without a schema makes Spark run a one-task
+    job to read the parquet footer (about 0.1 s on a warm 4-core local
+    session). So the first call infers the raw schema, validates its
+    normalized form against ``TABLE_CONTRACTS``, and stores the raw
+    schema as an ``operators.index_cache`` artifact, tag
+    ``sources.schema.<name>``, keyed on the session, the file's
+    ``(path, size, mtime)`` fingerprint and the
+    ``spark.sql.parquet.inferTimestampNTZ.enabled`` conf. Every later
+    call scans with that schema pinned (``spark.read.schema``) and
+    builds the normalizing select from it: no job, no schema round
+    trip. A rewritten file, a flipped conf or ``index_cache.clear()``
+    re-infers on the next call; the fingerprint check also refreshes
+    Spark's cached data over a rewritten file, so a persisted plan over
+    the old file is not served for the new one. A contract violation is
+    never cached: it raises on every call.
+
+    Each call builds a fresh relation, never a cached DataFrame, so a
+    query that reads one table twice gets distinct attribute ids."""
+    df, schema = _pinned_scan(spark, sf_dir, name)
+    columns = _normalized_columns(schema, name)
+    return df.withColumns(columns) if columns else df
 
 
 # Bound on one header peek: a header line that does not end within it

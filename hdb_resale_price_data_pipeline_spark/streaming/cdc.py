@@ -47,6 +47,7 @@ from pyspark.sql.functions import col
 
 from ..operators.index_cache import stage_dir, table_paths
 from ..operators.util import local_frame
+from ..sources.readers import read_raw_table
 
 CDC_BUCKETS = 8
 CDC_SLICES = 3  # one staged landing file per change wave → 3 micro-batches
@@ -75,7 +76,7 @@ def synth_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
       multi-update path (last write must win across waves).
     """
     base = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        read_raw_table(spark, sf_dir, "orders")
         .select(
             "o_orderkey",
             F.floor(col("o_totalprice") * 100 + F.lit(0.5))

@@ -37,6 +37,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.index_cache import artifact, stage_dir
+from ..sources.readers import read_raw_table
 
 WATERMARK = "2 hours"
 
@@ -126,9 +127,11 @@ def table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     files so the stream genuinely runs MULTIPLE micro-batches (one file
     per trigger) — a single landing file would collapse ingest into one
     batch and prove nothing about incremental arrival. The schema is
-    pinned from the parquet footer, never assumed."""
+    pinned from the parquet footer, never assumed: ``read_raw_table``
+    keeps the producer's types and, once the table's schema is known,
+    runs no inference job."""
     src = os.path.abspath(f"{sf_dir}/{table}.parquet")
-    batch = spark.read.parquet(src)
+    batch = read_raw_table(spark, sf_dir, table)
     stage = stage_dir(
         f"{table}_stream", [src], STREAM_SLICES,
         lambda d: batch.repartition(STREAM_SLICES).write.mode("overwrite").parquet(d),

@@ -137,6 +137,77 @@ def test_rewritten_sources_rebuild_cached_artifacts(spark, tmp_path):
     con.close()
 
 
+@pytest.mark.core
+def test_rewritten_table_is_not_served_from_a_persisted_plan(spark, tmp_path):
+    """A plain ``read_table`` query whose plan equals a persisted
+    frame's plan must read a table rewritten in place, not the data
+    Spark cached from the old file: the read's fingerprint check
+    refreshes Spark's cached data over the rewritten path."""
+    import shutil
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from conftest import SMOKE_SF_DIR
+
+    from hdb_resale_price_data_pipeline_spark.sources import read_table
+
+    sf_dir = str(tmp_path / "sf")
+    shutil.copytree(SMOKE_SF_DIR, sf_dir)
+    path = f"{sf_dir}/nation.parquet"
+
+    def query():
+        return read_table(spark, sf_dir, "nation").filter(F.col("n_regionkey") >= 0)
+
+    persisted = query().persist()
+    try:
+        assert persisted.count() == 25
+        pq.write_table(pq.read_table(path).slice(0, 5), path)
+        assert query().count() == 5
+    finally:
+        persisted.unpersist()
+
+
+@pytest.mark.core
+def test_rewritten_table_schema_is_inferred_again(spark, tmp_path):
+    """``read_table`` pins a table's schema per file fingerprint: a
+    column added in place shows up on the next read, and a rewrite that
+    breaks the table's contract raises on every read (a contract
+    failure is never cached)."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from conftest import SMOKE_SF_DIR
+
+    from hdb_resale_price_data_pipeline_spark.sources import read_table
+    from hdb_resale_price_data_pipeline_spark.sources.readers import (
+        SchemaContractError,
+    )
+
+    sf_dir = str(tmp_path / "sf")
+    shutil.copytree(SMOKE_SF_DIR, sf_dir)
+    path = f"{sf_dir}/nation.parquet"
+    rows = pq.read_table(path)
+    assert "n_extra" not in read_table(spark, sf_dir, "nation").columns
+
+    pq.write_table(rows.append_column("n_extra", pa.array(["x"] * rows.num_rows)), path)
+    got = read_table(spark, sf_dir, "nation").select("n_extra").collect()
+    assert [r.n_extra for r in got] == ["x"] * rows.num_rows
+
+    regionkey = rows.schema.get_field_index("n_regionkey")
+    pq.write_table(
+        rows.set_column(
+            regionkey, "n_regionkey", rows["n_regionkey"].cast(pa.string())
+        ),
+        path,
+    )
+    for _ in range(2):
+        with pytest.raises(SchemaContractError, match=r"nation\.n_regionkey: got string"):
+            read_table(spark, sf_dir, "nation")
+
+
 def test_clear_releases_every_family(spark, tmp_path):
     """``index_cache.clear()`` is complete by construction: after one
     artifact of every family is built — the query indexes and models,
@@ -206,6 +277,7 @@ def test_clear_releases_every_family(spark, tmp_path):
         "profiling.ucc",
         "profiling.od",
         "profiling.stats.orders",
+        "sources.schema.orders",
     }
     assert families <= held, families - held
     broadcasts = [

@@ -21,6 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hdb_resale_price_data_pipeline_spark.sources.readers import (
+    TABLE_CONTRACTS,
     SchemaContractError,
     normalize_timestamps,
     read_table,
@@ -167,6 +168,37 @@ def test_streaming_runs_identically_on_every_flavor(spark, tmp_path_factory):
         outs[flavor] = sorted(map(tuple, result.collect()))
     assert len(outs["ntz"]) > 0, "no finalized windows emitted"
     assert outs["ntz"] == outs["ltz"] == outs["nanos"]
+
+
+@pytest.mark.core
+def test_warm_read_table_runs_no_job(spark, flavor_dirs):
+    """Once a table's schema is pinned, ``read_table`` launches no Spark
+    job (a schema-less scan runs one to read the footer), and the pinned
+    scan returns the schema and rows of the inferred one: every sf0.001
+    table, and ``events`` in each producer ts flavor. Each call is a
+    fresh relation, with its own attribute ids."""
+    from conftest import SMOKE_SF_DIR
+
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def output(df):
+        return df._jdf.queryExecution().analyzed().output().toString()
+
+    cases = [(SMOKE_SF_DIR, name) for name in TABLE_CONTRACTS]
+    cases += [(d, "events") for d in flavor_dirs.values()]
+    for sf_dir, name in cases:
+        first = read_table(spark, sf_dir, name)
+        before = scheduler.nextJobId()
+        warm = read_table(spark, sf_dir, name)
+        assert scheduler.nextJobId() == before, (sf_dir, name)
+        assert output(warm) != output(first), (sf_dir, name)
+        want = normalize_timestamps(
+            spark.read.parquet(f"{sf_dir}/{name}.parquet"), name
+        )
+        assert warm.schema == want.schema, (sf_dir, name)
+        assert sorted(warm.collect(), key=repr) == sorted(
+            want.collect(), key=repr
+        ), (sf_dir, name)
 
 
 def test_unnormalizable_drift_fails_at_boundary_with_diagnosis(
