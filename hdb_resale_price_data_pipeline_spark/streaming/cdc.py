@@ -125,9 +125,10 @@ def stage_changelog_dir(spark: SparkSession, sf_dir: str) -> str:
 
 
 def changelog_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    schema = "o_orderkey bigint, seq int, op string, price_cents bigint"
+    """The staged changelog as a file stream, one change wave per
+    micro-batch, declared with the schema of the log it stages."""
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(synth_changelog(spark, sf_dir).schema)
         .format("parquet")
         .option("maxFilesPerTrigger", 1)
         .load(stage_changelog_dir(spark, sf_dir))

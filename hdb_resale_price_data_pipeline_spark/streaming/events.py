@@ -9,11 +9,12 @@ plumbing except the memory-sink helper.
 
 Streaming requires a declared schema up front, and the producer's
 physical ``ts`` flavor has drifted across testdata generations
-(TIMESTAMP(NANOS) → µs TIMESTAMP_NTZ). The schema is therefore picked
-from the parquet FOOTER (one driver-side metadata read, no data scan)
-and the column is normalized to the engine's single internal event-time
-type — TIMESTAMP, session TZ pinned to UTC — same contract as the batch
-reader (sources/readers.py).
+(TIMESTAMP(NANOS) → µs TIMESTAMP_NTZ). Every stream source therefore
+declares the schema the batch read boundary (sources/readers.py) infers
+once per file fingerprint and checks against ``TABLE_CONTRACTS``, and
+the events stream normalizes ``ts`` with the columns ``read_table``
+applies (``_normalized_columns``) — TIMESTAMP, session TZ pinned to UTC. A
+flavor the boundary cannot normalize raises its ``SchemaContractError``.
 """
 
 from __future__ import annotations
@@ -25,81 +26,22 @@ from typing import Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
-from pyspark.sql.types import (
-    DataType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampNTZType,
-    TimestampType,
-)
 
 from ..operators.index_cache import artifact, stage_dir
-from ..sources.readers import read_raw_table
+from ..sources.readers import _normalized_columns, _pinned_scan, read_raw_table
 
 WATERMARK = "2 hours"
 
 
-def _events_ts_flavor(events_parquet: str) -> str:
-    """Inspect the parquet footer for the physical type of ``ts``:
-    ``'nanos'`` (INT64 TIMESTAMP(NANOS) — Spark reads LONG under
-    ``nanosAsLong``), ``'ntz'`` (µs/ms, no tz), or ``'ltz'``."""
-    import pyarrow.parquet as pq
-
-    t = pq.read_schema(events_parquet).field("ts").type
-    import pyarrow as pa
-
-    if pa.types.is_integer(t):
-        return "nanos"  # raw INT64 epoch — treat as nanos like the batch path
-    if not pa.types.is_timestamp(t):
-        raise TypeError(f"events.ts: unsupported parquet type {t}")
-    if t.unit == "ns":
-        return "nanos"
-    return "ltz" if t.tz else "ntz"
-
-
-def events_raw_schema(ts_type: DataType) -> StructType:
-    return StructType(
-        [
-            StructField("event_id", LongType(), True),
-            StructField("ts", ts_type, True),
-            StructField("user_id", LongType(), True),
-            StructField("event_type", StringType(), True),
-            StructField("value", DoubleType(), True),
-            StructField("props", StringType(), True),
-        ]
-    )
-
-
-# Default declared schema (current testdata generation: µs TIMESTAMP_NTZ).
-EVENTS_RAW_SCHEMA = events_raw_schema(TimestampNTZType())
-
-
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream of the events table, ``ts`` normalized to
-    TIMESTAMP regardless of the producer's physical flavor."""
-    # Pin BOTH confs the ts normalization depends on — nanosAsLong for
-    # the INT64-nanos flavor and session TZ for the NTZ→TIMESTAMP cast
-    # (timezone-sensitive): a bare non-UTC driver session whose FIRST
-    # action is a streaming query must see the same event times as one
-    # that ran read_table (which pins UTC at sources/readers.py) first.
-    for k, v in (
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-    ):
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass
+    """File-source stream of the events table through the batch read
+    boundary: the declared schema is the raw schema ``read_table`` pins
+    (contract-checked, nanosAsLong/UTC pinned, no job once known) and
+    ``ts`` gets the same normalizing columns, built from that schema
+    in hand (no schema round trip), so the stream and ``read_table``
+    see the same columns and event times."""
     src = os.path.abspath(f"{sf_dir}/events.parquet")
-    flavor = _events_ts_flavor(src)
-    ts_type: DataType = {
-        "nanos": LongType(),
-        "ntz": TimestampNTZType(),
-        "ltz": TimestampType(),
-    }[flavor]
+    schema = _pinned_scan(spark, sf_dir, "events")[1]
     # The file stream source requires a *directory* (its basePath): stage
     # a landing directory holding a symlink to the table — the exact
     # layout a real ingest (files appended to a landing dir) would have.
@@ -107,16 +49,9 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "events_stream", [src], (),
         lambda d: os.symlink(src, os.path.join(d, "events.parquet")),
     )
-    raw = (
-        spark.readStream.schema(events_raw_schema(ts_type))
-        .format("parquet")
-        .load(stage)
-    )
-    if flavor == "nanos":
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if flavor == "ntz":
-        return raw.withColumn("ts", col("ts").cast("timestamp"))
-    return raw
+    raw = spark.readStream.schema(schema).format("parquet").load(stage)
+    columns = _normalized_columns(schema, "events")
+    return raw.withColumns(columns) if columns else raw
 
 
 STREAM_SLICES = 4  # staged landing files → micro-batches
@@ -304,16 +239,13 @@ def stream_view_purchase_join(events: DataFrame) -> DataFrame:
 # identical results (state partitioning never changes aggregate/dedup
 # semantics; the driver's bare 200-partition sessions already hash-match
 # the 32-partition bench). So derive the count the way AQE would: rows
-# from the parquet FOOTER (driver-side metadata, no data scan — the
-# _events_ts_flavor discipline) divided by a target state-rows-per-
-# partition, CLAMPED ABOVE by the session's configured
-# spark.sql.shuffle.partitions. On a production cluster the configured
-# value is large and the input is 100 TB, so the ceiling binds and
-# behavior is unchanged; the derivation only ever *lowers* the count
-# when the data provably fits in fewer stores.
-STREAM_STATE_ROWS_PER_PARTITION = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_ROWS", "65536")
-)
+# from the parquet FOOTER (driver-side metadata, no data scan) divided
+# by a target state-rows-per-partition, CLAMPED ABOVE by the session's
+# configured spark.sql.shuffle.partitions. On a production cluster the
+# configured value is large and the input is 100 TB, so the ceiling
+# binds and behavior is unchanged; the derivation only ever *lowers*
+# the count when the data provably fits in fewer stores.
+STREAM_STATE_ROWS_PER_PARTITION = 65536
 
 
 def _dir_parquet_rows(path: str, stop_at: int | None = None) -> int | None:
@@ -414,10 +346,17 @@ def run_stream_to_df(
             .start()
         )
         query.awaitTermination()
+        return spark.table(name)
     finally:
         if prior is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prior)
-    return spark.table(name)
+        # On a classic session ``spark.table`` resolves the view at once
+        # (the bound frame's plan holds the sink's data), so the view is
+        # dropped, on success and on failure. A Spark Connect frame
+        # resolves the name on the server at every run, so there the
+        # view stays for the session.
+        if getattr(spark, "_jvm", None) is not None:
+            spark.catalog.dropTempView(name)
 
 
 def stream_hll_registers(events: DataFrame) -> DataFrame:

@@ -19,7 +19,6 @@ from typing import Any, Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import TimestampType
 
 SESSION_GAP_US = 30 * 60 * 1_000_000
 
@@ -185,10 +184,10 @@ def split_events_stream(
 
     from ..operators.index_cache import stage_dir, table_paths
     from ..sources.readers import read_table
-    from .events import events_raw_schema
+
+    batch = read_table(spark, sf_dir, "events")
 
     def build(stage: str) -> None:
-        batch = read_table(spark, sf_dir, "events")
         cut = int(batch.selectExpr("percentile(unix_micros(ts), 0.5) AS m").first().m)
         for i, pred in enumerate(
             [f"unix_micros(ts) <= {cut}", f"unix_micros(ts) > {cut}"]
@@ -207,7 +206,7 @@ def split_events_stream(
         "stateful_stream", table_paths(sf_dir, ["events"]), n_splits, build
     )
     return (
-        spark.readStream.schema(events_raw_schema(TimestampType()))
+        spark.readStream.schema(batch.schema)
         .format("parquet")
         .option("maxFilesPerTrigger", "1")
         .load(stage)

@@ -118,15 +118,6 @@ def test_all_flavors_yield_identical_sessionize(spark, flavor_dirs):
     assert len(outs["ntz"]) > 0
 
 
-def test_streaming_flavor_detection(flavor_dirs):
-    from hdb_resale_price_data_pipeline_spark.streaming.events import (
-        _events_ts_flavor,
-    )
-
-    for flavor, d in flavor_dirs.items():
-        assert _events_ts_flavor(f"{d}/events.parquet") == flavor
-
-
 def test_streaming_runs_identically_on_every_flavor(spark, tmp_path_factory):
     """End-to-end streaming over each physical ts flavor: the watermarked
     tumbling-window query must emit the SAME non-empty finalized windows
@@ -162,6 +153,10 @@ def test_streaming_runs_identically_on_every_flavor(spark, tmp_path_factory):
             }
         )
         pq.write_table(table, str(d / "events.parquet"))
+        assert (
+            events_stream(spark, str(d)).schema
+            == read_table(spark, str(d), "events").schema
+        ), flavor
         result = run_stream_to_df(
             stream_hourly_tumbling(events_stream(spark, str(d))), spark
         )
@@ -214,6 +209,24 @@ def test_unnormalizable_drift_fails_at_boundary_with_diagnosis(
     )
     with pytest.raises(SchemaContractError, match=r"events\.ts: got string, expected timestamp"):
         read_table(spark, str(d), "events")
+
+
+@pytest.mark.core
+def test_events_stream_fails_at_the_read_boundary(spark, tmp_path):
+    """The events stream reads through the batch read boundary, so a
+    string ``ts`` raises the boundary's one-line diagnosis too, and
+    raises again on the next call: a contract failure is never cached."""
+    from hdb_resale_price_data_pipeline_spark.streaming import events_stream
+
+    _write_events(
+        str(tmp_path / "events.parquet"),
+        pa.array([str(u) for u in EPOCH_US], pa.string()),
+    )
+    for _ in range(2):
+        with pytest.raises(
+            SchemaContractError, match=r"events\.ts: got string, expected timestamp"
+        ):
+            events_stream(spark, str(tmp_path))
 
 
 def test_missing_contract_column_is_diagnosed(spark, tmp_path):

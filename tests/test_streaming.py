@@ -3,6 +3,8 @@ batch twins where windows are finalized (watermark semantics)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +17,12 @@ from hdb_resale_price_data_pipeline_spark.streaming import (
     stream_hourly_tumbling,
     stream_session_windows,
     stream_user_dedup,
+)
+
+# The events table's logical schema, as hand-built test streams write it.
+EVENTS_DDL = (
+    "event_id bigint, ts timestamp, user_id bigint, event_type string, "
+    "value double, props string"
 )
 
 
@@ -53,6 +61,34 @@ def test_stream_hourly_matches_batch_on_finalized_windows(spark):
     assert finalized_strict <= len(stream_out) <= finalized_lenient or (
         finalized_strict == finalized_lenient == len(stream_out)
     ), (len(stream_out), finalized_strict, finalized_lenient)
+
+
+def test_stream_runs_leave_no_sink_view(spark):
+    """On a classic session ``run_stream_to_df`` drops the memory
+    sink's session-wide temp view before it returns; the frame it
+    returns still reads the sink's rows. Under the Connect sweep the
+    package takes its Connect path, which keeps the view (a Connect
+    frame resolves the name at every run), so each run leaves one."""
+
+    def sink_views():
+        return {
+            t.name
+            for t in spark.catalog.listTables()
+            if t.name.startswith("stream_out_")
+        }
+
+    before = sink_views()
+    outs = [
+        run_stream_to_df(
+            stream_hourly_tumbling(events_stream(spark, TEST_SF_DIR)), spark
+        )
+        for _ in range(2)
+    ]
+    kept = 2 if os.environ.get("SPARK_GRAFT_CONNECT_SWEEP") else 0
+    assert len(sink_views() - before) == kept
+    first, second = (sorted(map(tuple, out.collect())) for out in outs)
+    assert len(first) > 0
+    assert first == second
 
 
 def test_stream_static_join_matches_batch(spark):
@@ -166,22 +202,20 @@ def test_watermark_finalized_windows_emit_exactly_once(spark, tmp_path):
     import shutil
 
     from pyspark.sql import Row
-    from pyspark.sql.types import TimestampType
 
     from hdb_resale_price_data_pipeline_spark.streaming import (
         run_stream_to_df,
         stream_hourly_tumbling,
     )
-    from hdb_resale_price_data_pipeline_spark.streaming.events import events_raw_schema
 
     stage = str(tmp_path / "late_src")
     os.makedirs(stage)
 
     def write_batch(i, rows):
         tmp = str(tmp_path / f"_w{i}")
-        spark.createDataFrame(rows, events_raw_schema(TimestampType())).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
+        spark.createDataFrame(rows, EVENTS_DDL).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(tmp)
         dest = os.path.join(stage, f"b{i}.parquet")
         shutil.move(glob.glob(f"{tmp}/part-*.parquet")[0], dest)
         os.utime(dest, (1_700_000_000 + i * 100,) * 2)
@@ -210,7 +244,7 @@ def test_watermark_finalized_windows_emit_exactly_once(spark, tmp_path):
     write_batch(2, [ev(4, 15), ev(5, 700)])
 
     raw = (
-        spark.readStream.schema(events_raw_schema(TimestampType()))
+        spark.readStream.schema(EVENTS_DDL)
         .format("parquet")
         .option("maxFilesPerTrigger", "1")
         .load(stage)
@@ -235,10 +269,8 @@ def test_event_time_timeout_closes_quiet_users_session(spark, tmp_path):
     import shutil
 
     from pyspark.sql import Row
-    from pyspark.sql.types import TimestampType
 
     from hdb_resale_price_data_pipeline_spark.streaming import run_stream_to_df
-    from hdb_resale_price_data_pipeline_spark.streaming.events import events_raw_schema
     from hdb_resale_price_data_pipeline_spark.streaming.stateful import (
         stateful_sessions_event_time,
     )
@@ -273,15 +305,15 @@ def test_event_time_timeout_closes_quiet_users_session(spark, tmp_path):
     ]
     for i, rows in enumerate(batches):
         tmp = str(tmp_path / f"_t{i}")
-        spark.createDataFrame(rows, events_raw_schema(TimestampType())).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
+        spark.createDataFrame(rows, EVENTS_DDL).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(tmp)
         dest = os.path.join(stage, f"b{i}.parquet")
         shutil.move(glob.glob(f"{tmp}/part-*.parquet")[0], dest)
         os.utime(dest, (1_700_000_000 + i * 100,) * 2)
 
     stream = (
-        spark.readStream.schema(events_raw_schema(TimestampType()))
+        spark.readStream.schema(EVENTS_DDL)
         .format("parquet")
         .option("maxFilesPerTrigger", "1")
         .load(stage)
@@ -531,14 +563,12 @@ def test_dedup_within_watermark_bounds_state_and_reemits(spark, tmp_path):
     import shutil
 
     from pyspark.sql import Row
-    from pyspark.sql.types import TimestampType
 
     from hdb_resale_price_data_pipeline_spark.streaming import (
         run_stream_to_df,
         stream_user_dedup,
     )
     from hdb_resale_price_data_pipeline_spark.streaming.events import (
-        events_raw_schema,
         stream_user_dedup_bounded,
     )
 
@@ -547,9 +577,9 @@ def test_dedup_within_watermark_bounds_state_and_reemits(spark, tmp_path):
 
     def write_batch(i, rows):
         tmp = str(tmp_path / f"_w{i}")
-        spark.createDataFrame(rows, events_raw_schema(TimestampType())).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
+        spark.createDataFrame(rows, EVENTS_DDL).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(tmp)
         dest = os.path.join(stage, f"b{i}.parquet")
         shutil.move(glob.glob(f"{tmp}/part-*.parquet")[0], dest)
         os.utime(dest, (1_700_000_000 + i * 100,) * 2)
@@ -576,7 +606,7 @@ def test_dedup_within_watermark_bounds_state_and_reemits(spark, tmp_path):
 
     def staged_stream():
         return (
-            spark.readStream.schema(events_raw_schema(TimestampType()))
+            spark.readStream.schema(EVENTS_DDL)
             .format("parquet")
             .option("maxFilesPerTrigger", "1")
             .load(stage)
