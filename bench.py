@@ -56,6 +56,17 @@ REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
 LOAD_QUIET_THRESHOLD = float(os.environ.get("SPARK_GRAFT_LOAD_QUIET", "4.0"))
 
 
+def _core_counts() -> dict[str, int]:
+    """The cores a run was taken at: the ``local[N]`` the session uses
+    (``SPARK_GRAFT_CPUS``, session.py's default 32 when unset) and the
+    CPUs this process may run on. Numbers taken at different counts
+    are not comparable."""
+    return {
+        "spark_graft_cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus_available": len(os.sched_getaffinity(0)),
+    }
+
+
 def _load_sample() -> float:
     try:
         return round(os.getloadavg()[0], 2)
@@ -151,6 +162,16 @@ def compare_runs(prior_path: str, current_path: str) -> None:
         prior = json.load(fh)
     with open(current_path) as fh:
         cur = json.load(fh)
+    cores = [
+        tuple(rec.get(k) for k in ("spark_graft_cpus", "cpus_available"))
+        for rec in (prior, cur)
+    ]
+    if None in cores[0] + cores[1] or cores[0] != cores[1]:
+        print(
+            "WARNING: core counts differ or are missing "
+            f"(spark_graft_cpus, cpus_available: prior {cores[0]}, "
+            f"current {cores[1]}); the ratios below compare different machines"
+        )
     cp, cc = prior.get("canary_sec", -1.0), cur.get("canary_sec", -1.0)
     canary_ratio = (cc / cp) if (cp and cc and cp > 0 and cc > 0) else 1.0
     pq, cq = prior.get("queries", {}), cur.get("queries", {})
@@ -203,6 +224,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
     load_before = _load_sample()  # BEFORE the JVM spins up any load
+    cores = _core_counts()
     spark = get_spark_session(app_name="hdb-pipeline-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -297,6 +319,7 @@ def main() -> None:
         "load_avg_after": load_after,
         "load_warning": load_warning,
         "canary_sec": canary_sec,
+        **cores,
     }
     # Per-query failures are recorded in the JSON (not an exit code):
     # the artifact must stay parseable and rc=0 even on a partial run.
@@ -334,6 +357,7 @@ def main() -> None:
         "load_avg_before": load_before,
         "load_warning": load_warning,
         "canary_sec": canary_sec,
+        **cores,
     }
     if errors:
         out["partial"] = True

@@ -2,8 +2,9 @@
 
 Everything here returns pyspark ``Column`` expressions (JVM-side,
 whole-stage-codegen friendly) — never row-at-a-time Python UDFs. The one
-deliberate exception is ``bedrooms.clean_bedrooms_pandas_udf``, kept as
-the Arrow-vectorized UDF-surface demonstration.
+deliberate exception is ``bedrooms.clean_bedrooms_pandas_udf``, the
+reference's UDF, kept as the parity reference of ``clean_bedrooms_expr``
+(declared in tests/test_package_reach.py).
 """
 
 from .cleaning import (

@@ -61,15 +61,6 @@ def _to_symbols(words: DataFrame) -> DataFrame:
 DRIVER_VOCAB_BUDGET = 2_000_000  # distinct words; ~a few hundred MB
 
 
-def bpe_train(
-    df: DataFrame, text_col: str, n_merges: int = 10, min_count: int = 2
-) -> list[tuple[str, str]]:
-    """Learn ``n_merges`` BPE merges; returns them in application
-    order. Stops early when no pair reaches ``min_count``."""
-    merges, _ = bpe_train_with_freqs(df, text_col, n_merges, min_count)
-    return merges
-
-
 def _driver_merge_loop(
     vocab: list[tuple[list[str], int]], n_merges: int, min_count: int
 ) -> tuple[list[tuple[str, str]], list[tuple[str, int]]]:
@@ -224,10 +215,11 @@ def bpe_train_with_freqs(
     min_count: int = 2,
     driver_budget_words: int = DRIVER_VOCAB_BUDGET,
 ) -> tuple[list[tuple[str, str]], list[tuple[str, int]]]:
-    """Like :func:`bpe_train`, but also returns the final PIECE
-    frequencies ``[(piece, freq)]`` (sorted by piece) derived from the
-    last working symbol table before it is released — the vocabulary a
-    tokenizer ships.
+    """Learn ``n_merges`` BPE merges (in application order; stops early
+    when no pair reaches ``min_count``) and return them together with
+    the final PIECE frequencies ``[(piece, freq)]`` (sorted by piece)
+    derived from the last working symbol table before it is released —
+    the vocabulary a tokenizer ships.
 
     The corpus is touched exactly ONCE either way. When the word-
     frequency table fits ``driver_budget_words`` (vocab-sized, so it

@@ -30,9 +30,6 @@ Scale design (the part that matters at 100 TB):
 
 from __future__ import annotations
 
-import functools
-import operator
-
 import numpy as np
 import pandas as pd
 
@@ -161,25 +158,6 @@ def bloom_bitset_words(eval_grams: DataFrame, gram_col: str = "gram") -> DataFra
         .groupBy("w")
         .agg(F.bit_or("bit").alias("bits"))
     )
-
-
-def bloom_probe_expr(g: Column, bloom: Column) -> Column:
-    """Expression-spec probe: True iff all K probe bits for gram ``g``
-    are set in the ``map<long, long>`` column ``bloom``. The readable
-    twin of the numpy probe (bit-identity pinned in tests) — NOT the
-    hot path: Spark map lookups scan entries linearly and lambda HOFs
-    run interpreted, which measured ~16× slower at the 16× corpus."""
-    h1 = g % BLOOM_M_BITS
-    h2 = 1 + (g % (BLOOM_M_BITS - 1))
-    conds = []
-    for j in range(BLOOM_K):
-        p = (h1 + F.lit(j) * h2) % BLOOM_M_BITS
-        bit = p % BLOOM_WORD_BITS
-        w = ((p - bit) / BLOOM_WORD_BITS).cast("long")  # exact: p < 2^21
-        word = F.coalesce(F.element_at(bloom, w), F.lit(0).cast("long"))
-        mask = F.element_at(_pow2_array(), (bit + 1).cast("int"))
-        conds.append(word.bitwiseAND(mask) != 0)
-    return functools.reduce(operator.and_, conds)
 
 
 def bloom_hits(vals: "np.ndarray", bloom: "np.ndarray") -> "np.ndarray":

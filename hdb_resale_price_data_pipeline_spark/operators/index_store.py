@@ -1,4 +1,6 @@
-"""Disk persistence for trained ANN indexes (IVF / IVF-PQ).
+"""Disk persistence for trained ANN indexes (IVF / IVF-PQ), plus the
+two-phase publish helpers the served streaming ER gate
+(streaming/linkage.py) lands its batches with.
 
 The round-4 gap: every trained index (coarse k-means codebook, PQ
 subspace codebooks, encoded corpus) lived only in the session-scoped
@@ -66,17 +68,6 @@ def _manifest(path: str) -> dict | None:
             return json.load(fh)
     except FileNotFoundError:
         return None
-
-
-def index_data_dir(path: str) -> str:
-    """Resolve the ACTIVE data root of a persisted index: the versioned
-    subdirectory the manifest points at (legacy unversioned layouts
-    resolve to ``path`` itself). Everything that touches index files —
-    loader, append, compaction, tests — goes through this, so a re-save
-    flip retargets them all at once."""
-    manifest = _manifest(path)
-    vdir = (manifest or {}).get("data_dir", ".")
-    return os.path.normpath(os.path.join(path, vdir))
 
 
 def save_ann_index(
@@ -210,21 +201,6 @@ def load_ann_index(
     return coarse, pq_cbs, encoded
 
 
-def append_ann_index(path: str, encoded_new: DataFrame) -> None:
-    """Index MAINTENANCE: append newly-ingested encoded vectors to the
-    persisted inverted lists (dynamic partition APPEND — only the
-    touched ``ivf_cid=`` directories gain files; existing lists'
-    files are never rewritten). The batch twin of what the streaming
-    ingest (streaming/embeddings.py) feeds per micro-batch via
-    ``foreachBatch``: vectors must arrive already assigned + encoded
-    with the STORED codebooks — re-training would orphan the existing
-    codes, so callers load codebooks via :func:`load_ann_index` and run
-    the same assign/encode passes the original build used."""
-    encoded_new.write.mode("append").partitionBy("ivf_cid").parquet(
-        f"{index_data_dir(path)}/inverted_lists"
-    )
-
-
 def publish_staged_partitions(
     stage: str, dst_root: str, partition_prefix: str, batch_prefix: str
 ) -> int:
@@ -243,8 +219,7 @@ def publish_staged_partitions(
     runs AFTER the new files are in place. Cross-FILE visibility is
     still not transactional — a concurrent reader during an append can
     observe a half-published batch; quiesce reads during streaming
-    appends for full consistency (same ordering contract as
-    ``compact_ann_index``). On HDFS the moves map to
+    appends for full consistency. On HDFS the moves map to
     ``FileSystem.rename``; on object stores use a manifest commit (the
     pattern Delta/Iceberg formalize). Returns files published."""
     published: dict[str, set[str]] = {}
@@ -285,9 +260,9 @@ def prune_batch_partition_files(
     consumer that READS the layout before publishing its batch (the
     served ER gate) must first erase its own batch's previous partial
     publish, or the replay reads its own output and computes different
-    results than the clean run did (r7 review finding). Publish-only
-    appenders (``append_ann_index_idempotent``) don't need this — their
-    deterministic-name overwrite converges without it."""
+    results than the clean run did (r7 review finding). A publish-only
+    appender does not need this — the deterministic-name overwrite of
+    :func:`publish_staged_partitions` converges without it."""
     removed = 0
     if not os.path.isdir(dst_root):
         return removed
@@ -300,90 +275,3 @@ def prune_batch_partition_files(
                 os.remove(os.path.join(full, f))
                 removed += 1
     return removed
-
-
-def append_ann_index_idempotent(
-    path: str, encoded_new: DataFrame, batch_id: int
-) -> int:
-    """EXACTLY-ONCE append for a streaming ``foreachBatch`` sink: a
-    micro-batch REPLAYED after a crash converges to the same file set
-    instead of duplicating rows (plain parquet ``append`` is
-    at-least-once — the r6 exactly-once note for the index path,
-    mirroring what ``load_day_partitioned`` gives the warehouse path
-    via partition overwrite).
-
-    Two-phase publish keyed by the checkpoint's stable ``batch_id``:
-
-    1. the batch lands in a staging dir (``_ingest/batch={id}``,
-       mode=overwrite — a replay restarts the stage cleanly);
-    2. :func:`publish_staged_partitions` moves each staged file into
-       its inverted list under a deterministic ``b{id}-NNNNN`` name
-       (atomic per-file overwrite, move-then-prune — see its docstring
-       for the replay-convergence and reader-visibility contract).
-
-    Either phase can crash at any point and the replay converges: the
-    per-list file set is a pure function of (batch_id, batch
-    contents). Returns the number of files published."""
-    root = index_data_dir(path)
-    lists_dir = f"{root}/inverted_lists"
-    stage = f"{root}/_ingest/batch={int(batch_id)}"
-    encoded_new.write.mode("overwrite").partitionBy("ivf_cid").parquet(stage)
-    published = publish_staged_partitions(
-        stage, lists_dir, "ivf_cid=", f"b{int(batch_id)}-"
-    )
-    shutil.rmtree(stage, ignore_errors=True)
-    return published
-
-
-def compact_ann_index(
-    spark: SparkSession,
-    path: str,
-    max_files_per_list: int = 4,
-    target_file_bytes: int = 128 << 20,
-) -> dict:
-    """Steady-state maintenance for a streamed-into index: every
-    micro-batch ``append_ann_index`` adds a file per touched list, and
-    probe latency at scale is footer/task overhead × file count. This
-    rewrites ONLY the lists whose file count exceeds their byte budget
-    (partition-selective, crash-safe staged copy — the
-    ``sources/compaction.compact_partitions_inplace`` machinery on the
-    ``ivf_cid`` layout); untouched lists stay byte-identical for
-    concurrent readers, and served results are unchanged.
-
-    Ordering contract with the idempotent streaming append: compact
-    only while ingest is quiesced (between ``availableNow`` runs). A
-    compaction folds ``b{id}-`` batch files into plain compacted files,
-    so a batch replay AFTER compaction would find nothing to delete and
-    re-add its rows — the checkpoint guarantees replays only happen for
-    batches whose commit never landed, which cannot be true of a batch
-    already folded by maintenance run at a quiesced point."""
-    from ..sources.compaction import compact_partitions_inplace
-
-    return compact_partitions_inplace(
-        spark,
-        f"{index_data_dir(path)}/inverted_lists",
-        "ivf_cid",
-        max_files_per_partition=max_files_per_list,
-        target_file_bytes=target_file_bytes,
-    )
-
-
-def probed_lists_scan(encoded: DataFrame, probe_ids: list[int]) -> DataFrame:
-    """The serving filter, spelled so it stays a partition-pruning
-    predicate: ``ivf_cid IN (...)`` over the partition column."""
-    return encoded.filter(col("ivf_cid").isin([int(p) for p in probe_ids]))
-
-
-def partition_prune_check(encoded: DataFrame, probe_ids: list[int]) -> bool:
-    """True iff the probe filter reaches the scan as a PartitionFilter
-    (classic session introspection — a test/diagnostic helper, not a
-    serving path; returns True unguarded under Connect where the plan
-    string is unavailable)."""
-    df = probed_lists_scan(encoded, probe_ids)
-    try:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    except Exception:
-        return True
-    return "PartitionFilters: [" in plan and "ivf_cid" in plan.split(
-        "PartitionFilters:", 1
-    )[1].split("]", 1)[0]

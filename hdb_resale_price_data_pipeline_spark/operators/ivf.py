@@ -31,34 +31,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 
-def _lit(v: float) -> str:
-    """Shortest round-trip repr — parses to the identical double in
-    Spark SQL and DuckDB."""
-    return repr(float(v))
-
-
 def _sq_norm(vals: list[float]) -> float:
     """Sequential Σv² — the same IEEE op order as the SQL folds."""
     acc = 0.0
     for v in vals:
         acc = acc + float(v) * float(v)
     return acc
-
-
-def dist_to_literal_centroid(emb_col: str, centroid: list[float]) -> str:
-    """Centroid affinity |c|² − 2⟨c, e⟩ (Spark SQL text).
-
-    Equals true L2² minus the centroid-independent |e|², so argmin is
-    unchanged — at half the expression size of the (e−c)² form (each
-    element referenced once) and with the |c|² part folded to a literal.
-    The DuckDB twin (``duck_ivf_dist``) computes the exact same ops, so
-    near-tie argmins cannot diverge.
-    """
-    terms = [
-        f"cast(element_at({emb_col}, {i}) AS double) * {_lit(v)}"
-        for i, v in enumerate(centroid, start=1)
-    ]
-    return f"({_lit(_sq_norm(centroid))} - 2.0 * ({' + '.join(terms)}))"
 
 
 def assign_to_codebook(
@@ -98,8 +76,7 @@ def assign_to_codebook(
         best_i = np.zeros(n, dtype="int32")
         for idx, (cent, sq) in enumerate(zip(cents, sq_norms)):
             # dot walked in dimension order: identical per-row IEEE op
-            # sequence to the literal `t1 + t2 + ...` chain and the
-            # DuckDB list_reduce fold.
+            # sequence to the DuckDB list_reduce fold.
             acc = mat[:, 0] * cent[0]
             for j in range(1, len(cent)):
                 acc = acc + mat[:, j] * cent[j]

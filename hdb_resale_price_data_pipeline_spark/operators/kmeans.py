@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
-from .ivf import _sq_norm, assign_to_codebook
+from .ivf import _sq_norm
 
 
 def _partial_sums(staged: DataFrame, cents: list[list[float]], dim: int) -> DataFrame:
@@ -134,29 +134,3 @@ def kmeans_fit(
         codebook = new_codebook
     base.unpersist()
     return codebook
-
-
-def kmeans_assign(df: DataFrame, emb_col: str, codebook: list[tuple[int, list[float]]]) -> DataFrame:
-    """Final assignment with the trained codebook (shuffle-free map)."""
-    staged = df.withColumn("_ed", col(emb_col).cast("array<double>"))
-    return assign_to_codebook(staged, "_ed", codebook).drop("_ed")
-
-
-def inertia(df: DataFrame, emb_col: str, codebook: list[tuple[int, list[float]]]) -> float:
-    """Σ min-distance² — the k-means objective (for convergence tests).
-
-    Computed from the affinity (|c|²−2⟨c,e⟩) plus |e|² so it's a true
-    squared distance."""
-    from .ivf import dist_to_literal_centroid
-
-    staged = df.withColumn("_ed", col(emb_col).cast("array<double>"))
-    dim = len(codebook[0][1])
-    sq_e = " + ".join(
-        f"cast(element_at(_ed, {i}) AS double) * cast(element_at(_ed, {i}) AS double)"
-        for i in range(1, dim + 1)
-    )
-    dists = ", ".join(dist_to_literal_centroid("_ed", cent) for _, cent in codebook)
-    total = staged.select(
-        F.expr(f"array_min(array({dists})) + ({sq_e})").alias("d2")
-    ).agg(F.sum("d2").alias("s")).first().s
-    return float(total)

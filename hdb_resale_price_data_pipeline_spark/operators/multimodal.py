@@ -27,9 +27,6 @@ from ..functions.hashing import MERSENNE_31
 
 FEATURE_SEEDS = [(131, 7), (137, 11), (139, 13), (149, 17)]
 
-# Schema of a multimodal asset table: opaque payload + typed metadata.
-ASSET_COLUMNS = ("asset_id", "content", "media_type", "metadata")
-
 
 def documents_as_assets(docs: DataFrame) -> DataFrame:
     """Build a binary asset table from the documents fixture: payload =
@@ -43,34 +40,25 @@ def documents_as_assets(docs: DataFrame) -> DataFrame:
     )
 
 
-def _poly_features(payload: bytes) -> list[float]:
-    """Deterministic payload fingerprint features: one polynomial fold
-    per seed, scaled to [0, 1). For ASCII payloads this equals the
-    char-code fold in functions/hashing.py — which is what makes the
-    DuckDB oracle for the Pandas-UDF path possible."""
-    feats = []
-    for a, b in FEATURE_SEEDS:
-        acc = b
-        for byte in payload:
-            acc = (acc * a + byte) % MERSENNE_31
-        feats.append(round(acc / MERSENNE_31, 9))
-    return feats
-
-
 def extract_features(assets: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads
     (``mapInPandas``: one pandas batch in, one out — never per-row
-    Python)."""
+    Python). Feature ``f{i}`` is a deterministic payload fingerprint:
+    the polynomial fold ``acc = (acc * a + byte) mod 2^31-1`` from
+    ``acc = b`` for the i-th ``(a, b)`` of ``FEATURE_SEEDS``, scaled to
+    [0, 1) and rounded to 9 places. For ASCII payloads this equals the
+    char-code fold in functions/hashing.py — which is what makes the
+    DuckDB oracle for this path possible."""
     from ..shipping import ensure_package_shipped
 
     ensure_package_shipped(assets.sparkSession)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Vectorized twin of _poly_features: the whole batch's payloads
-        # become ONE flat uint8 buffer, each seed's fold runs as ragged
-        # int64 arithmetic across all payloads at once (identical
-        # congruence and step order — same discipline as
-        # functions/arrow_text.py, ~20M/s-per-core Python loops avoided).
+        # The whole batch's payloads become ONE flat uint8 buffer, and
+        # each seed's fold runs as ragged int64 arithmetic across all
+        # payloads at once (identical congruence and step order — same
+        # discipline as functions/arrow_text.py, ~20M/s-per-core Python
+        # loops avoided).
         import numpy as np
 
         for pdf in it:

@@ -61,19 +61,3 @@ def pack_sequences(
             (col("_start") % capacity).alias("offset"),
         )
     )
-
-
-def sequence_stats(packed: DataFrame, group_col: str, capacity: int) -> DataFrame:
-    """Per-sequence fill statistics from ``pack_sequences`` output:
-    docs per sequence and fill ratio of the LAST document's end (a
-    sequence is full by construction except each group's final one)."""
-    return packed.groupBy(group_col, "seq_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.round(
-            F.least(
-                (F.max(col("offset") + col("n_tokens"))).cast("double") / capacity,
-                F.lit(1.0),
-            ),
-            4,
-        ).alias("fill_ratio"),
-    )

@@ -73,54 +73,3 @@ def daily_from_hourly(rollup: DataFrame) -> DataFrame:
             ).alias("avg_value"),
         )
     )
-
-
-def write_rollup(rollup: DataFrame, path: str) -> None:
-    """Materialize the hourly table, day-partitioned for pruning and
-    partition-scoped refresh."""
-    from ..sources.warehouse import load_day_partitioned
-
-    load_day_partitioned(
-        rollup.withColumn(
-            "day", F.date_trunc("day", col("hour_start")).cast("date")
-        ),
-        path,
-        "day",
-    )
-
-
-def refresh_rollup(spark, path: str, new_events: DataFrame) -> None:
-    """Incremental maintenance: fold a batch of new/late events into the
-    materialized hourly table, touching only the days the batch lands
-    in.
-
-    Because every rollup column is ALGEBRAIC (counts and decimal sums),
-    a late batch never needs the raw history: aggregate the batch to
-    hourly deltas, read back only the affected day partitions, and
-    re-sum existing rows with deltas per (hour, event_type) — decimal
-    addition is order-free, so refresh-then-query is bit-identical to
-    a full rebuild (asserted in tests/test_rollup.py). Cost is
-    O(affected days + batch), the property that keeps a 100 TB events
-    rollup maintainable by a small nightly job."""
-    delta = build_hourly_rollup(new_events).withColumn(
-        "day", F.date_trunc("day", col("hour_start")).cast("date")
-    )
-    affected = [r[0] for r in delta.select("day").distinct().collect()]
-    if not affected:
-        return
-    existing = spark.read.parquet(path).filter(col("day").isin(affected))
-    merged = (
-        existing.unionByName(delta)
-        .groupBy("hour_start", "event_type", "day")
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("sum_value").alias("sum_value"),
-        )
-    )
-    (
-        merged.repartition("day")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("day")
-        .parquet(path)
-    )

@@ -182,10 +182,6 @@ def pii_counts_on(c: Column) -> list[Column]:
     ]
 
 
-def pii_counts(text_col: str) -> list[Column]:
-    return pii_counts_on(F.col(text_col))
-
-
 def redact_pii_col(c: Column) -> Column:
     """Replace every PII match with its type token, in pattern order,
     over an arbitrary string expression."""
@@ -195,12 +191,8 @@ def redact_pii_col(c: Column) -> Column:
     return out
 
 
-def redact_pii(text_col: str) -> Column:
-    return redact_pii_col(F.col(text_col))
-
-
 def redact_pii_duck(text_col: str) -> str:
-    """DuckDB twin of ``redact_pii`` (same patterns, same order)."""
+    """DuckDB twin of ``redact_pii_col`` (same patterns, same order)."""
     out = text_col
     for _, pat, token in PII_PATTERNS:
         out = f"regexp_replace({out}, '{pat}', '{token}', 'g')"

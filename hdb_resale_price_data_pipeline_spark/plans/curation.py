@@ -45,7 +45,6 @@ from pyspark.sql.window import Window
 from ..functions import hashing as H
 from ..operators import text as T
 from ..operators.components import connected_components
-from ..operators.decontam import doc_shingle_hashes  # noqa: F401 — oracle twin spec
 from ..operators.dedup import (
     minhash_band_pairs,
     verify_jaccard_pairs,
@@ -85,72 +84,12 @@ def eval_predicate() -> Column:
     return col("doc_id") % EVAL_MOD == 0
 
 
-def curate_stages(docs: DataFrame) -> dict[str, DataFrame]:
-    """Run the pipeline, returning every intermediate stage keyed by
-    name (the data products; ``curation_report`` aggregates them)."""
-    corpus = docs.filter(~eval_predicate()).select("doc_id", "text", "lang")
-
-    quality = corpus.filter(T.quality_score("text") >= QUALITY_MIN)
-
-    w = Window.partitionBy(F.lower(col("text"))).orderBy("doc_id")
-    exact = (
-        quality.withColumn("_rk", F.row_number().over(w))
-        .filter(col("_rk") == 1)
-        .drop("_rk")
-    )
-
-    pairs = minhash_band_pairs(
-        exact, "doc_id", "text", NEARDUP_SHINGLE, NEARDUP_BANDS, NEARDUP_ROWS
-    )
-    verified = verify_jaccard_pairs(
-        pairs, exact, "doc_id", "text", NEARDUP_THRESHOLD
-    )
-    components = connected_components(verified)  # (node, component), tiny
-    neardup = (
-        exact.join(
-            F.broadcast(components), exact.doc_id == components.node, "left"
-        )
-        .filter(col("component").isNull() | (col("component") == col("doc_id")))
-        .select("doc_id", "text", "lang")
-    )
-
-    eval_grams = (
-        docs.filter(eval_predicate())
-        .select(F.explode(_grams()).alias("gram"))
-        .distinct()
-    )
-    contaminated = (
-        neardup.select("doc_id", F.explode(_grams()).alias("gram"))
-        .join(F.broadcast(eval_grams), "gram", "left_semi")
-        .select("doc_id")
-        .distinct()
-    )
-    clean = neardup.join(contaminated, "doc_id", "left_anti")
-
-    bucket = T.fingerprint("text") % 100
-    split = clean.withColumn(
-        "split",
-        F.when(bucket < SPLIT_TRAIN, "train")
-        .when(bucket < SPLIT_VAL, "val")
-        .otherwise("test"),
-    )
-
-    return {
-        "raw": corpus,
-        "quality": quality,
-        "exact": exact,
-        "neardup": neardup,
-        "clean": clean,
-        "split": split,
-    }
-
-
 def curation_flags(
     docs: DataFrame, verified_pairs: DataFrame | None = None
 ) -> DataFrame:
     """One row per corpus doc with a boolean per pipeline stage — the
-    lineage-accounting form of the pipeline. Unlike chaining filtered
-    frames (``curate_stages``), every stage verdict lands in ONE frame,
+    lineage-accounting form of the pipeline. Unlike chaining one
+    filtered frame per stage, every stage verdict lands in ONE frame,
     so the whole report needs one aggregation over one pass of the
     corpus scan (plus two corpus-independent SMALL side products — the
     near-dup loser set and the contaminated-id set — broadcast back).
@@ -522,29 +461,3 @@ def curation_report(
     inside ``curation_flags`` — see the comment there; ``verified_pairs``
     is the optional shared MinHash pair list (see ``curation_flags``)."""
     return _report_from_flags(curation_flags(docs, verified_pairs=verified_pairs))
-
-
-def export_curated(
-    docs: DataFrame, path: str, rows_per_shard: int = 100_000
-) -> dict[str, dict]:
-    """Terminal stage: materialize the curated corpus as training
-    shards — per split, deterministically hash-shuffled, size-bounded
-    parquet with a manifest (sources/export.py). The flags frame is
-    persisted for the duration (each split filter re-reads it; at a
-    real deployment this is the checkpoint a curation run would land
-    anyway) and unpersisted after. Returns per-split manifests."""
-    from ..sources.export import export_shuffled_shards
-
-    flags = curation_flags(docs).persist()
-    try:
-        manifests = {}
-        for split in ("train", "val", "test"):
-            part = flags.filter(col("split") == split).select(
-                "doc_id", "text", "lang"
-            )
-            manifests[split] = export_shuffled_shards(
-                part, f"{path}/{split}", rows_per_shard
-            )
-        return manifests
-    finally:
-        flags.unpersist()

@@ -410,7 +410,8 @@ GROUP BY 1, 2
 
 def q_events_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of the stream-stream attribution join
-    (streaming/events.stream_view_purchase_join): every (purchase, view)
+    (the matched rows of streaming/events.stream_view_purchase_outer,
+    served as ``stream_attribution_join``): every (purchase, view)
     pair by the same user with the view in the 30 minutes before the
     purchase. Equi-join on user_id with a residual time-range predicate
     — one shuffle on the join key; the time bound is applied post-match,

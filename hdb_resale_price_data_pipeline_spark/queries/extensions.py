@@ -427,9 +427,7 @@ QUERIES: dict[str, QuerySpec] = {
 # — the strictly-more-general plan — runs once per (session, dataset)
 # and persists, exactly like the graph family's _knn_edges: in
 # production this is the materialized attribution table both consumers
-# read, not two re-runs of the same stream. The inner operator
-# (streaming/events.stream_view_purchase_join) remains independently
-# tested in tests/test_streaming.py.
+# read, not two re-runs of the same stream.
 @cached("extensions.attribution", ("events",))
 def _attribution_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.events import stream_view_purchase_outer

@@ -390,10 +390,9 @@ def q_text_corpus_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksum. Each side is projected to ``(doc_id, fingerprint)``
     BEFORE the full-outer join, so the join ships 16 bytes per doc
     regardless of document size, and the single doc_id shuffle
-    disappears entirely if both snapshots are bucketed on doc_id
-    (sources/warehouse.write_bucketed). Text is compared by the
-    rolling-hash fingerprint, not bytes — the same normalization the
-    dedup family uses."""
+    disappears entirely if both snapshots are bucketed on doc_id. Text
+    is compared by the rolling-hash fingerprint, not bytes — the same
+    normalization the dedup family uses."""
     docs = widen(t(spark, sf_dir, "documents"))
     fp = T.fingerprint("text")
     v1 = docs.filter(col("doc_id") % 17 != DIFF_DROP_V1).select(
@@ -1316,7 +1315,7 @@ FROM documents d LEFT JOIN agg a USING (doc_id)
 
 
 def _bpe_cte_parts(scored: bool = False) -> list[str]:
-    """Shared BPE-unroll CTE prefix (DuckDB twin of ``bpe_train``):
+    """Shared BPE-unroll CTE prefix (DuckDB twin of ``bpe_train_with_freqs``):
     w0/s0 plus one (p, m, s) layer per merge, ending with ``perword``
     (word → final pieces, with cnt) and ``docw`` (doc → ordered words).
 
@@ -1338,8 +1337,8 @@ def _bpe_cte_parts(scored: bool = False) -> list[str]:
     replacement re-flanks the merged symbol so chained pairs (a,b,a,b)
     both merge. A layer whose best pair falls under min_count=2 (or
     whose pair set is empty) degrades to an impossible pattern
-    (a=b=U), which reproduces ``bpe_train``'s early break as a no-op
-    tail. Consumed by ``_bpe_learn_oracle`` and
+    (a=b=U), which reproduces ``bpe_train_with_freqs``'s early break as
+    a no-op tail. Consumed by ``_bpe_learn_oracle`` and
     ``_bpe_encode_ids_oracle`` (same discipline as the shared
     Lloyd-unroll prefix in queries/similarity.py)."""
     from ..operators.bpe import END
@@ -1397,7 +1396,7 @@ m{i} AS (
             argmax = f"""m{i} AS (
   -- aggregate form: ALWAYS one row, even when p{i} is empty (every
   -- word fully merged) — an empty m{i} would CROSS JOIN the whole
-  -- vocabulary away; bpe_train's break becomes a no-op pattern instead
+  -- vocabulary away; the early break becomes a no-op pattern instead
   SELECT coalesce(max(CASE WHEN rn = 1 AND n >= 2 THEN a END), chr(31)) AS a{i},
          coalesce(max(CASE WHEN rn = 1 AND n >= 2 THEN b END), chr(31)) AS b{i}
   FROM (SELECT a, b, n, row_number() OVER (ORDER BY n DESC, a, b) AS rn
@@ -1433,8 +1432,9 @@ docw AS (
 
 
 def _bpe_learn_oracle() -> str:
-    """DuckDB twin of ``bpe_train`` + ``bpe_apply``: the shared unroll
-    prefix (see ``_bpe_cte_parts``) plus per-doc piece re-assembly."""
+    """DuckDB twin of ``bpe_train_with_freqs`` + ``bpe_apply``: the
+    shared unroll prefix (see ``_bpe_cte_parts``) plus per-doc piece
+    re-assembly."""
     body = ",\n".join(_bpe_cte_parts())
     return f"""
 WITH {body},
@@ -3082,7 +3082,6 @@ LOCAL_QUERIES["text_vocab_coverage"] = QuerySpec(
 # --- span corruption (T5-style) -----------------------------------------------
 
 SPAN_RATE = 4  # % of positions that OPEN a 3-token corruption span
-SPAN_LEN = 3
 SPAN_HEAD = 20
 
 # deterministic per-(doc, position) span-start predicate — same shape as
@@ -3117,8 +3116,8 @@ def _span_start(pos: str, doc: str, div: str) -> str:
 
 def q_text_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Span-corruption training-example construction (T5-style): open a
-    corruption span at ~{SPAN_RATE}% of token positions, each span
-    masking {SPAN_LEN} tokens (overlaps merge); the encoder input keeps
+    corruption span at ~4% of token positions, each span
+    masking 3 tokens (overlaps merge); the encoder input keeps
     the uncorrupted tokens with one '<X>' sentinel per span, the decoder
     target is the masked-out tokens. Deterministic — spans are a pure
     function of (doc_id, position), so retries/re-shards regenerate the

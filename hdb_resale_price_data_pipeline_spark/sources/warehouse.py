@@ -1,22 +1,9 @@
-"""Warehouse layout helpers: partitioned + bucketed storage (SURVEY.md
-§2.2 K2 and the co-located-join scale path).
-
-- ``write_partitioned``: date/key-partitioned parquet → partition
-  pruning on read (the Spark-native equivalent of the reference's
-  day-partitioned BigQuery tables, dags/pipeline.py:231-234).
-- ``write_bucketed``: bucketBy + sortBy saved tables. Two tables
-  bucketed on the same key by the same count join WITHOUT a shuffle —
-  at 100 TB this converts the nightly fact⋈fact join from the dominant
-  shuffle into a local zip per bucket.
-"""
+"""Warehouse load (SURVEY.md §2.2 K2): the day-partitioned parquet
+write the daily DAG (plans/runner.run_all) lands its outputs with."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
+from pyspark.sql import DataFrame
 
 
 def load_day_partitioned(df: DataFrame, path: str, partition_col: str) -> None:
@@ -45,36 +32,3 @@ def load_day_partitioned(df: DataFrame, path: str, partition_col: str) -> None:
         .partitionBy(partition_col)
         .parquet(path)
     )
-
-
-def read_warehouse(spark: SparkSession, path: str) -> DataFrame:
-    """Read a day-partitioned warehouse table with SCHEMA EVOLUTION:
-    ``mergeSchema`` unions the column sets across partition vintages,
-    so a later daily load that added a column neither hides it (the
-    default read samples one footer) nor breaks earlier partitions
-    (rows from pre-evolution days surface NULL in the new column).
-    At 100 TB footer-merging costs one pass over file METADATA only —
-    it never reads row groups — and is the price of letting producers
-    evolve without a coordinated table rewrite."""
-    return spark.read.option("mergeSchema", "true").parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int = 16,
-    sort: bool = True,
-) -> None:
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, bucket_col)
-    if sort:
-        writer = writer.sortBy(bucket_col)
-    writer.saveAsTable(table_name)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str, how: str = "inner"
-) -> DataFrame:
-    left = spark.table(left_table)
-    right = spark.table(right_table)
-    return left.join(right, on=on, how=how)

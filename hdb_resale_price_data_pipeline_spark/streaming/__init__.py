@@ -2,8 +2,8 @@
 
 The reference has no streaming surface at all. These build the
 ``events`` analytics as real ``readStream`` pipelines: tumbling /
-sliding / session windows with watermark late-data handling, streaming
-dedup, and a foreachBatch-style sink. Batch twins with DuckDB oracles
+sliding / session windows with watermark late-data handling and
+streaming dedup. Batch twins with DuckDB oracles
 live in ``queries/events.py``; the streaming versions are checked
 rows-only (no SQL oracle for incremental execution).
 """

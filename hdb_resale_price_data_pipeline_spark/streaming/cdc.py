@@ -30,8 +30,7 @@ Design for 100 TB:
   resurrect the row — the r7 review finding).
 - **Tombstone GC is a compaction concern, not an apply concern:**
   rewrite a bucket dropping tombstones whose seq every consumer has
-  passed (the ``compact_partitions_inplace`` machinery on the bucket
-  layout); the apply loop never needs to.
+  passed; the apply loop never needs to.
 - **Within-batch collapse first.** A batch may carry several changes
   for one key; only the max-seq change per key enters the merge (one
   batch-sized window), so the join is one row per (key, side).

@@ -7,9 +7,7 @@ as it arrives (map-only — no watermark, no state) and routes it
 keep/review/drop BEFORE it ever reaches the corpus, so downstream
 dedup/decontamination work only on plausible documents. At 100 TB
 the gate is embarrassingly parallel: every micro-batch is a
-partition-parallel scan + codegen projection, and the same
-``load_day_partitioned`` sink used by the batch pipelines gives
-exactly-once day-partitioned landing (streaming/sink.py).
+partition-parallel scan + codegen projection.
 
 The documents arrive through ``streaming/events.table_stream``: the
 landing dir is staged by ``operators/index_cache.stage_dir``, keyed on

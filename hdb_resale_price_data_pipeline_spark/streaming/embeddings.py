@@ -12,11 +12,7 @@ emits every row and the batch-twin oracle (coarse-assignment CTE over
 the Lloyd unroll) is exact. The vectors arrive through
 ``streaming/events.table_stream(spark, sf_dir, "embeddings")``.
 
-At 100 TB the sink side of this stream is the ivf_cid-partitioned
-layout of ``operators/index_store`` (``foreachBatch`` →
-``partitionBy("ivf_cid")`` append): arriving vectors extend exactly
-the inverted lists a cold-started server partition-prunes to. The
-affinity to the assigned centroid is emitted quantized
+The affinity to the assigned centroid is emitted quantized
 (``floor(aff × grid)``) — the same integer-grid discipline as
 ``emb_outliers`` — so the ingest gate can ALSO threshold drift/garbage
 vectors against per-cluster bounds without any cross-engine float
@@ -28,48 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
-
-
-def stream_append_to_ann_index(
-    vecs: DataFrame,
-    store_path: str,
-    coarse: list[tuple[int, list[float]]],
-    pq_codebooks: list[list[list[float]]],
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """The module docstring's sink, executed: a ``foreachBatch`` stream
-    that assigns + PQ-encodes each arriving micro-batch with the STORED
-    codebooks (never retrains — retraining would orphan existing codes)
-    and publishes it into the persisted ``ivf_cid``-partitioned
-    inverted lists via the EXACTLY-ONCE two-phase append
-    (``operators/index_store.append_ann_index_idempotent`` — replays
-    keyed by the checkpoint's stable batch_id converge instead of
-    duplicating). Map-only per batch: codebooks ride the closure,
-    zero shuffles; the landing write is the only disk work. Returns
-    the StreamingQuery (caller awaits)."""
-    from ..operators.index_store import append_ann_index_idempotent
-    from ..operators.ivf import assign_to_codebook
-    from ..operators.pq import pq_encode
-
-    def _publish_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        encoded = pq_encode(
-            assign_to_codebook(batch_df, "embedding", coarse),
-            "embedding",
-            pq_codebooks,
-        )
-        append_ann_index_idempotent(store_path, encoded, batch_id)
-
-    writer = (
-        vecs.writeStream.foreachBatch(_publish_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_ivf_ingest(

@@ -133,25 +133,6 @@ def stream_user_dedup(events: DataFrame) -> DataFrame:
     )
 
 
-def stream_user_dedup_bounded(events: DataFrame) -> DataFrame:
-    """Bounded-state streaming dedup (``dropDuplicatesWithinWatermark``):
-    the variant a FOREVER-RUNNING stream needs. Plain ``dropDuplicates``
-    keeps every key's state until the query dies — on an unbounded key
-    domain (user × type here is small; think event_id or URL at 100 TB)
-    the state store grows without limit. WithinWatermark guarantees
-    dedup only among duplicates arriving inside the watermark horizon
-    and EVICTS key state once the watermark passes, bounding the store
-    by the horizon's key arrival rate. The trade: a duplicate arriving
-    later than the horizon re-emits — which is the correct contract for
-    ingest dedup where upstream retries cluster in time (exactly the
-    at-least-once-delivery case this exists for)."""
-    return (
-        events.withWatermark("ts", WATERMARK)
-        .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-        .select("event_id", "user_id", "event_type")
-    )
-
-
 def stream_static_enrich(events: DataFrame, nation: DataFrame) -> DataFrame:
     """Stream-static broadcast enrichment: each streaming event joins a
     STATIC dimension (the nation table, keyed by ``user_id % 25``) —
@@ -174,59 +155,6 @@ def stream_static_enrich(events: DataFrame, nation: DataFrame) -> DataFrame:
 
 
 ATTRIBUTION_HORIZON_MIN = 30
-
-
-def stream_view_purchase_join(events: DataFrame) -> DataFrame:
-    """Stream-stream inner join with event-time bounds: attribute each
-    purchase to every view by the same user in the preceding 30 minutes.
-
-    Both sides are watermarked and the join condition carries a closed
-    time range on the two event-time columns — that is what lets Spark
-    evict buffered state (a view older than watermark + horizon can
-    never match a future purchase), so state stays bounded on an
-    unbounded stream. Without the range the state store grows forever;
-    with it this is the canonical scalable attribution join.
-
-    Emits one row per (purchase, attributing view) pair; the batch twin
-    (queries/events.q_events_attribution_join) is oracle-checked and the
-    streaming/batch results are asserted identical in
-    tests/test_streaming.py.
-    """
-    views = (
-        events.where(col("event_type") == "view")
-        .select(
-            col("event_id").alias("view_id"),
-            col("user_id"),
-            col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", WATERMARK)
-    )
-    purchases = (
-        events.where(col("event_type") == "purchase")
-        .select(
-            col("event_id").alias("purchase_id"),
-            col("user_id").alias("p_user_id"),
-            col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", WATERMARK)
-    )
-    return views.join(
-        purchases,
-        F.expr(
-            f"""
-            user_id = p_user_id
-            AND purchase_ts >= view_ts
-            AND purchase_ts <= view_ts + interval {ATTRIBUTION_HORIZON_MIN} minutes
-            """
-        ),
-    ).select(
-        "purchase_id",
-        "view_id",
-        "user_id",
-        (F.unix_micros(col("purchase_ts")) - F.unix_micros(col("view_ts"))).alias(
-            "micros_to_purchase"
-        ),
-    )
 
 
 # --- scale-adaptive state partitioning (r9 optimization round) ----------------
@@ -436,15 +364,16 @@ def stream_view_purchase_outer(events: DataFrame) -> DataFrame:
     convert", emitted incrementally from bounded state instead of by an
     end-of-day batch anti-join.
 
-    Same watermarks + closed event-time range as the inner variant, so
-    state eviction (and with it outer emission) is guaranteed; unmatched
-    rows for views still inside the horizon at end-of-stream are
-    correctly withheld (they are not yet provably unconverted) — the
-    batch twin encodes exactly that end-of-stream-watermark rule, making
-    the result deterministic and value-oracled. Nullable join outputs
-    are coalesced to -1 sentinels: both engines then emit non-null
-    BIGINTs (a NULL bigint surfaces as a float column in pandas and
-    breaks dtype-sensitive hashing)."""
+    Both sides are watermarked and the join condition carries a closed
+    range on the two event-time columns, so state eviction (and with it
+    outer emission) is guaranteed; unmatched rows for views still
+    inside the horizon at end-of-stream are correctly withheld (they
+    are not yet provably unconverted) — the batch twin encodes exactly
+    that end-of-stream-watermark rule, making the result deterministic
+    and value-oracled. Nullable join outputs are coalesced to -1
+    sentinels: both engines then emit non-null BIGINTs (a NULL bigint
+    surfaces as a float column in pandas and breaks dtype-sensitive
+    hashing)."""
     views = (
         events.where(col("event_type") == "view")
         .select(

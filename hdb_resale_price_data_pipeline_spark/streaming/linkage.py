@@ -13,9 +13,9 @@ through ``streaming/events.table_stream(spark, sf_dir, "customer")``.
 
 Exactly-once: each batch's verdicts land in a ``batch_id``-keyed
 subdirectory written with ``mode("overwrite")`` — a checkpoint replay
-of the same batch_id overwrites its own output instead of duplicating,
-the same two-phase discipline as the ANN index appends
-(operators/index_store.append_ann_index_idempotent).
+of the same batch_id overwrites its own output instead of duplicating
+(the two-phase stage-then-publish of
+operators/index_store.publish_staged_partitions).
 
 Two serving layouts, one semantics (the verdict/landing logic is
 SHARED — ``_route_verdicts`` / ``_land_batch`` — so the gates cannot
@@ -184,8 +184,8 @@ def append_er_directory_idempotent(
 ) -> int:
     """EXACTLY-ONCE directory maintenance: land a batch's freshly-minted
     entities ``(mid, mname, bk)`` into the served directory's block
-    partitions, keyed by the checkpoint's stable ``batch_id`` — the
-    same two-phase stage-then-publish the ANN index appends use
+    partitions, keyed by the checkpoint's stable ``batch_id`` — a
+    two-phase stage-then-publish
     (operators/index_store.publish_staged_partitions), so a checkpoint
     replay converges to the same file set instead of duplicating
     entities. New block keys create new partitions; the manifest-pinned

@@ -90,88 +90,6 @@ def stateful_sessions(events: DataFrame) -> DataFrame:
     )
 
 
-def _sessionize_group_event_time(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    """Timeout-aware twin of ``_sessionize_group``: when the event-time
-    watermark passes ``last_event + gap``, the open session is CLOSED
-    and emitted without needing a later event from the same user — the
-    production semantics (NoTimeout keeps a quiet user's tail session
-    in state forever). Invoked either with data (normal fold) or with
-    ``state.hasTimedOut`` after the watermark crossed the registered
-    timeout timestamp."""
-    (user_id,) = key
-    cols = ["user_id", "session_start_us", "session_end_us", "n_events", "total_value"]
-    if state.hasTimedOut:
-        start_us, last_us, n, total = state.get
-        state.remove()
-        yield pd.DataFrame(
-            [(user_id, start_us, last_us, n, round(total, 2))], columns=cols
-        )
-        return
-
-    events: list[tuple[int, float]] = []
-    for pdf in pdfs:
-        us = _ts_to_us(pdf["ts"])
-        events.extend(zip(us.tolist(), pdf["value"].tolist()))
-    events.sort()
-
-    if state.exists:
-        start_us, last_us, n, total = state.get
-    else:
-        start_us = last_us = None
-        n, total = 0, 0.0
-
-    closed: list[tuple[int, int, int, int, float]] = []
-    for ts_us, value in events:
-        if start_us is None:
-            start_us, last_us, n, total = ts_us, ts_us, 1, float(value)
-        elif ts_us - last_us <= SESSION_GAP_US:
-            last_us, n, total = ts_us, n + 1, total + float(value)
-        else:
-            closed.append((user_id, start_us, last_us, n, round(total, 2)))
-            start_us, last_us, n, total = ts_us, ts_us, 1, float(value)
-
-    state.update((start_us, last_us, n, total))
-    # Close the open session once the watermark passes last + gap. The
-    # registered timestamp must sit strictly beyond the CURRENT
-    # watermark (Spark rejects an already-passed timeout): a session
-    # whose gap already elapsed before this batch closes on the very
-    # next watermark advance.
-    timeout_ms = max(
-        (last_us + SESSION_GAP_US) // 1000, state.getCurrentWatermarkMs() + 1
-    )
-    state.setTimeoutTimestamp(timeout_ms)
-    yield pd.DataFrame(closed, columns=cols)
-
-
-def stateful_sessions_event_time(
-    events: DataFrame, watermark_delay: str = "10 minutes"
-) -> DataFrame:
-    """Sessionizer with EVENT-TIME TIMEOUT: sessions close either by a
-    later in-gap-violating event (like ``stateful_sessions``) or by the
-    watermark passing ``last_event + gap`` — so quiet users' sessions
-    still emit, state is bounded by the watermark, and the operator has
-    the semantics a production sessionizer needs on an unbounded
-    stream."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from ..shipping import ensure_package_shipped
-
-    ensure_package_shipped(events.sparkSession)
-    return (
-        events.withWatermark("ts", watermark_delay)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize_group_event_time,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
 def split_events_stream(
     spark: SparkSession, sf_dir: str, n_splits: int = 2
 ) -> DataFrame:

@@ -9,7 +9,7 @@ from conftest import TEST_SF_DIR
 from hdb_resale_price_data_pipeline_spark.operators.bpe import (
     END,
     bpe_apply,
-    bpe_train,
+    bpe_train_with_freqs,
     word_frequencies,
 )
 from hdb_resale_price_data_pipeline_spark.sources import read_table
@@ -58,22 +58,22 @@ def test_bpe_matches_python_model_on_fixture(spark):
         "wide wider widest",
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    got = bpe_train(df, "text", n_merges=8)
+    got = bpe_train_with_freqs(df, "text", n_merges=8)[0]
     want = _python_bpe(texts, 8)
     assert got == want
 
 
 def test_bpe_is_deterministic_on_real_corpus(spark):
     docs = read_table(spark, TEST_SF_DIR, "documents").limit(200)
-    m1 = bpe_train(docs, "text", n_merges=5)
-    m2 = bpe_train(docs, "text", n_merges=5)
+    m1 = bpe_train_with_freqs(docs, "text", n_merges=5)[0]
+    m2 = bpe_train_with_freqs(docs, "text", n_merges=5)[0]
     assert m1 == m2 and len(m1) == 5
 
 
 def test_bpe_apply_reduces_piece_count(spark):
     """More merges → never more pieces; zero merges = chars + markers."""
     docs = read_table(spark, TEST_SF_DIR, "documents").limit(100)
-    merges = bpe_train(docs, "text", n_merges=6)
+    merges = bpe_train_with_freqs(docs, "text", n_merges=6)[0]
     base = {
         r.doc_id: r.bpe_n_pieces
         for r in bpe_apply(docs, "text", []).collect()
@@ -99,10 +99,10 @@ def test_word_frequencies_matches_driver_count(spark):
 
 def test_bpe_oracle_survives_exhausted_merges(spark):
     """A corpus whose vocabulary fully merges before the unrolled layer
-    count is exhausted: bpe_train breaks early, and the oracle's
-    tail layers must degrade to no-ops (aggregate-form m{i} — an empty
-    argmax layer once CROSS JOINed the whole vocabulary away and
-    reported every doc as zero pieces)."""
+    count is exhausted: bpe_train_with_freqs breaks early, and the
+    oracle's tail layers must degrade to no-ops (aggregate-form m{i} —
+    an empty argmax layer once CROSS JOINed the whole vocabulary away
+    and reported every doc as zero pieces)."""
     import duckdb
 
     from hdb_resale_price_data_pipeline_spark.queries.text import (
@@ -113,7 +113,7 @@ def test_bpe_oracle_survives_exhausted_merges(spark):
     rows = [(i, "ab ab") for i in range(4)]
     # Spark side: train + apply on the tiny corpus directly
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    merges = bpe_train(docs, "text", n_merges=BPE_MERGES)
+    merges = bpe_train_with_freqs(docs, "text", n_merges=BPE_MERGES)[0]
     assert len(merges) < BPE_MERGES  # early break actually happens
     spark_out = {
         r.doc_id: (r.bpe_n_pieces, " ".join(r.bpe_pieces))
@@ -193,7 +193,7 @@ def test_wordpiece_selection_differs_from_bpe_where_it_should(spark):
     BPE merges the frequent pair first while WordPiece prefers the
     rare-symbol pair (higher count/(count·count) likelihood gain)."""
     from hdb_resale_price_data_pipeline_spark.operators.bpe import (
-        bpe_train,
+        bpe_train_with_freqs,
         wordpiece_train_with_freqs,
     )
 
@@ -203,7 +203,7 @@ def test_wordpiece_selection_differs_from_bpe_where_it_should(spark):
         "xz ab aa ab aa ab",
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    bpe_first = bpe_train(df, "text", n_merges=1)[0]
+    bpe_first = bpe_train_with_freqs(df, "text", n_merges=1)[0][0]
     wp_first = wordpiece_train_with_freqs(df, "text", n_merges=1)[0][0]
     assert wp_first == ("x", "z")
     assert bpe_first != wp_first

@@ -8,7 +8,7 @@ import pytest
 
 from conftest import TEST_SF_DIR
 from hdb_resale_price_data_pipeline_spark.plans.curation import (
-    curate_stages,
+    curation_flags,
     curation_report,
 )
 from hdb_resale_price_data_pipeline_spark.sources import read_table
@@ -35,15 +35,18 @@ def test_split_partitions_the_clean_set(report):
     assert report["5_train"] > report.get("7_test", 0)
 
 
-def test_stages_are_subsets_by_doc_id(spark):
+@pytest.fixture(scope="module")
+def flags(spark):
     docs = read_table(spark, TEST_SF_DIR, "documents")
-    s = curate_stages(docs)
+    cols = ["doc_id", "quality_pass", "exact_pass", "neardup_pass", "clean_pass"]
+    return curation_flags(docs).select(*cols).collect()
+
+
+def test_stages_are_subsets_by_doc_id(flags):
     ids = {
-        name: {r.doc_id for r in frame.select("doc_id").collect()}
-        for name, frame in s.items()
-        if name != "split"
+        stage: {r.doc_id for r in flags if r[f"{stage}_pass"]}
+        for stage in ("quality", "exact", "neardup", "clean")
     }
-    assert ids["quality"] <= ids["raw"]
     assert ids["exact"] <= ids["quality"]
     assert ids["neardup"] <= ids["exact"]
     assert ids["clean"] <= ids["neardup"]
@@ -53,11 +56,8 @@ def test_stages_are_subsets_by_doc_id(spark):
     assert all(d > min(ids["exact"]) for d in dropped) if dropped else True
 
 
-def test_eval_holdout_never_enters_the_corpus(spark):
-    docs = read_table(spark, TEST_SF_DIR, "documents")
-    s = curate_stages(docs)
-    raw_ids = [r.doc_id for r in s["raw"].select("doc_id").collect()]
-    assert all(i % 10 != 0 for i in raw_ids)
+def test_eval_holdout_never_enters_the_corpus(flags):
+    assert flags and all(r.doc_id % 10 != 0 for r in flags)
 
 
 def test_increment_report_invariants(spark):
@@ -74,33 +74,6 @@ def test_increment_report_invariants(spark):
     assert sum(report[s] for s in ("5_train", "6_val", "7_test")) == report[
         "4_decontaminated"
     ]
-
-
-def test_export_curated_matches_report_and_is_deterministic(spark, tmp_path, report):
-    """curate → shard export: per-split shard rows must sum to the
-    report's split counts, and a re-export must replay the identical
-    global permutation (manifest + first shard's leading ids equal)."""
-    import pyarrow.parquet as pq
-
-    from hdb_resale_price_data_pipeline_spark.plans.curation import export_curated
-
-    docs = read_table(spark, TEST_SF_DIR, "documents")
-    m1 = export_curated(docs, str(tmp_path / "e1"), rows_per_shard=100)
-    assert m1["train"]["total_rows"] == report["5_train"]
-    assert m1["val"]["total_rows"] == report["6_val"]
-    assert m1["test"]["total_rows"] == report["7_test"]
-    for split, manifest in m1.items():
-        assert sum(s["rows"] for s in manifest["shards"]) == manifest["total_rows"]
-
-    m2 = export_curated(docs, str(tmp_path / "e2"), rows_per_shard=100)
-    assert [s["rows"] for s in m2["train"]["shards"]] == [
-        s["rows"] for s in m1["train"]["shards"]
-    ]
-    first1 = pq.read_table(m1["train"]["shards"][0]["path"], columns=["doc_id"])
-    first2 = pq.read_table(m2["train"]["shards"][0]["path"], columns=["doc_id"])
-    assert first1.column("doc_id").to_pylist()[:20] == first2.column(
-        "doc_id"
-    ).to_pylist()[:20]
 
 
 def test_increment_drops_corpus_near_dups(spark):

@@ -58,41 +58,3 @@ def test_bloom_same_doc_set_as_exact(spark):
     assert (
         exact.select("doc_id").exceptAll(bloom.select("doc_id")).count() == 0
     )
-
-
-def test_bloom_probe_expr_matches_numpy(spark):
-    """The readable expression-spec probe and the Arrow hot-path probe
-    must agree gram-for-gram (same discipline as arrow_text twins)."""
-    from hdb_resale_price_data_pipeline_spark.operators.decontam import (
-        bloom_bitset_words,
-        bloom_probe_expr,
-    )
-    from hdb_resale_price_data_pipeline_spark.functions.arrow_text import (
-        distinct_gram_hashes_udf,
-    )
-
-    docs = read_table(spark, SMOKE_SF_DIR, "documents")
-    pred = F.col("doc_id") % 10 == 0
-    gram_arr = distinct_gram_hashes_udf(5)(F.col("text"))
-    eval_grams = (
-        docs.filter(pred).select(F.explode(gram_arr).alias("gram")).distinct()
-    )
-    bloom_map = bloom_bitset_words(eval_grams).agg(
-        F.map_from_entries(F.collect_list(F.struct("w", "bits"))).alias("bloom")
-    )
-    via_expr = (
-        docs.filter(~pred)
-        .select("doc_id", gram_arr.alias("grams"))
-        .crossJoin(F.broadcast(bloom_map))
-        .select(
-            "doc_id",
-            F.size(
-                F.filter("grams", lambda g: bloom_probe_expr(g, F.col("bloom")))
-            ).cast("long").alias("n_flagged"),
-        )
-    )
-    via_udf = bloom_contamination_report(docs, eval_pred=pred, n=5).select(
-        "doc_id", "n_flagged"
-    )
-    assert via_expr.exceptAll(via_udf).count() == 0
-    assert via_udf.exceptAll(via_expr).count() == 0

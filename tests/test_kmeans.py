@@ -3,13 +3,20 @@ codebook beats the sampled one."""
 
 from __future__ import annotations
 
+import numpy as np
+
 from conftest import TEST_SF_DIR
-from hdb_resale_price_data_pipeline_spark.operators.kmeans import (
-    inertia,
-    kmeans_assign,
-    kmeans_fit,
-)
+from hdb_resale_price_data_pipeline_spark.operators.ivf import assign_to_codebook
+from hdb_resale_price_data_pipeline_spark.operators.kmeans import kmeans_fit
 from hdb_resale_price_data_pipeline_spark.sources import read_table
+
+
+def _objective(vectors: np.ndarray, codebook) -> float:
+    """The k-means objective: Σ over vectors of the squared distance to
+    the nearest centroid."""
+    cents = np.asarray([c for _, c in sorted(codebook)], dtype=np.float64)
+    d2 = ((vectors[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
+    return float(d2.min(axis=1).sum())
 
 
 def test_kmeans_deterministic_and_improving(spark):
@@ -19,12 +26,15 @@ def test_kmeans_deterministic_and_improving(spark):
     cb5_again = kmeans_fit(emb, "embedding", "vec_id", k=8, max_iter=5)
     assert cb5 == cb5_again  # deterministic end to end
 
-    i0 = inertia(emb, "embedding", cb0)
-    i5 = inertia(emb, "embedding", cb5)
+    vectors = np.asarray(
+        [r.embedding for r in emb.select("embedding").collect()], dtype=np.float64
+    )
+    i0 = _objective(vectors, cb0)
+    i5 = _objective(vectors, cb5)
     assert i5 <= i0  # Lloyd never increases the objective
     assert i5 < i0 * 0.999  # and actually moved on this data
 
-    assigned = kmeans_assign(emb, "embedding", cb5)
+    assigned = assign_to_codebook(emb, "embedding", cb5)
     counts = dict(
         (r.ivf_cid, r.n)
         for r in assigned.groupBy("ivf_cid").count().withColumnRenamed("count", "n").collect()
@@ -62,10 +72,6 @@ def test_assignments_stable_across_input_partitionings(spark):
     output (the assignment) must not flip. Pins the no-near-tie margin
     of this corpus across 32/7/3-partition fits, guarding the
     Lloyd-unroll oracles against driver-parallelism differences."""
-    from hdb_resale_price_data_pipeline_spark.operators.ivf import (
-        assign_to_codebook,
-    )
-
     emb = read_table(spark, TEST_SF_DIR, "embeddings")
 
     def assignments(n_parts: int) -> dict[int, int]:

@@ -8,9 +8,11 @@ from __future__ import annotations
 import duckdb
 import pandas as pd
 
+from pyspark.sql import functions as F
+
 from hdb_resale_price_data_pipeline_spark.operators.text import (
-    pii_counts,
-    redact_pii,
+    pii_counts_on,
+    redact_pii_col,
     redact_pii_duck,
 )
 
@@ -38,7 +40,9 @@ def test_redaction_known_answers(spark):
     got = {
         r.doc_id: (r.clean, r.n_url, r.n_email, r.n_phone)
         for r in df.select(
-            "doc_id", redact_pii("text").alias("clean"), *pii_counts("text")
+            "doc_id",
+            redact_pii_col(F.col("text")).alias("clean"),
+            *pii_counts_on(F.col("text")),
         ).collect()
     }
     assert got == EXPECTED
@@ -48,7 +52,9 @@ def test_redaction_matches_duckdb_twin(spark):
     df = spark.createDataFrame(ROWS, "doc_id int, text string")
     spark_out = {
         r.doc_id: r.clean
-        for r in df.select("doc_id", redact_pii("text").alias("clean")).collect()
+        for r in df.select(
+            "doc_id", redact_pii_col(F.col("text")).alias("clean")
+        ).collect()
     }
     con = duckdb.connect()
     con.register("pii_rows", pd.DataFrame(ROWS, columns=["doc_id", "text"]))

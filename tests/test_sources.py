@@ -1,10 +1,9 @@
-"""Source/sink tests: multi-vintage CSV folds, API fetch stub, bucketed
-and partitioned warehouse layouts (with their plan-level payoffs)."""
+"""Source/sink tests: multi-vintage CSV folds, API fetch stub and the
+day-partitioned warehouse load."""
 
 from __future__ import annotations
 
 import os
-import re
 
 import pytest
 
@@ -18,15 +17,8 @@ from hdb_resale_price_data_pipeline_spark.sources.readers import (
     read_historical_csv_dir,
 )
 from hdb_resale_price_data_pipeline_spark.sources.warehouse import (
-    bucketed_join,
     load_day_partitioned,
-    write_bucketed,
-    write_partitioned,
 )
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def _write_reordered_vintages(d) -> str:
@@ -74,18 +66,6 @@ def test_api_source_with_fake_fetcher(tmp_path):
     assert list_dataset_ids("189", fetch_json) == ["d_1", "d_2"]
 
 
-def test_partitioned_write_prunes_on_read(spark, tmp_path):
-    ev = read_table(spark, TEST_SF_DIR, "events").selectExpr(
-        "event_id", "event_type", "value"
-    )
-    path = str(tmp_path / "events_by_type")
-    write_partitioned(ev, path, ["event_type"])
-    back = spark.read.parquet(path).filter("event_type = 'click'")
-    plan = _plan(back)
-    assert re.search(r"PartitionFilters: \[.*event_type.*\]", plan)
-    assert back.count() == ev.filter("event_type = 'click'").count()
-
-
 def test_day_partitioned_load_is_incremental_and_idempotent(spark, tmp_path):
     """K2 append semantics (reference dags/pipeline.py:239-247): loading
     day 2 after day 1 keeps day 1; RE-loading day 2 (retry/backfill)
@@ -115,31 +95,6 @@ def test_day_partitioned_load_is_incremental_and_idempotent(spark, tmp_path):
     ]
 
 
-def test_bucketed_join_avoids_shuffle(spark):
-    """orders ⋈ lineitem bucketed on the key: no Exchange in the join."""
-    import shutil
-
-    spark.sql("DROP TABLE IF EXISTS orders_b")
-    spark.sql("DROP TABLE IF EXISTS lineitem_b")
-    # a previous session's managed-table dirs survive the in-memory
-    # catalog; saveAsTable refuses to reuse the location
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for t in ("orders_b", "lineitem_b"):
-        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
-    orders = read_table(spark, TEST_SF_DIR, "orders").withColumnRenamed(
-        "o_orderkey", "okey"
-    )
-    li = read_table(spark, TEST_SF_DIR, "lineitem").selectExpr(
-        "l_orderkey AS okey", "l_extendedprice", "l_discount"
-    )
-    write_bucketed(orders, "orders_b", "okey", n_buckets=8)
-    write_bucketed(li, "lineitem_b", "okey", n_buckets=8)
-    joined = bucketed_join(spark, "orders_b", "lineitem_b", on="okey")
-    plan = _plan(joined)
-    assert "Exchange hashpartitioning" not in plan  # co-located, no shuffle
-    assert joined.count() == li.count()
-
-
 def test_sink_roundtrips(spark, tmp_path):
     """CSV/JSON/ORC sink → read round-trips preserve values (parquet is
     exercised everywhere else)."""
@@ -164,162 +119,6 @@ def test_sink_roundtrips(spark, tmp_path):
     src.write.mode("overwrite").orc(orc_path)
     got_orc = spark.read.orc(orc_path)
     assert sorted(tuple(r) for r in got_orc.collect()) == sorted(want)
-
-
-def test_compaction_hits_file_size_target(spark, tmp_path):
-    """A fragmented table (64 tiny files) compacts to few near-target
-    files; a smaller target yields proportionally more files; rows and
-    values survive the rewrite."""
-    from hdb_resale_price_data_pipeline_spark.sources.compaction import (
-        compact_parquet,
-    )
-
-    frag = str(tmp_path / "fragmented")
-    docs = read_table(spark, TEST_SF_DIR, "documents")
-    docs.repartition(64).write.parquet(frag)
-
-    big = compact_parquet(
-        spark, frag, str(tmp_path / "big"), target_file_bytes=64 << 20
-    )
-    assert big.in_files == 64
-    assert big.out_files <= 2  # whole table well under one 64MB target
-    assert (
-        spark.read.parquet(str(tmp_path / "big")).count() == docs.count()
-    )
-
-    small = compact_parquet(
-        spark, frag, str(tmp_path / "small"),
-        target_file_bytes=16 << 10, inflation=2.0,
-    )
-    assert big.out_files < small.out_files < 64
-
-    got = spark.read.parquet(str(tmp_path / "small"))
-    assert sorted(r.doc_id for r in got.select("doc_id").collect()) == sorted(
-        r.doc_id for r in docs.select("doc_id").collect()
-    )
-
-
-def test_compaction_partitioned_defragments_each_partition(spark, tmp_path):
-    """Partition-aware compaction: each lang directory collapses from
-    task×partition slivers to a handful of files, partition pruning
-    still works on the result."""
-    from hdb_resale_price_data_pipeline_spark.sources.compaction import (
-        compact_parquet,
-    )
-
-    frag = str(tmp_path / "frag_part")
-    docs = read_table(spark, TEST_SF_DIR, "documents")
-    # the classic failure: many upstream tasks each write into every
-    # partition directory
-    docs.repartition(16).write.partitionBy("lang").parquet(frag)
-
-    stats = compact_parquet(
-        spark, frag, str(tmp_path / "compact_part"),
-        target_file_bytes=64 << 20, partition_cols=("lang",),
-    )
-    assert stats.in_files >= 40  # ~16 slivers x 5 langs
-    n_langs = docs.select("lang").distinct().count()
-    assert stats.out_files <= 2 * n_langs
-    for d in (p for p in os.listdir(str(tmp_path / "compact_part")) if p.startswith("lang=")):
-        files = [
-            f for f in os.listdir(str(tmp_path / "compact_part") + "/" + d)
-            if not f.startswith("_") and not f.startswith(".")
-        ]
-        assert 1 <= len(files) <= 2
-    assert (
-        spark.read.parquet(str(tmp_path / "compact_part")).count()
-        == docs.count()
-    )
-
-
-def test_merge_upsert_touches_only_affected_partitions(spark, tmp_path):
-    """Keyed MERGE: updates replace matching keys, inserts add new
-    ones, untouched partitions keep their files byte-identical, and
-    re-merging the same batch is a no-op (idempotent)."""
-    import glob
-
-    from hdb_resale_price_data_pipeline_spark.sources.merge import merge_upsert
-    from hdb_resale_price_data_pipeline_spark.sources.warehouse import (
-        load_day_partitioned,
-    )
-
-    path = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [(k, d, float(v)) for k, d, v in [
-            (1, "2025-01-01", 10), (2, "2025-01-01", 20),
-            (3, "2025-01-02", 30), (4, "2025-01-02", 40),
-            (5, "2025-01-03", 50),
-        ]],
-        "k int, day string, v double",
-    )
-    load_day_partitioned(base, path, "day")
-    day1_files = {
-        f: os.path.getmtime(f) for f in glob.glob(f"{path}/day=2025-01-01/*.parquet")
-    }
-
-    updates = spark.createDataFrame(
-        [(3, "2025-01-02", 31.0), (6, "2025-01-02", 60.0)],
-        "k int, day string, v double",
-    )
-    merge_upsert(spark, path, updates, ["k"], "day")
-
-    # partition values round-trip through directory names: the string
-    # day comes back type-inferred as a date — normalize for comparison
-    got = {
-        (r.k, str(r.day)): r.v for r in spark.read.parquet(path).collect()
-    }
-    assert got[(3, "2025-01-02")] == 31.0      # updated
-    assert got[(6, "2025-01-02")] == 60.0      # inserted
-    assert got[(4, "2025-01-02")] == 40.0      # untouched row in affected day
-    assert len(got) == 6                       # no duplicates
-    # day-1 partition was never rewritten
-    assert {
-        f: os.path.getmtime(f) for f in glob.glob(f"{path}/day=2025-01-01/*.parquet")
-    } == day1_files
-
-    merge_upsert(spark, path, updates, ["k"], "day")  # idempotent
-    again = {
-        (r.k, str(r.day)): r.v for r in spark.read.parquet(path).collect()
-    }
-    assert again == got
-
-
-def test_export_shards_are_deterministic_and_bounded(spark, tmp_path):
-    """Export: every row lands exactly once, shards stay near the row
-    target, the manifest agrees with the files, re-export replays the
-    IDENTICAL global permutation, and the order decorrelates from the
-    source order (it's a shuffle, not a copy)."""
-    from hdb_resale_price_data_pipeline_spark.sources.export import (
-        export_shuffled_shards,
-    )
-
-    docs = read_table(spark, TEST_SF_DIR, "documents")
-    n = docs.count()
-    out1, out2 = str(tmp_path / "e1"), str(tmp_path / "e2")
-    m1 = export_shuffled_shards(docs, out1, rows_per_shard=100)
-    m2 = export_shuffled_shards(docs, out2, rows_per_shard=100)
-
-    assert m1["total_rows"] == n
-    assert sum(s["rows"] for s in m1["shards"]) == n
-    assert m1["n_shards"] == (n + 99) // 100
-    # range partitioner samples, so allow slack — but no degenerate shards
-    assert all(20 <= s["rows"] <= 200 for s in m1["shards"])
-
-    def order(path):
-        import pyarrow.dataset as ds
-
-        ids = []
-        for frag in sorted(
-            ds.dataset(path, format="parquet").get_fragments(),
-            key=lambda f: f.path,
-        ):
-            ids.extend(frag.to_table(columns=["doc_id"])["doc_id"].to_pylist())
-        return ids
-
-    o1, o2 = order(out1), order(out2)
-    assert o1 == o2                      # reproducible permutation
-    assert sorted(o1) == sorted(r.doc_id for r in docs.select("doc_id").collect())
-    assert o1 != sorted(o1)              # actually shuffled
 
 
 class TestSparkConnectFallbacks:
@@ -395,69 +194,18 @@ class TestSparkConnectFallbacks:
         assert len(log) == 1
 
 
-def test_inplace_compaction_touches_only_oversized_partitions(spark, tmp_path):
-    """The steady-state maintenance shape: one hot partition fragments,
-    in-place compaction rewrites ONLY it (untouched partition files
-    keep their paths), values survive, and a re-run is a no-op."""
-    from hdb_resale_price_data_pipeline_spark.sources.compaction import (
-        compact_partitions_inplace,
-    )
-
-    root = str(tmp_path / "warehouse")
-    docs = read_table(spark, TEST_SF_DIR, "documents")
-    # historical partitions: compact (1 file each)
-    docs.filter("lang <> 'en'").repartition(1).write.partitionBy("lang").parquet(root)
-    # hot partition: micro-batch debris (16 slivers)
-    docs.filter("lang = 'en'").repartition(16).write.mode("append").partitionBy(
-        "lang"
-    ).parquet(root)
-
-    def files_by_part():
-        out = {}
-        for d in os.listdir(root):
-            if d.startswith("lang="):
-                out[d] = sorted(
-                    f
-                    for f in os.listdir(os.path.join(root, d))
-                    if not f.startswith(("_", "."))
-                )
-        return out
-
-    before = files_by_part()
-    assert len(before["lang=en"]) == 16
-
-    stats = compact_partitions_inplace(spark, root, "lang")
-    assert stats["rewritten"] == 1
-    after = files_by_part()
-    assert len(after["lang=en"]) == 1
-    for part, files in before.items():  # untouched partitions keep their files
-        if part != "lang=en":
-            assert after[part] == files
-
-    got = spark.read.parquet(root)
-    assert got.count() == docs.count()
-    assert sorted(r.doc_id for r in got.select("doc_id").collect()) == sorted(
-        r.doc_id for r in docs.select("doc_id").collect()
-    )
-
-    again = compact_partitions_inplace(spark, root, "lang")
-    assert again["rewritten"] == 0  # steady state: nothing to do
-
-
 def test_warehouse_schema_evolution_mergeschema(spark, tmp_path):
-    """A later daily load adds a column: read_warehouse must surface
-    the union schema, with pre-evolution partitions NULL in the new
-    column — and the new column must not be silently hidden (the
+    """A later daily load adds a column: a ``mergeSchema`` read must
+    surface the union schema, with pre-evolution partitions NULL in the
+    new column — and the new column must not be silently hidden (the
     default read samples one footer, so which vintage wins is
     nondeterministic; mergeSchema removes the ambiguity)."""
     import datetime
 
     from pyspark.sql import functions as F
 
-    from hdb_resale_price_data_pipeline_spark.sources.warehouse import (
-        load_day_partitioned,
-        read_warehouse,
-    )
+    def read_merged(spark, path):
+        return spark.read.option("mergeSchema", "true").parquet(path)
 
     path = str(tmp_path / "wh")
     d1, d2 = datetime.date(2025, 6, 1), datetime.date(2025, 6, 2)
@@ -468,7 +216,7 @@ def test_warehouse_schema_evolution_mergeschema(spark, tmp_path):
     )
     load_day_partitioned(day2, path, "d")
 
-    got = read_warehouse(spark, path)
+    got = read_merged(spark, path)
     assert set(got.columns) == {"id", "v", "score", "d"}
     rows = {r.id: r for r in got.collect()}
     assert len(rows) == 3
@@ -477,7 +225,7 @@ def test_warehouse_schema_evolution_mergeschema(spark, tmp_path):
     # evolution is append-only here; the idempotent re-load of day 1
     # (no score column) must still not disturb day 2
     load_day_partitioned(day1, path, "d")
-    assert read_warehouse(spark, path).filter(F.col("score").isNotNull()).count() == 1
+    assert read_merged(spark, path).filter(F.col("score").isNotNull()).count() == 1
 
 
 def test_corrupt_file_fails_loudly_by_default(spark, tmp_path):
@@ -502,94 +250,3 @@ def test_corrupt_file_fails_loudly_by_default(spark, tmp_path):
         assert spark.read.parquet(path).count() == 100
     finally:
         spark.conf.set("spark.sql.files.ignoreCorruptFiles", prev)
-
-
-class TestQuarantineReaders:
-    """r5: PERMISSIVE + corrupt-record-column split — every input
-    record is either parsed or quarantined with its raw text, never
-    silently nulled or dropped."""
-
-    def _schema(self):
-        from pyspark.sql.types import (
-            IntegerType,
-            StringType,
-            StructField,
-            StructType,
-        )
-
-        return StructType(
-            [
-                StructField("town", StringType(), True),
-                StructField("price", IntegerType(), True),
-            ]
-        )
-
-    def test_csv_quarantine_splits_bad_rows(self, spark, tmp_path):
-        from hdb_resale_price_data_pipeline_spark.sources.quarantine import (
-            read_csv_quarantined,
-        )
-
-        p = tmp_path / "in.csv"
-        p.write_text(
-            "town,price\n"
-            "BEDOK,500000\n"
-            'YISHUN,"not a number"\n'  # type-cast failure → quarantine
-            "CLEMENTI,610000\n"
-            '"BROKEN QUOTE,123\n'  # structural failure → quarantine
-        )
-        good, bad = read_csv_quarantined(spark, str(p), self._schema())
-        assert {(r.town, r.price) for r in good.collect()} == {
-            ("BEDOK", 500000),
-            ("CLEMENTI", 610000),
-        }
-        bad_rows = bad.collect()
-        assert len(bad_rows) == 2
-        assert all(r.raw_record for r in bad_rows)
-        raws = " ".join(r.raw_record for r in bad_rows)
-        assert "not a number" in raws and "BROKEN QUOTE" in raws
-
-    def test_json_quarantine_record_level(self, spark, tmp_path):
-        from hdb_resale_price_data_pipeline_spark.sources.quarantine import (
-            read_json_quarantined,
-        )
-
-        p = tmp_path / "in.jsonl"
-        p.write_text(
-            '{"town": "BEDOK", "price": 500000}\n'
-            '{"town": "YISHUN", "price": }\n'  # malformed JSON line
-            '{"town": "CLEMENTI", "price": 610000}\n'
-        )
-        good, bad = read_json_quarantined(spark, str(p), self._schema())
-        assert good.count() == 2
-        bad_rows = bad.collect()
-        assert len(bad_rows) == 1
-        assert '"price": }' in bad_rows[0].raw_record
-
-    def test_json_quarantine_file_level_for_multiline(self, spark, tmp_path):
-        from hdb_resale_price_data_pipeline_spark.sources.quarantine import (
-            read_json_quarantined,
-        )
-
-        ok = tmp_path / "ok.json"
-        ok.write_text('[{"town": "BEDOK", "price": 1}, {"town": "YISHUN", "price": 2}]')
-        broken = tmp_path / "broken.json"
-        broken.write_text('[{"town": "CLEMENTI", "price": 3}, {"town":')  # truncated
-        good, bad = read_json_quarantined(
-            spark, str(tmp_path), self._schema(), multiline=True
-        )
-        assert good.count() == 2  # the intact file's two records
-        bad_rows = bad.collect()
-        assert len(bad_rows) == 1  # ONE quarantine row per malformed file
-        assert bad_rows[0].raw_record.startswith('[{"town": "CLEMENTI"')
-
-    def test_schema_already_owning_corrupt_col_is_rejected(self, spark):
-        import pytest
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        from hdb_resale_price_data_pipeline_spark.sources.quarantine import (
-            read_csv_quarantined,
-        )
-
-        s = StructType([StructField("_corrupt_record", StringType(), True)])
-        with pytest.raises(ValueError, match="_corrupt_record"):
-            read_csv_quarantined(spark, "/tmp/nope", s)

@@ -259,142 +259,6 @@ def test_watermark_finalized_windows_emit_exactly_once(spark, tmp_path):
     assert all(r.window_start < "2024-01-01 06:00:00" for r in out)
 
 
-def test_event_time_timeout_closes_quiet_users_session(spark, tmp_path):
-    """EventTimeTimeout sessionizer: a user who goes quiet must still
-    get their session emitted once the watermark passes last_event +
-    gap — the exact case the NoTimeout variant leaves in state forever."""
-    import datetime
-    import glob
-    import os
-    import shutil
-
-    from pyspark.sql import Row
-
-    from hdb_resale_price_data_pipeline_spark.streaming import run_stream_to_df
-    from hdb_resale_price_data_pipeline_spark.streaming.stateful import (
-        stateful_sessions_event_time,
-    )
-
-    stage = str(tmp_path / "timeout_src")
-    os.makedirs(stage)
-
-    def ts(minutes):
-        return datetime.datetime(2025, 1, 1, 12, 0) + datetime.timedelta(
-            minutes=minutes
-        )
-
-    def ev(eid, uid, minutes, value=1.0):
-        return Row(
-            event_id=eid,
-            ts=ts(minutes),
-            user_id=uid,
-            event_type="click",
-            value=value,
-            props="{}",
-        )
-
-    batches = [
-        # user 1: two events 5 min apart, then silence; user 2 anchors t0
-        [ev(1, 1, 0), ev(2, 1, 5, 2.5), ev(3, 2, 0)],
-        # user 2 event 3 h later: advances the watermark far past
-        # user 1's last_event + 30 min gap
-        [ev(4, 2, 180)],
-        # one more batch so timed-out state is processed with the
-        # advanced watermark
-        [ev(5, 2, 181)],
-    ]
-    for i, rows in enumerate(batches):
-        tmp = str(tmp_path / f"_t{i}")
-        spark.createDataFrame(rows, EVENTS_DDL).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        dest = os.path.join(stage, f"b{i}.parquet")
-        shutil.move(glob.glob(f"{tmp}/part-*.parquet")[0], dest)
-        os.utime(dest, (1_700_000_000 + i * 100,) * 2)
-
-    stream = (
-        spark.readStream.schema(EVENTS_DDL)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(stage)
-    )
-    out = run_stream_to_df(
-        stateful_sessions_event_time(stream, watermark_delay="10 minutes"), spark
-    )
-    got = {
-        (r.user_id, r.session_start_us): (r.session_end_us, r.n_events, r.total_value)
-        for r in out.collect()
-    }
-    us = lambda minutes: int(ts(minutes).timestamp() * 1_000_000)
-    assert got == {
-        # user 1's session closed BY TIMEOUT (no later user-1 event exists)
-        (1, us(0)): (us(5), 2, 3.5),
-        # user 2's first session closed by the 3h-later event (gap break)
-        (2, us(0)): (us(0), 1, 1.0),
-    }
-
-
-def test_stream_to_warehouse_is_exactly_once(spark, tmp_path):
-    """foreachBatch → idempotent day-partitioned load: the sink lands
-    every event exactly once, a restart with the same checkpoint
-    reprocesses nothing, and a full replay (fresh checkpoint — every
-    batch re-delivered) overwrites partitions instead of duplicating."""
-    from hdb_resale_price_data_pipeline_spark.streaming.sink import (
-        stream_to_day_partitioned,
-    )
-
-    warehouse = str(tmp_path / "warehouse")
-
-    def run(checkpoint: str) -> None:
-        ev = events_stream(spark, TEST_SF_DIR).withColumn(
-            "event_date", F.to_date("ts")
-        )
-        q = stream_to_day_partitioned(ev, warehouse, "event_date", checkpoint)
-        q.awaitTermination()
-
-    expected = read_table(spark, TEST_SF_DIR, "events").count()
-
-    run(str(tmp_path / "ckpt1"))
-    first = spark.read.parquet(warehouse)
-    assert first.count() == expected
-    assert first.select("event_id").distinct().count() == expected
-
-    run(str(tmp_path / "ckpt1"))  # restart, same checkpoint: no-op
-    assert spark.read.parquet(warehouse).count() == expected
-
-    run(str(tmp_path / "ckpt2"))  # full replay: overwrite, not append
-    assert spark.read.parquet(warehouse).count() == expected
-
-
-def test_stream_merge_sink_is_idempotent_under_replay(spark, tmp_path):
-    """The keyed MERGE sink: full replay (fresh checkpoint) re-merges
-    every batch and must leave the table unchanged — no duplicates, no
-    erased rows."""
-    from hdb_resale_price_data_pipeline_spark.streaming.sink import (
-        stream_to_day_partitioned_merge,
-    )
-
-    warehouse = str(tmp_path / "merge_wh")
-
-    def run(checkpoint: str) -> None:
-        ev = events_stream(spark, TEST_SF_DIR).withColumn(
-            "event_date", F.to_date("ts")
-        )
-        q = stream_to_day_partitioned_merge(
-            ev, warehouse, ["event_id"], "event_date", checkpoint
-        )
-        q.awaitTermination()
-
-    expected = read_table(spark, TEST_SF_DIR, "events").count()
-    run(str(tmp_path / "ck1"))
-    assert spark.read.parquet(warehouse).count() == expected
-
-    run(str(tmp_path / "ck2"))  # replay everything: merge, not append
-    got = spark.read.parquet(warehouse)
-    assert got.count() == expected
-    assert got.select("event_id").distinct().count() == expected
-
-
 class TestStreamOracles:
     """Pin the availableNow emission arithmetic the registered stream
     oracles encode (queries/extensions.py) at a SECOND scale factor —
@@ -543,20 +407,12 @@ def test_stream_dedup_gate_flags_corpus_collisions(spark):
     assert gates == {"drop_exact", "review_neardup", "ingest"}
 
 
-def test_dedup_within_watermark_bounds_state_and_reemits(spark, tmp_path):
-    """dropDuplicatesWithinWatermark vs plain dropDuplicates — the
-    bounded-state contract: key state is EVICTED once the watermark
-    passes its expiry, so a later duplicate re-emits (at-least-once
-    ingest semantics), while plain dropDuplicates keeps every key
-    forever and suppresses it.
-
-    Eviction timing, pinned empirically on Spark 4.1 (one event per
-    key per batch keeps this deterministic): a batch's LOOKUP still
-    sees state whose expiry is below the current watermark (eviction
-    runs at batch END, against the one-batch-lagged watermark), so a
-    duplicate in the first batch after expiry is still dropped and
-    does NOT refresh the expiry; the state is gone for the NEXT batch,
-    whose duplicate re-emits."""
+def test_stream_user_dedup_suppresses_duplicates_past_the_watermark(
+    spark, tmp_path
+):
+    """Plain ``dropDuplicates`` keeps every key's state for the life of
+    the query: a duplicate arriving in later batches, long after the
+    watermark passed the key's first event, is still suppressed."""
     import datetime
     import glob
     import os
@@ -567,9 +423,6 @@ def test_dedup_within_watermark_bounds_state_and_reemits(spark, tmp_path):
     from hdb_resale_price_data_pipeline_spark.streaming import (
         run_stream_to_df,
         stream_user_dedup,
-    )
-    from hdb_resale_price_data_pipeline_spark.streaming.events import (
-        stream_user_dedup_bounded,
     )
 
     stage = str(tmp_path / "dwm_src")
@@ -594,14 +447,13 @@ def test_dedup_within_watermark_bounds_state_and_reemits(spark, tmp_path):
             props="{}",
         )
 
-    # b0: first A (user 1) at 00:00 → state expiry 02:00 (2h horizon)
+    # b0: first A (user 1) at 00:00
     write_batch(0, [ev(1, 0, 0, 1), ev(2, 0, 0, 2)])
-    # b1: user 3 at 06:00 → watermark advances to 04:00 > A's expiry
+    # b1: user 3 at 06:00 → watermark advances to 04:00, past A's 00:00
+    # plus the 2h horizon
     write_batch(1, [ev(4, 6, 0, 3)])
-    # b2: A at 06:30 — lookup still finds the stale state (eviction is
-    # end-of-batch): dropped, no expiry refresh; state evicted after b2
+    # b2, b3: A again at 06:30 and 07:00
     write_batch(2, [ev(5, 6, 30, 1)])
-    # b3: A at 07:00 — state gone → RE-EMITS (expiry now 09:00)
     write_batch(3, [ev(6, 7, 0, 1)])
 
     def staged_stream():
@@ -612,19 +464,6 @@ def test_dedup_within_watermark_bounds_state_and_reemits(spark, tmp_path):
             .load(stage)
         )
 
-    bounded = run_stream_to_df(
-        stream_user_dedup_bounded(staged_stream()), spark
-    ).collect()
-    emitted = sorted((r.user_id, r.event_id) for r in bounded)
-    # Contract-guaranteed facts (survive Spark eviction-timing changes):
-    # A's first event emits, A RE-EMITS exactly once after the horizon
-    # (event 5 or 6 — which one is eviction-timing detail; on 4.1 it is
-    # 6, per the docstring), B and user 3 emit once each.
-    a_rows = [eid for (u, eid) in emitted if u == 1]
-    assert a_rows[0] == 1 and len(a_rows) == 2 and a_rows[1] in (5, 6)
-    assert [(u, e) for (u, e) in emitted if u != 1] == [(2, 2), (3, 4)]
-
-    # plain dropDuplicates: unbounded state — A suppressed forever
     unbounded = run_stream_to_df(stream_user_dedup(staged_stream()), spark).collect()
     assert sorted(r.event_id for r in unbounded) == [1, 2, 4]
 
@@ -740,33 +579,22 @@ def test_stream_dedup_gate_survives_null_text_corpus_docs(spark):
     assert {r.gate for r in out} <= {"drop_exact", "review_neardup", "ingest"}
 
 
-def test_stream_inner_attribution_matches_batch_and_outer_pair_half(spark):
+def test_stream_attribution_matched_half_matches_batch(spark):
     """The registered inner-attribution query is served as the matched
     projection of the shared outer-join table (queries/extensions.
-    _attribution_rows); this pins the operator itself: running
-    stream_view_purchase_join directly must equal both the batch twin
-    and the outer join's matched half, so the projection shortcut can
-    never drift from the real streaming inner join."""
+    _attribution_rows): the outer join's matched half must equal the
+    batch twin's (purchase, view) pairs."""
     from hdb_resale_price_data_pipeline_spark.queries.events import (
         q_events_attribution_join,
     )
     from hdb_resale_price_data_pipeline_spark.streaming.events import (
-        stream_view_purchase_join,
         stream_view_purchase_outer,
     )
 
-    def key_set(rows):
-        return {
-            (r.purchase_id, r.view_id, r.user_id, r.micros_to_purchase)
-            for r in rows
-        }
-
-    inner = key_set(
-        run_stream_to_df(
-            stream_view_purchase_join(events_stream(spark, TEST_SF_DIR)), spark
-        ).collect()
-    )
-    batch = key_set(q_events_attribution_join(spark, TEST_SF_DIR).collect())
+    batch = {
+        (r.purchase_id, r.view_id, r.user_id, r.micros_to_purchase)
+        for r in q_events_attribution_join(spark, TEST_SF_DIR).collect()
+    }
     outer_matched = {
         (r.purchase_key, r.view_id, r.user_id, r.micros_to_purchase)
         for r in run_stream_to_df(
@@ -774,9 +602,8 @@ def test_stream_inner_attribution_matches_batch_and_outer_pair_half(spark):
         ).collect()
         if r.matched == 1
     }
-    assert len(inner) > 0
-    assert inner == batch
-    assert inner == outer_matched
+    assert len(batch) > 0
+    assert outer_matched == batch
 
 
 @pytest.mark.core
