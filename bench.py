@@ -6,8 +6,10 @@ JSON line:
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 ``value`` is total wall-clock over the suite. Each query is executed to
-completion (count() action — results are consumed, not collected, so the
-measurement is plan execution, not driver materialization).
+completion by writing every column to Spark's ``noop`` sink (``consume``):
+results are consumed, not collected, so the measurement is plan
+execution, not driver materialization. The detail file also records,
+per query, the classes Spark's code generator compiled (``codegen``).
 """
 
 from __future__ import annotations
@@ -31,7 +33,8 @@ from hdb_resale_price_data_pipeline_spark.session import get_spark_session
 # untimed entry. Deliberate exclusions go in BENCH_SKIP with a reason.
 from hdb_resale_price_data_pipeline_spark.queries import all_queries
 
-# name -> reason. Empty today: all 217 registered queries time fine.
+# name -> reason. Empty today: every registered query (252) and
+# pipeline_run_all time fine.
 BENCH_SKIP: dict[str, str] = {}
 
 
@@ -65,6 +68,23 @@ def _core_counts() -> dict[str, int]:
         "spark_graft_cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
         "cpus_available": len(os.sched_getaffinity(0)),
     }
+
+
+def codegen_counter(spark):
+    """A reader of the driver JVM's generated-code compiles so far:
+    ``() -> (classes, compile_ms)``, or ``None`` without a py4j gateway
+    (Spark Connect). A class served from the codegen cache
+    (``spark.sql.codegen.cache.maxEntries``) is not counted, so a warm
+    query that compiles classes is one whose classes were evicted or
+    are new on every run (for example, a literal baked into the
+    generated code)."""
+    try:
+        jvm = spark.sparkContext._jvm
+        hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+        gen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    except Exception:  # noqa: BLE001 — no gateway
+        return lambda: None
+    return lambda: (int(hist.getCount()), int(gen.compileTime()) / 1e6)
 
 
 def _load_sample() -> float:
@@ -209,6 +229,24 @@ def compare_runs(prior_path: str, current_path: str) -> None:
         print("| (none outside the scatter envelope) | | | | |")
     for name, a, b, norm in sorted(flagged, key=lambda r: -r[3]):
         print(f"| {name} | {a:.2f}s | {b:.2f}s | {norm:.2f} | flagged |")
+    pg, cg = prior.get("codegen"), cur.get("codegen")
+    if pg and cg:
+        # A query that compiled nothing on its repeats and now does has
+        # lost its classes from the cache (or bakes a new literal into
+        # generated code on each run): it pays Janino and cold JIT again.
+        rose = sorted(
+            n for n in set(pg) & set(cg)
+            if pg[n]["classes"] == 0 and cg[n]["classes"] > 0
+        )
+        print(
+            f"\ncodegen first-run classes: prior "
+            f"{prior.get('codegen_first_run_total')} -> current "
+            f"{cur.get('codegen_first_run_total')}"
+        )
+        print(
+            f"steady-state compiles rose from 0 ({len(rose)}): "
+            + (", ".join(f"{n} (+{cg[n]['classes']})" for n in rose) or "none")
+        )
 
 
 def main() -> None:
@@ -248,6 +286,8 @@ def main() -> None:
     timings: dict[str, float] = {}
     first_runs: dict[str, float] = {}
     errors: dict[str, str] = {}
+    codegen_now = codegen_counter(spark)
+    codegen: dict[str, dict[str, float]] = {}
 
     def timed(name: str, thunk) -> None:
         """Warm run (codegen/JIT/scan-cache) + REPEATS timed runs, median
@@ -261,16 +301,28 @@ def main() -> None:
         (profiling, attribution, knn-graph) the warm run is the one
         that BUILDS the persisted frame, so the median alone would
         under-report their one-shot cost and hide a regression in the
-        build. Additions-only: the median stays the headline number."""
+        build. Additions-only: the median stays the headline number.
+
+        The codegen counter is read around the warm run and around the
+        REPEATS runs, outside every timed interval."""
         try:
+            c0 = codegen_now()
             f0 = time.perf_counter()
             thunk()
             first_runs[name] = round(time.perf_counter() - f0, 3)
+            c1 = codegen_now()
             runs = []
             for _ in range(REPEATS):
                 start = time.perf_counter()
                 n = thunk()
                 runs.append(time.perf_counter() - start)
+            c2 = codegen_now()
+            if c0 is not None:
+                codegen[name] = {
+                    "first_run_classes": c1[0] - c0[0],
+                    "classes": c2[0] - c1[0],
+                    "compile_ms": round(c2[1] - c1[1], 1),
+                }
             runs.sort()
             timings[name] = round(runs[len(runs) // 2], 3)
             print(
@@ -321,6 +373,14 @@ def main() -> None:
         "canary_sec": canary_sec,
         **cores,
     }
+    if codegen:
+        # classes: compiled over the REPEATS runs, 0 when the codegen
+        # cache holds the query. codegen_first_run_total is the suite's
+        # working set, the number session.CODEGEN_CACHE_ENTRIES rests on.
+        detail["codegen"] = codegen
+        detail["codegen_first_run_total"] = sum(
+            c["first_run_classes"] for c in codegen.values()
+        )
     # Per-query failures are recorded in the JSON (not an exit code):
     # the artifact must stay parseable and rc=0 even on a partial run.
     # "partial" marks the headline total as NOT comparable to a full

@@ -7,10 +7,13 @@ scale-oriented defaults:
 - AQE on (runtime shuffle-partition coalescing, skew-join splitting,
   dynamic broadcast) — at 100 TB the static plan is never right.
 - Arrow on — every Pandas-UDF boundary is Arrow-batched.
-- ``spark.sql.shuffle.partitions`` sized to the local core count for
-  tests; on a real cluster AQE coalesces from a deliberately-high initial
-  number, so we set a high ``initialPartitionNum`` and let AQE shrink it.
-- Parquet vectorized reader + snappy (Spark defaults, pinned explicitly).
+- ``spark.sql.shuffle.partitions`` set to ``local[N]``'s core count
+  (``SPARK_GRAFT_CPUS``) unless the caller passes ``shuffle_partitions``;
+  AQE then coalesces small shuffles at runtime.
+- Runtime bloom-filter pushdown on; 128 MB scan splits; snappy parquet.
+- The generated-code cache sized to the engine's working set
+  (``CODEGEN_CACHE_ENTRIES``), so a warm query does not recompile its
+  classes after other queries ran.
 """
 
 from __future__ import annotations
@@ -20,6 +23,17 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# Classes Spark's generated-code cache holds (its default is 100). Census
+# at sf0.01 (CodegenMetrics' compile counter, one local[4] session): the
+# 252 registry queries compile ~3,700 classes cold, and a warm pass then
+# compiles ~170 classes that are new on every run, which this
+# covers too. The 19-query perfbench mix needs ~320, so at the default
+# a warm pass recompiled ~250 of them (7-9 ms of Janino each, then
+# interpreted until the JIT caught up). Holding the whole registry costs
+# ~35 MB of metaspace and ~110 MB of live heap. A static conf: Spark
+# reads it once per JVM.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_spark_session(
@@ -61,6 +75,7 @@ def get_spark_session(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # deterministic timezone for date/timestamp semantics
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -1,5 +1,6 @@
 """``bench.py --compare`` warns when two records were taken at
-different (or unrecorded) core counts."""
+different (or unrecorded) core counts, and names the queries whose
+steady-state codegen compiles rose from 0."""
 
 from __future__ import annotations
 
@@ -32,3 +33,30 @@ def test_compare_warns_on_core_count_mismatch(tmp_path, capsys):
     out = capsys.readouterr().out
     assert "WARNING: core counts differ or are missing" in out
     assert "(None, None)" in out
+
+
+def test_compare_lists_queries_whose_steady_state_compiles_rose_from_zero(
+    tmp_path, capsys
+):
+    def rec(path, total, **classes):
+        codegen = {
+            q: {"first_run_classes": 10, "classes": n, "compile_ms": 7.0 * n}
+            for q, n in classes.items()
+        }
+        return _record(path, codegen=codegen, codegen_first_run_total=total)
+
+    prior = rec(tmp_path / "prior.json", 30, held=0, evicted=0, always=4)
+    cur = rec(tmp_path / "cur.json", 31, held=0, evicted=6, always=9)
+
+    bench.compare_runs(prior, cur)
+    out = capsys.readouterr().out
+    assert "codegen first-run classes: prior 30 -> current 31" in out
+    # `always` compiled before too, so only `evicted` rose from 0.
+    assert "steady-state compiles rose from 0 (1): evicted (+6)" in out
+
+    bench.compare_runs(prior, prior)
+    assert "rose from 0 (0): none" in capsys.readouterr().out
+
+    legacy = _record(tmp_path / "legacy.json")
+    bench.compare_runs(legacy, cur)
+    assert "codegen" not in capsys.readouterr().out
